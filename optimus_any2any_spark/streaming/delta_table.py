@@ -75,9 +75,12 @@ from optimus_any2any_spark.formats.footer_stats import (
     kind_of_spark_type,
 )
 from optimus_any2any_spark.sources.delta import _log_dir, replay_log
-from optimus_any2any_spark.streaming.manifest_table import (
+from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
+    _apply_insert_clauses,
+    _apply_merge_clauses,
+    _validate_merge_clauses,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -1664,287 +1667,6 @@ def compact_delta(
         ),
     )
     return version
-
-
-def _validate_merge_clauses(
-    when_matched: list | None,
-    when_not_matched_by_source: list | None,
-    key_col: str,
-    when_not_matched: list | None = None,
-) -> None:
-    """Shape-check conditional-MERGE clause lists: each clause is
-    ``("update", condition_sql_or_None, {col: value_sql})`` or
-    ``("delete", condition_sql_or_None)``, evaluated in declaration
-    order, first match wins (delta-spark's builder semantics).
-    Assignments may not touch the merge key — key rewrites would break
-    the key-pruning contract (and real Delta refuses them on the
-    matched side for the same reason). ``when_not_matched`` takes
-    ``("insert", condition_sql_or_None, {col: value_sql} | None)``
-    clauses only (None values = insertAll); unmatched source rows that
-    match no insert clause are NOT inserted."""
-    for cl in when_not_matched or []:
-        if not cl or cl[0] != "insert":
-            raise ValueError(
-                "delta merge: when_not_matched clause kind must be "
-                f"'insert', got {cl!r}"
-            )
-        if len(cl) not in (2, 3) or (
-            len(cl) == 3
-            and cl[2] is not None
-            and (not isinstance(cl[2], dict) or not cl[2])
-        ):
-            raise ValueError(
-                "delta merge: when_not_matched insert clause needs "
-                "('insert', condition|None[, {col: value_sql}|None])"
-            )
-    for label, clauses in (
-        ("when_matched", when_matched),
-        ("when_not_matched_by_source", when_not_matched_by_source),
-    ):
-        for cl in clauses or []:
-            if not cl or cl[0] not in ("update", "delete"):
-                raise ValueError(
-                    f"delta merge: {label} clause kind must be "
-                    f"'update' or 'delete', got {cl!r}"
-                )
-            if cl[0] == "update":
-                if len(cl) != 3 or not isinstance(cl[2], dict) or not cl[2]:
-                    raise ValueError(
-                        f"delta merge: {label} update clause needs "
-                        "('update', condition|None, {col: value_sql})"
-                    )
-                if key_col in cl[2]:
-                    raise ValueError(
-                        "delta merge: UPDATE SET may not assign the "
-                        f"merge key {key_col!r}"
-                    )
-            elif len(cl) != 2:
-                raise ValueError(
-                    f"delta merge: {label} delete clause needs "
-                    "('delete', condition|None)"
-                )
-
-
-def _apply_insert_clauses(
-    inserts: DataFrame,
-    data_cols: list[str],
-    dtype_of: dict,
-    when_not_matched: list,
-) -> DataFrame:
-    """Conditional insert clauses (delta-spark's
-    whenNotMatchedInsert(cond, values)): the FIRST matching clause
-    supplies the inserted values — ``{col: value_sql}`` assignments
-    over the source row (``s.<col>``), unspecified columns null, a
-    ``None`` value set meaning insertAll. Source rows matching no
-    clause are NOT inserted. ``inserts`` carries ``data_cols`` +
-    ``__pid``."""
-    nmc = list(when_not_matched)
-    s_ins = inserts.alias("s")
-    ichain = None
-    for i, cl in enumerate(nmc, start=1):
-        cond = F.expr(cl[1]) if cl[1] is not None else F.lit(True)
-        ichain = (
-            F.when(cond, F.lit(i))
-            if ichain is None
-            else ichain.when(cond, F.lit(i))
-        )
-    iidx = ichain.otherwise(F.lit(0)) if ichain is not None else F.lit(0)
-    ivals: list[Column] = []
-    for c in data_cols:
-        v = None
-        for i, cl in enumerate(nmc, start=1):
-            vset = cl[2] if len(cl) == 3 else None
-            if vset is None:
-                term_val: Column = F.col(f"s.{c}")
-            elif c in vset:
-                term_val = F.expr(vset[c]).cast(dtype_of[c])
-            else:
-                term_val = F.lit(None).cast(dtype_of[c])
-            term = (iidx == i, term_val)
-            v = F.when(*term) if v is None else v.when(*term)
-        ivals.append(
-            (v if v is not None
-             else F.lit(None).cast(dtype_of[c])).alias(c)
-        )
-    return s_ins.filter(iidx != 0).select(*ivals, F.col("s.__pid"))
-
-
-def _apply_merge_clauses(
-    cur: DataFrame,
-    latest_p: DataFrame,
-    key_col: str,
-    data_cols: list[str],
-    when_matched: list | None,
-    when_not_matched_by_source: list | None,
-    want_changes: bool = False,
-    when_not_matched: list | None = None,
-    carry_cols: tuple | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Conditional-MERGE row algebra (delta-spark's
-    whenMatchedUpdate / whenMatchedDelete /
-    whenNotMatchedBySourceUpdate / whenNotMatchedBySourceDelete):
-
-    ONE left-outer join target←source decides matched-ness; a CASE
-    chain computes the FIRST clause (declaration order) whose
-    condition holds for each row; delete-clause rows drop, update
-    clauses apply their ``{col: value_sql}`` assignments (conditions
-    and values see ``t.<col>`` = target row and ``s.<col>`` = source
-    row; on the not-matched-by-source side every ``s.`` read is
-    null), unmatched-clause rows pass through unchanged, and source
-    rows matching NO target row insert (whenNotMatchedInsertAll —
-    the engine's standing upsert insert side). Still one shuffle
-    join + one write: the clause algebra is pure Column CASE work on
-    top of the existing single-job merge plan.
-
-    ``want_changes=True`` additionally returns the Change Data Feed
-    row set (``_change_type`` ∈ update_preimage / update_postimage /
-    delete / insert; pass-through rows emit nothing) — the joined
-    frame is checkpointed once so the derived frames share one
-    evaluation instead of re-running the join per change type.
-
-    ``carry_cols=(id_col, version_col)`` threads ROW TRACKING / ROW
-    LINEAGE through the algebra: both live on ``cur``; kept target
-    rows carry the id verbatim (updates too — the lineage contract),
-    the version column nulls on update-clause rows (deriving to the
-    new add's commit version / data sequence) and carries otherwise,
-    and insert rows get null ids (fresh from the new files'
-    reservations). CDF rows stay lineage-free."""
-    wm = list(when_matched or [])
-    nm = list(when_not_matched_by_source or [])
-    t = cur.alias("t")
-    s = latest_p.withColumn("__s_m", F.lit(1)).alias("s")
-    on = F.col(f"t.{key_col}").eqNullSafe(F.col(f"s.{key_col}")) & (
-        F.col("t.__pid") == F.col("s.__pid")
-    )
-    j = t.join(s, on, "left")
-    matched = F.col("s.__s_m").isNotNull()
-
-    def _first_match_idx(clauses: list, side: Column) -> Column:
-        chain = None
-        for i, cl in enumerate(clauses, start=1):
-            cond = side & (
-                F.expr(cl[1]) if cl[1] is not None else F.lit(True)
-            )
-            chain = (
-                F.when(cond, F.lit(i))
-                if chain is None
-                else chain.when(cond, F.lit(i))
-            )
-        return chain.otherwise(F.lit(0)) if chain is not None else F.lit(0)
-
-    midx = _first_match_idx(wm, matched)
-    nidx = _first_match_idx(nm, ~matched)
-
-    vals: list[Column] = []
-    for c in data_cols:
-        v = None
-        for idx_col, clauses in ((midx, wm), (nidx, nm)):
-            for i, cl in enumerate(clauses, start=1):
-                if cl[0] == "update" and c in cl[2]:
-                    term_cond = idx_col == i
-                    term_val = F.expr(cl[2][c]).cast(
-                        cur.schema[c].dataType
-                    )
-                    v = (
-                        F.when(term_cond, term_val)
-                        if v is None
-                        else v.when(term_cond, term_val)
-                    )
-        col = (
-            v.otherwise(F.col(f"t.{c}")) if v is not None
-            else F.col(f"t.{c}")
-        )
-        vals.append(col.alias(c))
-
-    drop_m = [i for i, cl in enumerate(wm, start=1) if cl[0] == "delete"]
-    drop_n = [i for i, cl in enumerate(nm, start=1) if cl[0] == "delete"]
-    upd_m = [i for i, cl in enumerate(wm, start=1) if cl[0] == "update"]
-    upd_n = [i for i, cl in enumerate(nm, start=1) if cl[0] == "update"]
-    keep = F.lit(True)
-    if drop_m:
-        keep = keep & ~midx.isin(drop_m)
-    if drop_n:
-        keep = keep & ~nidx.isin(drop_n)
-    upd = F.lit(False)
-    if upd_m:
-        upd = upd | midx.isin(upd_m)
-    if upd_n:
-        upd = upd | nidx.isin(upd_n)
-
-    carry_sel: list[Column] = []
-    if carry_cols is not None:
-        id_c, cv_c = carry_cols
-        carry_sel = [
-            F.col(f"t.{id_c}").alias(id_c),
-            F.when(upd, F.lit(None).cast("long"))
-            .otherwise(F.col(f"t.{cv_c}"))
-            .alias(cv_c),
-        ]
-    base = j.select(
-        *vals,  # post-clause values under the data_col names
-        F.col("t.__pid").alias("__pid"),
-        *carry_sel,
-        *[F.col(f"t.{c}").alias(f"__old_{c}") for c in data_cols],
-        keep.alias("__keep"),
-        upd.alias("__upd"),
-    )
-    if want_changes:
-        # four consumers below — evaluate the join once
-        base = base.localCheckpoint(eager=False)
-    target_rows = base.filter(F.col("__keep")).select(
-        *data_cols, "__pid",
-        *([carry_cols[0], carry_cols[1]] if carry_cols else []),
-    )
-
-    inserts = (
-        latest_p.alias("b")
-        .join(
-            cur.select(
-                F.col(key_col).alias("__tk"),
-                F.col("__pid").alias("__tpid"),
-            ),
-            F.col(f"b.{key_col}").eqNullSafe(F.col("__tk"))
-            & (F.col("b.__pid") == F.col("__tpid")),
-            "left_anti",
-        )
-    )
-    if when_not_matched is not None:
-        inserts = _apply_insert_clauses(
-            inserts, data_cols,
-            {c: cur.schema[c].dataType for c in data_cols},
-            when_not_matched,
-        )
-    if carry_cols is not None:
-        inserts = inserts.withColumn(
-            carry_cols[0], F.lit(None).cast("long")
-        ).withColumn(carry_cols[1], F.lit(None).cast("long"))
-    out = target_rows.unionByName(inserts)
-    if not want_changes:
-        return out, None
-    old_sel = [F.col(f"__old_{c}").alias(c) for c in data_cols]
-    pre = (
-        base.filter(F.col("__upd"))
-        .select(*old_sel, "__pid")
-        .withColumn("_change_type", F.lit("update_preimage"))
-    )
-    post = (
-        base.filter(F.col("__upd"))
-        .select(*data_cols, "__pid")
-        .withColumn("_change_type", F.lit("update_postimage"))
-    )
-    dele = (
-        base.filter(~F.col("__keep"))
-        .select(*old_sel, "__pid")
-        .withColumn("_change_type", F.lit("delete"))
-    )
-    ins_c = inserts
-    if carry_cols is not None:  # CDF rows are logical
-        ins_c = ins_c.drop(*carry_cols)
-    ins_c = ins_c.withColumn("_change_type", F.lit("insert"))
-    changes = (
-        pre.unionByName(post).unionByName(dele).unionByName(ins_c)
-    )
-    return out, changes
 
 
 def merge_delta_batch(

@@ -86,9 +86,12 @@ from optimus_any2any_spark.sources.iceberg import (
 # mass delete (the spec allows many delete files per commit).
 _MAX_DELETE_FILE_ROWS = 5_000_000
 
-from optimus_any2any_spark.streaming.manifest_table import (
+from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
+    _apply_insert_clauses,
+    _apply_merge_clauses,
+    _validate_merge_clauses,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -551,9 +554,6 @@ def merge_iceberg_batch(
         or when_not_matched is not None
     )
     if conditional:
-        from optimus_any2any_spark.streaming.delta_table import (
-            _validate_merge_clauses,
-        )
 
         _validate_merge_clauses(
             when_matched, when_not_matched_by_source, key_col,
@@ -1145,9 +1145,6 @@ def merge_iceberg_batch(
             else cur.withColumn("__pid", F.lit(0).cast("int"))
         )
         if conditional:
-            from optimus_any2any_spark.streaming.delta_table import (
-                _apply_merge_clauses,
-            )
 
             merged, _ = _apply_merge_clauses(
                 cur_p, latest_p, key_col, list(schema.fieldNames()),
@@ -1211,9 +1208,6 @@ def merge_iceberg_batch(
     if conditional and when_not_matched is not None and not hit_entries:
         # no affected files: every batch row is unmatched — the
         # insert clauses still decide which rows (and values) land
-        from optimus_any2any_spark.streaming.delta_table import (
-            _apply_insert_clauses,
-        )
 
         merged = _apply_insert_clauses(
             latest_p, list(schema.fieldNames()),

@@ -50,12 +50,14 @@ Single-writer per table path (a streaming query IS single-writer).
 from __future__ import annotations
 
 import json
-from bisect import bisect_left
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MAX_DRIVER_KEYS = 100_000
+from optimus_any2any_spark.streaming.merge_core import (
+    _MAX_DRIVER_KEYS,
+    _affected,
+)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -130,40 +132,6 @@ def _sweep_orphans(spark, fs, jvm, path: str, live: set[str]):
         rel = "data/" + st.getPath().getName()
         if rel not in live:
             fs.delete(st.getPath(), False)
-
-
-def _affected(files: list[dict], keys: list | None, kmin, kmax,
-              has_null: bool) -> tuple[list[dict], list[dict]]:
-    """Split manifest files into (affected, untouched) by key stats."""
-    hit, miss = [], []
-    for f in files:
-        if f["rows"] == 0:
-            miss.append(f)
-            continue
-        if not f.get("prunable", True):
-            # key type does not survive the JSON round-trip (timestamp,
-            # decimal, ...): stats are unusable, treat as affected
-            hit.append(f)
-            continue
-        if has_null and f.get("has_null_key"):
-            hit.append(f)
-            continue
-        fmin, fmax = f["min_key"], f["max_key"]
-        if fmin is None:  # file holds only null keys
-            miss.append(f)
-            continue
-        if keys is not None:
-            i = bisect_left(keys, fmin)
-            if i < len(keys) and keys[i] <= fmax:
-                hit.append(f)
-            else:
-                miss.append(f)
-        else:  # too many batch keys for the driver: range overlap
-            if kmin is not None and fmin <= kmax and fmax >= kmin:
-                hit.append(f)
-            else:
-                miss.append(f)
-    return hit, miss
 
 
 def merge_batch(
