@@ -26,22 +26,22 @@ bounded replay            parquet checkpoint + ``_last_checkpoint``
                           every ``checkpoint_interval`` commits
 ==========================================================
 
-MERGE(batch) — copy-on-write at FILE granularity, same algorithm as
-``manifest_table.merge_batch``:
+MERGE(batch) — copy-on-write at FILE granularity. The format-neutral
+steps (batch reduction, key stats, file pruning, pid routing, row
+algebra, the write) live in ``streaming/merge_core.py``, shared with
+the Iceberg and manifest-table writers; ``merge_delta_batch`` adapts
+them to the log:
 
 1. idempotence: if the log's ``txn`` state already covers
    (app_id, batch_id), return without touching anything;
-2. reduce the batch to its latest row per key (ts tiebreak);
-3. prune: parse each live ``add``'s stats and mark it *affected* only
-   if a batch key can fall inside [minValues, maxValues] (exact
-   membership when the distinct batch keys fit on the driver, range
-   overlap otherwise). Files without usable stats are conservatively
-   affected; files outside the footprint are neither read nor
-   rewritten — their add actions simply stay live;
-4. read ONLY affected files, null-safe anti-join on the batch keys,
-   union the batch, range-repartition on the key and write new
-   immutable files with fresh stats;
-5. commit = one JSON log entry (txn + adds + removes) written to a
+2. prune: partition pruning on each live ``add``'s
+   ``partitionValues``, then the core's key-stats rule on its
+   ``stats`` (files without usable stats are conservatively
+   affected; files outside the footprint stay live untouched);
+3. read ONLY affected files (deletion-vector aware), hand them to the
+   core's row algebra and write, and derive CDF rows and new-file
+   stats;
+4. commit = one JSON log entry (txn + adds + removes) written to a
    temp name and renamed — the atomic step. A crash before the rename
    leaves orphan parquet files and an unchanged table; ``vacuum_delta``
    sweeps them.
@@ -78,9 +78,16 @@ from optimus_any2any_spark.sources.delta import _log_dir, replay_log
 from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
-    _apply_insert_clauses,
-    _apply_merge_clauses,
-    _validate_merge_clauses,
+    clause_predicates,
+    conditional_merge,
+    group_key_stats,
+    merge_rows,
+    pid_space,
+    pid_table,
+    reduce_batch,
+    touched,
+    with_pid,
+    write_merged,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -1737,17 +1744,8 @@ def merge_delta_batch(
     delete-clause rows emit delete, inserts emit insert, pass-through
     rows emit nothing. The commitInfo records the clause predicates
     in operationParameters."""
-    from pyspark.sql.window import Window
-
-    conditional = bool(
-        when_matched or when_not_matched_by_source
-        or when_not_matched is not None
-    )
-    if conditional:
-        _validate_merge_clauses(
-            when_matched, when_not_matched_by_source, key_col,
-            when_not_matched=when_not_matched,
-        )
+    clauses = (when_matched, when_not_matched, when_not_matched_by_source)
+    conditional = conditional_merge(key_col, *clauses)
 
     exists = os.path.isdir(_log_dir(table_path))
     state = replay_log(spark, table_path) if exists else {
@@ -1862,26 +1860,9 @@ def merge_delta_batch(
             "delta merge: the merge key cannot be a partition column "
             "(every key group would be a one-row partition)"
         )
-    w = Window.partitionBy(key_col, *part_cols).orderBy(
-        F.col(ts_col).desc()
-    )
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
-    )
-    # the grouped key-stats aggregate doubles as the checkpoint's
-    # materializer AND yields n_total (sum of per-partition n) — the
-    # old shape ran a separate full count job first. Exact key LISTS
-    # (the sharper per-partition file pruner) are recovered by one
-    # extra collect only when the batch fits the driver cap, where
-    # that collect is cheap; an over-cap backfill commit saves a
-    # whole pass. (Iceberg twin: merge_iceberg_batch.)
-    # CHECK-constraint violation counts ride the SAME aggregate (rows
-    # the merge ADDS must satisfy them; rows re-written from affected
-    # files already did) — the old standalone check paid a second full
-    # batch pass whenever the table declared constraints.
+    # CHECK-constraint violation counts ride the key-stats aggregate
+    # (rows the merge ADDS must satisfy them; rows re-written from
+    # affected files already did)
     from optimus_any2any_spark.sources.delta import (
         constraint_violation_aggs,
         raise_constraint_violations,
@@ -1892,18 +1873,8 @@ def merge_delta_batch(
         if state["meta"] is not None
         else ([], [])
     )
-    gstats = (
-        latest.groupBy(*part_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(key_col).alias("kmin"),
-            F.max(key_col).alias("kmax"),
-            F.max(F.col(key_col).isNull().cast("int")).alias(
-                "null_key"
-            ),
-            *ck_aggs,
-        )
-        .collect()
+    latest, gstats = reduce_batch(
+        batch, key_col, ts_col, part_cols, ck_aggs
     )
     n_total = sum(int(r["n"]) for r in gstats)
     if n_total > 0 and ck_names:
@@ -1947,57 +1918,16 @@ def merge_delta_batch(
         [f for f in latest.schema.fields if f.name not in part_cols]
     )
 
-    # ---- single-job partitioned merge -------------------------------
     # Per-partition batch key stats come from ONE job for ALL touched
     # partitions; file pruning is pure driver metadata work; then ONE
     # anti-join + ONE partitionBy write (on a surrogate __pid column,
     # so partition VALUES never round-trip through directory-name
-    # string encoding) covers every partition. The old shape ran one
-    # write job (+ collects) per partition — fine for a late-data
-    # trickle, a driver bottleneck for a backfill touching thousands
-    # of partitions.
-    if n_total <= _MAX_DRIVER_KEYS:
-        # ``latest`` is one row per (key, partition) by construction,
-        # so this collect IS the distinct key set, split per partition
-        krows = latest.select(*part_cols, key_col).collect()
-        grouped: dict[tuple, list] = {}
-        for r in krows:
-            grouped.setdefault(
-                tuple(r[c] for c in part_cols), []
-            ).append(r[key_col])
-        pstats: dict[tuple, dict] = {}
-        for pt, vals in grouped.items():
-            nn = sorted(v for v in vals if v is not None)
-            pstats[pt] = {
-                "n": len(vals),
-                "keys": nn,
-                "kmin": nn[0] if nn else None,
-                "kmax": nn[-1] if nn else None,
-                "has_null": len(nn) < len(vals),
-            }
-    else:  # too many keys for the driver: reuse the grouped aggregate
-        pstats = {
-            tuple(r[c] for c in part_cols): {
-                "n": r["n"],
-                "keys": None,
-                "kmin": r["kmin"],
-                "kmax": r["kmax"],
-                "has_null": bool(r["null_key"]),
-            }
-            for r in gstats
-            if r["n"]
-        }
-
-    if when_not_matched_by_source and not pstats and not part_cols:
-        # empty source, unpartitioned: the clause pass still needs
-        # the one () partition to route through (a partitioned empty
-        # source routes through minted live-partition pids below)
-        pstats = {
-            (): {"n": 0, "keys": [], "kmin": None, "kmax": None,
-                 "has_null": False}
-        }
-    ptuples = sorted(pstats, key=str)
-    pid_of = {pt: i for i, pt in enumerate(ptuples)}
+    # string encoding) covers every partition.
+    pstats = group_key_stats(
+        latest, key_col, part_cols, gstats,
+        empty_group=bool(when_not_matched_by_source),
+    )
+    ptuples, pid_of = pid_space(pstats)
     # partitionValues (and stats) in add actions are keyed by PHYSICAL
     # names on mapped tables — identity otherwise
     pv_str_of = {
@@ -2065,22 +1995,15 @@ def merge_delta_batch(
             hit_by_pid[pid] = entries
             hit_paths.extend(e["path"] for e in entries)
 
-    # attach __pid to batch rows. A batch touching ONE partition
-    # (including every unpartitioned merge) needs no routing at all —
-    # constant pid, no broadcast join, and (below) a plain write
-    # instead of the dynamic-partition write with its per-task sort
-    # (~1s on the benched sf0.1 merge).
+    # A batch touching ONE partition (including every unpartitioned
+    # merge) needs no routing at all — constant pid, no broadcast join,
+    # and a plain write instead of the dynamic-partition write with its
+    # per-task sort (~1s on the benched sf0.1 merge).
     single = len(ptuples) + len(minted) == 1
-    if part_cols:
-        pid_schema = T.StructType(
-            [latest.schema[c] for c in part_cols]
-            + [T.StructField("__pid", T.IntegerType(), False)]
-        )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples], pid_schema
-        )
-    else:
-        pid_df = None
+    pid_df = (
+        pid_table(spark, latest, part_cols, ptuples, pid_of)
+        if part_cols else None
+    )
     # constraint re-attachment needs partition values for EVERY pid;
     # minted pids type their values by casting the log's
     # partitionValues strings — the reader's own typing rule. Batch
@@ -2102,27 +2025,12 @@ def merge_delta_batch(
             "__pid",
         )
         pid_df_all = pid_df.unionByName(mint_df)
-    if single or not part_cols:
-        latest_p = latest.select(*data_cols).withColumn(
-            "__pid", F.lit(0).cast("int")
-        )
-    else:
-        pcond = None
-        for c in part_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
-        latest_p = (
-            latest.alias("b")
-            .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-            .select(
-                *[F.col(f"b.{c}") for c in data_cols], F.col("pd.__pid")
-            )
-        )
+    latest_p = with_pid(
+        latest, None if single else pid_df, part_cols, data_cols
+    )
 
-    merged = latest_p
+    cur = None
     total_hit_rows = 0
-    pre = None
-    cond_changes = None
     if hit_paths:
         # an insert-only merge is an append; touching existing keys
         # rewrites files (data-changing removes) — appendOnly forbids
@@ -2166,107 +2074,48 @@ def merge_delta_batch(
             cur = cur.join(
                 F.broadcast(rel_pid), "__rel", "inner"
             ).drop("__rel")
-        bk = latest_p.select(
-            F.col(key_col).alias("__bk"), F.col("__pid").alias("__bpid")
-        )
-        touch = F.col(f"cur.{key_col}").eqNullSafe(F.col("__bk")) & (
-            F.col("cur.__pid") == F.col("__bpid")
-        )
-        if rt is not None and not conditional:
-            # row tracking's UPDATE contract: a batch row replacing a
-            # matched target row KEEPS that row's id (and takes this
-            # commit's version — a null materialized cv derives from
-            # the new add's defaultRowCommitVersion); unmatched batch
-            # rows insert with null id (fresh from baseRowId + pos).
-            # (The CONDITIONAL path carries lineage inside the clause
-            # algebra itself — carry_cols below.)
-            cur_ids = cur.select(
-                F.col(key_col).alias("__ck"),
-                F.col("__pid").alias("__cpid"),
-                F.col("__rt_id").alias("__rt_prev"),
-            )
-            m2 = F.col(f"b.{key_col}").eqNullSafe(F.col("__ck")) & (
-                F.col("b.__pid") == F.col("__cpid")
-            )
-            latest_p = (
-                latest_p.alias("b")
-                .join(cur_ids, m2, "left")
-                .select(
-                    *[F.col(f"b.{c}") for c in data_cols],
-                    F.col("b.__pid"),
-                    F.col("__rt_prev").alias("__rt_id"),
-                    F.lit(None).cast("long").alias("__rt_cv"),
-                )
-            )
-        if conditional:
-            merged, cond_changes = _apply_merge_clauses(
-                cur, latest_p, key_col, data_cols,
-                when_matched, when_not_matched_by_source,
-                want_changes=change_data,
-                when_not_matched=when_not_matched,
-                carry_cols=(
-                    ("__rt_id", "__rt_cv") if rt is not None else None
-                ),
-            )
-            # UPDATE SET mints NEW values — constraints must gate them
-            # too (pass-through and insert rows re-check for free;
-            # zero jobs when no constraints are declared). Partition
-            # columns re-attach from the pid lookup so constraints
-            # referencing them resolve.
-            from optimus_any2any_spark.sources.delta import (
-                check_delta_constraints as _ck,
-            )
-
-            merged_ck = merged
-            if pid_df_all is not None:
-                merged_ck = merged.join(
-                    F.broadcast(pid_df_all), "__pid"
-                )
-            _ck(state["meta"], merged_ck.drop("__pid"), "merge")
-        else:
-            merged = (
-                cur.alias("cur")
-                .join(bk, touch, "left_anti")
-                .unionByName(latest_p)
-            )
         total_hit_rows = sum(
             max(e["rows"], 0)
             for hits in hit_by_pid.values()
             for e in hits
         )
         hit_paths = sorted(set(hit_paths))
-        if change_data:
-            # preimages: current rows whose (key, partition) the batch
-            # touches — checkpointed once, consumed twice below (row-
-            # tracking columns stay out of the CDF row set: CDF rows
-            # are logical)
-            pre_src = cur
-            if rt is not None:
-                pre_src = cur.drop("__rt_id", "__rt_cv")
-            pre = (
-                pre_src.alias("cur")
-                .join(bk, touch, "inner")
-                .drop("__bk", "__bpid")
-                .localCheckpoint(eager=False)
-            )
-
-    if conditional and when_not_matched is not None and not hit_paths:
-        # no affected files: every batch row is unmatched — the
-        # insert clauses still decide which rows (and values) land
-        merged = _apply_insert_clauses(
-            latest_p, data_cols,
-            {f.name: f.dataType for f in data_schema.fields},
-            when_not_matched,
+    # row tracking: a batch row replacing a matched target row KEEPS
+    # that row's id (a null materialized cv derives from the new add's
+    # defaultRowCommitVersion); inserts derive from baseRowId + pos
+    merged, batch_side, cond_changes = merge_rows(
+        cur, latest_p, key_col, data_schema, clauses,
+        want_changes=change_data,
+        carry_cols=("__rt_id", "__rt_cv") if rt is not None else None,
+    )
+    pre = None
+    if cur is not None and conditional:
+        # UPDATE SET mints NEW values — constraints must gate them
+        # too (pass-through and insert rows re-check for free;
+        # zero jobs when no constraints are declared). Partition
+        # columns re-attach from the pid lookup so constraints
+        # referencing them resolve.
+        from optimus_any2any_spark.sources.delta import (
+            check_delta_constraints as _ck,
         )
-        if change_data:
-            cond_changes = merged.withColumn(
-                "_change_type", F.lit("insert")
-            )
+
+        merged_ck = merged
+        if pid_df_all is not None:
+            merged_ck = merged.join(F.broadcast(pid_df_all), "__pid")
+        _ck(state["meta"], merged_ck.drop("__pid"), "merge")
+    elif cur is not None and change_data:
+        # preimages: current rows whose (key, partition) the batch
+        # touches — checkpointed once, consumed twice below (row-
+        # tracking columns stay out of the CDF row set: CDF rows
+        # are logical)
+        pre_src = cur.drop("__rt_id", "__rt_cv") if rt is not None else cur
+        pre = (
+            touched(pre_src, latest_p, key_col, "inner")
+            .drop("__bk", "__bpid")
+            .localCheckpoint(eager=False)
+        )
 
     new_adds: list[dict] = []  # (rel, partitionValues) pending stats
-    file_seq = 0
-    n_rows = n_total + total_hit_rows
-    n_files = max(1, -(-n_rows // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-merge-v{version}")
     if rt is not None:
         if "__rt_id" not in merged.columns:
@@ -2279,50 +2128,21 @@ def merge_delta_batch(
         merged = merged.withColumnRenamed(
             "__rt_id", rt[0]
         ).withColumnRenamed("__rt_cv", rt[1])
-    if single:
-        out_df = merged.drop("__pid").repartitionByRange(
-            n_files, F.col(key_col)
-        )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=rt if rt is not None else (),
+    parts = write_merged(
+        merged, key_col, n_total + total_hit_rows, target_rows_per_file,
+        tmp, single,
+        prepare=(
+            lambda df: _to_phys(
+                df, data_cols, pfields,
+                keep=[c for c in ("__pid", *(rt or ())) if c in df.columns],
             )
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = pv_of_pid[0]
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-merge.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_adds.append({"path": rel, "partitionValues": pv})
-    else:
-        out_df = merged.repartitionByRange(
-            n_files, F.col("__pid"), F.col(key_col)
-        )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = pv_of_pid[pid]
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-merge.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_adds.append({"path": rel, "partitionValues": pv})
+        ) if mapped else None,
+    )
+    for file_seq, (part, pid) in enumerate(parts):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-merge.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_adds.append({"path": rel, "partitionValues": pv_of_pid[pid]})
     shutil.rmtree(tmp)
 
     cdc_rel: list[str] = []
@@ -2347,7 +2167,7 @@ def merge_delta_batch(
                 F.col("__pk")
             ) & (F.col("b.__pid") == F.col("__ppid"))
             post = (
-                latest_p.alias("b")
+                batch_side.alias("b")
                 .join(pk, matched, "left")
                 .select(
                     *[F.col(f"b.{c}") for c in data_cols],
@@ -2476,31 +2296,13 @@ def merge_delta_batch(
                 }
             }
         )
-    op_params: dict = {"key": key_col}
-    if when_matched:
-        # commitInfo records the clause predicates (delta-spark puts
-        # matchedPredicates/notMatchedBySourcePredicates in
-        # operationParameters the same way)
-        op_params["matchedPredicates"] = json.dumps(
-            [
-                {"predicate": cl[1] or "true", "actionType": cl[0]}
-                for cl in when_matched
-            ]
-        )
-    if when_not_matched is not None:
-        op_params["notMatchedPredicates"] = json.dumps(
-            [
-                {"predicate": cl[1] or "true", "actionType": cl[0]}
-                for cl in when_not_matched
-            ]
-        )
-    if when_not_matched_by_source:
-        op_params["notMatchedBySourcePredicates"] = json.dumps(
-            [
-                {"predicate": cl[1] or "true", "actionType": cl[0]}
-                for cl in when_not_matched_by_source
-            ]
-        )
+    # delta-spark records the clause predicates in commitInfo's
+    # operationParameters the same way (an empty not-matched list too)
+    op_params: dict = {"key": key_col, **clause_predicates([
+        ("matchedPredicates", when_matched or None),
+        ("notMatchedPredicates", when_not_matched),
+        ("notMatchedBySourcePredicates", when_not_matched_by_source or None),
+    ])}
     _commit(
         _log_dir(table_path), version, actions,
         operation="MERGE", operation_params=op_params,

@@ -364,16 +364,17 @@ def write_merged(
     ]
 
 
-def clause_predicates(named: list[tuple[str, list]]) -> dict[str, str]:
-    """``{name: JSON [{predicate, actionType}]}`` per clause list — the
-    shape Delta's commitInfo operationParameters and Iceberg's snapshot
-    summary both record."""
+def clause_predicates(named: list[tuple[str, list | None]]) -> dict[str, str]:
+    """``{name: JSON [{predicate, actionType}]}`` for each clause list
+    that is not None — the shape Delta's commitInfo
+    operationParameters and Iceberg's snapshot summary both record."""
     return {
         name: json.dumps(
             [{"predicate": cl[1] or "true", "actionType": cl[0]}
              for cl in clauses]
         )
         for name, clauses in named
+        if clauses is not None
     }
 
 
