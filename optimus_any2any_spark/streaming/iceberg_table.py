@@ -89,9 +89,17 @@ _MAX_DELETE_FILE_ROWS = 5_000_000
 from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
-    _apply_insert_clauses,
-    _apply_merge_clauses,
-    _validate_merge_clauses,
+    clause_predicates,
+    combine_key_stats,
+    conditional_merge,
+    empty_key_stats,
+    group_key_stats,
+    merge_rows,
+    pid_space,
+    pid_table,
+    reduce_batch,
+    with_pid,
+    write_merged,
 )
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
@@ -488,8 +496,6 @@ def merge_iceberg_batch(
     manifest partition tuples carry the TRANSFORMED values keyed by
     the spec's field names. Unknown transforms and non-primitive
     partition sources are rejected, not mis-read."""
-    from pyspark.sql.window import Window
-
     md = _meta_dir(table_path)
     hint = os.path.join(md, "version-hint.text")
     exists = os.path.exists(hint)
@@ -509,6 +515,9 @@ def merge_iceberg_batch(
     # from the new entries' first_row_id
     _refuse_unpublished_branches(meta)
     lineage = meta.get("next-row-id") is not None
+    lineage_cols = (
+        ("_row_id", "_last_updated_sequence_number") if lineage else ()
+    )
     specs = meta.get("partition-specs") or []
     default_spec = next(
         (s for s in specs if s.get("spec-id") == meta.get(
@@ -529,7 +538,6 @@ def merge_iceberg_batch(
 
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        spark_type_of_result,
         transform_column,
     )
 
@@ -541,37 +549,23 @@ def merge_iceberg_batch(
     # decides which rows share a tuple.
     pspec = _parse_pspec(default_spec, by_id, "merge")
     part_names = [p["name"] for p in pspec]
-    # conditional clause surface (VERDICT r9 item 5's Delta twin —
-    # the row algebra is format-agnostic and shared with
-    # streaming/delta_table.py): ordered ("update"|"delete", cond,
-    # set) matched / not-matched-by-source clauses plus ("insert",
-    # cond, values) not-matched clauses; first match wins, t./s.
-    # references; unmatched source rows insert-all unless
-    # when_not_matched says otherwise. Snapshot summary records the
-    # predicates.
-    conditional = bool(
-        when_matched or when_not_matched_by_source
-        or when_not_matched is not None
-    )
-    if conditional:
-
-        _validate_merge_clauses(
-            when_matched, when_not_matched_by_source, key_col,
-            when_not_matched=when_not_matched,
-        )
-        if pspec:
-            # a clause assigning a partition SOURCE column would put
-            # rewritten rows in files whose manifest tuple disagrees
-            # with their contents — refuse, like the Delta twin's
-            # partition-column rule
-            srcs = {pp["src"] for pp in pspec}
-            for cls in (when_matched or []) + (when_not_matched or []):
-                vset = cls[2] if len(cls) == 3 else None
-                if vset and srcs & set(vset):
-                    raise ValueError(
-                        "iceberg merge: clause assignments may not "
-                        f"touch partition source columns {sorted(srcs)}"
-                    )
+    # conditional clauses: the same surface and row algebra as
+    # merge_delta_batch (streaming/merge_core.py); the snapshot summary
+    # records the predicates
+    clauses = (when_matched, when_not_matched, when_not_matched_by_source)
+    conditional = conditional_merge(key_col, *clauses)
+    if conditional and pspec:
+        # a clause assigning a partition SOURCE column would put
+        # rewritten rows in files whose manifest tuple disagrees with
+        # their contents — refuse, like the Delta partition-column rule
+        srcs = {pp["src"] for pp in pspec}
+        for cls in (when_matched or []) + (when_not_matched or []):
+            vset = cls[2] if len(cls) == 3 else None
+            if vset and srcs & set(vset):
+                raise ValueError(
+                    "iceberg merge: clause assignments may not "
+                    f"touch partition source columns {sorted(srcs)}"
+                )
     part_fields = [
         (p["name"], avro_type_of_result(p["res_type"])) for p in pspec
     ]
@@ -618,10 +612,7 @@ def merge_iceberg_batch(
             )
         table_cols = set(schema.fieldNames())
         extra = [c for c in batch.columns if c not in table_cols]
-        if lineage and any(
-            c in ("_row_id", "_last_updated_sequence_number")
-            for c in extra
-        ):
+        if any(c in lineage_cols for c in extra):
             raise NotImplementedError(
                 "iceberg merge: merge_schema would shadow the "
                 "reserved lineage column names — beyond this writer"
@@ -695,35 +686,7 @@ def merge_iceberg_batch(
     # the dedupe window and every partition-scoped step below key on
     # the TRANSFORMED partition values (__pv*), computed once here and
     # pinned by the checkpoint — identity specs make them plain copies
-    w = Window.partitionBy(key_col, *pv_cols).orderBy(
-        F.col(ts_col).desc()
-    )
-    latest = (
-        _with_pvs(batch)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
-    )
-    # the grouped key-stats aggregate doubles as the checkpoint's
-    # materializer AND yields n_total (sum of per-partition n) — the
-    # old shape ran a separate full count job first. Exact key LISTS
-    # (the sharper per-partition file pruner) are recovered by one
-    # extra collect only when the batch fits the driver cap, where
-    # that collect is cheap; an over-cap backfill commit saves a
-    # whole pass.
-    gstats = (
-        latest.groupBy(*pv_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(key_col).alias("kmin"),
-            F.max(key_col).alias("kmax"),
-            F.max(F.col(key_col).isNull().cast("int")).alias(
-                "null_key"
-            ),
-        )
-        .collect()
-    )
+    latest, gstats = reduce_batch(_with_pvs(batch), key_col, ts_col, pv_cols)
     n_total = sum(int(r["n"]) for r in gstats)
     if n_total == 0 and not when_not_matched_by_source:
         # (an EMPTY source with when_not_matched_by_source is still a
@@ -748,47 +711,11 @@ def merge_iceberg_batch(
         os.replace(tmph, hint)
         return version
 
-    # per-partition batch key stats: ONE job for ALL touched
-    # partitions (mirrors merge_delta_batch)
-    if n_total <= _MAX_DRIVER_KEYS:
-        krows = latest.select(*pv_cols, key_col).collect()
-        grouped: dict[tuple, list] = {}
-        for r in krows:
-            grouped.setdefault(
-                tuple(r[c] for c in pv_cols), []
-            ).append(r[key_col])
-        pstats: dict[tuple, dict] = {}
-        for pt, vals in grouped.items():
-            nn = sorted(v for v in vals if v is not None)
-            pstats[pt] = {
-                "n": len(vals),
-                "keys": nn,
-                "kmin": nn[0] if nn else None,
-                "kmax": nn[-1] if nn else None,
-                "has_null": len(nn) < len(vals),
-            }
-    else:
-        pstats = {
-            tuple(r[c] for c in pv_cols): {
-                "n": r["n"],
-                "keys": None,
-                "kmin": r["kmin"],
-                "kmax": r["kmax"],
-                "has_null": bool(r["null_key"]),
-            }
-            for r in gstats
-            if r["n"]
-        }
-    if when_not_matched_by_source and not pstats and not pspec:
-        # empty source, unpartitioned: the clause pass still routes
-        # through the one () partition (partitioned tables mint their
-        # pids from the affected rows' transform tuples below)
-        pstats = {
-            (): {"n": 0, "keys": [], "kmin": None, "kmax": None,
-                 "has_null": False}
-        }
-    ptuples = sorted(pstats, key=str)
-    pid_of = {pt: i for i, pt in enumerate(ptuples)}
+    pstats = group_key_stats(
+        latest, key_col, pv_cols, gstats,
+        empty_group=bool(when_not_matched_by_source),
+    )
+    ptuples, pid_of = pid_space(pstats)
 
     # PARTITION EVOLUTION (spec "Partition Evolution", VERDICT r9
     # item 6): manifests written under a NON-default spec id prune by
@@ -802,25 +729,7 @@ def merge_iceberg_batch(
     specs_by_id = {int(s["spec-id"]): s for s in specs} or {
         0: {"spec-id": 0, "fields": meta.get("partition-spec") or []}
     }
-    g_keys: list | None = []
-    for _st in pstats.values():
-        if _st["keys"] is None:
-            g_keys = None
-            break
-        g_keys.extend(_st["keys"])
-    _gmins = [
-        _st["kmin"] for _st in pstats.values() if _st["kmin"] is not None
-    ]
-    _gmaxs = [
-        _st["kmax"] for _st in pstats.values() if _st["kmax"] is not None
-    ]
-    gstats = {
-        "n": sum(_st["n"] for _st in pstats.values()),
-        "keys": sorted(g_keys) if g_keys is not None else None,
-        "kmin": min(_gmins) if _gmins else None,
-        "kmax": max(_gmaxs) if _gmaxs else None,
-        "has_null": any(_st["has_null"] for _st in pstats.values()),
-    }
+    table_stats = combine_key_stats(list(pstats.values()))
 
     # current snapshot's manifests, each with its entries
     cur_snap_id = meta.get("current-snapshot-id")
@@ -922,7 +831,7 @@ def merge_iceberg_batch(
             # tuple says nothing, so those prune on key bounds against
             # the WHOLE batch
             if foreign_spec:
-                st = gstats
+                st = table_stats
             elif pspec:
                 pdict = e["data_file"].get("partition") or {}
                 pt = tuple(pdict.get(n) for n in part_names)
@@ -983,8 +892,6 @@ def merge_iceberg_batch(
         if not dead:
             carried.append(m)
 
-    # attach __pid to batch rows (broadcast partition-tuple lookup);
-    # Iceberg data files keep ALL columns, so __pid only routes rows.
     # PARTITION EVOLUTION: rows in old-spec hit files may land in
     # CURRENT-spec partitions the batch does not touch, so the pid set
     # must extend to every tuple those rows produce — one distinct
@@ -1080,57 +987,21 @@ def merge_iceberg_batch(
         for r in _with_pvs(cur0).select(*pv_cols).distinct().collect():
             pt = tuple(r[c] for c in pv_cols)
             if pt not in pid_of:
-                pstats[pt] = {
-                    "n": 0, "keys": [], "kmin": None, "kmax": None,
-                    "has_null": False,
-                }
-        ptuples = sorted(pstats, key=str)
-        pid_of = {pt: i for i, pt in enumerate(ptuples)}
+                pstats[pt] = empty_key_stats()
+        ptuples, pid_of = pid_space(pstats)
 
     # One touched partition (incl. every unpartitioned merge) skips
-    # the routing AND the dynamic-partition write below.
+    # the routing AND the dynamic-partition write below. Iceberg data
+    # files keep every column, so __pid only routes rows to files.
     single = len(ptuples) == 1
-    if pspec and not single:
-        pid_ddl = ", ".join(
-            f"{pv_cols[i]} {spark_type_of_result(pspec[i]['res_type'])}"
-            for i in range(len(pspec))
-        )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples],
-            f"{pid_ddl}, __pid int",
-        )
-        pcond = None
-        for c in pv_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
+    pid_df = (
+        pid_table(spark, latest, pv_cols, ptuples, pid_of)
+        if pspec and not single else None
+    )
+    data_cols = schema.fieldNames()
+    latest_p = with_pid(latest, pid_df, pv_cols, data_cols)
 
-        def _with_pid(frame):
-            # frame must carry the __pv* columns; the select drops
-            # them — data files keep exactly the table schema (plus
-            # the materialized lineage columns when present)
-            extra = [
-                c
-                for c in ("_row_id", "_last_updated_sequence_number")
-                if c in frame.columns
-            ]
-            return (
-                frame.alias("b")
-                .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-                .select(
-                    *[F.col(f"b.{c}") for c in schema.fieldNames()],
-                    *[F.col(f"b.{c}") for c in extra],
-                    F.col("pd.__pid"),
-                )
-            )
-
-        latest_p = _with_pid(latest)
-    else:
-        _with_pid = None
-        latest_p = latest.drop(*pv_cols).withColumn(
-            "__pid", F.lit(0).cast("int")
-        )
-
-    merged = latest_p
+    cur_p = None
     hit_rows = 0
     if hit_entries:
         # affected files read WITH any delete files applied (sequence-
@@ -1139,123 +1010,33 @@ def merge_iceberg_batch(
         # (cur0 is the same frame, already built for the evolved-table
         # pid extension above)
         cur = cur0 if cur0 is not None else _read_hit_files()
-        cur_p = (
-            _with_pid(_with_pvs(cur))
-            if _with_pid is not None
-            else cur.withColumn("__pid", F.lit(0).cast("int"))
+        cur_p = with_pid(
+            _with_pvs(cur) if pid_df is not None else cur, pid_df, pv_cols,
+            [*data_cols, *lineage_cols],
         )
-        if conditional:
-
-            merged, _ = _apply_merge_clauses(
-                cur_p, latest_p, key_col, list(schema.fieldNames()),
-                when_matched, when_not_matched_by_source,
-                when_not_matched=when_not_matched,
-                carry_cols=(
-                    ("_row_id", "_last_updated_sequence_number")
-                    if lineage
-                    else None
-                ),
-            )
-        else:
-            bk = latest_p.select(
-                F.col(key_col).alias("__bk"),
-                F.col("__pid").alias("__bpid"),
-            )
-            batch_side = latest_p
-            if lineage:
-                # the update contract: a batch row replacing a
-                # matched target row KEEPS that row's id; its
-                # sequence derives fresh (null materialized → the
-                # new file's data sequence). Unmatched rows insert
-                # with null id (fresh from first_row_id + position).
-                cur_ids = cur_p.select(
-                    F.col(key_col).alias("__ck"),
-                    F.col("__pid").alias("__cpid"),
-                    F.col("_row_id").alias("__rl_prev"),
-                )
-                m2 = F.col(f"b.{key_col}").eqNullSafe(
-                    F.col("__ck")
-                ) & (F.col("b.__pid") == F.col("__cpid"))
-                batch_side = (
-                    latest_p.alias("b")
-                    .join(cur_ids, m2, "left")
-                    .select(
-                        *[
-                            F.col(f"b.{c}")
-                            for c in schema.fieldNames()
-                        ],
-                        F.col("__rl_prev").alias("_row_id"),
-                        F.lit(None)
-                        .cast("long")
-                        .alias("_last_updated_sequence_number"),
-                        F.col("b.__pid"),
-                    )
-                )
-            merged = (
-                cur_p.alias("cur")
-                .join(
-                    bk,
-                    F.col(f"cur.{key_col}").eqNullSafe(F.col("__bk"))
-                    & (F.col("cur.__pid") == F.col("__bpid")),
-                    "left_anti",
-                )
-                .unionByName(batch_side)
-            )
         hit_rows = sum(
             int(e["data_file"]["record_count"]) for e in hit_entries
         )
+    # row lineage: a batch row replacing a matched target row KEEPS
+    # that row's id; its sequence derives fresh from the new file
+    merged, _, _ = merge_rows(
+        cur_p, latest_p, key_col, schema, clauses,
+        carry_cols=lineage_cols or None,
+    )
 
-    if conditional and when_not_matched is not None and not hit_entries:
-        # no affected files: every batch row is unmatched — the
-        # insert clauses still decide which rows (and values) land
-
-        merged = _apply_insert_clauses(
-            latest_p, list(schema.fieldNames()),
-            {f.name: f.dataType for f in schema.fields},
-            when_not_matched,
-        )
-
-    n_rows = n_total + hit_rows
-    n_files = max(1, -(-n_rows // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-icemerge-v{version}")
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
-    if single:
-        (
-            merged.drop("__pid")
-            .repartitionByRange(n_files, F.col(key_col))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
-    else:
-        (
-            merged.repartitionByRange(
-                n_files, F.col("__pid"), F.col(key_col)
-            )
-            .write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    parts = write_merged(
+        merged, key_col, n_total + hit_rows, target_rows_per_file, tmp,
+        single,
+    )
+    for file_seq, (part, pid) in enumerate(parts):
+        rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     per_file = (
@@ -1384,19 +1165,12 @@ def merge_iceberg_batch(
         os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA, ml_rows
     )
 
-    summary = {"operation": "overwrite"}
-    for nm_, cls_ in (
-        ("matched-predicates", when_matched),
-        ("not-matched-predicates", when_not_matched),
-        ("not-matched-by-source-predicates", when_not_matched_by_source),
-    ):
-        if cls_:
-            summary[nm_] = json.dumps(
-                [
-                    {"predicate": c_[1] or "true", "actionType": c_[0]}
-                    for c_ in cls_
-                ]
-            )
+    summary = {"operation": "overwrite", **clause_predicates([
+        ("matched-predicates", when_matched or None),
+        ("not-matched-predicates", when_not_matched or None),
+        ("not-matched-by-source-predicates",
+         when_not_matched_by_source or None),
+    ])}
     if batch_id is not None:
         summary["optimus-app-id"] = app_id
         summary["optimus-batch-id"] = str(batch_id)
