@@ -51,12 +51,16 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from optimus_any2any_spark.streaming.merge_core import (
-    _MAX_DRIVER_KEYS,
     _affected,
+    group_key_stats,
+    merge_rows,
+    reduce_batch,
+    with_pid,
+    write_merged,
 )
 
 
@@ -145,8 +149,6 @@ def merge_batch(
 ) -> dict:
     """One file-level MERGE commit; returns the new (or unchanged, on
     an idempotent skip) manifest dict."""
-    from pyspark.sql.window import Window
-
     jvm, fs = _fs(spark, path)
     manifest = latest_manifest(spark, path)
     version = (manifest["version"] + 1) if manifest else 1
@@ -160,68 +162,38 @@ def merge_batch(
     live = {f["path"] for f in manifest["files"]} if manifest else set()
     _sweep_orphans(spark, fs, jvm, path, live)
 
-    w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc())
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=False)
-    )
-    stats = latest.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(key_col).alias("nk"),
-        F.min(key_col).alias("kmin"),
-        F.max(key_col).alias("kmax"),
-        F.max(F.col(key_col).isNull().cast("int")).alias("null_key"),
-    ).collect()[0]
-    if stats["n"] == 0:
+    latest, gstats = reduce_batch(batch, key_col, ts_col, [])
+    if gstats[0]["n"] == 0:
         return manifest or {"version": 0, "batch_id": batch_id, "files": []}
-    has_null = bool(stats["null_key"])
-    keys = None
-    if stats["nk"] <= _MAX_DRIVER_KEYS:
-        keys = sorted(
-            r[0]
-            for r in latest.select(key_col).distinct().collect()
-            if r[0] is not None
-        )
+    st = group_key_stats(latest, key_col, [], gstats)[()]
     old_files = manifest["files"] if manifest else []
     hit, miss = _affected(
-        old_files, keys, stats["kmin"], stats["kmax"], has_null
+        old_files, st["keys"], st["kmin"], st["kmax"], st["has_null"]
     )
 
-    merged = latest
+    latest_p = with_pid(latest, None, [], latest.columns)
+    cur = None
     if hit:
         cur = spark.read.parquet(
             *[f"{path}/{f['path']}" for f in hit]
-        ).alias("cur")
-        nk = latest.select(key_col).alias("nk")
-        merged = cur.join(
-            nk,
-            F.col(f"cur.{key_col}").eqNullSafe(F.col(f"nk.{key_col}")),
-            "left_anti",
-        ).unionByName(latest)
-
-    n_rows = stats["n"] + sum(f["rows"] for f in hit)
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    tmp = f"{path}/.tmp-commit-v{version}"
-    (
-        merged.repartitionByRange(n_files, key_col)
-        .write.mode("overwrite")
-        .parquet(tmp)
+        ).withColumn("__pid", F.lit(0).cast("int"))
+    merged, _, _ = merge_rows(
+        cur, latest_p, key_col, latest.schema, (None, None, None)
     )
-    # move parts into data/ under deterministic names, then stats-scan
-    # ONLY the new files' key column (column-pruned footer-cheap read)
+
+    tmp = f"{path}/.tmp-commit-v{version}"
+    parts = write_merged(
+        merged, key_col, st["n"] + sum(f["rows"] for f in hit),
+        target_rows_per_file, tmp, True,
+    )
+    # move parts into data/ under deterministic names
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path + "/data"))
     new_rel: list[str] = []
-    i = 0
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp)):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
+    for i, (part, _pid) in enumerate(parts):
         rel = f"data/v{version}-{i}.parquet"
-        i += 1
         if not fs.rename(
-            st.getPath(), jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
+            jvm.org.apache.hadoop.fs.Path(part),
+            jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}"),
         ):
             raise IOError(f"data file move failed: {rel}")
         new_rel.append(rel)
@@ -240,10 +212,11 @@ def merge_batch(
     )
 
     by_name: dict[str, dict] = {}
+    out_schema = merged.drop("__pid").schema
     ft = footer_file_stats(
         [f"{path}/{r}" for r in new_rel],
         [key_col],
-        {key_col: kind_of_spark_type(merged.schema[key_col].dataType)},
+        {key_col: kind_of_spark_type(out_schema[key_col].dataType)},
         session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
     )
     if ft is not None:
@@ -258,7 +231,7 @@ def merge_batch(
         }
     else:
         per_file = (
-            spark.read.schema(merged.schema)
+            spark.read.schema(out_schema)
             .parquet(*[f"{path}/{r}" for r in new_rel])
             .select(key_col)
             .withColumn("__f", F.input_file_name())
