@@ -85,6 +85,7 @@ from optimus_any2any_spark.streaming.merge_core import (
     pid_space,
     pid_table,
     reduce_batch,
+    sorted_keys,
     touched,
     with_pid,
     write_merged,
@@ -3711,7 +3712,7 @@ def delete_delta_keys(
     kmin = kmax = None
     if n_keys <= _MAX_DRIVER_KEYS:
         has_null = any(r[0] is None for r in probe)
-        key_list = sorted(r[0] for r in probe if r[0] is not None)
+        key_list = sorted_keys(r[0] for r in probe)
     else:
         kstats = kdf.agg(
             F.count(F.lit(1)).alias("n"),

@@ -98,6 +98,7 @@ from optimus_any2any_spark.streaming.merge_core import (
     pid_space,
     pid_table,
     reduce_batch,
+    sorted_keys,
     with_pid,
     write_merged,
 )
@@ -1503,10 +1504,9 @@ def delete_iceberg_positions(
     if n_keys == 0:
         return prev_version
     if n_keys <= _MAX_DRIVER_KEYS:
-        nonnull = [r[0] for r in probe if r[0] is not None]
-        ordk = lambda v: (isinstance(v, float) and v != v, v)  # noqa: E731
-        kmin = min(nonnull, key=ordk) if nonnull else None
-        kmax = max(nonnull, key=ordk) if nonnull else None
+        nonnull = sorted_keys(r[0] for r in probe)
+        kmin = nonnull[0] if nonnull else None
+        kmax = nonnull[-1] if nonnull else None
     else:
         krow = kdf.agg(
             F.count(F.lit(1)).alias("n"),

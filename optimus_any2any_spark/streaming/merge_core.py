@@ -26,6 +26,12 @@ format:
 Each format keeps its own log or metadata replay, idempotence check,
 schema evolution, live-file listing and partition pruning, hit-file
 read, change rows, new-file stats and commit.
+
+Keys order the way Spark orders them: NaN above every other float. A
+file whose max-key stat is NaN therefore still covers every finite key
+above its min, and sorted key lists stay bisectable (Python's ``<`` is
+False both ways against NaN, so plain ``sorted`` leaves such lists
+unsorted).
 """
 
 from __future__ import annotations
@@ -44,9 +50,17 @@ from optimus_any2any_spark.localrel import local_rows_df
 _MAX_DRIVER_KEYS = 100_000
 
 
+def key_order(v):
+    """Sort key placing NaN above every other value (Spark's float
+    ordering); NaN keys compare equal to each other."""
+    if isinstance(v, float) and v != v:
+        return (1, 0.0)
+    return (0, v)
+
+
 def sorted_keys(vals) -> list:
-    """The non-null values of ``vals``, sorted."""
-    return sorted(v for v in vals if v is not None)
+    """The non-null values of ``vals`` in :func:`key_order`."""
+    return sorted((v for v in vals if v is not None), key=key_order)
 
 
 def _affected(files: list[dict], keys: list | None, kmin, kmax,
@@ -73,11 +87,14 @@ def _affected(files: list[dict], keys: list | None, kmin, kmax,
         if fmin is None:  # file holds only null keys
             miss.append(f)
             continue
+        lo, hi = key_order(fmin), key_order(fmax)
         if keys is not None:
-            i = bisect_left(keys, fmin)
-            covered = i < len(keys) and keys[i] <= fmax
+            i = bisect_left(keys, lo, key=key_order)
+            covered = i < len(keys) and key_order(keys[i]) <= hi
         else:  # too many batch keys for the driver: range overlap
-            covered = kmin is not None and fmin <= kmax and fmax >= kmin
+            covered = kmin is not None and (
+                lo <= key_order(kmax) and hi >= key_order(kmin)
+            )
         (hit if covered else miss).append(f)
     return hit, miss
 
@@ -184,9 +201,9 @@ def combine_key_stats(stats: list[dict]) -> dict:
     maxs = [st["kmax"] for st in stats if st["kmax"] is not None]
     return {
         "n": sum(st["n"] for st in stats),
-        "keys": sorted(keys) if keys is not None else None,
-        "kmin": min(mins) if mins else None,
-        "kmax": max(maxs) if maxs else None,
+        "keys": sorted(keys, key=key_order) if keys is not None else None,
+        "kmin": min(mins, key=key_order) if mins else None,
+        "kmax": max(maxs, key=key_order) if maxs else None,
         "has_null": any(st["has_null"] for st in stats),
     }
 
