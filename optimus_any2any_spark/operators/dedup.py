@@ -24,6 +24,8 @@ reproduces the arithmetic exactly.
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -210,14 +212,16 @@ _MERSENNE31 = 2147483647
 
 def _affine_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for the universal-hash family
-    h_i(x) = (a_i * x + b_i) mod 2^31-1 (Knuth multiplicative constants
-    — fixed, no runtime randomness, reproducible in any engine)."""
-    params = []
-    for i in range(num_hashes):
-        a = (2654435761 * (i + 1)) % _MERSENNE31 or 1
-        b = (40503 * (i + 1) * (i + 1) + 17) % _MERSENNE31
-        params.append((a, b))
-    return params
+    h_i(x) = (a_i * x + b_i) mod 2^31-1, drawn independently from a
+    fixed-seed RNG (1 <= a, 0 <= b, both < 2^31-1) — reproducible in any
+    engine. Multipliers that are multiples of one constant make the
+    hashes disagree together, and LSH then misses near-duplicates far
+    more often than independent hashes would."""
+    rng = random.Random(0x6D696E68)
+    return [
+        (rng.randrange(1, _MERSENNE31), rng.randrange(_MERSENNE31))
+        for _ in range(num_hashes)
+    ]
 
 
 def _base_hash(col: Column) -> Column:
