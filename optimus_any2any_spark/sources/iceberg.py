@@ -3425,16 +3425,25 @@ def write_iceberg_commit(
         # a full groupBy(input_file_name) scan, i.e. O(written bytes)
         # of extra read per commit; the add_files branch above always
         # used footers). Only record_count feeds the manifest entries.
+        # A footer pyarrow cannot read falls back to one Spark count
+        # per file (zero-row files are absent from it).
         import pyarrow.parquet as _wpq
 
-        counts = {
-            os.path.basename(r): int(
-                _wpq.read_metadata(
-                    os.path.join(table_path, r)
-                ).num_rows
-            )
-            for r in data_rel
-        }
+        paths = [os.path.join(table_path, r) for r in data_rel]
+        try:
+            counts = {
+                os.path.basename(p): int(_wpq.read_metadata(p).num_rows)
+                for p in paths
+            }
+        except Exception:
+            from pyspark.sql import functions as F
+
+            counts = dict.fromkeys(map(os.path.basename, paths), 0)
+            for r in (
+                df.sparkSession.read.schema(df.schema).parquet(*paths)
+                .groupBy(F.input_file_name().alias("f")).count().collect()
+            ):
+                counts[r["f"].rsplit("/", 1)[-1]] = int(r["count"])
     # an empty frame (e.g. the partitioned-table bootstrap) still
     # writes one zero-row part file — drop it rather than listing a
     # rowless entry in the manifest

@@ -569,3 +569,53 @@ class TestLineageUpgrade:
         )
         got3 = dict((k, r) for k, r, _ in _lineage(spark, t))
         assert got3 == {1: 0, 3: 2, 4: 3, 5: 4}
+
+
+class TestAppendFooterFallback:
+    """Appends count rows from parquet footers; when pyarrow cannot
+    read a footer they fall back to a Spark count per file, with the
+    same record counts and first_row_id assignment."""
+
+    @staticmethod
+    def _entries(t):
+        import glob as _g
+
+        from optimus_any2any_spark.formats.avrobin import read_container
+
+        out = []
+        for mf in sorted(_g.glob(f"{t}/metadata/*-m*.avro")):
+            _, entries = read_container(mf)
+            out += [
+                (
+                    e["data_file"]["file_path"].rsplit("/", 1)[-1],
+                    e["data_file"]["record_count"],
+                    e["data_file"].get("first_row_id"),
+                )
+                for e in entries
+            ]
+        return sorted(out)
+
+    def _append_twice(self, spark, t):
+        df = spark.createDataFrame(
+            [(k, "v", 0) for k in range(7)], "k long, v string, ts long"
+        )
+        write_iceberg_commit(
+            df.repartitionByRange(3, "k"), t, row_lineage=True
+        )
+        write_iceberg_commit(
+            df.filter("k < 2").repartitionByRange(2, "k"), t
+        )
+        return self._entries(t), load_table_metadata(t)["next-row-id"]
+
+    def test_unreadable_footers_fall_back(self, spark, tmp_path, monkeypatch):
+        import pyarrow.parquet as pq
+
+        want = self._append_twice(spark, str(tmp_path / "footers"))
+
+        def unreadable(*_a, **_k):
+            raise OSError("unreadable footer")
+
+        monkeypatch.setattr(pq, "read_metadata", unreadable)
+        got = self._append_twice(spark, str(tmp_path / "fallback"))
+        assert got == want
+        assert want[1] == 9
