@@ -1,7 +1,8 @@
 """File-level MERGE upsert committing Apache Iceberg snapshots.
 
-The third target of the engine's copy-on-write MERGE core (after the
-JSON-manifest table and the Delta log): each merge appends an Iceberg
+The Iceberg adapter of the engine's copy-on-write MERGE core
+(``streaming/merge_core.py``, shared with the Delta log and the
+JSON-manifest table): each merge appends an Iceberg
 snapshot in the v1 HadoopCatalog layout (iceberg.apache.org/spec) —
 read by :mod:`optimus_any2any_spark.sources.iceberg` and by any real
 Iceberg client that can open v1 tables. The reference engine has no
@@ -467,6 +468,14 @@ def merge_iceberg_batch(
     the committed (or already-current, on an idempotent skip) metadata
     version.
 
+    The batch reduction, key stats, pid routing, row algebra
+    (latest-wins or the ``when_*`` clauses, with the same surface as
+    ``merge_delta_batch``) and the write are ``streaming/merge_core``'s;
+    this function owns the metadata replay and idempotence, schema
+    evolution, the manifest walk (partition tuples, spec evolution,
+    delete files), the delete-aware read of the affected files, row
+    lineage, the new files' stats and the snapshot commit.
+
     ``merge_schema=True`` is the Delta mergeSchema twin, done the
     Iceberg way (spec §Schema Evolution): batch columns not in the
     table APPEND as optional fields with fresh column ids
@@ -484,12 +493,12 @@ def merge_iceberg_batch(
     upserts the row with the same key IN ITS OWN PARTITION, the same
     contract as ``merge_delta_batch`` — and the whole merge is a
     constant number of Spark jobs however many partitions the batch
-    touches: one grouped key-stats pass, driver-side manifest pruning
-    (partition-tuple match first, Appendix-D key bounds inside), one
-    anti-join + one partitionBy("__pid") write (Iceberg data files
+    touches: driver-side manifest pruning (partition-tuple match
+    first, Appendix-D key bounds inside) sits between the core's
+    key-stats pass and its single write (Iceberg data files
     physically CONTAIN their partition source columns, so the
-    surrogate pid only routes rows to files — nothing is stripped),
-    one grouped stats pass over the new files. Non-identity transforms
+    surrogate pid only routes rows to files — nothing is stripped).
+    Non-identity transforms
     (``bucket[N]``/``truncate[W]``/``year|month|day|hour``, spec
     §Partition Transforms) partition-scope the merge through the same
     shape: the transforms are pure functions, computed once per row as

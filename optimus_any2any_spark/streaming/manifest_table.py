@@ -17,7 +17,10 @@ A manifest lists the table's LIVE data files with per-file key stats
 (min/max key, null-key flag, row count). The highest-numbered manifest
 is the table; everything not referenced by it is garbage.
 
-MERGE(batch) — copy-on-write at FILE granularity:
+MERGE(batch) — copy-on-write at FILE granularity; steps 1-3 are the
+format-neutral core in ``streaming/merge_core.py`` (shared with the
+Delta and Iceberg writers, so like them the data files live on the
+local filesystem), step 4 is this module's:
 
 1. reduce the batch to its latest row per key (ts tiebreak);
 2. prune: a data file is *affected* only if some batch key can fall
