@@ -2002,7 +2002,7 @@ def merge_delta_batch(
     # per-task sort (~1s on the benched sf0.1 merge).
     single = len(ptuples) + len(minted) == 1
     pid_df = (
-        pid_table(spark, latest, part_cols, ptuples, pid_of)
+        pid_table(spark, latest, part_cols, ptuples)
         if part_cols else None
     )
     # constraint re-attachment needs partition values for EVERY pid;

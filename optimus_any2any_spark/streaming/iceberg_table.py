@@ -1005,7 +1005,7 @@ def merge_iceberg_batch(
     # files keep every column, so __pid only routes rows to files.
     single = len(ptuples) == 1
     pid_df = (
-        pid_table(spark, latest, pv_cols, ptuples, pid_of)
+        pid_table(spark, latest, pv_cols, ptuples)
         if pspec and not single else None
     )
     data_cols = schema.fieldNames()

@@ -217,16 +217,17 @@ def pid_space(pstats: dict[tuple, dict]) -> tuple[list, dict]:
 
 def pid_table(
     spark: SparkSession, latest: DataFrame, group_cols: list[str],
-    ptuples: list, pid_of: dict,
+    ptuples: list,
 ) -> DataFrame:
-    """Group values → ``__pid`` as a driver-local lookup (zero jobs),
-    typed like ``latest``'s group columns."""
+    """Group values → ``__pid`` (the position in ``ptuples``) as a
+    driver-local lookup (zero jobs), typed like ``latest``'s group
+    columns."""
     schema = T.StructType(
         [latest.schema[c] for c in group_cols]
         + [T.StructField("__pid", T.IntegerType(), False)]
     )
     return local_rows_df(
-        spark, [pt + (pid_of[pt],) for pt in ptuples], schema
+        spark, [pt + (i,) for i, pt in enumerate(ptuples)], schema
     )
 
 
