@@ -595,27 +595,24 @@ class TestAppendFooterFallback:
             ]
         return sorted(out)
 
-    def _append_twice(self, spark, t):
+    def _append(self, spark, t):
         df = spark.createDataFrame(
             [(k, "v", 0) for k in range(7)], "k long, v string, ts long"
         )
         write_iceberg_commit(
             df.repartitionByRange(3, "k"), t, row_lineage=True
         )
-        write_iceberg_commit(
-            df.filter("k < 2").repartitionByRange(2, "k"), t
-        )
         return self._entries(t), load_table_metadata(t)["next-row-id"]
 
     def test_unreadable_footers_fall_back(self, spark, tmp_path, monkeypatch):
         import pyarrow.parquet as pq
 
-        want = self._append_twice(spark, str(tmp_path / "footers"))
+        want = self._append(spark, str(tmp_path / "footers"))
 
         def unreadable(*_a, **_k):
             raise OSError("unreadable footer")
 
         monkeypatch.setattr(pq, "read_metadata", unreadable)
-        got = self._append_twice(spark, str(tmp_path / "fallback"))
+        got = self._append(spark, str(tmp_path / "fallback"))
         assert got == want
-        assert want[1] == 9
+        assert len(want[0]) == 3 and want[1] == 7
