@@ -943,13 +943,7 @@ def merge_iceberg_batch(
                 )
         ext = T.StructType(
             list(schema.fields)
-            + [
-                T.StructField("_row_id", T.LongType(), True),
-                T.StructField(
-                    "_last_updated_sequence_number", T.LongType(),
-                    True,
-                ),
-            ]
+            + [T.StructField(c, T.LongType(), True) for c in lineage_cols]
         )
         out = _rewd(
             spark, meta, ext, files, pos_del, eq_del,

@@ -361,24 +361,26 @@ def write_merged(
     pid then name; the caller names, moves and removes them."""
     n_files = max(1, -(-n_rows // target_rows_per_file))
     if single:
-        out = merged.drop("__pid").repartitionByRange(
-            n_files, F.col(key_col)
+        out = merged.drop("__pid").repartitionByRange(n_files, F.col(key_col))
+    else:
+        out = merged.repartitionByRange(
+            n_files, F.col("__pid"), F.col(key_col)
         )
-        if prepare is not None:
-            out = prepare(out)
-        out.write.mode("overwrite").parquet(tmp)
-        return [
-            (p, 0)
-            for p in sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
-        ]
-    out = merged.repartitionByRange(n_files, F.col("__pid"), F.col(key_col))
     if prepare is not None:
         out = prepare(out)
-    out.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
+    if single:
+        out.write.mode("overwrite").parquet(tmp)
+        pdirs = [(tmp, 0)]
+    else:
+        out.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
+        pdirs = [
+            (d, int(os.path.basename(d).split("=", 1)[1]))
+            for d in sorted(_glob.glob(os.path.join(tmp, "__pid=*")))
+        ]
     return [
-        (part, int(os.path.basename(pdir).split("=", 1)[1]))
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*")))
-        for part in sorted(_glob.glob(os.path.join(pdir, "part-*.parquet")))
+        (part, pid)
+        for d, pid in pdirs
+        for part in sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
     ]
 
 
