@@ -357,8 +357,9 @@ def write_merged(
     and write it under ``tmp``: one plain write when ``single`` (every
     row has pid 0), else one ``partitionBy("__pid")`` write.
     ``prepare`` maps the repartitioned frame just before the write
-    (a storage-name projection). Returns ``(part file, pid)`` sorted by
-    pid then name; the caller names, moves and removes them."""
+    (a storage-name projection). Returns ``(part file, pid)`` in a fixed
+    order (pid directory name, then part name); the caller names, moves
+    and removes them."""
     n_files = max(1, -(-n_rows // target_rows_per_file))
     if single:
         out = merged.drop("__pid").repartitionByRange(n_files, F.col(key_col))
