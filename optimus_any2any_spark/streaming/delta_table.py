@@ -81,6 +81,7 @@ from optimus_any2any_spark.streaming.merge_core import (
     clause_predicates,
     conditional_merge,
     group_key_stats,
+    local_parts,
     merge_rows,
     pid_space,
     pid_table,
@@ -2129,17 +2130,17 @@ def merge_delta_batch(
         merged = merged.withColumnRenamed(
             "__rt_id", rt[0]
         ).withColumnRenamed("__rt_cv", rt[1])
-    parts = write_merged(
-        merged, key_col, n_total + total_hit_rows, target_rows_per_file,
+    write_key = key_col
+    if mapped:
+        merged = _to_phys(
+            merged, data_cols, pfields, keep=("__pid", *(rt or ()))
+        )
+        write_key = pfields[key_col].name
+    write_merged(
+        merged, write_key, n_total + total_hit_rows, target_rows_per_file,
         tmp, single,
-        prepare=(
-            lambda df: _to_phys(
-                df, data_cols, pfields,
-                keep=[c for c in ("__pid", *(rt or ())) if c in df.columns],
-            )
-        ) if mapped else None,
     )
-    for file_seq, (part, pid) in enumerate(parts):
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
         rel = (f"part-{version:05d}-{file_seq:04d}-"
                f"{_file_token(table_path)}-merge.parquet")
         _put_data(part, os.path.join(table_path, rel))

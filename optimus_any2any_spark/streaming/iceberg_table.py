@@ -95,6 +95,7 @@ from optimus_any2any_spark.streaming.merge_core import (
     conditional_merge,
     empty_key_stats,
     group_key_stats,
+    local_parts,
     merge_rows,
     pid_space,
     pid_table,
@@ -1032,11 +1033,11 @@ def merge_iceberg_batch(
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    parts = write_merged(
+    write_merged(
         merged, key_col, n_total + hit_rows, target_rows_per_file, tmp,
         single,
     )
-    for file_seq, (part, pid) in enumerate(parts):
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
         rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
         os.replace(part, os.path.join(table_path, rel))
         new_rel.append(rel)

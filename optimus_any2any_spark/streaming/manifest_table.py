@@ -19,8 +19,9 @@ is the table; everything not referenced by it is garbage.
 
 MERGE(batch) — copy-on-write at FILE granularity; steps 1-3 are the
 format-neutral core in ``streaming/merge_core.py`` (shared with the
-Delta and Iceberg writers, so like them the data files live on the
-local filesystem), step 4 is this module's:
+Delta and Iceberg writers), step 4 is this module's. The table path
+may be any Hadoop path: files are listed, moved and committed through
+the Hadoop FileSystem.
 
 1. reduce the batch to its latest row per key (ts tiebreak);
 2. prune: a data file is *affected* only if some batch key can fall
@@ -185,18 +186,30 @@ def merge_batch(
     )
 
     tmp = f"{path}/.tmp-commit-v{version}"
-    parts = write_merged(
+    write_merged(
         merged, key_col, st["n"] + sum(f["rows"] for f in hit),
         target_rows_per_file, tmp, True,
     )
-    # move parts into data/ under deterministic names
+    # move parts into data/ under deterministic names; listed through
+    # the Hadoop FS so any Hadoop path (file://, hdfs://, s3a://) works
+    parts = sorted(
+        (
+            status.getPath()
+            for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp))
+            if status.getPath().getName().endswith(".parquet")
+        ),
+        key=lambda p: p.getName(),
+    )
+    if not parts:
+        # the batch has rows, so the write must have left parts:
+        # committing without them would drop the hit files' rows
+        raise IOError(f"merge write left no part files under {tmp}")
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path + "/data"))
     new_rel: list[str] = []
-    for i, (part, _pid) in enumerate(parts):
+    for i, part in enumerate(parts):
         rel = f"data/v{version}-{i}.parquet"
         if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(part),
-            jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}"),
+            part, jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
         ):
             raise IOError(f"data file move failed: {rel}")
         new_rel.append(rel)

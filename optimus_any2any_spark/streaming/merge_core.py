@@ -21,7 +21,7 @@ format:
 5. row algebra over the affected rows: the latest-wins anti-join plus
    union, or the conditional clauses (:func:`merge_rows`);
 6. one range-repartitioned write, plain or ``partitionBy("__pid")``
-   (:func:`write_merged`).
+   (:func:`write_merged`; :func:`local_parts` lists its parts).
 
 Each format keeps its own log or metadata replay, idempotence check,
 schema evolution, live-file listing and partition pruning, hit-file
@@ -351,29 +351,30 @@ def write_merged(
     target_rows_per_file: int,
     tmp: str,
     single: bool,
-    prepare=None,
-) -> list[tuple[str, int]]:
+) -> None:
     """Range-repartition ``merged`` to ``ceil(n_rows / target)`` files
     and write it under ``tmp``: one plain write when ``single`` (every
-    row has pid 0), else one ``partitionBy("__pid")`` write.
-    ``prepare`` maps the repartitioned frame just before the write
-    (a storage-name projection). Returns ``(part file, pid)`` in a fixed
-    order (pid directory name, then part name); the caller names, moves
-    and removes them."""
+    row has pid 0), else one ``partitionBy("__pid")`` write. The caller
+    lists the parts (:func:`local_parts` on the local filesystem), then
+    names, moves and removes them."""
     n_files = max(1, -(-n_rows // target_rows_per_file))
     if single:
-        out = merged.drop("__pid").repartitionByRange(n_files, F.col(key_col))
+        merged.drop("__pid").repartitionByRange(
+            n_files, F.col(key_col)
+        ).write.mode("overwrite").parquet(tmp)
     else:
-        out = merged.repartitionByRange(
+        merged.repartitionByRange(
             n_files, F.col("__pid"), F.col(key_col)
-        )
-    if prepare is not None:
-        out = prepare(out)
+        ).write.partitionBy("__pid").mode("overwrite").parquet(tmp)
+
+
+def local_parts(tmp: str, single: bool) -> list[tuple[str, int]]:
+    """``(part file, pid)`` for each part :func:`write_merged` left in
+    the local directory ``tmp``, in a fixed order (pid directory name,
+    then part name)."""
     if single:
-        out.write.mode("overwrite").parquet(tmp)
         pdirs = [(tmp, 0)]
     else:
-        out.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
         pdirs = [
             (d, int(os.path.basename(d).split("=", 1)[1]))
             for d in sorted(_glob.glob(os.path.join(tmp, "__pid=*")))

@@ -202,3 +202,21 @@ class TestManifestMerge:
         assert ("k001", "y") in {
             (r["k"], r["v"]) for r in read_table(spark, path).collect()
         }
+
+    def test_hadoop_uri_path_merges(self, spark, tmp_path):
+        """A ``file://`` table path: parts are listed and moved through
+        the Hadoop FS, so the second merge keeps the hit file's
+        untouched rows."""
+        path = "file://" + str(tmp_path / "t9")
+        merge_batch(
+            spark, make_batch(spark, [(1, "a", 1), (2, "b", 1)]),
+            path, "k", "ts", batch_id=0,
+        )
+        merge_batch(
+            spark, make_batch(spark, [(2, "B", 2), (3, "c", 2)]),
+            path, "k", "ts", batch_id=1,
+        )
+        got = {
+            (r["k"], r["v"]) for r in read_table(spark, path).collect()
+        }
+        assert got == {(1, "a"), (2, "B"), (3, "c")}
