@@ -449,6 +449,58 @@ def trending_topk_to_parquet(
     )
 
 
+def _minhash_family() -> str:
+    """Tag of the signature family band buckets are built with: the
+    28-bit md5 base hash, the hash and band counts and every affine
+    coefficient."""
+    import hashlib
+    import json
+
+    from optimus_any2any_spark.operators import dedup as D
+
+    spec = [D.DEFAULT_NUM_HASHES, D.DEFAULT_BANDS,
+            D._affine_params(D.DEFAULT_NUM_HASHES)]
+    digest = hashlib.sha256(json.dumps(spec).encode()).hexdigest()
+    return "md5-28:" + digest[:16]
+
+
+def _has_batches(fs, root) -> bool:
+    """Whether a ``batch=<id>`` store under ``root`` holds any batch."""
+    return fs.exists(root) and any(
+        st.getPath().getName().startswith("batch=")
+        for st in fs.listStatus(root)
+    )
+
+
+def _claim_bucket_store(spark: SparkSession, store_path: str) -> None:
+    """Tag a band-bucket store that holds no batch yet with the current
+    MinHash family, or refuse one whose batches carry another tag or
+    none (written before stores were tagged): the same document gets
+    different buckets under two families, so near-duplicates of stored
+    documents would be missed without an error."""
+    from optimus_any2any_spark.streaming.manifest_table import (
+        _fs,
+        _read_text,
+    )
+
+    jvm, fs = _fs(spark, store_path)
+    tag = jvm.org.apache.hadoop.fs.Path(store_path + "/_minhash_family")
+    family = _minhash_family()
+    if not _has_batches(fs, jvm.org.apache.hadoop.fs.Path(store_path)):
+        out = fs.create(tag, True)
+        try:
+            out.write(bytearray(family.encode()))
+        finally:
+            out.close()
+    elif not fs.exists(tag) or _read_text(spark, fs, jvm, tag) != family:
+        raise ValueError(
+            f"band-bucket store {store_path} was not built with the "
+            f"current MinHash hash family {family}; rebuild it: delete "
+            "the store, its _text store and the stream checkpoint, then "
+            "replay the source"
+        )
+
+
 def streaming_minhash_dedup(
     stream: DataFrame,
     store_path: str,
@@ -478,6 +530,11 @@ def streaming_minhash_dedup(
     stays candidate-bounded — the streaming form of
     ``minhash_dedup_pairs``'s discipline. Output gains a ``jaccard``
     column and drops sub-threshold band collisions.
+
+    The store is tagged with the MinHash hash family its buckets were
+    built with (``store_path/_minhash_family``). Starting on a store
+    built with another family — including any store written before the
+    tag existed — raises ``ValueError``: such a store must be rebuilt.
     """
     from optimus_any2any_spark.operators.dedup import (
         _jaccard_verify,
@@ -530,7 +587,7 @@ def streaming_minhash_dedup(
         # would double this batch's rows on retry — doubling shingle
         # rows inflates later Jaccard verification. Overwriting the
         # deterministic per-batch dir makes the whole sink idempotent.
-        if fs.exists(jpath):
+        if _has_batches(fs, jpath):
             known = spark.read.parquet(store_path).drop("batch")
             probe_universe = known.unionByName(new_buckets)
         else:
@@ -602,6 +659,7 @@ def streaming_minhash_dedup(
             f"{store_path}/batch={batch_id}"
         )
 
+    _claim_bucket_store(stream.sparkSession, store_path)
     return (
         stream.writeStream.foreachBatch(per_batch)
         .option("checkpointLocation", checkpoint)

@@ -759,6 +759,57 @@ class TestStreamingMinhashDedup:
         assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2)}
         assert rows[0]["jaccard"] == 1.0
 
+    @pytest.mark.parametrize("tag", [None, "md5-28:0000000000000000"])
+    def test_store_of_another_hash_family_refused(
+        self, spark, tmp_path, tag
+    ):
+        """A bucket store written before the family tag existed, or
+        tagged with another family, never matches new documents'
+        buckets: starting on it must raise, not miss duplicates."""
+        from optimus_any2any_spark.streaming.streams import (
+            stream_source,
+            streaming_minhash_dedup,
+        )
+
+        src = tmp_path / "in"
+        src.mkdir()
+        store = tmp_path / "store"
+        (store / "batch=0").mkdir(parents=True)
+        if tag is not None:
+            (store / "_minhash_family").write_text(tag)
+        with pytest.raises(ValueError, match="MinHash hash family"):
+            streaming_minhash_dedup(
+                stream_source(spark, str(src), "doc_id long, text string"),
+                store_path=str(store),
+                pairs_path=str(tmp_path / "pairs"),
+                checkpoint=str(tmp_path / "ckpt"),
+            )
+
+    def test_store_is_tagged_with_current_family(self, spark, tmp_path):
+        import json
+
+        from optimus_any2any_spark.streaming.streams import (
+            _minhash_family,
+            stream_source,
+            streaming_minhash_dedup,
+        )
+
+        src = tmp_path / "in"
+        src.mkdir()
+        (src / "a.json").write_text(
+            json.dumps({"doc_id": 1, "text": "alpha beta gamma delta"})
+        )
+        store = tmp_path / "store"
+        q = streaming_minhash_dedup(
+            stream_source(spark, str(src), "doc_id long, text string"),
+            store_path=str(store),
+            pairs_path=str(tmp_path / "pairs"),
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination()
+        assert (store / "_minhash_family").read_text() == _minhash_family()
+        assert spark.read.parquet(str(store)).count() == 4  # one per band
+
 
 class TestStreamingCuration:
     def test_streaming_matches_batch_curation(self, spark, tmp_path):
