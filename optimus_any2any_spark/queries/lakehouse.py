@@ -238,7 +238,7 @@ def delta_partitioned_merge(spark, sf_dir):
     "the source DELETE on their own predicate, and whose unmatched "
     "source rows insert. First-matching-clause-wins in declaration "
     "order; one left-outer join + CASE algebra over the same "
-    "single-job merge plan (streaming/delta_table.py "
+    "single-job merge plan (streaming/merge_core.py "
     "_apply_merge_clauses); commitInfo records the predicates. The "
     "oracle states the same row algebra as SQL set operations.",
 )
@@ -2165,7 +2165,7 @@ def iceberg_delete_after_evolve(spark, sf_dir):
     """,
     doc="CONDITIONAL Iceberg MERGE clauses — the Delta clause "
     "builder's Iceberg twin, sharing the format-agnostic row algebra "
-    "(streaming/delta_table._apply_merge_clauses) over the Iceberg "
+    "(streaming/merge_core._apply_merge_clauses) over the Iceberg "
     "snapshot-merge plan: matched rows DELETE past a source-price "
     "threshold or UPDATE from both sides, unmatched-by-source rows "
     "DELETE on their own predicate, and unmatched source rows insert "

@@ -892,7 +892,7 @@ class TestPartitionEvolution:
 
 class TestIcebergConditionalMerge:
     """The Delta conditional-clause builder's Iceberg twin — the row
-    algebra is shared (streaming/delta_table._apply_merge_clauses);
+    algebra is shared (streaming/merge_core._apply_merge_clauses);
     this suite pins the Iceberg-side plumbing (hit forcing for
     not-matched-by-source, summary predicates, partition guards)."""
 
