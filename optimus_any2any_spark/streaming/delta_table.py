@@ -1485,7 +1485,6 @@ def compact_delta(
             groups.setdefault(key, []).append((p, a))
     version = state["version"] + 1
     actions: list[dict] = []
-    file_seq = 0
     # lead stats (and re-clustering) with the caller's merge key when
     # given, else the first data column
     stat_col = key_col or (
@@ -1583,15 +1582,6 @@ def compact_delta(
         if zorder_by:
             out_df = out_df.drop("__zv")
         out_df.write.mode("overwrite").parquet(tmp)
-        pv = {phys(c): v for c, v in zip(part_cols, ptuples[0])}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-compact.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
     else:
         if zorder_by:
             range_cols = [F.col("__pid"), F.col("__zv")]
@@ -1614,17 +1604,13 @@ def compact_delta(
             .mode("overwrite")
             .parquet(tmp)
         )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {phys(c): v for c, v in zip(part_cols, ptuples[pid])}
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-compact.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv))
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-compact.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_files.append(
+            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
+        )
     shutil.rmtree(tmp)
     if not new_files:
         return None
@@ -3256,7 +3242,6 @@ def purge_deletion_vectors(
     n_files = max(1, -(-total_rows // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-purge-v{version}")
     new_files: list[tuple[str, dict]] = []
-    file_seq = 0
     data_cols = [f.name for f in data_schema.fields]
     if single:
         out_df = (
@@ -3270,17 +3255,9 @@ def purge_deletion_vectors(
                 keep=rt if rt is not None else (),
             )
         out_df.write.mode("overwrite").parquet(tmp)
-        pv = next(
-            iter(dv_adds.values())
-        ).get("partitionValues") or {}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-purge.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
+        pv_of_pid = {
+            0: next(iter(dv_adds.values())).get("partitionValues") or {}
+        }
     else:
         pv_of_pid = {
             pid_of[pt]: {
@@ -3302,16 +3279,11 @@ def purge_deletion_vectors(
             .mode("overwrite")
             .parquet(tmp)
         )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-purge.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv_of_pid[pid]))
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-purge.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_files.append((rel, pv_of_pid[pid]))
     shutil.rmtree(tmp)
 
     actions: list[dict] = []
@@ -3802,54 +3774,27 @@ def delete_delta_keys(
 
     actions: list[dict] = []
     new_adds: list[dict] = []
-    file_seq = 0
-    n_files = max(1, -(-hit_rows_total // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-delete-v{version}")
-    data_cols = [f.name for f in data_schema.fields]
-    if single:
-        out_df = keep.drop("__pid").repartitionByRange(
-            n_files, F.col(key_col)
+    write_key = key_col
+    if mapped:
+        keep = _to_phys(
+            keep, [f.name for f in data_schema.fields], pfields,
+            keep=("__pid", *(rt or ())),
         )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=rt if rt is not None else (),
-            )
-        out_df.write.mode("overwrite").parquet(tmp)
-        pv = {phys(c): v for c, v in zip(part_cols, ptuples[0])}
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-delete.parquet")
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_adds.append({"path": rel, "partitionValues": pv})
-    else:
-        out_df = keep.repartitionByRange(
-            n_files, F.col("__pid"), F.col(key_col)
-        )
-        if mapped:
-            out_df = _to_phys(
-                out_df, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
-        (
-            out_df.write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {phys(c): v for c, v in zip(part_cols, ptuples[pid])}
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (f"part-{version:05d}-{file_seq:04d}-"
-                    f"{_file_token(table_path)}-delete.parquet")
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_adds.append({"path": rel, "partitionValues": pv})
+        write_key = pfields[key_col].name
+    write_merged(
+        keep, write_key, hit_rows_total, target_rows_per_file, tmp, single
+    )
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = (f"part-{version:05d}-{file_seq:04d}-"
+               f"{_file_token(table_path)}-delete.parquet")
+        _put_data(part, os.path.join(table_path, rel))
+        new_adds.append({
+            "path": rel,
+            "partitionValues": {
+                phys(c): v for c, v in zip(part_cols, ptuples[pid])
+            },
+        })
     shutil.rmtree(tmp)
 
     cdc_rel: list[str] = []

@@ -2131,26 +2131,11 @@ def update_iceberg_where(
         ptuples = [()]
     single = len(ptuples) == 1
     first_col = schema.fieldNames()[0]
-    n_files = max(1, -(-n_upd // target_rows_per_file))
     tmp = os.path.join(table_path, f"_tmp-updwhere-v{version}")
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
     if single:
-        (
-            upd_pv.drop(*pv_cols)
-            .repartitionByRange(n_files, F.col(first_col))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-update.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
+        routed = upd_pv.drop(*pv_cols)
     else:
         pid_of = {pt: i for i, pt in enumerate(ptuples)}
         pid_ddl = ", ".join(
@@ -2173,26 +2158,14 @@ def update_iceberg_where(
                 F.col("pd.__pid"),
             )
         )
-        (
-            routed.repartitionByRange(
-                n_files, F.col("__pid"), F.col(first_col)
-            )
-            .write.partitionBy("__pid")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (
-                    f"data/{version:05d}-{file_seq:04d}-update.parquet"
-                )
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    write_merged(
+        routed, first_col, n_upd, target_rows_per_file, tmp, single
+    )
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = f"data/{version:05d}-{file_seq:04d}-update.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     per_file = (
@@ -2696,7 +2669,6 @@ def compact_iceberg(
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
-    file_seq = 0
     if zorder_by:
         from optimus_any2any_spark.streaming.delta_table import (
             _with_zorder_value,
@@ -2719,14 +2691,6 @@ def compact_iceberg(
             # not an artifact of range-partition concatenation
             out_df = out_df.sortWithinPartitions(key_col)
         out_df.write.mode("overwrite").parquet(tmp)
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"data/{version:05d}-{file_seq:04d}-compact.parquet"
-            file_seq += 1
-            os.replace(part, os.path.join(table_path, rel))
-            new_rel.append(rel)
-            pt_of_rel[rel] = ptuples[0]
     else:
         pid_lk = local_rows_df(spark, 
             bn_pid, "__bn string, __pid int"
@@ -2749,18 +2713,11 @@ def compact_iceberg(
             .mode("overwrite")
             .parquet(tmp)
         )
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = (
-                    f"data/{version:05d}-{file_seq:04d}-compact.parquet"
-                )
-                file_seq += 1
-                os.replace(part, os.path.join(table_path, rel))
-                new_rel.append(rel)
-                pt_of_rel[rel] = ptuples[pid]
+    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = f"data/{version:05d}-{file_seq:04d}-compact.parquet"
+        os.replace(part, os.path.join(table_path, rel))
+        new_rel.append(rel)
+        pt_of_rel[rel] = ptuples[pid]
     shutil.rmtree(tmp)
 
     if not new_rel:
