@@ -11,6 +11,7 @@ redelivered ``batch_id``.
 from __future__ import annotations
 
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -88,29 +89,46 @@ TARGETS = {
 }
 
 
-@pytest.mark.parametrize(
-    "fmt,partitioned",
-    [
-        ("delta", False),
-        ("delta", True),
-        ("iceberg", False),
-        ("iceberg", True),
-        ("manifest", False),
-    ],
-)
-def test_snapshot_matches_latest_ts_model(spark, tmp_path, fmt, partitioned):
+CASES = [
+    ("delta", False),
+    ("delta", True),
+    ("iceberg", False),
+    ("iceberg", True),
+    ("manifest", False),
+]
+
+
+def _run(spark, t, fmt, partitioned) -> list:
     merge, read = TARGETS[fmt]
-    t = str(tmp_path / "t")
     for bid, rows in BATCHES:
         # each commit writes one file (far below target_rows_per_file),
         # so the NaN key shares a file with finite keys
         df = local_rows_df(spark, rows, SCHEMA)
         merge(spark, t, df, bid, partitioned)
-    got = sorted(
+    return sorted(
         (
             (_norm(r["k"]), r["v"], r["p"], r["ts"])
             for r in read(spark, t).select("k", "v", "p", "ts").collect()
         ),
         key=repr,
     )
-    assert got == _model(partitioned)
+
+
+@pytest.fixture(scope="module")
+def snapshots(spark, tmp_path_factory):
+    """Each case's snapshot future. The cases write separate tables, so
+    their merges run side by side: each is a chain of small Spark jobs,
+    and running the chains concurrently keeps the cores busy."""
+    with ThreadPoolExecutor(len(CASES)) as pool:
+        futures = {
+            case: pool.submit(
+                _run, spark, str(tmp_path_factory.mktemp("eq") / "t"), *case
+            )
+            for case in CASES
+        }
+    return futures
+
+
+@pytest.mark.parametrize("fmt,partitioned", CASES)
+def test_snapshot_matches_latest_ts_model(snapshots, fmt, partitioned):
+    assert snapshots[(fmt, partitioned)].result() == _model(partitioned)
