@@ -60,6 +60,7 @@ from optimus_any2any_spark.formats.avrobin import (
     read_container,
     write_container,
 )
+from optimus_any2any_spark.streaming import merge_core
 
 _STATUS_DELETED = 2
 
@@ -98,7 +99,7 @@ def _localize(table_path: str, uri: str) -> str:
 # so age-based expiration and TIMESTAMP AS OF travel work on
 # self-written tables. Fixtures inject a fixed or stepping clock for
 # deterministic metadata — the same injection pattern as the Delta
-# log/data-store seams (streaming/delta_table.py set_log_store).
+# log/data-store seams (streaming/merge_core.py set_log_store).
 def _default_clock() -> int:
     import time
 
@@ -200,25 +201,118 @@ def resolve_iceberg_timestamp(meta: dict, timestamp) -> int:
     return int(best)
 
 
+def _newest_version(md: str) -> int:
+    """The newest committed metadata version under ``md`` (0 when there
+    is none): the ``version-hint.text`` value (without a hint, the
+    highest ``v<N>.metadata.json``), stepped forward past every newer
+    ``v<N+1>.metadata.json`` — the spec's Hadoop-table rule. A commit
+    replaces the hint only after its metadata put, so a crash between
+    the two, or a slow winner's late hint, leaves the hint behind;
+    it is never ahead."""
+    try:
+        with open(os.path.join(md, "version-hint.text")) as f:
+            version = int(f.read().strip())
+    except FileNotFoundError:
+        version = max(
+            (
+                int(os.path.basename(f)[1:-len(".metadata.json")])
+                for f in _glob.glob(os.path.join(md, "v*.metadata.json"))
+            ),
+            default=0,
+        )
+    while os.path.exists(os.path.join(md, f"v{version + 1}.metadata.json")):
+        version += 1
+    return version
+
+
 def load_table_metadata(table_path: str, version: int | None = None) -> dict:
     md = _meta_dir(table_path)
     if version is None:
-        hint = os.path.join(md, "version-hint.text")
-        if os.path.exists(hint):
-            version = int(open(hint).read().strip())
-        else:
-            vs = [
-                int(os.path.basename(f)[1:-len(".metadata.json")])
-                for f in _glob.glob(os.path.join(md, "v*.metadata.json"))
-            ]
-            if not vs:
-                raise ValueError(f"iceberg: no metadata under {table_path}")
-            version = max(vs)
+        version = _newest_version(md)
+        if not version:
+            raise ValueError(f"iceberg: no metadata under {table_path}")
     path = os.path.join(md, f"v{version}.metadata.json")
     with open(path) as f:
         meta = json.loads(f.read())
     _refuse_v3_constructs(meta)
     return meta
+
+
+def open_iceberg_table(table_path: str) -> tuple[int, dict | None]:
+    """A writer's view of the table: ``(version, metadata)`` of the
+    newest committed version, or ``(0, None)`` when no table exists.
+    The writer's commit is ``publish_iceberg_metadata(table_path,
+    version + 1, ...)``, which fails if another writer got there
+    first."""
+    version = _newest_version(_meta_dir(table_path))
+    if not version:
+        return 0, None
+    return version, load_table_metadata(table_path, version)
+
+
+def publish_iceberg_metadata(
+    table_path: str,
+    version: int,
+    meta: dict,
+    updated_ms: int | None = None,
+) -> int:
+    """Commit ``meta`` as ``v<version>.metadata.json`` — the one commit
+    step of every Iceberg writer here (the spec's Hadoop-table commit),
+    and return ``version``.
+
+    The bytes go to a writer-unique temp, then land through the
+    put-if-absent log store shared with the Delta log
+    (``merge_core.set_log_store``): when another writer already took
+    ``version`` this raises ``IOError`` and publishes nothing. Then
+    ``version-hint.text`` is replaced through a writer-unique temp;
+    readers step past a stale hint (:func:`_newest_version`).
+
+    ``last-updated-ms`` is stamped on every version: ``updated_ms``
+    (the stamp of the snapshot this commit adds) or, for a
+    metadata-only commit, the clock — never below the previous
+    stamp."""
+    if updated_ms is None:
+        updated_ms = snapshot_timestamp_ms(meta)
+    meta["last-updated-ms"] = max(
+        updated_ms, int(meta.get("last-updated-ms") or 0)
+    )
+    md = _meta_dir(table_path)
+    final = os.path.join(md, f"v{version}.metadata.json")
+    suffix = f"{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
+    tmp = f"{final}.{suffix}"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(meta, indent=2))
+    try:
+        if not merge_core._put_if_absent(tmp, final):
+            raise IOError(
+                f"iceberg: metadata v{version} already exists — lost "
+                "the race to a concurrent writer; reopen the table and "
+                "retry"
+            )
+    finally:
+        os.unlink(tmp)
+    hint = os.path.join(md, "version-hint.text")
+    with open(f"{hint}.{suffix}", "w") as f:
+        f.write(str(version))
+    os.replace(f"{hint}.{suffix}", hint)
+    return version
+
+
+def commit_iceberg_snapshot(
+    table_path: str, version: int, meta: dict, snap: dict
+) -> int:
+    """Make ``snap`` the new main head of ``meta`` — appended to the
+    snapshot list and the ``snapshot-log``, ``refs.main`` and
+    ``current-snapshot-id`` advanced — and publish ``meta`` as
+    ``version`` (:func:`publish_iceberg_metadata`)."""
+    sid = snap["snapshot-id"]
+    meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
+    append_snapshot_log(meta, meta, snap["timestamp-ms"], sid)
+    advance_main_ref(meta, sid)
+    meta["current-snapshot-id"] = sid
+    return publish_iceberg_metadata(
+        table_path, version, meta, snap["timestamp-ms"]
+    )
 
 
 def _refuse_v3_constructs(meta: dict) -> None:
@@ -2761,14 +2855,12 @@ def write_iceberg_delete_commit(
     metadata tagged format-version 3 (VERDICT r8 item 9)."""
     from pyspark.sql import functions as F  # noqa: F401
 
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    prev_version = int(open(hint).read().strip())
-    prev = load_table_metadata(table_path, version=prev_version)
+    prev_version, prev = open_iceberg_table(table_path)
     _refuse_unpublished_branches(prev)
     version = prev_version + 1
     snapshot_id = version
     seq = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
 
     entries = []
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
@@ -2776,9 +2868,9 @@ def write_iceberg_delete_commit(
         pdf = local_rows_df(spark, 
             list(pos_deletes), "file_path string, pos long"
         ).orderBy("file_path", "pos")
-        tmp = os.path.join(table_path, f"_tmp-del-v{version}")
+        tmp = os.path.join(table_path, f"_tmp-del-{stem}")
         pdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        rel = f"data/{version:05d}-delete-pos.parquet"
+        rel = f"data/{stem}-delete-pos.parquet"
         os.replace(
             _glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
             os.path.join(table_path, rel),
@@ -2821,9 +2913,9 @@ def write_iceberg_delete_commit(
                 ]
             ),
         )
-        tmp = os.path.join(table_path, f"_tmp-edel-v{version}")
+        tmp = os.path.join(table_path, f"_tmp-edel-{stem}")
         edf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        rel = f"data/{version:05d}-delete-eq.parquet"
+        rel = f"data/{stem}-delete-eq.parquet"
         os.replace(
             _glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
             os.path.join(table_path, rel),
@@ -2853,7 +2945,7 @@ def write_iceberg_delete_commit(
             write_puffin,
         )
 
-        rel = f"data/{version:05d}-delete-dv.puffin"
+        rel = f"data/{stem}-delete-dv.puffin"
         blobs = [
             (
                 dv_puffin_blob(positions),
@@ -2898,10 +2990,7 @@ def write_iceberg_delete_commit(
     if not entries:
         return prev_version
 
-    manifest_rel = (
-        f"metadata/{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|dm{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, manifest_rel),
         _DELETE_ENTRY_SCHEMA,
@@ -2920,10 +3009,7 @@ def write_iceberg_delete_commit(
     for r in prior_manifests:
         r.setdefault("sequence_number", None)
     _preserve_manifest_lineage(table_path, prev, prior_manifests)
-    ml_rel = (
-        f"metadata/snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|dml{version}')}.avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel),
         _MANIFEST_FILE_SCHEMA,
@@ -2947,29 +3033,18 @@ def write_iceberg_delete_commit(
         3 if dv_deletes else 2, int(prev.get("format-version", 1))
     )
     meta["last-sequence-number"] = seq
-    ts_ms = snapshot_timestamp_ms(prev)
-    meta["snapshots"] = (prev.get("snapshots") or []) + [
+    return commit_iceberg_snapshot(
+        table_path,
+        version,
+        meta,
         {
             "snapshot-id": snapshot_id,
-            "timestamp-ms": ts_ms,
+            "timestamp-ms": snapshot_timestamp_ms(prev),
             "sequence-number": seq,
             "manifest-list": ml_rel,
             "summary": {"operation": "delete"},
-        }
-    ]
-    append_snapshot_log(meta, prev, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+        },
+    )
 
 
 def _spark_type_to_iceberg(dt: T.DataType) -> str:
@@ -3255,24 +3330,16 @@ def write_iceberg_commit(
                 f"iceberg fixture writer: partition columns {missing} "
                 "not in the schema"
             )
-    md = _meta_dir(table_path)
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    os.makedirs(md, exist_ok=True)
-    hint = os.path.join(md, "version-hint.text")
-    prev_version = (
-        int(open(hint).read().strip()) if os.path.exists(hint) else 0
-    )
-    prev = (
-        load_table_metadata(table_path, version=prev_version)
-        if prev_version
-        else None
-    )
+    os.makedirs(_meta_dir(table_path), exist_ok=True)
+    prev_version, prev = open_iceberg_table(table_path)
     if prev is not None and add_files is None:
         # v3 write-default: fill columns the df omits BEFORE the data
         # write, so the new files physically carry the value
         df = _apply_write_defaults(df, prev)
     version = prev_version + 1
     snapshot_id = version  # deterministic, unique per commit
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     # v2 tables (anything that has taken a row-level delete) must NOT
     # be silently downgraded by an append: preserve the format
     # version, keep the sequence chain monotone, and stamp the new
@@ -3409,13 +3476,13 @@ def write_iceberg_commit(
                     ap, add_part_fields
                 )
     else:
-        tmp = os.path.join(table_path, f"_tmp-ice-v{version}")
+        tmp = os.path.join(table_path, f"_tmp-ice-{stem}")
         df.write.mode("overwrite").parquet(tmp)
         data_rel = []
         for i, part in enumerate(
             sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
         ):
-            rel = f"data/{version:05d}-{i:04d}.parquet"
+            rel = f"data/{stem}-{i:04d}.parquet"
             os.replace(part, os.path.join(table_path, rel))
             data_rel.append(rel)
         shutil.rmtree(tmp)
@@ -3482,7 +3549,7 @@ def write_iceberg_commit(
             )
             first_row_base = snap_first_row
     next_row_id = first_row_base
-    manifest_rel = f"metadata/{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|m{version}')}-m0.avro"
+    manifest_rel = f"metadata/{stem}-m0.avro"
     entries = []
     for rel in data_rel:
         dfe = {
@@ -3562,7 +3629,7 @@ def write_iceberg_commit(
         _, prior_manifests = read_container(
             _localize(table_path, snap["manifest-list"])
         )
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|ml{version}')}.avro"
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     new_entry = {
         "manifest_path": manifest_rel,
         "manifest_length": os.path.getsize(
@@ -3721,7 +3788,6 @@ def write_iceberg_commit(
         "format-version": fmt,
         "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, table_path)),
         "location": table_path,
-        "last-updated-ms": ts_ms,
         "last-column-id": (
             prev_schemas["last-column-id"]
             if prev_schemas
@@ -3831,16 +3897,7 @@ def write_iceberg_commit(
         advance_main_ref(meta, snapshot_id)
     if fmt >= 2:
         meta["last-sequence-number"] = seq
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(table_path, version, meta, ts_ms)
 
 
 def add_iceberg_column_with_default(
@@ -3869,12 +3926,9 @@ def add_iceberg_column_with_default(
             f"iceberg add column: {column!r} is not 'name type'"
         )
     name, ice_t = toks[0], toks[1].strip()
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg add column: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     cur = _current_schema(meta)
     if any(f["name"] == name for f in cur["fields"]):
         raise ValueError(
@@ -3917,17 +3971,7 @@ def add_iceberg_column_with_default(
     meta["schema"] = new_schema
     meta["last-column-id"] = field["id"]
     meta["format-version"] = max(3, int(meta.get("format-version", 1)))
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(table_path, prev_version + 1, meta)
 
 
 def add_iceberg_files(

@@ -22,9 +22,6 @@ Registration (per session)::
 
 from __future__ import annotations
 
-import glob as _glob
-import json
-import os
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -54,24 +51,6 @@ _cloudpickle.register_pickle_by_value(_roaring)
 _cloudpickle.register_pickle_by_value(_puffin)
 _cloudpickle.register_pickle_by_value(_ice)
 _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-
-
-def _load_meta(table_path: str) -> dict:
-    """Latest table metadata, pure python (no SparkSession)."""
-    md = os.path.join(table_path, "metadata")
-    hint = os.path.join(md, "version-hint.text")
-    if os.path.exists(hint):
-        version = int(open(hint).read().strip())
-    else:
-        vs = [
-            int(os.path.basename(f)[1:-len(".metadata.json")])
-            for f in _glob.glob(os.path.join(md, "v*.metadata.json"))
-        ]
-        if not vs:
-            raise ValueError(f"iceberg_tail: no metadata in {table_path}")
-        version = max(vs)
-    with open(os.path.join(md, f"v{version}.metadata.json")) as f:
-        return json.loads(f.read())
 
 
 def _file_consts(
@@ -180,7 +159,7 @@ class IcebergTailStreamReader(DataSourceStreamReader):
         start = options.get("startingsnapshotid")
         self.start_sid: int | None = None
         if start is not None:
-            meta = _load_meta(self.table_path)
+            meta = _ice.load_table_metadata(self.table_path)
             ids = [
                 s["snapshot-id"] for s in meta.get("snapshots") or []
             ]
@@ -233,13 +212,13 @@ class IcebergTailStreamReader(DataSourceStreamReader):
         return {"sid": self.start_sid}
 
     def latestOffset(self) -> dict:
-        chain = self._chain(_load_meta(self.table_path))
+        chain = self._chain(_ice.load_table_metadata(self.table_path))
         return {
             "sid": chain[-1]["snapshot-id"] if chain else None
         }
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        meta = _load_meta(self.table_path)
+        meta = _ice.load_table_metadata(self.table_path)
         chain = self._chain(meta)
         window = chain[
             self._pos_after(chain, start):self._pos_after(chain, end)
@@ -286,7 +265,7 @@ class IcebergTailDataSource(DataSource):
         return "iceberg_tail"
 
     def schema(self):
-        meta = _load_meta(self.options.get("path", ""))
+        meta = _ice.load_table_metadata(self.options.get("path", ""))
         sch = None
         if "schemas" in meta:
             sid = meta.get("current-schema-id", 0)
@@ -400,7 +379,7 @@ class IcebergChangesStreamReader(IcebergTailStreamReader):
     the micro-batch window) and ``_commit_snapshot_id``."""
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        meta = _load_meta(self.table_path)
+        meta = _ice.load_table_metadata(self.table_path)
         chain = self._chain(meta)
         lo = self._pos_after(chain, start)
         hi = self._pos_after(chain, end)

@@ -42,8 +42,10 @@ them to the log:
    core's row algebra and write, and derive CDF rows and new-file
    stats;
 4. commit = one JSON log entry (txn + adds + removes) written to a
-   temp name and renamed — the atomic step. A crash before the rename
-   leaves orphan parquet files and an unchanged table; ``vacuum_delta``
+   temp name and put-if-absent into the log (``merge_core``'s log
+   store, shared with Iceberg) — the atomic step; a second writer that
+   lost the race gets ``IOError``. A crash before the put leaves
+   orphan parquet files and an unchanged table; ``vacuum_delta``
    sweeps them.
 
 At 100 TB: per-merge IO is proportional to the update FOOTPRINT, never
@@ -64,6 +66,7 @@ import glob as _glob
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +78,7 @@ from optimus_any2any_spark.formats.footer_stats import (
     kind_of_spark_type,
 )
 from optimus_any2any_spark.sources.delta import _log_dir, replay_log
+from optimus_any2any_spark.streaming import merge_core
 from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
@@ -86,6 +90,7 @@ from optimus_any2any_spark.streaming.merge_core import (
     pid_space,
     pid_table,
     reduce_batch,
+    set_log_store,  # the public seam, re-exported for Delta callers
     sorted_keys,
     touched,
     with_pid,
@@ -228,17 +233,6 @@ def _to_phys(
         ],
         *[F.col(k) for k in keep],
     )
-
-
-def _file_token(table_path: str) -> str:
-    """8-hex table-unique fragment in new data-file names: keeps a
-    SHALLOW CLONE's writes from ever colliding with the source's
-    (absolute-path) file basenames — the readers' DV anti-joins and
-    pid-routing joins key files by basename, and their collision
-    guards would otherwise refuse the first post-clone rewrite."""
-    import uuid
-
-    return uuid.uuid5(uuid.NAMESPACE_URL, table_path).hex[:8]
 
 
 def _read_files_dv_aware(
@@ -697,43 +691,18 @@ def _collect_file_stats(
     return out
 
 
-def _posix_put_if_absent(tmp: str, final: str) -> bool:
-    """POSIX put-if-absent: hard-link ``tmp`` to ``final``; returns
-    False when ``final`` already exists (the loser of a race).
-    ``os.link`` (not rename) is the primitive — it FAILS if the target
-    exists, so two writers racing for the same version cannot both
-    win (the Delta paper's mutual-exclusion requirement on the log
-    store; rename-with-overwrite would silently drop one commit)."""
-    try:
-        os.link(tmp, final)
-        return True
-    except FileExistsError:
-        return False
-
-
-# The log-store seam (Delta paper §3.2): local/NFS deployments use the
-# POSIX hard-link; an object-store deployment swaps in a conditional
-# PUT (S3 If-None-Match, GCS x-goog-if-generation-match: 0, ABFS ETag)
-# via set_log_store(). The contract: atomically create ``final`` with
-# ``tmp``'s bytes IFF it does not exist, returning the win/lose bool.
-_put_if_absent = _posix_put_if_absent
-
-
-def set_log_store(put_if_absent) -> None:
-    """Inject the commit primitive (object-store conditional-PUT or a
-    test double). Pass ``None`` to restore the POSIX default."""
-    global _put_if_absent
-    _put_if_absent = put_if_absent or _posix_put_if_absent
-
-
 # The data-store seam: every DATA byte this module publishes under the
 # table root — parquet data files, deletion-vector ``.bin`` blobs, cdc
 # files — goes through ONE injectable primitive: "upload local ``src``
-# to ``dst``". Data names are writer-unique (version + sequence or a
-# uuid), so no conditional PUT is needed: a file only becomes live
-# when the log commit referencing it wins, which is the log store's
-# job. Object-store deployments swap in their uploader via
-# set_data_store(); the POSIX default is an atomic rename.
+# to ``dst``". Data names, and the staging dirs they are written to,
+# carry a random per-commit token, so they are writer-unique: two
+# writers racing for one version never share a name (nor does a
+# SHALLOW CLONE's writer with its source — readers key files by
+# basename in the DV anti-joins and pid-routing joins), and no
+# conditional PUT is needed. A file only becomes live when the log
+# commit referencing it wins, which is the log store's job
+# (merge_core.set_log_store). Object-store deployments swap in their
+# uploader via set_data_store(); the POSIX default is an atomic rename.
 def _posix_put_data(src: str, dst: str) -> None:
     os.replace(src, dst)
 
@@ -787,7 +756,7 @@ def _commit(
         for a in actions:
             f.write(json.dumps(a, default=str) + "\n")
     try:
-        if not _put_if_absent(tmp, final):
+        if not merge_core._put_if_absent(tmp, final):
             raise IOError(
                 f"delta: commit {version} already exists — lost the "
                 "race to a concurrent writer; replay the log and retry"
@@ -1556,7 +1525,8 @@ def compact_delta(
         cur = _with_zorder_value(cur, zorder_by, data_schema)
     total = cur.count()
     n_files = max(1, -(-total // target_rows_per_file))
-    tmp = os.path.join(table_path, f"_tmp-compact-v{version}")
+    tok = uuid.uuid4().hex  # writer-unique staged and published names
+    tmp = os.path.join(table_path, f"_tmp-compact-v{version}-{tok}")
     # re-cluster while compacting: range-partitioning on (__pid, the
     # leading stat column) keeps post-OPTIMIZE file ranges mostly
     # disjoint within each partition, so data skipping stays sharp
@@ -1605,8 +1575,7 @@ def compact_delta(
             .parquet(tmp)
         )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = (f"part-{version:05d}-{file_seq:04d}-"
-               f"{_file_token(table_path)}-compact.parquet")
+        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-compact.parquet"
         _put_data(part, os.path.join(table_path, rel))
         new_files.append(
             (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
@@ -2104,7 +2073,8 @@ def merge_delta_batch(
         )
 
     new_adds: list[dict] = []  # (rel, partitionValues) pending stats
-    tmp = os.path.join(table_path, f"_tmp-merge-v{version}")
+    tok = uuid.uuid4().hex  # writer-unique staged and published names
+    tmp = os.path.join(table_path, f"_tmp-merge-v{version}-{tok}")
     if rt is not None:
         if "__rt_id" not in merged.columns:
             # insert-only merge (no affected files): every row is
@@ -2127,8 +2097,7 @@ def merge_delta_batch(
         tmp, single,
     )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = (f"part-{version:05d}-{file_seq:04d}-"
-               f"{_file_token(table_path)}-merge.parquet")
+        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-merge.parquet"
         _put_data(part, os.path.join(table_path, rel))
         new_adds.append({"path": rel, "partitionValues": pv_of_pid[pid]})
     shutil.rmtree(tmp)
@@ -2184,7 +2153,7 @@ def merge_delta_batch(
                 changes_all, list(latest.columns), pfields,
                 keep=("_change_type",),
             )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
+        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
         changes_all.write.mode("overwrite").parquet(cdc_tmp)
         os.makedirs(
             os.path.join(table_path, "_change_data"), exist_ok=True
@@ -2192,7 +2161,7 @@ def merge_delta_batch(
         for i, part in enumerate(
             sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
         ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
+            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
             _put_data(part, os.path.join(table_path, rel))
             cdc_rel.append(rel)
         shutil.rmtree(cdc_tmp)
@@ -2208,8 +2177,6 @@ def merge_delta_batch(
 
     actions: list[dict] = []
     if version == 0:
-        import uuid
-
         actions.append(
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
         )
@@ -2565,7 +2532,8 @@ def _dml_where(
                 keep=("__pid", *rt) if rt is not None else ("__pid",),
             )
 
-    tmp = os.path.join(table_path, f"_tmp-dml-v{version}")
+    tok = uuid.uuid4().hex  # writer-unique staged and published names
+    tmp = os.path.join(table_path, f"_tmp-dml-v{version}-{tok}")
     op = "UPDATE" if set_exprs else "DELETE"
     tag = op.lower()
     new_files: list[tuple[str, dict]] = []
@@ -2578,8 +2546,7 @@ def _dml_where(
         for part in sorted(
             _glob.glob(os.path.join(tmp, "part-*.parquet"))
         ):
-            rel = (f"part-{version:05d}-{file_seq:04d}-"
-                f"{_file_token(table_path)}-{tag}.parquet")
+            rel = f"part-{version:05d}-{file_seq:04d}-{tok}-{tag}.parquet"
             file_seq += 1
             _put_data(part, os.path.join(table_path, rel))
             new_files.append((rel, pv))
@@ -2594,9 +2561,7 @@ def _dml_where(
             for part in sorted(
                 _glob.glob(os.path.join(pdir, "part-*.parquet"))
             ):
-                rel = (
-                    f"part-{version:05d}-{file_seq:04d}-{tag}.parquet"
-                )
+                rel = f"part-{version:05d}-{file_seq:04d}-{tok}-{tag}.parquet"
                 file_seq += 1
                 _put_data(part, os.path.join(table_path, rel))
                 new_files.append((rel, pv))
@@ -2634,7 +2599,7 @@ def _dml_where(
                 changes_all, [f.name for f in schema.fields], pfields,
                 keep=("_change_type",),
             )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
+        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
         changes_all.write.mode("overwrite").parquet(cdc_tmp)
         os.makedirs(
             os.path.join(table_path, "_change_data"), exist_ok=True
@@ -2642,7 +2607,7 @@ def _dml_where(
         for i, part in enumerate(
             sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
         ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
+            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
             _put_data(part, os.path.join(table_path, rel))
             cdc_rel.append(rel)
         shutil.rmtree(cdc_tmp)
@@ -3240,7 +3205,8 @@ def purge_deletion_vectors(
         for p, a in dv_adds.items()
     )
     n_files = max(1, -(-total_rows // target_rows_per_file))
-    tmp = os.path.join(table_path, f"_tmp-purge-v{version}")
+    tok = uuid.uuid4().hex  # writer-unique staged and published names
+    tmp = os.path.join(table_path, f"_tmp-purge-v{version}-{tok}")
     new_files: list[tuple[str, dict]] = []
     data_cols = [f.name for f in data_schema.fields]
     if single:
@@ -3280,8 +3246,7 @@ def purge_deletion_vectors(
             .parquet(tmp)
         )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = (f"part-{version:05d}-{file_seq:04d}-"
-               f"{_file_token(table_path)}-purge.parquet")
+        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-purge.parquet"
         _put_data(part, os.path.join(table_path, rel))
         new_files.append((rel, pv_of_pid[pid]))
     shutil.rmtree(tmp)
@@ -3583,7 +3548,9 @@ def _delete_via_dv(
                     changes_all, list(schema.fieldNames()), pfields,
                     keep=("_change_type",),
                 )
-            cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
+            cdc_tmp = os.path.join(
+                table_path, f"_tmp-cdc-v{version}-{uid.hex}"
+            )
             changes_all.write.mode("overwrite").parquet(cdc_tmp)
             os.makedirs(
                 os.path.join(table_path, "_change_data"), exist_ok=True
@@ -3593,7 +3560,10 @@ def _delete_via_dv(
                     _glob.glob(os.path.join(cdc_tmp, "part-*.parquet"))
                 )
             ):
-                rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
+                rel = (
+                    f"_change_data/cdc-{version:05d}-{i:04d}-{uid.hex}"
+                    ".parquet"
+                )
                 _put_data(part, os.path.join(table_path, rel))
                 cdc_rel.append(rel)
             shutil.rmtree(cdc_tmp)
@@ -3774,7 +3744,8 @@ def delete_delta_keys(
 
     actions: list[dict] = []
     new_adds: list[dict] = []
-    tmp = os.path.join(table_path, f"_tmp-delete-v{version}")
+    tok = uuid.uuid4().hex  # writer-unique staged and published names
+    tmp = os.path.join(table_path, f"_tmp-delete-v{version}-{tok}")
     write_key = key_col
     if mapped:
         keep = _to_phys(
@@ -3786,8 +3757,7 @@ def delete_delta_keys(
         keep, write_key, hit_rows_total, target_rows_per_file, tmp, single
     )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = (f"part-{version:05d}-{file_seq:04d}-"
-               f"{_file_token(table_path)}-delete.parquet")
+        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-delete.parquet"
         _put_data(part, os.path.join(table_path, rel))
         new_adds.append({
             "path": rel,
@@ -3829,13 +3799,13 @@ def delete_delta_keys(
                 changes_all, list(schema.fieldNames()), pfields,
                 keep=("_change_type",),
             )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}")
+        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
         changes_all.write.mode("overwrite").parquet(cdc_tmp)
         os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
         for i, part in enumerate(
             sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
         ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}.parquet"
+            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
             _put_data(part, os.path.join(table_path, rel))
             cdc_rel.append(rel)
         shutil.rmtree(cdc_tmp)

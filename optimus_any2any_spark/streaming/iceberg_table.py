@@ -32,14 +32,19 @@ idempotence                ``optimus-app-id``/``optimus-batch-id``
                            in the snapshot summary (Iceberg's
                            summary is the spec's home for writer
                            metadata)
-commit                     new ``v<N>.metadata.json`` +
-                           ``version-hint.text`` rename
+commit                     ``publish_iceberg_metadata``: new
+                           ``v<N>.metadata.json`` put-if-absent
+                           (the log store shared with Delta),
+                           then ``version-hint.text``
 =========================  ====================================
 
 At 100 TB the two-level carry-over is the point: merge IO is
 O(affected data files) and merge *metadata* IO is O(affected
 manifests), which is how Iceberg keeps planning cheap on million-file
-tables. Single writer per table path, as with the other two targets.
+tables. One writer per table path at a time: every staged and
+published name carries a random per-commit token, so a second writer
+that opened the same version fails loudly at the publish
+(``IOError``) having overwritten nothing the winner committed.
 """
 
 from __future__ import annotations
@@ -76,8 +81,10 @@ from optimus_any2any_spark.sources.iceberg import (
     _puffin_dv_ref,
     advance_main_ref,
     append_snapshot_log,
+    commit_iceberg_snapshot,
     iceberg_spark_schema,
-    load_table_metadata,
+    open_iceberg_table,
+    publish_iceberg_metadata,
     snapshot_timestamp_ms,
     write_iceberg_commit,
 )
@@ -382,6 +389,16 @@ def _stamp_parent_snapshot(new_snap: dict, meta: dict) -> None:
         new_snap["parent-snapshot-id"] = cur
 
 
+def _eff_seq(e: dict, m: dict) -> int:
+    """A manifest entry's data-sequence number under v2 inheritance:
+    the entry's own number when present, else its manifest-list row
+    ``m``'s, else 0 (v1)."""
+    s = e.get("sequence_number")
+    if s is None:
+        s = m.get("sequence_number")
+    return int(s) if s is not None else 0
+
+
 def _parse_pspec(
     default_spec: dict | None, by_id: dict, verb: str
 ) -> list[dict]:
@@ -507,17 +524,14 @@ def merge_iceberg_batch(
     manifest partition tuples carry the TRANSFORMED values keyed by
     the spec's field names. Unknown transforms and non-primitive
     partition sources are rejected, not mis-read."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    exists = os.path.exists(hint)
-    if not exists:
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         # first commit: bootstrap an EMPTY table (with the identity
         # spec when partitioned) and merge into it
         write_iceberg_commit(
             batch.limit(0), table_path, partition_by=partition_by
         )
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
+        prev_version, meta = open_iceberg_table(table_path)
     # ROW LINEAGE composes with the CoW merge the same way it does
     # with compaction: affected files read WITH their lineage
     # (materialized-or-derived), carried rows MATERIALIZE id+sequence
@@ -708,19 +722,7 @@ def merge_iceberg_batch(
         # a legal schema-change commit: a data-free metadata version
         # carrying the evolved schemas (ALTER TABLE ADD COLUMN — the
         # same no-snapshot shape as set_iceberg_partition_spec)
-        version = prev_version + 1
-        meta = dict(meta)
-        meta["last-updated-ms"] = snapshot_timestamp_ms(meta)
-        path = os.path.join(md, f"v{version}.metadata.json")
-        tmpp = path + ".tmp"
-        with open(tmpp, "w") as f:
-            f.write(json.dumps(meta, indent=2))
-        os.replace(tmpp, path)
-        tmph = hint + ".tmp"
-        with open(tmph, "w") as f:
-            f.write(str(version))
-        os.replace(tmph, hint)
-        return version
+        return publish_iceberg_metadata(table_path, prev_version + 1, meta)
 
     pstats = group_key_stats(
         latest, key_col, pv_cols, gstats,
@@ -750,14 +752,6 @@ def merge_iceberg_batch(
         _, manifests = read_container(
             _localize(table_path, snap["manifest-list"])
         )
-
-    def _eff_seq(e: dict, m: dict) -> int:
-        # v2 sequence inheritance: the entry's own number when
-        # present, else the manifest-list row's, else 0 (v1)
-        s = e.get("sequence_number")
-        if s is None:
-            s = m.get("sequence_number")
-        return int(s) if s is not None else 0
 
     carried: list[dict] = []   # manifest-list rows carried verbatim
     # delete manifests carry forward UNLESS this rewrite retires them
@@ -890,6 +884,7 @@ def merge_iceberg_batch(
 
     version = prev_version + 1
     snapshot_id = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     fmt = int(meta.get("format-version", 1))
     seq = max(
         int(meta.get("last-sequence-number", 0)), prev_version
@@ -1029,7 +1024,7 @@ def merge_iceberg_batch(
         carry_cols=lineage_cols or None,
     )
 
-    tmp = os.path.join(table_path, f"_tmp-icemerge-v{version}")
+    tmp = os.path.join(table_path, f"_tmp-icemerge-{stem}")
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
@@ -1038,7 +1033,7 @@ def merge_iceberg_batch(
         single,
     )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{version:05d}-{file_seq:04d}-merge.parquet"
+        rel = f"data/{stem}-{file_seq:04d}-merge.parquet"
         os.replace(part, os.path.join(table_path, rel))
         new_rel.append(rel)
         pt_of_rel[rel] = ptuples[pid]
@@ -1104,11 +1099,7 @@ def merge_iceberg_batch(
         else:
             foreign_by_sid.setdefault(sid, []).append(e)
 
-    manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|mm{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, manifest_rel),
         manifest_entry_schema(part_fields),
@@ -1121,11 +1112,7 @@ def merge_iceberg_batch(
             (p["name"], avro_type_of_result(p["res_type"]))
             for p in old_pspec
         ]
-        f_rel = (
-            "metadata/"
-            f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|mm{version}s{sid}')}"
-            f"-m0-s{sid}.avro"
-        )
+        f_rel = f"metadata/{stem}-m0-s{sid}.avro"
         write_container(
             os.path.join(table_path, f_rel),
             manifest_entry_schema(old_fields),
@@ -1161,11 +1148,7 @@ def merge_iceberg_batch(
             "sequence_number": seq,
         }
     ]
-    ml_rel = (
-        "metadata/"
-        f"snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|mml{version}')}.avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA, ml_rows
     )
@@ -1180,10 +1163,9 @@ def merge_iceberg_batch(
         summary["optimus-app-id"] = app_id
         summary["optimus-batch-id"] = str(batch_id)
     meta = dict(meta)
-    ts_ms = snapshot_timestamp_ms(meta)
     new_snap = {
         "snapshot-id": snapshot_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "manifest-list": ml_rel,
         "summary": summary,
     }
@@ -1194,20 +1176,7 @@ def merge_iceberg_batch(
     if lineage:
         new_snap["first-row-id"] = lin_base
         meta["next-row-id"] = lin_next
-    meta["snapshots"] = snaps + [new_snap]
-    append_snapshot_log(meta, meta, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)  # the atomic step: the hint names the table
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
 
 
 def delete_iceberg_keys(
@@ -1233,12 +1202,9 @@ def delete_iceberg_keys(
     merge reads its affected files with the deletes applied, stamps a
     higher data-sequence number on the rewrite, and carries the delete
     manifests forward for the files it did not touch."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     _refuse_unpublished_branches(meta)
     snaps = meta.get("snapshots") or []
     if batch_id is not None:
@@ -1257,9 +1223,10 @@ def delete_iceberg_keys(
     version = prev_version + 1
     snapshot_id = version
     seq = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
 
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    tmp = os.path.join(table_path, f"_tmp-eqdel-v{version}")
+    tmp = os.path.join(table_path, f"_tmp-eqdel-{stem}")
     # Write amplification is O(distinct keys), so one file is the
     # normal erasure shape — but a mass key erasure funnelling every
     # key through a single coalesce(1) task would bottleneck exactly
@@ -1283,9 +1250,9 @@ def delete_iceberg_keys(
     eq_rels: list[str] = []
     for i, part in enumerate(parts):
         rel = (
-            f"data/{version:05d}-delete-eq.parquet"
+            f"data/{stem}-delete-eq.parquet"
             if len(parts) == 1
-            else f"data/{version:05d}-delete-eq-{i:04d}.parquet"
+            else f"data/{stem}-delete-eq-{i:04d}.parquet"
         )
         os.replace(part, os.path.join(table_path, rel))
         eq_rels.append(rel)
@@ -1328,11 +1295,7 @@ def delete_iceberg_keys(
             },
         ],
     }
-    manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|ed{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     import pyarrow.parquet as _pq
 
     eq_entries = []
@@ -1374,11 +1337,7 @@ def delete_iceberg_keys(
     for r in prior_manifests:
         r.setdefault("sequence_number", None)
     _ice_preserve_manifest_lineage(table_path, meta, prior_manifests)
-    ml_rel = (
-        "metadata/"
-        f"snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|edl{version}')}.avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel),
         MANIFEST_FILE_SCHEMA,
@@ -1406,10 +1365,9 @@ def delete_iceberg_keys(
     # downgraded by a DELETE (ADVICE r8)
     meta["format-version"] = max(2, int(meta.get("format-version", 1)))
     meta["last-sequence-number"] = seq
-    ts_ms = snapshot_timestamp_ms(meta)
     eq_snap = {
         "snapshot-id": snapshot_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "sequence-number": seq,
         "manifest-list": ml_rel,
         "summary": summary,
@@ -1418,20 +1376,7 @@ def delete_iceberg_keys(
     if meta.get("next-row-id") is not None:
         # row-lineage tables: deletes assign no rows
         eq_snap["first-row-id"] = int(meta["next-row-id"])
-    meta["snapshots"] = snaps + [eq_snap]
-    append_snapshot_log(meta, meta, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, eq_snap)
 
 
 def delete_iceberg_positions(
@@ -1474,12 +1419,9 @@ def delete_iceberg_positions(
         read_entries_with_deletes,
     )
 
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     _refuse_unpublished_branches(meta)
     snaps = meta.get("snapshots") or []
     if batch_id is not None:
@@ -1542,8 +1484,8 @@ def delete_iceberg_positions(
     version = prev_version + 1
     snapshot_id = version
     seq = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    tmp = os.path.join(table_path, f"_tmp-posdel-v{version}")
     # The spec requires delete rows sorted by (file_path, pos) WITHIN
     # each delete file; one file per commit is the normal erasure
     # shape, but a mass delete funnelling every position through the
@@ -1570,38 +1512,32 @@ def delete_iceberg_positions(
         # write. Requires format-version 3 metadata — the reader side
         # shipped first (_puffin_dv_ref), so self-written DVs
         # round-trip through merge/compaction like fixture ones.
-        entries, rels = _write_dv_delete_files(
-            spark, table_path, matching, version, snapshot_id, seq
+        entries = _write_dv_delete_files(
+            table_path, matching, stem, snapshot_id, seq
         )
-        shutil.rmtree(tmp, ignore_errors=True)
         fmt_floor = 3
     else:
-        entries, rels = _write_pos_delete_files(
-            spark, table_path, matching, n_pos, version, snapshot_id,
-            tmp,
+        entries = _write_pos_delete_files(
+            table_path, matching, n_pos, stem, snapshot_id
         )
         fmt_floor = 2
-    manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|pd{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, manifest_rel),
         _DELETE_ENTRY_SCHEMA,
         entries,
     )
     return _commit_delete_manifest(
-        spark, table_path, meta, snaps, manifest_rel, version,
-        snapshot_id, seq, app_id, batch_id, fmt_floor,
+        table_path, meta, manifest_rel, version, stem, snapshot_id,
+        seq, app_id, batch_id, fmt_floor,
     )
 
 
-def _write_pos_delete_files(
-    spark, table_path, matching, n_pos, version, snapshot_id, tmp
-):
+def _write_pos_delete_files(table_path, matching, n_pos, stem, snapshot_id):
     """The delete-parquet form: spec-sorted (file_path, pos) rows,
-    range-split past _MAX_DELETE_FILE_ROWS."""
+    range-split past _MAX_DELETE_FILE_ROWS, named from the commit's
+    writer-unique ``stem``. Returns the manifest entries."""
+    tmp = os.path.join(table_path, f"_tmp-posdel-{stem}")
     n_files = max(1, -(-n_pos // _MAX_DELETE_FILE_ROWS))
     out = (
         matching.coalesce(1)
@@ -1613,9 +1549,9 @@ def _write_pos_delete_files(
     rels: list[str] = []
     for i, part in enumerate(parts):
         rel = (
-            f"data/{version:05d}-delete-pos.parquet"
+            f"data/{stem}-delete-pos.parquet"
             if len(parts) == 1
-            else f"data/{version:05d}-delete-pos-{i:04d}.parquet"
+            else f"data/{stem}-delete-pos-{i:04d}.parquet"
         )
         os.replace(part, os.path.join(table_path, rel))
         rels.append(rel)
@@ -1645,12 +1581,10 @@ def _write_pos_delete_files(
                 },
             }
         )
-    return entries, rels
+    return entries
 
 
-def _write_dv_delete_files(
-    spark, table_path, matching, version, snapshot_id, seq
-):
+def _write_dv_delete_files(table_path, matching, stem, snapshot_id, seq):
     """The v3 deletion-vector form: per referenced data file, the
     deleted positions encode as one Roaring portable64 bitmap framed
     as a deletion-vector-v1 blob (formats/puffin.py), all blobs in
@@ -1691,7 +1625,7 @@ def _write_dv_delete_files(
     )
     from optimus_any2any_spark.formats.puffin import DV_V1, write_puffin
 
-    rel = f"data/{version:05d}-delete-dv.puffin"
+    rel = f"data/{stem}-delete-dv.puffin"
     blob_meta = write_puffin(
         os.path.join(table_path, rel),
         [
@@ -1733,7 +1667,7 @@ def _write_dv_delete_files(
         }
         for bm in blob_meta
     ]
-    return entries, [rel]
+    return entries
 
 
 def _global_delete_spec_id(meta: dict) -> int:
@@ -1793,7 +1727,7 @@ def _resolve_entry_lineage(
 
 
 def _commit_delete_manifest(
-    spark, table_path, meta, snaps, manifest_rel, version, snapshot_id,
+    table_path, meta, manifest_rel, version, stem, snapshot_id,
     seq, app_id, batch_id, fmt_floor,
     extra_ml_rows: list | None = None,
     extra_summary: dict | None = None,
@@ -1813,8 +1747,7 @@ def _commit_delete_manifest(
     )
 
     _refuse_unpublished_branches(meta)
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
+    snaps = meta.get("snapshots") or []
     prior_manifests: list[dict] = []
     cur_snap_id = meta.get("current-snapshot-id")
     if cur_snap_id not in (None, -1) and snaps:
@@ -1827,11 +1760,7 @@ def _commit_delete_manifest(
     for r in prior_manifests:
         r.setdefault("sequence_number", None)
     _preserve_manifest_lineage(table_path, meta, prior_manifests)
-    ml_rel = (
-        "metadata/"
-        f"snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|pdl{version}')}.avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel),
         _MANIFEST_FILE_SCHEMA,
@@ -1864,10 +1793,9 @@ def _commit_delete_manifest(
         fmt_floor, int(meta.get("format-version", 1))
     )
     meta["last-sequence-number"] = seq
-    ts_ms = snapshot_timestamp_ms(meta)
     new_snap = {
         "snapshot-id": snapshot_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "sequence-number": seq,
         "manifest-list": ml_rel,
         "summary": summary,
@@ -1884,20 +1812,7 @@ def _commit_delete_manifest(
         )
         if next_row_id is not None:
             meta["next-row-id"] = int(next_row_id)
-    meta["snapshots"] = snaps + [new_snap]
-    append_snapshot_log(meta, meta, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
 
 
 def delete_iceberg_where(
@@ -1926,12 +1841,9 @@ def delete_iceberg_where(
         read_entries_with_deletes,
     )
 
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     schema = iceberg_spark_schema(meta)
     data, pos_del, eq_del = _snapshot_entries(table_path, meta)
     if not data:
@@ -1952,36 +1864,30 @@ def delete_iceberg_where(
     n_pos = matching.count()
     if n_pos == 0:
         return None
-    snaps = meta.get("snapshots") or []
     version = prev_version + 1
     snapshot_id = version
     seq = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    tmp = os.path.join(table_path, f"_tmp-delwhere-v{version}")
     if use_deletion_vectors:
-        entries, _rels = _write_dv_delete_files(
-            spark, table_path, matching, version, snapshot_id, seq
+        entries = _write_dv_delete_files(
+            table_path, matching, stem, snapshot_id, seq
         )
         fmt_floor = 3
     else:
-        entries, _rels = _write_pos_delete_files(
-            spark, table_path, matching, n_pos, version, snapshot_id,
-            tmp,
+        entries = _write_pos_delete_files(
+            table_path, matching, n_pos, stem, snapshot_id
         )
         fmt_floor = 2
-    manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|dw{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, manifest_rel),
         _DELETE_ENTRY_SCHEMA,
         entries,
     )
     return _commit_delete_manifest(
-        spark, table_path, meta, snaps, manifest_rel, version,
-        snapshot_id, seq, DEFAULT_APP_ID, None, fmt_floor,
+        table_path, meta, manifest_rel, version, stem, snapshot_id,
+        seq, DEFAULT_APP_ID, None, fmt_floor,
         extra_summary={"predicate": where},
     )
 
@@ -2026,12 +1932,9 @@ def update_iceberg_where(
 
     if not set or not isinstance(set, dict):
         raise ValueError("iceberg update: SET needs {col: value_sql}")
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg update: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     schema = iceberg_spark_schema(meta)
     for c in set:
         if c not in schema.fieldNames():
@@ -2066,10 +1969,10 @@ def update_iceberg_where(
     if n_upd == 0:
         return None
 
-    snaps = meta.get("snapshots") or []
     version = prev_version + 1
     snapshot_id = version
     seq = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
 
     # ---- delete half: the matched rows' current identities ----
@@ -2077,23 +1980,17 @@ def update_iceberg_where(
         F.col("__del_fp").alias("file_path"),
         F.col("__del_pos").alias("pos"),
     )
-    tmp_d = os.path.join(table_path, f"_tmp-updwhere-del-v{version}")
     if use_deletion_vectors:
-        del_entries, _rels = _write_dv_delete_files(
-            spark, table_path, positions, version, snapshot_id, seq
+        del_entries = _write_dv_delete_files(
+            table_path, positions, stem, snapshot_id, seq
         )
         fmt_floor = 3
     else:
-        del_entries, _rels = _write_pos_delete_files(
-            spark, table_path, positions, n_upd, version, snapshot_id,
-            tmp_d,
+        del_entries = _write_pos_delete_files(
+            table_path, positions, n_upd, stem, snapshot_id
         )
         fmt_floor = 2
-    del_manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|uw{version}')}"
-        "-m0.avro"
-    )
+    del_manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, del_manifest_rel),
         _DELETE_ENTRY_SCHEMA,
@@ -2131,7 +2028,7 @@ def update_iceberg_where(
         ptuples = [()]
     single = len(ptuples) == 1
     first_col = schema.fieldNames()[0]
-    tmp = os.path.join(table_path, f"_tmp-updwhere-v{version}")
+    tmp = os.path.join(table_path, f"_tmp-updwhere-{stem}")
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
     if single:
@@ -2162,7 +2059,7 @@ def update_iceberg_where(
         routed, first_col, n_upd, target_rows_per_file, tmp, single
     )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{version:05d}-{file_seq:04d}-update.parquet"
+        rel = f"data/{stem}-{file_seq:04d}-update.parquet"
         os.replace(part, os.path.join(table_path, rel))
         new_rel.append(rel)
         pt_of_rel[rel] = ptuples[pid]
@@ -2211,11 +2108,7 @@ def update_iceberg_where(
                 "data_file": dfe,
             }
         )
-    data_manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|uwd{version}')}"
-        "-m1.avro"
-    )
+    data_manifest_rel = f"metadata/{stem}-m1.avro"
     write_container(
         os.path.join(table_path, data_manifest_rel),
         manifest_entry_schema(part_fields),
@@ -2235,8 +2128,8 @@ def update_iceberg_where(
         "sequence_number": seq,
     }
     return _commit_delete_manifest(
-        spark, table_path, meta, snaps, del_manifest_rel, version,
-        snapshot_id, seq, DEFAULT_APP_ID, None, fmt_floor,
+        table_path, meta, del_manifest_rel, version, stem, snapshot_id,
+        seq, DEFAULT_APP_ID, None, fmt_floor,
         extra_ml_rows=[data_ml_row],
         extra_summary={
             "predicate": where or "true",
@@ -2354,12 +2247,9 @@ def compact_iceberg(
         avro_type_of_result,
     )
 
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg optimize: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     # row-lineage tables compact WITH lineage preservation: carried
     # rows' _row_id / _last_updated_sequence_number MATERIALIZE as
     # physical columns in the rewritten files (the spec's rewrite
@@ -2414,12 +2304,6 @@ def compact_iceberg(
         _, manifests = read_container(
             _localize(table_path, snap["manifest-list"])
         )
-
-    def _eff_seq(e: dict, m: dict) -> int:
-        s = e.get("sequence_number")
-        if s is None:
-            s = m.get("sequence_number")
-        return int(s) if s is not None else 0
 
     # first pass: which (partition tuple) groups have >=2 undersized
     # live data files
@@ -2563,6 +2447,7 @@ def compact_iceberg(
 
     version = prev_version + 1
     snapshot_id = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     fmt = int(meta.get("format-version", 1))
     seq = max(
         int(meta.get("last-sequence-number", 0)), prev_version
@@ -2665,7 +2550,7 @@ def compact_iceberg(
             "iceberg optimize: compacted files share a basename"
         )
     n_files = max(1, -(-max(total_rows, 1) // target_rows_per_file))
-    tmp = os.path.join(table_path, f"_tmp-icecompact-v{version}")
+    tmp = os.path.join(table_path, f"_tmp-icecompact-{stem}")
     os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     new_rel: list[str] = []
     pt_of_rel: dict[str, tuple] = {}
@@ -2714,7 +2599,7 @@ def compact_iceberg(
             .parquet(tmp)
         )
     for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{version:05d}-{file_seq:04d}-compact.parquet"
+        rel = f"data/{stem}-{file_seq:04d}-compact.parquet"
         os.replace(part, os.path.join(table_path, rel))
         new_rel.append(rel)
         pt_of_rel[rel] = ptuples[pid]
@@ -2832,11 +2717,7 @@ def compact_iceberg(
         e["status"] = _ST_EXISTING
         new_entries.append(e)
 
-    manifest_rel = (
-        "metadata/"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|mc{version}')}"
-        "-m0.avro"
-    )
+    manifest_rel = f"metadata/{stem}-m0.avro"
     write_container(
         os.path.join(table_path, manifest_rel),
         manifest_entry_schema(part_fields),
@@ -2857,20 +2738,14 @@ def compact_iceberg(
             "sequence_number": seq,
         }
     ]
-    ml_rel = (
-        "metadata/"
-        f"snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|mcl{version}')}"
-        ".avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA, ml_rows
     )
     meta = dict(meta)
-    ts_ms = snapshot_timestamp_ms(meta)
     new_snap = {
         "snapshot-id": snapshot_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "manifest-list": ml_rel,
         "summary": (
             {"operation": "replace",
@@ -2886,20 +2761,7 @@ def compact_iceberg(
     if lineage:
         new_snap["first-row-id"] = lin_base
         meta["next-row-id"] = lin_next
-    meta["snapshots"] = snaps + [new_snap]
-    append_snapshot_log(meta, meta, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
 
 
 def rewrite_iceberg_manifests(
@@ -2921,14 +2783,11 @@ def rewrite_iceberg_manifests(
     changelog and the streams emit NOTHING for it. Returns the new
     metadata version, or None when fewer than ``min_manifests`` data
     manifests exist (nothing to gain ⇒ no version burn)."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(
             f"iceberg rewrite_manifests: no table at {table_path}"
         )
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     _refuse_unpublished_branches(meta)
     snaps = meta.get("snapshots") or []
     cur_id = meta.get("current-snapshot-id")
@@ -2948,17 +2807,12 @@ def rewrite_iceberg_manifests(
     ]
     version = prev_version + 1
     snapshot_id = version
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
     fmt = int(meta.get("format-version", 1))
     seq = max(
         int(meta.get("last-sequence-number", 0)), prev_version
     ) + 1
     lineage = meta.get("next-row-id") is not None
-
-    def _eff_seq(e: dict, m: dict) -> int:
-        s = e.get("sequence_number")
-        if s is None:
-            s = m.get("sequence_number")
-        return int(s) if s is not None else 0
 
     # group by spec id: a manifest serializes ONE partition spec
     by_spec: dict[int, list[tuple[dict, dict, dict]]] = {}
@@ -3004,11 +2858,7 @@ def rewrite_iceberg_manifests(
                      "type": ["null", "long"],
                      "default": None, "field-id": 142}
                 )
-        rel = (
-            "metadata/"
-            f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|rm{version}s{sid}')}"
-            f"-m0.avro"
-        )
+        rel = f"metadata/{stem}-m0-s{sid}.avro"
         write_container(os.path.join(table_path, rel), esch, merged)
         new_rows.append(
             {
@@ -3031,22 +2881,16 @@ def rewrite_iceberg_manifests(
         )
     for r in other_rows:
         r.setdefault("sequence_number", None)
-    ml_rel = (
-        "metadata/"
-        f"snap-{snapshot_id}-1-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{table_path}|rml{version}')}"
-        ".avro"
-    )
+    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
     write_container(
         os.path.join(table_path, ml_rel),
         MANIFEST_FILE_SCHEMA,
         new_rows + other_rows,
     )
     meta = dict(meta)
-    ts_ms = snapshot_timestamp_ms(meta)
     new_snap = {
         "snapshot-id": snapshot_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "manifest-list": ml_rel,
         "parent-snapshot-id": cur_id,
         "summary": {
@@ -3061,20 +2905,7 @@ def rewrite_iceberg_manifests(
     if lineage:
         # no rows added: the id space does not move
         new_snap["first-row-id"] = int(meta["next-row-id"])
-    meta["snapshots"] = snaps + [new_snap]
-    append_snapshot_log(meta, meta, ts_ms, snapshot_id)
-    advance_main_ref(meta, snapshot_id)
-    meta["current-snapshot-id"] = snapshot_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
 
 
 def expire_iceberg_snapshots(
@@ -3109,12 +2940,9 @@ def expire_iceberg_snapshots(
     ordinary retention rules — Iceberg's bounded-life tags."""
     if keep_last < 1:
         raise ValueError("iceberg expire: keep_last must be >= 1")
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg expire: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     snaps = meta.get("snapshots") or []
     # snapshots referenced by a tag or branch are PROTECTED (spec
     # "Snapshot References": expiration respects refs until dropped).
@@ -3195,16 +3023,7 @@ def expire_iceberg_snapshots(
         # own metadata version (no files to delete)
         meta = dict(meta)
         meta["refs"] = live_refs
-        version = prev_version + 1
-        path = os.path.join(md, f"v{version}.metadata.json")
-        tmpp = path + ".tmp"
-        with open(tmpp, "w") as f:
-            f.write(json.dumps(meta, indent=2))
-        os.replace(tmpp, path)
-        tmph = hint + ".tmp"
-        with open(tmph, "w") as f:
-            f.write(str(version))
-        os.replace(tmph, hint)
+        publish_iceberg_metadata(table_path, prev_version + 1, meta)
         return []
     expired_ids = {s["snapshot-id"] for s in expired}
     keep = [s for s in snaps if s["snapshot-id"] not in expired_ids]
@@ -3246,12 +3065,6 @@ def expire_iceberg_snapshots(
     expired_refs: set[str] = set()
     for s in expired:
         expired_refs |= _refs(s)
-    gone: list[str] = []
-    for ref in sorted(expired_refs - kept_refs):
-        full = _localize(table_path, ref)
-        if os.path.exists(full):
-            os.remove(full)
-            gone.append(ref)
     meta = dict(meta)
     meta["snapshots"] = keep
     if aged_out:
@@ -3263,16 +3076,15 @@ def expire_iceberg_snapshots(
             for e in meta["snapshot-log"]
             if e.get("snapshot-id") in kept_ids
         ]
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
+    # commit first, delete after: a writer that loses the publish race
+    # has removed nothing the winner's metadata may still reference
+    publish_iceberg_metadata(table_path, prev_version + 1, meta)
+    gone: list[str] = []
+    for ref in sorted(expired_refs - kept_refs):
+        full = _localize(table_path, ref)
+        if os.path.exists(full):
+            os.remove(full)
+            gone.append(ref)
     return gone
 
 
@@ -3426,14 +3238,11 @@ def set_iceberg_partition_spec(
         partition_field_name,
     )
 
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(
             f"iceberg partition spec: no table at {table_path}"
         )
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     cur = (
         meta.get("schemas", [meta.get("schema")])[0]
         if "schemas" not in meta
@@ -3480,17 +3289,7 @@ def set_iceberg_partition_spec(
     meta["default-spec-id"] = next_sid
     meta.pop("partition-spec", None)  # the legacy field can only
     #                                   describe ONE spec — drop it
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(table_path, prev_version + 1, meta)
 
 
 def set_iceberg_ref(
@@ -3519,12 +3318,9 @@ def set_iceberg_ref(
         raise ValueError(
             f"iceberg ref: type must be tag or branch, not {ref_type!r}"
         )
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg ref: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     snaps = {s["snapshot-id"] for s in meta.get("snapshots") or []}
     if snapshot_id is None:
         snapshot_id = meta.get("current-snapshot-id")
@@ -3546,17 +3342,7 @@ def set_iceberg_ref(
         ref["max-ref-age-ms"] = int(max_ref_age_ms)
     refs[name] = ref
     meta["refs"] = refs
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(table_path, prev_version + 1, meta)
 
 
 def publish_iceberg_branch(
@@ -3575,12 +3361,9 @@ def publish_iceberg_branch(
     also removes the branch ref (the classic wap-branch cleanup).
     Publishing a branch already at main is a no-op (no version
     burn)."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg publish: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     refs = dict(meta.get("refs") or {})
     r = refs.get(branch)
     if r is None or (r.get("type") or "branch") != "branch":
@@ -3614,10 +3397,10 @@ def publish_iceberg_branch(
                 f"an ancestor of branch {branch!r} head {head}"
             )
     meta = dict(meta)
+    ts_ms = None  # no main move: publish stamps the clock
     if head != cur:
         meta["current-snapshot-id"] = head
         ts_ms = snapshot_timestamp_ms(meta)
-        meta["last-updated-ms"] = ts_ms
         append_snapshot_log(
             meta, {"snapshot-log": meta.get("snapshot-log")},
             ts_ms, head,
@@ -3627,17 +3410,9 @@ def publish_iceberg_branch(
     if drop_branch:
         refs.pop(branch, None)
     meta["refs"] = refs
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(
+        table_path, prev_version + 1, meta, ts_ms
+    )
 
 
 def drop_iceberg_ref(
@@ -3645,29 +3420,16 @@ def drop_iceberg_ref(
 ) -> int:
     """DROP TAG / DROP BRANCH: remove ``refs[name]``; the snapshot it
     protected becomes expirable again. Raises on an unknown ref."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg ref: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     refs = dict(meta.get("refs") or {})
     if name not in refs:
         raise ValueError(f"iceberg ref: unknown ref {name!r}")
     del refs[name]
     meta = dict(meta)
     meta["refs"] = refs
-    version = prev_version + 1
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return publish_iceberg_metadata(table_path, prev_version + 1, meta)
 
 
 def rollback_iceberg(
@@ -3690,12 +3452,9 @@ def rollback_iceberg(
     its manifest list was deleted (``expire_iceberg_snapshots`` ran) —
     the twin of ``restore_delta``'s vacuumed-file refusal: rolling
     back to silently-missing data would corrupt the table."""
-    md = _meta_dir(table_path)
-    hint = os.path.join(md, "version-hint.text")
-    if not os.path.exists(hint):
+    prev_version, meta = open_iceberg_table(table_path)
+    if meta is None:
         raise ValueError(f"iceberg rollback: no table at {table_path}")
-    prev_version = int(open(hint).read().strip())
-    meta = load_table_metadata(table_path, version=prev_version)
     snaps = meta.get("snapshots") or []
     target = next(
         (s for s in snaps if s["snapshot-id"] == snapshot_id), None
@@ -3719,10 +3478,9 @@ def rollback_iceberg(
     version = prev_version + 1
     new_snap_id = version
     seq = int(meta.get("last-sequence-number") or 0) + 1
-    ts_ms = snapshot_timestamp_ms(meta)
     snap = {
         "snapshot-id": new_snap_id,
-        "timestamp-ms": ts_ms,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
         "sequence-number": seq,
         "summary": {
             "operation": "rollback",
@@ -3740,20 +3498,7 @@ def rollback_iceberg(
     meta = dict(meta)
     if meta.get("format-version", 1) >= 2:
         meta["last-sequence-number"] = seq
-    meta["snapshots"] = snaps + [snap]
-    append_snapshot_log(meta, meta, ts_ms, new_snap_id)
-    advance_main_ref(meta, new_snap_id)
-    meta["current-snapshot-id"] = new_snap_id
-    path = os.path.join(md, f"v{version}.metadata.json")
-    tmpp = path + ".tmp"
-    with open(tmpp, "w") as f:
-        f.write(json.dumps(meta, indent=2))
-    os.replace(tmpp, path)
-    tmph = hint + ".tmp"
-    with open(tmph, "w") as f:
-        f.write(str(version))
-    os.replace(tmph, hint)
-    return version
+    return commit_iceberg_snapshot(table_path, version, meta, snap)
 
 
 def upsert_to_iceberg_table(

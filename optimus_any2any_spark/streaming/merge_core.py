@@ -25,7 +25,10 @@ format:
 
 Each format keeps its own log or metadata replay, idempotence check,
 schema evolution, live-file listing and partition pruning, hit-file
-read, change rows, new-file stats and commit.
+read, change rows and new-file stats. Both commit through the one
+put-if-absent primitive here (:func:`set_log_store`): a Delta log entry
+and an Iceberg ``v<N>.metadata.json`` land only if no other writer
+took that version first.
 
 Keys order the way Spark orders them: NaN above every other float. A
 file whose max-key stat is NaN therefore still covers every finite key
@@ -706,3 +709,35 @@ def conditional_merge(
             when_not_matched=when_not_matched,
         )
     return conditional
+
+
+def _posix_put_if_absent(tmp: str, final: str) -> bool:
+    """POSIX put-if-absent: hard-link ``tmp`` to ``final``; returns
+    False when ``final`` already exists (the loser of a race).
+    ``os.link`` (not rename) is the primitive — it FAILS if the target
+    exists, so two writers racing for the same version cannot both
+    win (the Delta paper's mutual-exclusion requirement on the log
+    store; rename-with-overwrite would silently drop one commit)."""
+    try:
+        os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+
+
+# The log-store seam (Delta paper §3.2), shared by the Delta log and
+# the Iceberg metadata publish: local/NFS deployments use the POSIX
+# hard-link; an object-store deployment swaps in a conditional PUT (S3
+# If-None-Match, GCS x-goog-if-generation-match: 0, ABFS ETag) via
+# set_log_store(). The contract: atomically create ``final`` with
+# ``tmp``'s bytes IFF it does not exist, returning the win/lose bool.
+# Callers read it as ``merge_core._put_if_absent`` at call time, so a
+# swap reaches both formats.
+_put_if_absent = _posix_put_if_absent
+
+
+def set_log_store(put_if_absent) -> None:
+    """Inject the commit primitive (object-store conditional-PUT or a
+    test double). Pass ``None`` to restore the POSIX default."""
+    global _put_if_absent
+    _put_if_absent = put_if_absent or _posix_put_if_absent

@@ -690,15 +690,17 @@ class TestMetadataTables:
 
         t = self._mk(spark, tmp_path)
         snaps = read_iceberg_metadata(spark, t, "snapshots").collect()
+        # every commit reads the clock once: set_iceberg_ref's tick
+        # (2_000_000) stamps that version's last-updated-ms
         assert [r.committed_at for r in snaps] == [
-            1_000_000, 2_000_000, 3_000_000,
+            1_000_000, 3_000_000, 4_000_000,
         ]
         assert [r.operation for r in snaps] == [
             "append", "append", "delete",
         ]
         hist = read_iceberg_metadata(spark, t, "history").collect()
         assert [r.made_current_at for r in hist] == [
-            1_000_000, 2_000_000, 3_000_000,
+            1_000_000, 3_000_000, 4_000_000,
         ]
         assert all(r.is_current_ancestor is not None for r in hist)
 

@@ -587,7 +587,9 @@ class TestAppendFooterFallback:
             _, entries = read_container(mf)
             out += [
                 (
-                    e["data_file"]["file_path"].rsplit("/", 1)[-1],
+                    # the file's sequence in its commit: the rest of the
+                    # name is a per-commit random token
+                    e["data_file"]["file_path"].rsplit("-", 1)[-1],
                     e["data_file"]["record_count"],
                     e["data_file"].get("first_row_id"),
                 )

@@ -378,3 +378,31 @@ class TestIcebergChangesSource:
             q.awaitTermination(120)
             if q.exception() is not None:
                 raise q.exception()
+
+
+def test_encrypted_table_refused_by_name(spark, tmp_path):
+    """Both streams load metadata through the batch reader's loader,
+    so its v3 refusals apply to them too."""
+    import json
+    import os
+
+    from optimus_any2any_spark.sources.iceberg_stream import (
+        IcebergChangesStreamReader,
+        IcebergTailStreamReader,
+    )
+
+    t = str(tmp_path / "tbl")
+    write_iceberg_commit(_rows(spark, [(1, "a")]), t)
+    md = os.path.join(t, "metadata", "v1.metadata.json")
+    with open(md) as f:
+        meta = json.loads(f.read())
+    meta["format-version"] = 3
+    meta["encryption-keys"] = [{"key-id": "k0"}]
+    with open(md, "w") as f:
+        f.write(json.dumps(meta))
+    for cls in (IcebergTailStreamReader, IcebergChangesStreamReader):
+        rdr = cls.__new__(cls)
+        rdr.table_path = t
+        rdr.start_sid = None
+        with pytest.raises(NotImplementedError, match="encryption"):
+            rdr.partitions({"sid": None}, {"sid": 1})

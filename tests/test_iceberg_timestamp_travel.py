@@ -77,6 +77,12 @@ class TestStamping:
             s["snapshot-id"] for s in snaps
         ]
         assert [e["timestamp-ms"] for e in log] == stamps
+        # every metadata version stamps last-updated-ms: the instant of
+        # the snapshot it added
+        for v in range(1, len(snaps) + 1):
+            with open(os.path.join(t, "metadata", f"v{v}.metadata.json")) as f:
+                mv = json.loads(f.read())
+            assert mv["last-updated-ms"] == stamps[v - 1]
 
     def test_rollback_appends_log_entry(
         self, spark, tmp_path, stepping_clock
