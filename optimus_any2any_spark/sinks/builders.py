@@ -157,16 +157,18 @@ def delta_sink(df: DataFrame, cfg: Config):
 
     ``DELTA__SINK_URI=file:///path/to/table``; ``DELTA__MODE`` is
     ``APPEND`` (default — one commit of new files, the bronze-log
-    shape) or ``MERGE`` (copy-on-write upsert; requires
+    shape; its adds record stats, and it honours the table's row
+    tracking and column mapping like every other writer) or
+    ``MERGE`` (copy-on-write upsert; requires
     ``DELTA__MERGE_KEY`` and ``DELTA__MERGE_TS``). Optional
     ``DELTA__PARTITION_BY`` (comma-separated) partitions the table on
     first commit; ``DELTA__CHANGE_DATA=true`` records CDF entries on
     merges. The written table is readable by ``--from DELTA``, the
     ``delta_tail``/``delta_cdf`` stream sources, and any open-protocol
     Delta client."""
-    from optimus_any2any_spark.sources.delta import write_delta_commit
     from optimus_any2any_spark.streaming.delta_table import (
         merge_delta_batch,
+        write_delta_commit,
     )
 
     c = cfg.for_component("DELTA")

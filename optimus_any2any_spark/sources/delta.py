@@ -1438,147 +1438,3 @@ def read_delta_cdf(
             ),
         )
     return out
-
-
-# ---------------------------------------------------------------------------
-# Minimal writer — commits the same protocol for fixtures/round-trips.
-# (The engine's own MERGE target stays streaming/manifest_table.py;
-# this writer exists so the READER is tested against real log bytes.)
-
-
-def write_delta_commit(
-    df: DataFrame,
-    table_path: str,
-    partition_by: list[str] | None = None,
-    remove_paths: list[str] | None = None,
-) -> int:
-    """Append one Delta commit: write df's rows as parquet data files,
-    emit add actions (plus explicit remove tombstones), and the
-    protocol/metaData actions on the first commit. Returns the commit
-    version."""
-    import uuid
-
-    part_cols = partition_by or []
-    log = _log_dir(table_path)
-    os.makedirs(log, exist_ok=True)
-    existing = [
-        int(f[:20])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[:20].isdigit()
-    ]
-    version = max(existing) + 1 if existing else 0
-    id_meta = None
-    if version > 0:
-        # an append against an existing table honors its writer
-        # features: CHECK constraints gate the new rows, appendOnly
-        # forbids the remove escape hatch
-        state = replay_log(df.sparkSession, table_path)
-        df = apply_generated_columns(state["meta"], df, "append")
-        df, id_meta = apply_identity_columns(
-            state["meta"], df, "append"
-        )
-        check_delta_constraints(state["meta"], df, "append")
-        table_parts = list(
-            (state["meta"] or {}).get("partitionColumns") or []
-        )
-        if table_parts:
-            # a partitioned table's layout is the TABLE's, not the
-            # caller's: adds without the right partitionValues would
-            # silently break partition pruning for every reader
-            if partition_by and list(partition_by) != table_parts:
-                raise ValueError(
-                    f"delta append: partition_by {partition_by} != "
-                    f"the table's partition columns {table_parts}"
-                )
-            part_cols = table_parts
-        if remove_paths and (
-            (state["meta"] or {}).get("configuration") or {}
-        ).get("delta.appendOnly") == "true":
-            raise ValueError(
-                "delta append: table is appendOnly "
-                "(delta.appendOnly=true) — remove tombstones are "
-                "forbidden by the table's own configuration"
-            )
-    actions: list[dict] = []
-    if id_meta is not None:
-        # an advanced identity watermark re-states metaData in the
-        # same commit (protocol: the watermark must track issued
-        # values, or a concurrent writer would re-issue them)
-        actions.append({"metaData": id_meta})
-    if version == 0:
-        actions.append(
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-        )
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_path)),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df.schema.json(),
-                    "partitionColumns": part_cols,
-                    "configuration": {},
-                }
-            }
-        )
-    data_cols = [c for c in df.columns if c not in part_cols]
-    if part_cols:
-        parts = [
-            (tuple(r.asDict()[c] for c in part_cols),)
-            for r in df.select(*part_cols).distinct().collect()
-        ]
-        groups = [p[0] for p in parts]
-    else:
-        groups = [()]
-    for gi, key in enumerate(sorted(groups, key=str)):
-        g = df
-        for c, v in zip(part_cols, key):
-            g = g.filter(
-                F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            )
-        rel = f"part-{version:05d}-{gi:04d}.parquet"
-        tmp = os.path.join(table_path, "_tmp_" + rel)
-        g.select(*data_cols).coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob as _glob
-        import shutil
-
-        src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.replace(src, os.path.join(table_path, rel))
-        shutil.rmtree(tmp)
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {
-                        c: (None if v is None else str(v))
-                        for c, v in zip(part_cols, key)
-                    },
-                    "size": os.path.getsize(os.path.join(table_path, rel)),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
-        )
-    for rp in remove_paths or []:
-        actions.append(
-            {"remove": {"path": rp, "deletionTimestamp": 0,
-                        "dataChange": True}}
-        )
-    import time as _time
-
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": int(_time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": "Append"},
-                "engineInfo": "optimus-any2any-spark",
-            }
-        }
-    ] + actions
-    commit = os.path.join(log, "%020d.json" % version)
-    tmp_commit = commit + ".tmp"
-    with open(tmp_commit, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
-    os.replace(tmp_commit, commit)
-    return version

@@ -195,8 +195,8 @@ class FileSource:
         # final parse are separate jobs, and split planning can shift
         # between jobs (maxSplitBytes derives from defaultParallelism,
         # which moves under dynamic allocation) — drifted pid/mid
-        # assignments would miss the broadcast-map keys and silently
-        # null every position. localCheckpoint materializes the marked
+        # assignments would miss the broadcast-map keys, which raises
+        # below. localCheckpoint materializes the marked
         # text (MEMORY_AND_DISK, spillable) so later jobs reuse these
         # exact partitions.
         # lazy: the stats collect right below is the first action and
@@ -246,7 +246,22 @@ class FileSource:
                 for x in (F.lit(f"{r['__pid']}|{r['__file']}"), F.lit(r["mn"]))
             ]
         )
+        # a row whose slice the stats never saw (its job planned other
+        # splits) has no position: fail loudly rather than let the
+        # caller's position filter drop it
         return marked.withColumn(
             "__pos",
-            (start_map[key] + (F.col("__mid") - min_map[key])).cast("long"),
+            F.when(
+                start_map[key].isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit("file source: no line position for scan "
+                              "slice "),
+                        key,
+                        F.lit(" — split planning changed between jobs"),
+                    )
+                ),
+            ).otherwise(
+                (start_map[key] + (F.col("__mid") - min_map[key])).cast("long")
+            ),
         ).drop("__pid", "__mid")

@@ -301,11 +301,20 @@ def publish_iceberg_metadata(
 def commit_iceberg_snapshot(
     table_path: str, version: int, meta: dict, snap: dict
 ) -> int:
-    """Make ``snap`` the new main head of ``meta`` — appended to the
-    snapshot list and the ``snapshot-log``, ``refs.main`` and
-    ``current-snapshot-id`` advanced — and publish ``meta`` as
-    ``version`` (:func:`publish_iceberg_metadata`)."""
+    """Make ``snap`` the new main head of ``meta`` — its
+    ``parent-snapshot-id`` stamped from the pre-commit head when unset,
+    appended to the snapshot list and the ``snapshot-log``,
+    ``refs.main`` and ``current-snapshot-id`` advanced — and publish
+    ``meta`` as ``version`` (:func:`publish_iceberg_metadata`). The
+    parent pointer is what lets readers window history by ANCESTRY
+    (multi-branch WAP — :func:`iceberg_main_chain`) instead of list
+    position. A None/-1 head leaves the key out: an explicit null
+    parent would demote a heuristic-governed table to list-order
+    history (:func:`_chain_authoritative`)."""
     sid = snap["snapshot-id"]
+    head = meta.get("current-snapshot-id")
+    if snap.get("parent-snapshot-id") is None and head not in (None, -1):
+        snap["parent-snapshot-id"] = head
     meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
     append_snapshot_log(meta, meta, snap["timestamp-ms"], sid)
     advance_main_ref(meta, sid)

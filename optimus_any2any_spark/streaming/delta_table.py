@@ -21,7 +21,8 @@ superseded file           ``remove`` tombstone (kept in the log;
                           protocol's SetTransaction, exactly the
                           transactional-sink pattern real Delta
                           streaming writers use
-manifest rewrite          one ``%020d.json`` commit, temp+rename
+manifest rewrite          one ``%020d.json`` commit, put-if-absent
+                          through the log store
 bounded replay            parquet checkpoint + ``_last_checkpoint``
                           every ``checkpoint_interval`` commits
 ==========================================================
@@ -47,6 +48,14 @@ them to the log:
    lost the race gets ``IOError``. A crash before the put leaves
    orphan parquet files and an unchanged table; ``vacuum_delta``
    sweeps them.
+
+Every writer that lays down data — APPEND (``write_delta_commit``, the
+DELTA sink's default mode), MERGE, OPTIMIZE, DV purge, key delete and
+UPDATE/DELETE WHERE — ends in one publish tail: ``_publish_parts``
+names each part writer-uniquely and puts it through the data store,
+``_add_actions`` measures it into an ``add`` (stats, row-tracking ids,
+rowless parts dropped), ``_cdc_actions`` writes and publishes the
+change rows, and ``_commit`` lands the log entry.
 
 At 100 TB: per-merge IO is proportional to the update FOOTPRINT, never
 the table; checkpoints keep log replay O(files) instead of O(history);
@@ -603,14 +612,15 @@ def _collect_file_stats(
     spark: SparkSession,
     table_path: str,
     new_rel: list[str],
-    key_col: str,
+    key_col: str | None,
     data_schema: T.StructType,
     lead_cols: list[str] | None = None,
 ) -> dict[str, dict]:
-    """Per-file stats for the merge key PLUS the leading data columns
-    (capped) — Delta's per-column minValues/maxValues/nullCount, which
-    is what makes ``read_delta(key_range=...)`` skip files on ANY
-    recorded column, not just the merge key.
+    """Per-file stats for the merge key (when given) PLUS the leading
+    data columns (capped) — Delta's per-column minValues/maxValues/
+    nullCount, which is what makes ``read_delta(key_range=...)`` skip
+    files on ANY recorded column, not just the merge key. Rowless files
+    get no entry.
 
     Fast path: parquet FOOTER statistics via pyarrow, driver-side —
     zero data I/O over files this commit just wrote (re-reading every
@@ -624,7 +634,7 @@ def _collect_file_stats(
     )
     # lead_cols (the ZORDER BY set) jump the cap queue: z-ordering a
     # column is useless unless its min/max are recorded per file
-    lead = [key_col] + [
+    lead = ([key_col] if key_col else []) + [
         c for c in (lead_cols or []) if c != key_col
     ]
     stat_cols = lead + [
@@ -765,6 +775,231 @@ def _commit(
         os.unlink(tmp)
 
 
+def _open_state(spark: SparkSession, table_path: str) -> dict:
+    """The replayed log, or the empty state of a table no commit has
+    created yet."""
+    if os.path.isdir(_log_dir(table_path)):
+        return replay_log(spark, table_path)
+    return {"meta": None, "live": {}, "txns": {}, "version": -1}
+
+
+def _create_actions(
+    table_path: str, schema: T.StructType, part_cols: list[str]
+) -> list[dict]:
+    """The version-0 ``protocol`` and ``metaData`` actions of a table a
+    merge or an append creates."""
+    return [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {
+            "metaData": {
+                "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_path)),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema.json(),
+                "partitionColumns": list(part_cols),
+                "configuration": {},
+            }
+        },
+    ]
+
+
+# The publish tail every data-writing commit ends in — one place
+# decides how a Delta data file is named, published, measured and
+# logged:
+#   parts — the files a Spark write left in its staging dir get
+#           writer-unique names and go through the data store;
+#   adds  — footer stats, rowless parts dropped, ``add`` actions with
+#           row-tracking ids and the watermark domain;
+#   cdc   — the change rows are written and published under
+#           ``_change_data/`` and logged as ``cdc`` actions.
+def _publish_parts(
+    table_path: str,
+    tmp: str,
+    single: bool,
+    version: int,
+    tok: str,
+    tag: str,
+    pv_of_pid: dict[int, dict],
+) -> list[tuple[str, dict]]:
+    """Publish each part a write left under ``tmp`` (plain when
+    ``single``, else ``__pid=`` dirs) as
+    ``part-{version:05d}-{seq:04d}-{tok}-{tag}.parquet`` and remove
+    ``tmp``; returns ``(rel, partitionValues)`` per part."""
+    files = []
+    for seq, (part, pid) in enumerate(local_parts(tmp, single)):
+        rel = f"part-{version:05d}-{seq:04d}-{tok}-{tag}.parquet"
+        _put_data(part, os.path.join(table_path, rel))
+        files.append((rel, pv_of_pid[pid]))
+    shutil.rmtree(tmp)
+    return files
+
+
+def _pv_by_pid(ptuples: list, part_cols: list[str], phys) -> dict:
+    """Each pid's ``partitionValues`` (physical keys) for partition
+    tuples that already hold the log's value strings."""
+    return {
+        pid: {phys(c): v for c, v in zip(part_cols, pt)}
+        for pid, pt in enumerate(ptuples)
+    }
+
+
+def _add_actions(
+    spark: SparkSession,
+    table_path: str,
+    state: dict,
+    version: int,
+    files: list[tuple[str, dict]],
+    data_schema: T.StructType,
+    key_col: str | None = None,
+    data_change: bool = True,
+    lead_cols: list[str] | None = None,
+) -> list[dict]:
+    """The ``add`` actions for the published ``files`` of a table whose
+    (possibly evolved) metaData is ``state["meta"]``: per-file stats
+    led by ``key_col`` and ``lead_cols`` (logical names), rowless parts
+    deleted instead of added, and on row-tracking tables a fresh
+    ``baseRowId`` reservation per add from the watermark (rows with
+    materialized ids leave theirs unused — the spec only needs
+    uniqueness) plus the advanced ``delta.rowTracking`` domain."""
+    phys, mapped, pfields = _phys_of(state["meta"])
+    rt = _row_tracking_of(state["meta"])
+    by_name = _collect_file_stats(
+        spark, table_path, [r for r, _ in files],
+        phys(key_col) if key_col else None,
+        _phys_schema(data_schema, pfields) if mapped else data_schema,
+        lead_cols=[phys(c) for c in lead_cols or []],
+    ) if files else {}
+    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
+    actions: list[dict] = []
+    for rel, pv in files:
+        full = os.path.join(table_path, rel)
+        st = by_name.get(rel)
+        if st is None:  # a rowless part: not worth an add action
+            os.remove(full)
+            continue
+        add = {
+            "path": rel,
+            "partitionValues": pv,
+            "size": os.path.getsize(full),
+            "modificationTime": 0,
+            "dataChange": data_change,
+            "stats": json.dumps(st, default=str),
+        }
+        if rt is not None:
+            add["baseRowId"] = rt_base
+            add["defaultRowCommitVersion"] = version
+            rt_base += int(st["numRecords"])
+        actions.append({"add": add})
+    if rt is not None:
+        actions.append(_rt_domain_action(rt_base - 1))
+    return actions
+
+
+def _cdc_actions(
+    table_path: str,
+    state: dict,
+    version: int,
+    tok: str,
+    changes: DataFrame,
+    cols: list[str],
+) -> list[dict]:
+    """Write ``changes``' ``cols`` (logical names, physical on the
+    parquet of mapped tables) plus ``_change_type``, publish each part
+    as ``_change_data/cdc-{version:05d}-{seq:04d}-{tok}.parquet`` and
+    return the ``cdc`` actions. Every part is kept, rowless ones too:
+    a commit that rewrites data without a ``cdc`` action reads as one
+    written without CDF."""
+    _phys, mapped, pfields = _phys_of(state["meta"])
+    changes = changes.select(*cols, "_change_type")
+    if mapped:
+        changes = _to_phys(changes, cols, pfields, keep=("_change_type",))
+    tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
+    changes.write.mode("overwrite").parquet(tmp)
+    os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
+    actions = []
+    for seq, (part, _pid) in enumerate(local_parts(tmp, True)):
+        rel = f"_change_data/cdc-{version:05d}-{seq:04d}-{tok}.parquet"
+        size = os.path.getsize(part)
+        _put_data(part, os.path.join(table_path, rel))
+        actions.append(
+            {
+                "cdc": {
+                    "path": rel,
+                    "partitionValues": {},
+                    "size": size,
+                    "dataChange": False,
+                }
+            }
+        )
+    shutil.rmtree(tmp)
+    return actions
+
+
+def _checkpoint_rows(state: dict) -> tuple[list[str], list[str]]:
+    """A snapshot as checkpoint rows ``(head, adds)``: protocol,
+    metaData, txns and domain metadata (row tracking keeps its high
+    watermark there — dropping it would reset row ids), then one row
+    per live add."""
+    head = [
+        json.dumps({"protocol": state.get("protocol")
+                    or {"minReaderVersion": 1, "minWriterVersion": 2}}),
+        json.dumps({"metaData": state["meta"]}, default=str),
+    ]
+    head += [
+        json.dumps({"txn": {"appId": a, "version": v}})
+        for a, v in sorted(state["txns"].items())
+    ]
+    head += [
+        json.dumps(
+            {
+                "domainMetadata": {
+                    "domain": d,
+                    "configuration": cfg,
+                    "removed": False,
+                }
+            }
+        )
+        for d, cfg in sorted((state.get("domains") or {}).items())
+    ]
+    adds = [
+        json.dumps({"add": add}, default=str)
+        for _, add in sorted(state["live"].items())
+    ]
+    return head, adds
+
+
+def _rows_to_parquet(
+    spark: SparkSession,
+    rows: list[str],
+    dest: str,
+    schema: T.StructType | None = None,
+) -> None:
+    """One parquet file at ``dest`` holding the JSON action ``rows``
+    (schema inferred from them unless given), published through the
+    data seam."""
+    if schema is None:
+        schema = spark.read.json(
+            spark.sparkContext.parallelize(rows, 1)
+        ).schema
+    df = spark.read.schema(schema).json(
+        spark.sparkContext.parallelize(rows, 1)
+    )
+    tmp = f"{dest}.{uuid.uuid4().hex}.d"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    _put_data(_glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest)
+    shutil.rmtree(tmp)
+
+
+def _publish_last_checkpoint(log: str, pointer: dict) -> None:
+    """``_last_checkpoint`` is an OVERWRITE pointer (the spec's one
+    non-conditional log write): a writer-unique temp published through
+    the data seam."""
+    last = os.path.join(log, "_last_checkpoint")
+    tmp = f"{last}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(pointer))
+    _put_data(tmp, last)
+
+
 def _write_checkpoint(
     spark: SparkSession,
     table_path: str,
@@ -781,34 +1016,8 @@ def _write_checkpoint(
     Single-writer note: tombstones already applied to the live set are
     dropped (real Delta retains them for VACUUM retention windows;
     ``vacuum_delta`` here works from the live set directly)."""
-    state = replay_log(spark, table_path)
-    rows = [
-        json.dumps({"protocol": state.get("protocol")
-                    or {"minReaderVersion": 1, "minWriterVersion": 2}}),
-        json.dumps({"metaData": state["meta"]}, default=str),
-    ]
-    rows += [
-        json.dumps({"txn": {"appId": a, "version": v}})
-        for a, v in sorted(state["txns"].items())
-    ]
-    rows += [
-        # domain metadata survives checkpoints (row tracking keeps
-        # its high watermark here — dropping it would reset row ids)
-        json.dumps(
-            {
-                "domainMetadata": {
-                    "domain": d,
-                    "configuration": cfg,
-                    "removed": False,
-                }
-            }
-        )
-        for d, cfg in sorted((state.get("domains") or {}).items())
-    ]
-    rows += [
-        json.dumps({"add": add}, default=str)
-        for _, add in sorted(state["live"].items())
-    ]
+    head, adds = _checkpoint_rows(replay_log(spark, table_path))
+    rows = head + adds
     log = _log_dir(table_path)
     n_parts = max(1, -(-len(rows) // max_actions_per_part))
     chunk = -(-len(rows) // n_parts)
@@ -820,36 +1029,20 @@ def _write_checkpoint(
         spark.sparkContext.parallelize(rows, 1)
     ).schema
     for i in range(n_parts):
-        part_rows = rows[i * chunk:(i + 1) * chunk]
-        cp_df = spark.read.schema(full_schema).json(
-            spark.sparkContext.parallelize(part_rows, 1)
-        )
         if n_parts == 1:
-            cp_path = os.path.join(
-                log, "%020d.checkpoint.parquet" % version
-            )
+            name = "%020d.checkpoint.parquet" % version
         else:
-            cp_path = os.path.join(
-                log,
-                "%020d.checkpoint.%010d.%010d.parquet"
-                % (version, i + 1, n_parts),
+            name = "%020d.checkpoint.%010d.%010d.parquet" % (
+                version, i + 1, n_parts
             )
-        tmp = cp_path + ".d"
-        cp_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _put_data(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))[0], cp_path
+        _rows_to_parquet(
+            spark, rows[i * chunk:(i + 1) * chunk],
+            os.path.join(log, name), full_schema,
         )
-        shutil.rmtree(tmp)
-    last = os.path.join(log, "_last_checkpoint")
-    tmp_last = last + ".tmp"
-    meta = {"version": version, "size": len(rows)}
+    pointer = {"version": version, "size": len(rows)}
     if n_parts > 1:
-        meta["parts"] = n_parts
-    with open(tmp_last, "w") as f:
-        f.write(json.dumps(meta))
-    # _last_checkpoint is an OVERWRITE pointer (the spec's one
-    # non-conditional log write) — published through the data seam
-    _put_data(tmp_last, last)
+        pointer["parts"] = n_parts
+    _publish_last_checkpoint(log, pointer)
 
 
 def create_delta_table(
@@ -1194,8 +1387,6 @@ def write_checkpoint_v2(
     (``_write_checkpoint``) remains the default on merge's
     ``checkpoint_interval`` — v2 is the opt-in for metadata-scale
     tables."""
-    import uuid as _uuid
-
     state = replay_log(spark, table_path)
     if state["meta"] is None:
         raise ValueError(f"delta checkpoint: no table at {table_path}")
@@ -1211,42 +1402,19 @@ def write_checkpoint_v2(
         state = replay_log(spark, table_path)
 
     log = _log_dir(table_path)
+    head, add_rows = _checkpoint_rows(state)
     top_rows = [
-        json.dumps({"checkpointMetadata": {"version": version}}),
-        json.dumps({"protocol": state.get("protocol")}),
-        json.dumps({"metaData": state["meta"]}, default=str),
-    ] + [
-        json.dumps({"txn": {"appId": a, "version": v}})
-        for a, v in sorted(state["txns"].items())
-    ]
-    add_rows = [
-        json.dumps({"add": add}, default=str)
-        for _, add in sorted(state["live"].items())
-    ]
-
-    def _rows_to_parquet(rows: list[str], dest: str) -> None:
-        schema = spark.read.json(
-            spark.sparkContext.parallelize(rows, 1)
-        ).schema
-        df = spark.read.schema(schema).json(
-            spark.sparkContext.parallelize(rows, 1)
-        )
-        tmp = dest + ".d"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _put_data(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest
-        )
-        shutil.rmtree(tmp)
-
+        json.dumps({"checkpointMetadata": {"version": version}})
+    ] + head
     if len(add_rows) > sidecar_threshold:
         os.makedirs(os.path.join(log, "_sidecars"), exist_ok=True)
         n_parts = -(-len(add_rows) // sidecar_threshold)
         chunk = -(-len(add_rows) // n_parts)
         for i in range(n_parts):
-            sc_name = f"{_uuid.uuid4()}.parquet"
+            sc_name = f"{uuid.uuid4()}.parquet"
             sc_path = os.path.join(log, "_sidecars", sc_name)
             _rows_to_parquet(
-                add_rows[i * chunk:(i + 1) * chunk], sc_path
+                spark, add_rows[i * chunk:(i + 1) * chunk], sc_path
             )
             top_rows.append(
                 json.dumps(
@@ -1262,13 +1430,11 @@ def write_checkpoint_v2(
     else:
         top_rows += add_rows
 
-    cp_name = f"%020d.checkpoint.{_uuid.uuid4()}.parquet" % version
-    _rows_to_parquet(top_rows, os.path.join(log, cp_name))
-    last = os.path.join(log, "_last_checkpoint")
-    tmp_last = last + ".tmp"
-    with open(tmp_last, "w") as f:
-        f.write(json.dumps({"version": version, "size": len(top_rows)}))
-    _put_data(tmp_last, last)
+    cp_name = f"%020d.checkpoint.{uuid.uuid4()}.parquet" % version
+    _rows_to_parquet(spark, top_rows, os.path.join(log, cp_name))
+    _publish_last_checkpoint(
+        log, {"version": version, "size": len(top_rows)}
+    )
     return cp_name
 
 
@@ -1532,7 +1698,6 @@ def compact_delta(
     # disjoint within each partition, so data skipping stays sharp
     # (the linear cousin of Delta's Z-ORDER-on-OPTIMIZE). File sizes
     # are approximate when a range partition spans a __pid boundary.
-    new_files: list[tuple[str, dict]] = []  # (rel, partitionValues)
     data_cols = [f.name for f in data_schema.fields]
     if single:
         out_df = cur.drop("__pid")
@@ -1574,53 +1739,21 @@ def compact_delta(
             .mode("overwrite")
             .parquet(tmp)
         )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-compact.parquet"
-        _put_data(part, os.path.join(table_path, rel))
-        new_files.append(
-            (rel, {phys(c): v for c, v in zip(part_cols, ptuples[pid])})
-        )
-    shutil.rmtree(tmp)
+    new_files = _publish_parts(
+        table_path, tmp, single, version, tok, "compact",
+        _pv_by_pid(ptuples, part_cols, phys),
+    )
     if not new_files:
         return None
-    # ONE grouped stats job over ALL compacted output (merge-key +
-    # leading columns, same shape the merge path records) — NOT a
-    # per-file aggregate loop; and full per-column stats mean a later
-    # merge/delete can still prune (and never mis-prunes) on ANY
-    # recorded column, the ADVICE-r4 post-OPTIMIZE correctness trap
-    by_name = (
-        _collect_file_stats(
-            spark, table_path, [r for r, _ in new_files],
-            phys(stat_col),
-            _phys_schema(data_schema, pfields) if mapped else data_schema,
-            lead_cols=[phys(c) for c in zorder_by or []],
-        )
-        if stat_col is not None
-        else {}
+    # ONE stats pass over ALL compacted output (merge-key + leading
+    # columns, same shape the merge path records) — full per-column
+    # stats mean a later merge/delete can still prune (and never
+    # mis-prunes) on ANY recorded column, the ADVICE-r4 post-OPTIMIZE
+    # correctness trap
+    actions += _add_actions(
+        spark, table_path, state, version, new_files, data_schema,
+        key_col=stat_col, data_change=False, lead_cols=zorder_by,
     )
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if stat_col is not None and st is None:
-            os.remove(full)  # empty part: not worth an add action
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": False,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, default=str)
-        if rt is not None and st is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
     _commit(
         _log_dir(table_path), version, actions,
         operation="OPTIMIZE",
@@ -1629,6 +1762,122 @@ def compact_delta(
             if zorder_by
             else None
         ),
+    )
+    return version
+
+
+def write_delta_commit(
+    df: DataFrame,
+    table_path: str,
+    partition_by: list[str] | None = None,
+    remove_paths: list[str] | None = None,
+) -> int:
+    """APPEND — the DELTA sink's default mode: one ``WRITE`` commit of
+    ``df``'s rows as new data files plus explicit remove tombstones for
+    ``remove_paths``; the first commit also creates the table
+    (``partition_by`` sets its partition columns). Returns the
+    committed version.
+
+    An append to an existing table honours its writer features:
+    generated columns are computed and checked, identity columns
+    assigned (the advanced watermark re-states metaData), CHECK
+    constraints gate the rows, the table's own partition columns
+    decide the layout, ``delta.appendOnly`` refuses the removes,
+    column-mapped tables get physical parquet names, and row-tracking
+    tables reserve ``baseRowId``s. One write lays down one file per
+    partition value, and every add carries stats."""
+    from optimus_any2any_spark.sources.delta import (
+        apply_generated_columns,
+        apply_identity_columns,
+        check_delta_constraints,
+    )
+
+    spark = df.sparkSession
+    state = _open_state(spark, table_path)
+    version = state["version"] + 1
+    part_cols = list(partition_by or [])
+    if state["meta"] is None:
+        actions = _create_actions(table_path, df.schema, part_cols)
+    else:
+        df = apply_generated_columns(state["meta"], df, "append")
+        df, id_meta = apply_identity_columns(state["meta"], df, "append")
+        check_delta_constraints(state["meta"], df, "append")
+        # the layout is the TABLE's, not the caller's: adds without the
+        # right partitionValues would break pruning for every reader
+        table_parts = list(state["meta"].get("partitionColumns") or [])
+        if partition_by and part_cols != table_parts:
+            raise ValueError(
+                f"delta append: partition_by {partition_by} != "
+                f"the table's partition columns {table_parts}"
+            )
+        part_cols = table_parts
+        if remove_paths:
+            _check_append_only(state["meta"], "append")
+        actions = []
+        if id_meta is not None:
+            state = {**state, "meta": id_meta}
+            actions.append({"metaData": id_meta})
+    phys, mapped, pfields = _phys_of(state["meta"])
+    data_schema = T.StructType(
+        [f for f in df.schema.fields if f.name not in part_cols]
+    )
+    data_cols = data_schema.fieldNames()
+    if mapped and not set(df.columns) <= set(pfields):
+        raise ValueError(
+            "delta append: columns "
+            f"{sorted(set(df.columns) - set(pfields))} are not in the "
+            "column-mapped table's schema"
+        )
+    ptuples = (
+        sorted(
+            {tuple(r) for r in df.select(*part_cols).distinct().collect()},
+            key=str,
+        )
+        if part_cols
+        else [()]
+    )
+    new_files: list[tuple[str, dict]] = []
+    if ptuples:
+        single = len(ptuples) == 1
+        body = with_pid(
+            df,
+            None if single else pid_table(spark, df, part_cols, ptuples),
+            part_cols, data_cols,
+        )
+        if mapped:
+            body = _to_phys(body, data_cols, pfields, keep=("__pid",))
+        # one task writes every file: one per partition value
+        body = body.coalesce(1)
+        tok = uuid.uuid4().hex  # writer-unique staged and published names
+        tmp = os.path.join(table_path, f"_tmp-append-v{version}-{tok}")
+        if single:
+            body.drop("__pid").write.mode("overwrite").parquet(tmp)
+        else:
+            body.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
+        new_files = _publish_parts(
+            table_path, tmp, single, version, tok, "append",
+            _pv_by_pid(
+                [
+                    tuple(None if v is None else str(v) for v in pt)
+                    for pt in ptuples
+                ],
+                part_cols, phys,
+            ),
+        )
+    actions += _add_actions(
+        spark, table_path, state, version, new_files, data_schema
+    )
+    actions += [
+        {
+            "remove": _remove_action(
+                rp, state["live"].get(rp) or {}, data_change=True
+            )
+        }
+        for rp in remove_paths or []
+    ]
+    _commit(
+        _log_dir(table_path), version, actions,
+        operation="WRITE", operation_params={"mode": "Append"},
     )
     return version
 
@@ -1704,10 +1953,7 @@ def merge_delta_batch(
     clauses = (when_matched, when_not_matched, when_not_matched_by_source)
     conditional = conditional_merge(key_col, *clauses)
 
-    exists = os.path.isdir(_log_dir(table_path))
-    state = replay_log(spark, table_path) if exists else {
-        "meta": None, "live": {}, "txns": {}, "version": -1,
-    }
+    state = _open_state(spark, table_path)
     phys, mapped, pfields = _phys_of(state["meta"])
     rt = _row_tracking_of(state["meta"])
     version = state["version"] + 1
@@ -2072,7 +2318,6 @@ def merge_delta_batch(
             .localCheckpoint(eager=False)
         )
 
-    new_adds: list[dict] = []  # (rel, partitionValues) pending stats
     tok = uuid.uuid4().hex  # writer-unique staged and published names
     tmp = os.path.join(table_path, f"_tmp-merge-v{version}-{tok}")
     if rt is not None:
@@ -2096,13 +2341,37 @@ def merge_delta_batch(
         merged, write_key, n_total + total_hit_rows, target_rows_per_file,
         tmp, single,
     )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-merge.parquet"
-        _put_data(part, os.path.join(table_path, rel))
-        new_adds.append({"path": rel, "partitionValues": pv_of_pid[pid]})
-    shutil.rmtree(tmp)
+    new_files = _publish_parts(
+        table_path, tmp, single, version, tok, "merge", pv_of_pid
+    )
 
-    cdc_rel: list[str] = []
+    actions: list[dict] = []
+    if version == 0:
+        actions += _create_actions(table_path, latest.schema, part_cols)
+    elif evolved or meta_restate:
+        # schema evolution / identity-watermark advance: this commit
+        # re-states metaData; replay picks the LAST metaData, so older
+        # versions time-travel with their original schema.
+        # state["meta"] carries the correct schemaString in every
+        # branch (minted columnMapping metadata on mapped tables,
+        # old-field JSON preserved verbatim otherwise — a Spark-schema
+        # rebuild would DROP field metadata like generation
+        # expressions and identity watermarks).
+        actions.append({"metaData": dict(state["meta"])})
+    if batch_id is not None:
+        actions.append({"txn": {"appId": app_id, "version": batch_id}})
+    actions += _add_actions(
+        spark, table_path, state, version, new_files, data_schema,
+        key_col=key_col,
+    )
+    for path in hit_paths:
+        actions.append(
+            {
+                "remove": _remove_action(
+                    path, state["live"][path], data_change=True
+                )
+            }
+        )
     if change_data:
         if cond_changes is not None:
             # conditional clauses: the CDF row set came out of the
@@ -2147,109 +2416,8 @@ def merge_delta_batch(
         # re-attach the typed partition columns from the pid lookup
         if pid_df_all is not None:
             changes = changes.join(F.broadcast(pid_df_all), "__pid")
-        changes_all = changes.select(*latest.columns, "_change_type")
-        if mapped:  # cdc parquet carries physical names, like data
-            changes_all = _to_phys(
-                changes_all, list(latest.columns), pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(
-            os.path.join(table_path, "_change_data"), exist_ok=True
-        )
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
-
-    # stats-scan ONLY the new files' key column (footer-cheap read)
-    new_rel = [a["path"] for a in new_adds]
-    by_name = {}
-    if new_rel:
-        by_name = _collect_file_stats(
-            spark, table_path, new_rel, phys(key_col),
-            _phys_schema(data_schema, pfields) if mapped else data_schema,
-        )
-
-    actions: list[dict] = []
-    if version == 0:
-        actions.append(
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-        )
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_path)),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": latest.schema.json(),
-                    "partitionColumns": part_cols,
-                    "configuration": {},
-                }
-            }
-        )
-    elif evolved or meta_restate:
-        # schema evolution / identity-watermark advance: this commit
-        # re-states metaData; replay picks the LAST metaData, so older
-        # versions time-travel with their original schema.
-        # state["meta"] carries the correct schemaString in every
-        # branch (minted columnMapping metadata on mapped tables,
-        # old-field JSON preserved verbatim otherwise — a Spark-schema
-        # rebuild would DROP field metadata like generation
-        # expressions and identity watermarks).
-        actions.append({"metaData": dict(state["meta"])})
-    if batch_id is not None:
-        actions.append({"txn": {"appId": app_id, "version": batch_id}})
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for pending in new_adds:
-        rel = pending["path"]
-        r = by_name.get(rel)
-        if r is None:  # empty part file: not worth an add action
-            os.remove(os.path.join(table_path, rel))
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pending["partitionValues"],
-            "size": os.path.getsize(os.path.join(table_path, rel)),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(r, default=str),
-        }
-        if rt is not None:
-            # fresh-id reservation: each add covers record_count ids
-            # from the watermark (rows with materialized ids leave
-            # theirs unused — the spec only needs uniqueness)
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(r["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
-    for path in hit_paths:
-        actions.append(
-            {
-                "remove": _remove_action(
-                    path, state["live"][path], data_change=True
-                )
-            }
-        )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        if os.path.getsize(full) == 0:
-            os.remove(full)
-            continue
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
+        actions += _cdc_actions(
+            table_path, state, version, tok, changes, list(latest.columns)
         )
     # delta-spark records the clause predicates in commitInfo's
     # operationParameters the same way (an empty not-matched list too)
@@ -2535,39 +2703,23 @@ def _dml_where(
     tok = uuid.uuid4().hex  # writer-unique staged and published names
     tmp = os.path.join(table_path, f"_tmp-dml-v{version}-{tok}")
     op = "UPDATE" if set_exprs else "DELETE"
-    tag = op.lower()
-    new_files: list[tuple[str, dict]] = []
-    file_seq = 0
     if single:
         body.write.mode("overwrite").parquet(tmp)
-        pv = {
-            phys(c): v for c, v in zip(part_cols, ptuples[0])
-        }
-        for part in sorted(
-            _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        ):
-            rel = f"part-{version:05d}-{file_seq:04d}-{tok}-{tag}.parquet"
-            file_seq += 1
-            _put_data(part, os.path.join(table_path, rel))
-            new_files.append((rel, pv))
     else:
         body.write.partitionBy("__pid").mode("overwrite").parquet(tmp)
-        for pdir in sorted(_glob.glob(os.path.join(tmp, "__pid=*"))):
-            pid = int(os.path.basename(pdir).split("=", 1)[1])
-            pv = {
-                phys(c): v
-                for c, v in zip(part_cols, ptuples[pid])
-            }
-            for part in sorted(
-                _glob.glob(os.path.join(pdir, "part-*.parquet"))
-            ):
-                rel = f"part-{version:05d}-{file_seq:04d}-{tok}-{tag}.parquet"
-                file_seq += 1
-                _put_data(part, os.path.join(table_path, rel))
-                new_files.append((rel, pv))
-    shutil.rmtree(tmp)
-
-    cdc_rel: list[str] = []
+    new_files = _publish_parts(
+        table_path, tmp, single, version, tok, op.lower(),
+        _pv_by_pid(ptuples, part_cols, phys),
+    )
+    # a part whose every row matched a DELETE is rowless: no add
+    actions = _add_actions(
+        spark, table_path, state, version, new_files, data_schema,
+        key_col=data_cols[0],
+    )
+    for p in touched:
+        actions.append(
+            {"remove": _remove_action(p, live[p], data_change=True)}
+        )
     if change_data and pre is not None:
         if set_exprs is None:
             changes = pre.drop("__bn").withColumn(
@@ -2591,73 +2743,9 @@ def _dml_where(
                 *[F.col(c) for c in part_cols],
             ).withColumn("_change_type", F.lit("update_postimage"))
             changes = pre_rows.unionByName(post_rows)
-        changes_all = changes.select(
-            *[f.name for f in schema.fields], "_change_type"
-        )
-        if mapped:
-            changes_all = _to_phys(
-                changes_all, [f.name for f in schema.fields], pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(
-            os.path.join(table_path, "_change_data"), exist_ok=True
-        )
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
-
-    by_name = _collect_file_stats(
-        spark, table_path, [r for r, _ in new_files],
-        phys(data_cols[0]),
-        _phys_schema(data_schema, pfields) if mapped else data_schema,
-    ) if new_files else {}
-    actions: list[dict] = []
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if st is None:  # every row of this part matched a DELETE
-            os.remove(full)
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(st, default=str),
-        }
-        if rt is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
-    for p in touched:
-        actions.append(
-            {"remove": _remove_action(p, live[p], data_change=True)}
-        )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        if os.path.getsize(full) == 0:
-            os.remove(full)
-            continue
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
+        actions += _cdc_actions(
+            table_path, state, version, tok, changes,
+            [f.name for f in schema.fields],
         )
     _commit(
         _log_dir(table_path), version, actions,
@@ -3207,7 +3295,6 @@ def purge_deletion_vectors(
     n_files = max(1, -(-total_rows // target_rows_per_file))
     tok = uuid.uuid4().hex  # writer-unique staged and published names
     tmp = os.path.join(table_path, f"_tmp-purge-v{version}-{tok}")
-    new_files: list[tuple[str, dict]] = []
     data_cols = [f.name for f in data_schema.fields]
     if single:
         out_df = (
@@ -3221,16 +3308,7 @@ def purge_deletion_vectors(
                 keep=rt if rt is not None else (),
             )
         out_df.write.mode("overwrite").parquet(tmp)
-        pv_of_pid = {
-            0: next(iter(dv_adds.values())).get("partitionValues") or {}
-        }
     else:
-        pv_of_pid = {
-            pid_of[pt]: {
-                phys(c): v for c, v in zip(part_cols, pt)
-            }
-            for pt in ptuples
-        }
         range_cols = [F.col("__pid")] + (
             [F.col(stat_col)] if stat_col is not None else []
         )
@@ -3245,45 +3323,15 @@ def purge_deletion_vectors(
             .mode("overwrite")
             .parquet(tmp)
         )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-purge.parquet"
-        _put_data(part, os.path.join(table_path, rel))
-        new_files.append((rel, pv_of_pid[pid]))
-    shutil.rmtree(tmp)
-
-    actions: list[dict] = []
-    by_name = (
-        _collect_file_stats(
-            spark, table_path, [r for r, _ in new_files],
-            phys(stat_col),
-            _phys_schema(data_schema, pfields) if mapped else data_schema,
-        )
-        if (stat_col is not None and new_files)
-        else {}
+    new_files = _publish_parts(
+        table_path, tmp, single, version, tok, "purge",
+        _pv_by_pid(ptuples, part_cols, phys),
     )
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for rel, pv in new_files:
-        full = os.path.join(table_path, rel)
-        st = by_name.get(rel)
-        if stat_col is not None and st is None:
-            os.remove(full)  # fully-deleted content: no replacement
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": os.path.getsize(full),
-            "modificationTime": 0,
-            "dataChange": False,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, default=str)
-            if rt is not None:
-                add["baseRowId"] = rt_base
-                add["defaultRowCommitVersion"] = version
-                rt_base += int(st["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
+    # fully-deleted content is rowless: no replacement
+    actions = _add_actions(
+        spark, table_path, state, version, new_files, data_schema,
+        key_col=stat_col, data_change=False,
+    )
     for p in sorted(dv_adds):
         actions.append(
             {"remove": _remove_action(p, dv_adds[p], data_change=False)}
@@ -3513,7 +3561,6 @@ def _delete_via_dv(
             }
             actions.append({"add": add})
 
-        cdc_rel: list[str] = []
         if change_data:
             deleted = matched.drop("__pos")
             if part_cols:
@@ -3540,44 +3587,10 @@ def _delete_via_dv(
                     ],
                 )
                 deleted = deleted.join(F.broadcast(pvdf), "__bn")
-            changes_all = deleted.withColumn(
-                "_change_type", F.lit("delete")
-            ).select(*schema.fieldNames(), "_change_type")
-            if mapped:  # cdc parquet carries physical names
-                changes_all = _to_phys(
-                    changes_all, list(schema.fieldNames()), pfields,
-                    keep=("_change_type",),
-                )
-            cdc_tmp = os.path.join(
-                table_path, f"_tmp-cdc-v{version}-{uid.hex}"
-            )
-            changes_all.write.mode("overwrite").parquet(cdc_tmp)
-            os.makedirs(
-                os.path.join(table_path, "_change_data"), exist_ok=True
-            )
-            for i, part in enumerate(
-                sorted(
-                    _glob.glob(os.path.join(cdc_tmp, "part-*.parquet"))
-                )
-            ):
-                rel = (
-                    f"_change_data/cdc-{version:05d}-{i:04d}-{uid.hex}"
-                    ".parquet"
-                )
-                _put_data(part, os.path.join(table_path, rel))
-                cdc_rel.append(rel)
-            shutil.rmtree(cdc_tmp)
-        for rel in cdc_rel:
-            full = os.path.join(table_path, rel)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": os.path.getsize(full),
-                        "dataChange": False,
-                    }
-                }
+            actions += _cdc_actions(
+                table_path, state, version, uid.hex,
+                deleted.withColumn("_change_type", F.lit("delete")),
+                schema.fieldNames(),
             )
         _commit(
             _log_dir(table_path), version, actions,
@@ -3742,8 +3755,6 @@ def delete_delta_keys(
             "__rt_id", rt[0]
         ).withColumnRenamed("__rt_cv", rt[1])
 
-    actions: list[dict] = []
-    new_adds: list[dict] = []
     tok = uuid.uuid4().hex  # writer-unique staged and published names
     tmp = os.path.join(table_path, f"_tmp-delete-v{version}-{tok}")
     write_key = key_col
@@ -3756,18 +3767,26 @@ def delete_delta_keys(
     write_merged(
         keep, write_key, hit_rows_total, target_rows_per_file, tmp, single
     )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"part-{version:05d}-{file_seq:04d}-{tok}-delete.parquet"
-        _put_data(part, os.path.join(table_path, rel))
-        new_adds.append({
-            "path": rel,
-            "partitionValues": {
-                phys(c): v for c, v in zip(part_cols, ptuples[pid])
-            },
-        })
-    shutil.rmtree(tmp)
-
-    cdc_rel: list[str] = []
+    new_files = _publish_parts(
+        table_path, tmp, single, version, tok, "delete",
+        _pv_by_pid(ptuples, part_cols, phys),
+    )
+    actions: list[dict] = []
+    if batch_id is not None:
+        actions.append({"txn": {"appId": app_id, "version": batch_id}})
+    # a part whose every source row matched is rowless: no add
+    actions += _add_actions(
+        spark, table_path, state, version, new_files, data_schema,
+        key_col=key_col,
+    )
+    for path in hit_paths:
+        actions.append(
+            {
+                "remove": _remove_action(
+                    path, state["live"][path], data_change=True
+                )
+            }
+        )
     if change_data:
         deleted = cur.join(nk, match, "left_semi").withColumn(
             "_change_type", F.lit("delete")
@@ -3793,73 +3812,8 @@ def delete_delta_keys(
                 ],
             )
             deleted = deleted.join(F.broadcast(pid_typed), "__pid")
-        changes_all = deleted.select(*schema.fieldNames(), "_change_type")
-        if mapped:  # cdc parquet carries physical names, like data
-            changes_all = _to_phys(
-                changes_all, list(schema.fieldNames()), pfields,
-                keep=("_change_type",),
-            )
-        cdc_tmp = os.path.join(table_path, f"_tmp-cdc-v{version}-{tok}")
-        changes_all.write.mode("overwrite").parquet(cdc_tmp)
-        os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(cdc_tmp, "part-*.parquet")))
-        ):
-            rel = f"_change_data/cdc-{version:05d}-{i:04d}-{tok}.parquet"
-            _put_data(part, os.path.join(table_path, rel))
-            cdc_rel.append(rel)
-        shutil.rmtree(cdc_tmp)
-
-    new_rel = [a["path"] for a in new_adds]
-    by_name = {}
-    if new_rel:
-        by_name = _collect_file_stats(
-            spark, table_path, new_rel, phys(key_col),
-            _phys_schema(data_schema, pfields) if mapped else data_schema,
-        )
-    if batch_id is not None:
-        actions.append({"txn": {"appId": app_id, "version": batch_id}})
-    rt_base = _rt_high_watermark(state) + 1 if rt is not None else None
-    for pending in new_adds:
-        rel = pending["path"]
-        r = by_name.get(rel)
-        if r is None:  # all rows of the source files matched: no add
-            os.remove(os.path.join(table_path, rel))
-            continue
-        add = {
-            "path": rel,
-            "partitionValues": pending["partitionValues"],
-            "size": os.path.getsize(os.path.join(table_path, rel)),
-            "modificationTime": 0,
-            "dataChange": True,
-            "stats": json.dumps(r, default=str),
-        }
-        if rt is not None:
-            add["baseRowId"] = rt_base
-            add["defaultRowCommitVersion"] = version
-            rt_base += int(r["numRecords"])
-        actions.append({"add": add})
-    if rt is not None:
-        actions.append(_rt_domain_action(rt_base - 1))
-    for path in hit_paths:
-        actions.append(
-            {
-                "remove": _remove_action(
-                    path, state["live"][path], data_change=True
-                )
-            }
-        )
-    for rel in cdc_rel:
-        full = os.path.join(table_path, rel)
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(full),
-                    "dataChange": False,
-                }
-            }
+        actions += _cdc_actions(
+            table_path, state, version, tok, deleted, schema.fieldNames()
         )
     _commit(
         _log_dir(table_path), version, actions,

@@ -379,16 +379,6 @@ def _entry_to_prune_shape(e: dict, fid: int, ice_t: str) -> dict:
     }
 
 
-def _stamp_parent_snapshot(new_snap: dict, meta: dict) -> None:
-    """Spec: every snapshot records its ``parent-snapshot-id``. The
-    pointer is what lets readers window history by ANCESTRY
-    (multi-branch WAP — iceberg_main_chain) instead of list position;
-    call with the PRE-commit metadata, before the main ref advances."""
-    cur = meta.get("current-snapshot-id")
-    if cur is not None and cur != -1:
-        new_snap["parent-snapshot-id"] = cur
-
-
 def _eff_seq(e: dict, m: dict) -> int:
     """A manifest entry's data-sequence number under v2 inheritance:
     the entry's own number when present, else its manifest-list row
@@ -1169,7 +1159,6 @@ def merge_iceberg_batch(
         "manifest-list": ml_rel,
         "summary": summary,
     }
-    _stamp_parent_snapshot(new_snap, meta)
     if fmt >= 2:
         new_snap["sequence-number"] = seq
         meta["last-sequence-number"] = seq
@@ -1372,7 +1361,6 @@ def delete_iceberg_keys(
         "manifest-list": ml_rel,
         "summary": summary,
     }
-    _stamp_parent_snapshot(eq_snap, meta)
     if meta.get("next-row-id") is not None:
         # row-lineage tables: deletes assign no rows
         eq_snap["first-row-id"] = int(meta["next-row-id"])
@@ -1800,7 +1788,6 @@ def _commit_delete_manifest(
         "manifest-list": ml_rel,
         "summary": summary,
     }
-    _stamp_parent_snapshot(new_snap, meta)
     if meta.get("next-row-id") is not None:
         # row-lineage tables: every snapshot stamps its first-row-id;
         # pure deletes assign no rows (first = next, unchanged), the
@@ -2754,7 +2741,6 @@ def compact_iceberg(
             else {"operation": "replace"}
         ),
     }
-    _stamp_parent_snapshot(new_snap, meta)
     if fmt >= 2:
         new_snap["sequence-number"] = seq
         meta["last-sequence-number"] = seq
@@ -3487,10 +3473,6 @@ def rollback_iceberg(
             "rolled-back-to": str(snapshot_id),
         },
     }
-    # omit the key entirely for a None/-1 head: an explicit null
-    # parent would demote a heuristic-governed table to list-order
-    # history (_chain_authoritative)
-    _stamp_parent_snapshot(snap, meta)
     if ml is not None:
         snap["manifest-list"] = ml
     else:  # v1 inline-manifests form

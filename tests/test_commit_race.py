@@ -21,11 +21,12 @@ from optimus_any2any_spark.sources.iceberg import (
     read_iceberg,
     write_iceberg_commit,
 )
-from optimus_any2any_spark.streaming import merge_core
+from optimus_any2any_spark.streaming import delta_table, merge_core
 from optimus_any2any_spark.streaming.delta_table import (
     merge_delta_batch,
     set_data_store,
     set_log_store,
+    write_delta_commit,
 )
 
 
@@ -179,3 +180,52 @@ class TestDeltaSecondWriter:
         assert isinstance(errors["loser"], IOError)
         assert "lost the race" in str(errors["loser"])
         assert _snap(read_delta(spark, t)) == [(1, "winner"), (2, "base")]
+
+    def test_stale_append_loses_and_shares_no_file_name(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from optimus_any2any_spark.sources.delta import (
+            read_delta,
+            replay_log,
+        )
+
+        t = str(tmp_path / "tbl")
+
+        def data_files():
+            out = {}
+            for n in os.listdir(t):
+                if n.endswith(".parquet"):
+                    with open(os.path.join(t, n), "rb") as f:
+                        out[n] = f.read()
+            return out
+
+        write_delta_commit(_rows(spark, [(1, "base")]), t)
+        stale = replay_log(spark, t)  # writer B opens at v0
+        write_delta_commit(_rows(spark, [(2, "A")]), t)  # A: v1
+        a_files = data_files()
+        monkeypatch.setattr(
+            delta_table, "_open_state", lambda s, p: copy.deepcopy(stale)
+        )
+        with pytest.raises(IOError, match="lost the race"):
+            write_delta_commit(_rows(spark, [(3, "B")]), t)
+        monkeypatch.undo()
+        after = data_files()
+        # B published its file under its own name; nothing A committed
+        # was replaced
+        assert len(after) == len(a_files) + 1
+        assert {n: after[n] for n in a_files} == a_files
+        assert _snap(read_delta(spark, t)) == [(1, "base"), (2, "A")]
+        # the append commits through the injected log store
+        calls = []
+
+        def store_already_holds_it(tmp, final):
+            calls.append(os.path.basename(final))
+            return False
+
+        set_log_store(store_already_holds_it)
+        try:
+            with pytest.raises(IOError, match="lost the race"):
+                write_delta_commit(_rows(spark, [(4, "C")]), t)
+        finally:
+            set_log_store(None)
+        assert calls == ["%020d.json" % 2]

@@ -471,6 +471,7 @@ class TestColumnMappingWrites:
     def test_partitioned_merge_mapped(self, spark, tmp_path):
         from optimus_any2any_spark.streaming.delta_table import (
             merge_delta_batch,
+            write_delta_commit,
         )
 
         t = str(tmp_path / "tbl")
@@ -493,6 +494,24 @@ class TestColumnMappingWrites:
         for add in _last_adds(t):
             pv = add["partitionValues"]
             assert set(pv) == {PHYS_D}  # keyed physically
+        # an APPEND writes physical names too
+        write_delta_commit(
+            spark.createDataFrame(
+                [(4, "d", 2, "d2"), (5, "e", 2, "d3")],
+                "k long, v string, ts long, d string",
+            ),
+            t,
+        )
+        got = sorted(
+            (r.k, r.v, r.d) for r in read_delta(spark, t).collect()
+        )
+        assert got == [
+            (1, "A", "d1"), (2, "b", "d1"), (3, "c", "d2"),
+            (4, "d", "d2"), (5, "e", "d3"), (9, "z", "d2"),
+        ]
+        for add in _last_adds(t):
+            assert set(add["partitionValues"]) == {PHYS_D}
+            assert PHYS_K in json.loads(add["stats"])["minValues"]
 
 
 PHYS_M, PHYS_X = "col-m-77aa", "col-x-33bb"

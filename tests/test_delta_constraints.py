@@ -15,12 +15,12 @@ import pytest
 from optimus_any2any_spark.sources.delta import (
     read_delta,
     replay_log,
-    write_delta_commit,
 )
 from optimus_any2any_spark.streaming.delta_table import (
     drop_delta_constraint,
     merge_delta_batch,
     set_delta_constraint,
+    write_delta_commit,
 )
 
 

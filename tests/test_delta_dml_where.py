@@ -175,11 +175,9 @@ class TestUpdateWhere:
             )
 
     def test_refusals(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.delta import (
-            write_delta_commit,
-        )
         from optimus_any2any_spark.streaming.delta_table import (
             create_delta_table,
+            write_delta_commit,
         )
 
         t = str(tmp_path / "t")
@@ -230,11 +228,9 @@ class TestUpdateWhere:
         ]
 
     def test_append_only_refuses(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.delta import (
-            write_delta_commit,
-        )
         from optimus_any2any_spark.streaming.delta_table import (
             create_delta_table,
+            write_delta_commit,
         )
 
         t = str(tmp_path / "t")

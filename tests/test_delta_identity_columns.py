@@ -15,11 +15,11 @@ from optimus_any2any_spark.sources.delta import (
     identity_columns,
     read_delta,
     replay_log,
-    write_delta_commit,
 )
 from optimus_any2any_spark.streaming.delta_table import (
     create_delta_table,
     merge_delta_batch,
+    write_delta_commit,
 )
 
 

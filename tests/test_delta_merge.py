@@ -312,12 +312,34 @@ class TestStatsPrunedRead:
         assert len({os.path.basename(f) for f in df.inputFiles()}) == 1
 
     def test_range_read_keeps_statless_files(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.delta import write_delta_commit
+        import glob
+        import shutil
 
         t = str(tmp_path / "tbl")
-        # the minimal fixture writer emits adds WITHOUT stats
+        # an add WITHOUT stats, as foreign writers may commit one
         df = spark.createDataFrame([(1, "a"), (9, "z")], "k long, v string")
-        write_delta_commit(df, t)
+        df.coalesce(1).write.parquet(os.path.join(t, "_w"))
+        os.replace(
+            glob.glob(os.path.join(t, "_w", "part-*.parquet"))[0],
+            os.path.join(t, "f.parquet"),
+        )
+        shutil.rmtree(os.path.join(t, "_w"))
+        os.makedirs(os.path.join(t, "_delta_log"))
+        actions = [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {
+                "id": "statless", "format": {"provider": "parquet"},
+                "schemaString": df.schema.json(),
+                "partitionColumns": [], "configuration": {},
+            }},
+            {"add": {
+                "path": "f.parquet", "partitionValues": {},
+                "size": os.path.getsize(os.path.join(t, "f.parquet")),
+                "modificationTime": 0, "dataChange": True,
+            }},
+        ]
+        with open(os.path.join(t, "_delta_log", "%020d.json" % 0), "w") as f:
+            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
         got = read_delta(spark, t, key_range=("k", 0, 5)).collect()
         assert [(r.k, r.v) for r in got] == [(1, "a")]
 
@@ -1322,12 +1344,10 @@ class TestDescribeHistory:
         assert hist[0].engine_info is None
 
     def test_append_and_dv_delete_ops(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.delta import (
-            delta_history,
-            write_delta_commit,
-        )
+        from optimus_any2any_spark.sources.delta import delta_history
         from optimus_any2any_spark.streaming.delta_table import (
             delete_delta_keys,
+            write_delta_commit,
         )
 
         t = str(tmp_path / "tbl")

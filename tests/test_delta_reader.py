@@ -9,10 +9,8 @@ import os
 
 import pytest
 
-from optimus_any2any_spark.sources.delta import (
-    read_delta,
-    write_delta_commit,
-)
+from optimus_any2any_spark.sources.delta import read_delta
+from optimus_any2any_spark.streaming.delta_table import write_delta_commit
 
 
 def _rows(spark, vals):
@@ -26,6 +24,15 @@ class TestLogReplay:
         write_delta_commit(_rows(spark, [(3, "c")]), t)
         got = sorted(read_delta(spark, t).collect())
         assert [(r.id, r.v) for r in got] == [(1, "a"), (2, "b"), (3, "c")]
+        # appended adds carry stats, so a range read skips a file
+        with open(os.path.join(t, "_delta_log", "%020d.json" % 1)) as f:
+            (add,) = [json.loads(x)["add"] for x in f if '"add"' in x]
+        st = json.loads(add["stats"])
+        assert st["numRecords"] == 1
+        assert (st["minValues"]["id"], st["maxValues"]["id"]) == (3, 3)
+        df = read_delta(spark, t, key_range=("id", 3, 9))
+        assert [r.id for r in df.collect()] == [3]
+        assert len(df.inputFiles()) == 1
 
     def test_remove_tombstones_win(self, spark, tmp_path):
         t = str(tmp_path / "tbl")

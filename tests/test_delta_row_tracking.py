@@ -197,10 +197,17 @@ class TestRewritesPreserve:
 
 class TestDurability:
     def test_watermark_survives_checkpoint(self, spark, tmp_path):
+        from optimus_any2any_spark.streaming.delta_table import (
+            write_checkpoint_v2,
+            write_delta_commit,
+        )
+
         t = str(tmp_path / "t")
         _mk(spark, t)
         _write_checkpoint(spark, t, replay_log(spark, t)["version"])
         assert _hwm(spark, t) == 2  # replay from the checkpoint
+        write_checkpoint_v2(spark, t)
+        assert _hwm(spark, t) == 2  # ... and from a V2 checkpoint
         merge_delta_batch(
             spark,
             spark.createDataFrame(
@@ -210,6 +217,17 @@ class TestDurability:
         )
         got = dict((k, rid) for k, rid, _ in _rt(spark, t))
         assert got[7] >= 3  # fresh id above the checkpointed watermark
+        # an APPEND reserves fresh ids from the watermark too
+        write_delta_commit(
+            spark.createDataFrame(
+                [(8, "h", 2), (9, "i", 2)], "k long, v string, ts long"
+            ),
+            t,
+        )
+        live = replay_log(spark, t)["live"].values()
+        assert all(a.get("baseRowId") is not None for a in live)
+        ids = [rid for _, rid, _ in _rt(spark, t)]
+        assert len(set(ids)) == len(ids) == 6
 
     def test_cdf_composes_without_lineage_columns(
         self, spark, tmp_path

@@ -101,6 +101,36 @@ class TestFileSource:
         }
         assert got == expect  # no junk rows, no lost/duplicated lines
 
+    def test_skip_rows_replanned_splits_raise(
+        self, spark, tmpdata, monkeypatch
+    ):
+        """Line positions come from per-slice stats taken in ``read()``;
+        a later job that plans other splits finds no stats for its
+        slices and must fail rather than lose those rows to the
+        position filter. Without the pinning checkpoint, a lower
+        ``maxPartitionBytes`` between ``read()`` and the action is such
+        a job."""
+        p = tmpdata / "big.csv"
+        p.write_text(
+            "#junk\nid,name\n"
+            + "".join(f"{i},val{i}\n" for i in range(3000))
+        )
+        monkeypatch.setattr(
+            type(spark.range(0)), "localCheckpoint",
+            lambda self, eager=True: self,
+        )
+        old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        try:
+            df = FileSource(
+                spark, str(p), skip_rows=1, add_filename=False,
+                add_record_index=False,
+            ).read()
+            spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+            with pytest.raises(Exception, match="no line position"):
+                df.count()
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
     def test_tsv_delimiter(self, spark, tmpdata):
         p = tmpdata / "t.tsv"
         p.write_text("a\tb\n1\tx\n")

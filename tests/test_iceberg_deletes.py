@@ -66,6 +66,25 @@ class TestPositionalDeletes:
         # append AFTER the delete: higher sequence number, must live
         write_iceberg_commit(_rows(spark, [(1, "new")]).coalesce(1), t)
         assert _snap(spark, t) == [(1, "new")]
+        # the delete snapshot continues the parent chain, so the
+        # changelog walks every snapshot
+        from optimus_any2any_spark.sources.iceberg import (
+            iceberg_main_chain,
+            read_iceberg_changes,
+        )
+
+        meta = load_table_metadata(t)
+        assert [s.get("parent-snapshot-id") for s in meta["snapshots"]] == [
+            None, 1, 2
+        ]
+        assert [s["snapshot-id"] for s in iceberg_main_chain(meta)] == [
+            1, 2, 3
+        ]
+        got = sorted(
+            (r._change_type, r.v)
+            for r in read_iceberg_changes(spark, t).collect()
+        )
+        assert got == [("DELETE", "old"), ("INSERT", "new"), ("INSERT", "old")]
 
     def test_time_travel_before_delete_sees_rows(self, spark, tmp_path):
         t = str(tmp_path / "tbl")
