@@ -14,7 +14,7 @@ Reproduces the reference's converters as Column expressions:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -33,16 +33,6 @@ def value_to_csv_string(col: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, (T.ArrayType, T.MapType, T.StructType)):
         return F.when(col.isNull(), "").otherwise(F.to_json(col))
     return F.when(col.isNull(), "").otherwise(col.cast("string"))
-
-
-def stringify_for_csv(df: DataFrame) -> DataFrame:
-    """All columns converted to CSV-ready strings, names preserved."""
-    return df.select(
-        *[
-            value_to_csv_string(F.col(f.name), f.dataType).alias(f.name)
-            for f in df.schema.fields
-        ]
-    )
 
 
 def csv_index_columns(n: int) -> list[str]:

@@ -37,7 +37,6 @@ Decode support is split honestly by dependency weight:
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 from pyspark import cloudpickle
@@ -98,24 +97,6 @@ def encode_ppm(width: int, height: int, rgb: bytes) -> bytes:
     """Serialize raw RGB24 bytes as a binary PPM (P6) payload."""
     assert len(rgb) == width * height * 3
     return b"P6\n%d %d\n255\n" % (width, height) + rgb
-
-
-def _decode_image_stub(payload: bytes, fake: bool) -> tuple[int, int]:
-    """STUB: real image decode needs PIL/libvips (absent here).
-
-    With ``fake=True``, derives deterministic pseudo-dimensions from the
-    payload's md5 so the full pipeline (schema, batching, joins) can be
-    exercised end-to-end and checked against a SQL oracle.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "image decode requires an imaging library not present in this "
-            "environment; pass fake=True for deterministic pseudo-decode"
-        )
-    h = hashlib.md5(payload).hexdigest()
-    width = 64 + int(h[0], 16)
-    height = 64 + int(h[1], 16)
-    return width, height
 
 
 def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:

@@ -169,20 +169,6 @@ def ngram_rows(
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        avg_word_len(c).alias("avg_word_len"),
-        digit_ratio(c).alias("digit_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        quality_score(c).alias("quality_score"),
-        predicted_lang(c).alias("predicted_lang"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 def hashed_linear_score(
     col: Column,
     n_buckets: int = 512,

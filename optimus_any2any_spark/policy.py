@@ -93,16 +93,6 @@ def conn_check(address: str, timeout_s: float = 3.0) -> bool:
     return check_connectivity(host, port, timeout_s=timeout_s)
 
 
-def explain_validate(df) -> str:
-    """Dry-run plan validation ≙ EXPLAIN before execution: forces full
-    analysis/optimization without running a job."""
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-
-
 @dataclass
 class ActionMetrics:
     """Per-action metrics — the Spark-native replacement for the

@@ -1206,12 +1206,10 @@ def iceberg_changelog_read(spark, sf_dir):
 )
 def iceberg_row_lineage(spark, sf_dir):
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
-        read_iceberg,
-        write_iceberg_commit,
-    )
+    from optimus_any2any_spark.sources.iceberg import read_iceberg
     from optimus_any2any_spark.streaming.iceberg_table import (
         delete_iceberg_where,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_rowlin", sf_dir)
@@ -1299,10 +1297,10 @@ def iceberg_lineage_inherited(spark, sf_dir):
     from optimus_any2any_spark.sources.iceberg import (
         make_lineage_inherited,
         read_iceberg,
-        write_iceberg_commit,
     )
     from optimus_any2any_spark.streaming.iceberg_table import (
         delete_iceberg_where,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_lininh", sf_dir)
@@ -2270,6 +2268,8 @@ def iceberg_row_level_deletes(spark, sf_dir):
         _snapshot_entries,
         load_table_metadata,
         read_iceberg,
+    )
+    from optimus_any2any_spark.streaming.iceberg_table import (
         write_iceberg_commit,
         write_iceberg_delete_commit,
     )
@@ -3169,6 +3169,8 @@ def iceberg_default_values_read(spark, sf_dir):
     from optimus_any2any_spark.sources.iceberg import (
         add_iceberg_column_with_default,
         read_iceberg,
+    )
+    from optimus_any2any_spark.streaming.iceberg_table import (
         write_iceberg_commit,
     )
 
@@ -3248,11 +3250,11 @@ def iceberg_rewrite_manifests(spark, sf_dir):
         _localize,
         load_table_metadata,
         read_iceberg,
-        write_iceberg_commit,
     )
     from optimus_any2any_spark.streaming.iceberg_table import (
         delete_iceberg_where,
         rewrite_iceberg_manifests,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_rewritem", sf_dir)
@@ -3321,13 +3323,11 @@ def iceberg_orphan_sweep(spark, sf_dir):
     import time as _time
 
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
-        read_iceberg,
-        write_iceberg_commit,
-    )
+    from optimus_any2any_spark.sources.iceberg import read_iceberg
     from optimus_any2any_spark.streaming.iceberg_table import (
         delete_iceberg_where,
         remove_iceberg_orphan_files,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_orphans_tbl", sf_dir)
@@ -3417,13 +3417,11 @@ def iceberg_orphan_sweep(spark, sf_dir):
 )
 def iceberg_wap_multibranch(spark, sf_dir):
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
-        read_iceberg,
-        write_iceberg_commit,
-    )
+    from optimus_any2any_spark.sources.iceberg import read_iceberg
     from optimus_any2any_spark.streaming.iceberg_table import (
         drop_iceberg_ref,
         publish_iceberg_branch,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_wap_mb", sf_dir)
@@ -3507,12 +3505,10 @@ def iceberg_wap_multibranch(spark, sf_dir):
 )
 def iceberg_wap_publish(spark, sf_dir):
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
-        read_iceberg,
-        write_iceberg_commit,
-    )
+    from optimus_any2any_spark.sources.iceberg import read_iceberg
     from optimus_any2any_spark.streaming.iceberg_table import (
         publish_iceberg_branch,
+        write_iceberg_commit,
     )
 
     t = _fixture_dir("iceberg_wap", sf_dir)
@@ -3900,6 +3896,8 @@ def iceberg_v3_dv_read(spark, sf_dir):
         _snapshot_entries,
         load_table_metadata,
         read_iceberg,
+    )
+    from optimus_any2any_spark.streaming.iceberg_table import (
         write_iceberg_commit,
         write_iceberg_delete_commit,
     )
@@ -4174,8 +4172,8 @@ def iceberg_dv_delete_erasure(spark, sf_dir):
 )
 def iceberg_snapshot_read(spark, sf_dir):
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
-        read_iceberg,
+    from optimus_any2any_spark.sources.iceberg import read_iceberg
+    from optimus_any2any_spark.streaming.iceberg_table import (
         write_iceberg_commit,
     )
 
@@ -4437,7 +4435,7 @@ def delta_skipping_read(spark, sf_dir):
 )
 def iceberg_changes_stream(spark, sf_dir):
     from optimus_any2any_spark.queries.util import dsum
-    from optimus_any2any_spark.sources.iceberg import (
+    from optimus_any2any_spark.streaming.iceberg_table import (
         write_iceberg_commit,
     )
     from optimus_any2any_spark.sources.iceberg_stream import (

@@ -363,21 +363,21 @@ def delta_sink(df: DataFrame, cfg: Config):
 def iceberg_sink(df: DataFrame, cfg: Config):
     """Beyond-reference lakehouse sink: write records as Iceberg v1
     snapshots (open spec, stdlib Avro manifests).
-    ``ICEBERG__SINK_URI=file:///path``; ``ICEBERG__MODE`` is ``APPEND``,
-    ``DELETE`` (equality-delete merge-on-read erasure by
-    ``ICEBERG__MERGE_KEY``), ``DELETE_POS`` (positional-delete
-    merge-on-read erasure — matching rows' (file, position) pairs
-    committed as one sorted content=1 delete file), ``DELETE_WHERE``
-    / ``UPDATE_WHERE`` (predicate DML via ``ICEBERG__PREDICATE`` +
-    ``ICEBERG__SET``, merge-on-read),
-    (default; one snapshot of added files) or ``MERGE``
-    (snapshot-committing copy-on-write upsert; needs
-    ``ICEBERG__MERGE_KEY``/``ICEBERG__MERGE_TS``). Readable by
-    ``--from ICEBERG``, the ``iceberg_tail`` stream source, and v1
-    Iceberg clients."""
-    from optimus_any2any_spark.sources.iceberg import write_iceberg_commit
+    ``ICEBERG__SINK_URI=file:///path``; ``ICEBERG__MODE`` is ``APPEND``
+    (default; one snapshot of added files), ``DELETE`` (equality-delete
+    merge-on-read erasure by ``ICEBERG__MERGE_KEY``), ``DELETE_POS``
+    (positional-delete merge-on-read erasure — matching rows' (file,
+    position) pairs committed as one sorted content=1 delete file),
+    ``DELETE_WHERE`` / ``UPDATE_WHERE`` (predicate DML via
+    ``ICEBERG__PREDICATE`` + ``ICEBERG__SET``, merge-on-read) or
+    ``MERGE`` (snapshot-committing copy-on-write upsert; needs
+    ``ICEBERG__MERGE_KEY``/``ICEBERG__MERGE_TS``). Every mode publishes
+    through the one Iceberg file-publish tail in
+    ``streaming/iceberg_table.py``. Readable by ``--from ICEBERG``, the
+    ``iceberg_tail`` stream source, and v1 Iceberg clients."""
     from optimus_any2any_spark.streaming.iceberg_table import (
         merge_iceberg_batch,
+        write_iceberg_commit,
     )
 
     c = cfg.for_component("ICEBERG")

@@ -1235,11 +1235,6 @@ def _commit_actions(
     return out
 
 
-def _table_schema(spark: SparkSession, table_path: str) -> T.StructType:
-    meta, _ = _snapshot_actions(spark, table_path)
-    return T.StructType.fromJson(json.loads(meta["schemaString"]))
-
-
 def read_delta_appends(
     spark: SparkSession,
     table_path: str,

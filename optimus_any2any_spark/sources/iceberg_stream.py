@@ -36,20 +36,21 @@ from pyspark.sql import types as T
 # Avro codec and the iceberg reader helpers run inside that runner
 # during offset planning, so their MODULES are registered by value too
 # and referenced through module-level names (a runtime import-by-name
-# inside the runner would fail).
+# inside the runner would fail) — with every package module the reader
+# imports at module level (``merge_core``, ``localrel``).
 import sys as _sys
 
 from pyspark import cloudpickle as _cloudpickle
 
+from optimus_any2any_spark import localrel as _localrel
 from optimus_any2any_spark.formats import avrobin as _avro
 from optimus_any2any_spark.formats import puffin as _puffin
 from optimus_any2any_spark.formats import roaring as _roaring
 from optimus_any2any_spark.sources import iceberg as _ice
+from optimus_any2any_spark.streaming import merge_core as _merge_core
 
-_cloudpickle.register_pickle_by_value(_avro)
-_cloudpickle.register_pickle_by_value(_roaring)
-_cloudpickle.register_pickle_by_value(_puffin)
-_cloudpickle.register_pickle_by_value(_ice)
+for _m in (_avro, _roaring, _puffin, _localrel, _merge_core, _ice):
+    _cloudpickle.register_pickle_by_value(_m)
 _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
 

@@ -99,7 +99,8 @@ from optimus_any2any_spark.streaming.merge_core import (
     pid_space,
     pid_table,
     reduce_batch,
-    set_log_store,  # the public seam, re-exported for Delta callers
+    set_data_store,  # the public seams, re-exported for Delta callers
+    set_log_store,
     sorted_keys,
     touched,
     with_pid,
@@ -595,15 +596,6 @@ def _entry_from_add(path: str, add: dict, key_col: str) -> dict:
     }
 
 
-def _stats_json(rows: int, key_col: str, kmin, kmax, n_null: int) -> str:
-    st: dict = {"numRecords": rows, "minValues": {}, "maxValues": {},
-                "nullCount": {key_col: n_null}}
-    if kmin is not None:
-        st["minValues"][key_col] = kmin
-        st["maxValues"][key_col] = kmax
-    return json.dumps(st, default=str)
-
-
 _MAX_STAT_COLS = 8  # real Delta records the first 32; 8 keeps the
 #                     footer scan cheap while covering typical filters
 
@@ -699,34 +691,6 @@ def _collect_file_stats(
             st["nullCount"][c] = int(r[f"__nn_{c}"])
         out[r["__f"].rsplit("/", 1)[-1]] = st
     return out
-
-
-# The data-store seam: every DATA byte this module publishes under the
-# table root — parquet data files, deletion-vector ``.bin`` blobs, cdc
-# files — goes through ONE injectable primitive: "upload local ``src``
-# to ``dst``". Data names, and the staging dirs they are written to,
-# carry a random per-commit token, so they are writer-unique: two
-# writers racing for one version never share a name (nor does a
-# SHALLOW CLONE's writer with its source — readers key files by
-# basename in the DV anti-joins and pid-routing joins), and no
-# conditional PUT is needed. A file only becomes live when the log
-# commit referencing it wins, which is the log store's job
-# (merge_core.set_log_store). Object-store deployments swap in their
-# uploader via set_data_store(); the POSIX default is an atomic rename.
-def _posix_put_data(src: str, dst: str) -> None:
-    os.replace(src, dst)
-
-
-_put_data = _posix_put_data
-
-
-def set_data_store(put_data) -> None:
-    """Inject the data-file publisher (object-store upload or a test
-    double); ``put_data(src_local_path, dst_path)`` must make ``dst``
-    readable with ``src``'s bytes (and may remove ``src``). Pass
-    ``None`` to restore the POSIX rename."""
-    global _put_data
-    _put_data = put_data or _posix_put_data
 
 
 def _commit(
@@ -827,7 +791,7 @@ def _publish_parts(
     files = []
     for seq, (part, pid) in enumerate(local_parts(tmp, single)):
         rel = f"part-{version:05d}-{seq:04d}-{tok}-{tag}.parquet"
-        _put_data(part, os.path.join(table_path, rel))
+        merge_core._put_data(part, os.path.join(table_path, rel))
         files.append((rel, pv_of_pid[pid]))
     shutil.rmtree(tmp)
     return files
@@ -919,7 +883,7 @@ def _cdc_actions(
     for seq, (part, _pid) in enumerate(local_parts(tmp, True)):
         rel = f"_change_data/cdc-{version:05d}-{seq:04d}-{tok}.parquet"
         size = os.path.getsize(part)
-        _put_data(part, os.path.join(table_path, rel))
+        merge_core._put_data(part, os.path.join(table_path, rel))
         actions.append(
             {
                 "cdc": {
@@ -985,7 +949,9 @@ def _rows_to_parquet(
     )
     tmp = f"{dest}.{uuid.uuid4().hex}.d"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _put_data(_glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest)
+    merge_core._put_data(
+        _glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest
+    )
     shutil.rmtree(tmp)
 
 
@@ -997,7 +963,7 @@ def _publish_last_checkpoint(log: str, pointer: dict) -> None:
     tmp = f"{last}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
     with open(tmp, "w") as f:
         f.write(json.dumps(pointer))
-    _put_data(tmp, last)
+    merge_core._put_data(tmp, last)
 
 
 def _write_checkpoint(
@@ -3525,7 +3491,7 @@ def _delete_via_dv(
             table_path, f"_tmp-{bin_rel}.{os.getpid()}"
         )
         offsets = dv_file_write(bin_tmp, blobs)
-        _put_data(bin_tmp, os.path.join(table_path, bin_rel))
+        merge_core._put_data(bin_tmp, os.path.join(table_path, bin_rel))
         if os.path.exists(bin_tmp):  # a copying store leaves the src
             os.unlink(bin_tmp)
 

@@ -1,4 +1,6 @@
-"""File-level MERGE upsert committing Apache Iceberg snapshots.
+"""Every Apache Iceberg writer — APPEND (the ICEBERG sink's default
+mode), file-level MERGE upsert, predicate DML, row-level deletes and
+maintenance — committing Iceberg snapshots.
 
 The Iceberg adapter of the engine's copy-on-write MERGE core
 (``streaming/merge_core.py``, shared with the Delta log and the
@@ -32,6 +34,15 @@ idempotence                ``optimus-app-id``/``optimus-batch-id``
                            in the snapshot summary (Iceberg's
                            summary is the spec's home for writer
                            metadata)
+publish                    one tail for every writer that adds
+                           files (APPEND, MERGE, DML, deletes,
+                           compaction): parts → entries →
+                           manifests → commit. Staged parts get
+                           writer-unique ``data/`` names through
+                           the data seam shared with Delta
+                           (``merge_core.set_data_store``);
+                           entries carry footer stats, partition
+                           tuples and ``first_row_id``
 commit                     ``publish_iceberg_metadata``: new
                            ``v<N>.metadata.json`` put-if-absent
                            (the log store shared with Delta),
@@ -71,29 +82,26 @@ from optimus_any2any_spark.formats.footer_stats import (
     kind_of_iceberg_type,
     norm_float_zero,
 )
+from optimus_any2any_spark.sources import iceberg as _ice
 from optimus_any2any_spark.sources.iceberg import (
+    _apply_write_defaults,
+    _current_schema,
     _localize,
-    decode_bound,
-    encode_bound,
     _meta_dir,
-    _preserve_manifest_lineage as _ice_preserve_manifest_lineage,
     _refuse_unpublished_branches,
     _puffin_dv_ref,
+    _snapshot_entries,
+    _spark_type_to_iceberg,
     advance_main_ref,
     append_snapshot_log,
     commit_iceberg_snapshot,
+    decode_bound,
+    encode_bound,
     iceberg_spark_schema,
-    open_iceberg_table,
     publish_iceberg_metadata,
     snapshot_timestamp_ms,
-    write_iceberg_commit,
 )
-# One positional-delete file per commit is the normal erasure shape;
-# past this many deleted positions the writer range-splits into one
-# spec-sorted file per file_path range so no single task funnels a
-# mass delete (the spec allows many delete files per commit).
-_MAX_DELETE_FILE_ROWS = 5_000_000
-
+from optimus_any2any_spark.streaming import merge_core
 from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
     _affected,
@@ -111,6 +119,12 @@ from optimus_any2any_spark.streaming.merge_core import (
     with_pid,
     write_merged,
 )
+
+# One positional-delete file per commit is the normal erasure shape;
+# past this many deleted positions the writer range-splits into one
+# spec-sorted file per file_path range so no single task funnels a
+# mass delete (the spec allows many delete files per commit).
+_MAX_DELETE_FILE_ROWS = 5_000_000
 
 DEFAULT_APP_ID = "optimus-any2any-merge"
 
@@ -198,14 +212,67 @@ MANIFEST_FILE_SCHEMA = {
         # (a merge's new files must outrank earlier equality deletes)
         {"name": "sequence_number", "type": ["null", "long"],
          "default": None, "field-id": 515},
-        # v3 row lineage: preserved manifest-level assignment (see
-        # sources.iceberg._preserve_manifest_lineage)
+        # v3 row lineage: the starting _row_id for rows added by this
+        # manifest's ADDED files (null = inherit from the snapshot);
+        # the row counts drive the manifest-level inheritance walk
+        # (_preserve_manifest_lineage)
         {"name": "added_rows_count", "type": ["null", "long"],
          "default": None, "field-id": 512},
         {"name": "existing_rows_count", "type": ["null", "long"],
          "default": None, "field-id": 513},
         {"name": "first_row_id", "type": ["null", "long"],
          "default": None, "field-id": 520},
+    ],
+}
+
+
+# delete-manifest entries (v2): data_file carries content (1 =
+# position deletes, 2 = equality deletes) and equality_ids
+DELETE_ENTRY_SCHEMA = {
+    "type": "record",
+    "name": "manifest_entry",
+    "fields": [
+        {"name": "status", "type": "int", "field-id": 0},
+        {"name": "snapshot_id", "type": ["null", "long"],
+         "default": None, "field-id": 1},
+        {
+            "name": "data_file",
+            "field-id": 2,
+            "type": {
+                "type": "record",
+                "name": "r2",
+                "fields": [
+                    {"name": "content", "type": "int", "field-id": 134},
+                    {"name": "file_path", "type": "string",
+                     "field-id": 100},
+                    {"name": "file_format", "type": "string",
+                     "field-id": 101},
+                    {"name": "partition",
+                     "type": {"type": "record", "name": "r102",
+                              "fields": []},
+                     "field-id": 102},
+                    {"name": "record_count", "type": "long",
+                     "field-id": 103},
+                    {"name": "file_size_in_bytes", "type": "long",
+                     "field-id": 104},
+                    {"name": "equality_ids",
+                     "type": ["null",
+                              {"type": "array", "items": "int"}],
+                     "default": None, "field-id": 135},
+                    # v3 deletion-vector reference (null on v2
+                    # delete-parquet entries)
+                    {"name": "referenced_data_file",
+                     "type": ["null", "string"],
+                     "default": None, "field-id": 143},
+                    {"name": "content_offset",
+                     "type": ["null", "long"],
+                     "default": None, "field-id": 144},
+                    {"name": "content_size_in_bytes",
+                     "type": ["null", "long"],
+                     "default": None, "field-id": 145},
+                ],
+            },
+        },
     ],
 }
 
@@ -221,6 +288,16 @@ _AVRO_PRIM = {
     "float": "float",
     "boolean": "boolean",
 }
+
+
+# logical types an identity partition may also take (their Avro
+# physical forms: date → int days, timestamps → long micros)
+_IDENTITY_LOGICAL = ("date", "timestamp", "timestamptz")
+
+
+def _identity_type(t) -> bool:
+    """Whether an identity partition field may have source type ``t``."""
+    return isinstance(t, str) and (t in _AVRO_PRIM or t in _IDENTITY_LOGICAL)
 
 
 def manifest_entry_schema(part_fields: list[tuple[str, str]]) -> dict:
@@ -251,82 +328,458 @@ def manifest_entry_schema(part_fields: list[tuple[str, str]]) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# single-value serialization (spec Appendix D) for bounds
+# The publish tail every Iceberg writer that adds files ends in — one
+# place decides how an Iceberg file is named, published, measured and
+# listed:
+#   parts   — the files a write left in its staging dir get writer-unique
+#             ``data/{stem}-{seq:04d}-{tag}`` names and go through the
+#             data store (``merge_core.set_data_store``, shared with
+#             Delta);
+#   entries — per-file stats from the footers (one grouped aggregate as
+#             the fallback), rowless parts dropped, one ADDED entry per
+#             file with its partition tuple, bounds, null counts and
+#             ``first_row_id``;
+#   commit  — the new manifests, the manifest list over the base
+#             snapshot's manifests, the snapshot, and
+#             ``commit_iceberg_snapshot``.
 
-# encode_bound / decode_bound moved to sources/iceberg.py (the manifest
-# pruning that uses them must run inside the pure-python data-source
-# runner); re-exported here for the writers and every existing caller.
+
+def _commit_seq(meta: dict, version: int) -> int:
+    """The data-sequence number the commit at ``version`` stamps: one
+    past both the table's ``last-sequence-number`` and the previous
+    version."""
+    return max(int(meta.get("last-sequence-number", 0)), version - 1) + 1
 
 
-def _per_file_key_stats(
-    spark: SparkSession,
+def _staging(table_path: str, tag: str, stem: str) -> str:
+    """A writer-unique local staging dir under the table root."""
+    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
+    return os.path.join(table_path, f"_tmp-{tag}-{stem}")
+
+
+def _publish_parts(
     table_path: str,
-    new_rel: list[str],
-    key_col: str | None,
-    ice_t: str | None,
-) -> dict[str, dict]:
-    """Per-basename ``{"rows", "min_key", "max_key", "n_null"}`` over
-    just-written data files, for manifest ``record_count`` /
-    ``lower_bounds`` / ``upper_bounds`` / ``null_value_counts``.
+    tmp: str,
+    parts: list[tuple[str, int]],
+    stem: str,
+    tag: str,
+    part_names: list[str] = (),
+    ptuples: list[tuple] = ((),),
+) -> list[tuple[str, dict]]:
+    """Publish each staged ``(part, pid)`` as
+    ``data/{stem}-{seq:04d}-{tag}.{parquet|puffin}`` through the data
+    store, then remove the staging dir ``tmp``; returns ``(rel,
+    partition record)`` per part, the record built from
+    ``ptuples[pid]``."""
+    files = []
+    for seq, (part, pid) in enumerate(parts):
+        rel = f"data/{stem}-{seq:04d}-{tag}{os.path.splitext(part)[1]}"
+        merge_core._put_data(part, os.path.join(table_path, rel))
+        files.append((rel, dict(zip(part_names, ptuples[pid]))))
+    shutil.rmtree(tmp)
+    return files
 
-    Fast path reads parquet FOOTER statistics driver-side (zero data
-    I/O — re-scanning merge output for stats would double write-path
-    I/O at scale; exactness contract in ``formats/footer_stats.py``);
-    fallback is ONE grouped Spark aggregate over all files. Zero-row
-    files are absent from the result either way (callers delete them).
-    """
+
+def _file_stats(
+    spark: SparkSession,
+    paths: list[str],
+    stat_fields: list[tuple[str, int, str]],
+) -> dict[str, dict]:
+    """Per-basename ``{"rows", "cols": {name: (min, max, nulls)}}`` over
+    just-written files for the stat columns ``[(name, field id, iceberg
+    type)]``. Fast path reads parquet FOOTER statistics driver-side
+    (zero data I/O; exactness contract in ``formats/footer_stats.py``);
+    the fallback is ONE grouped Spark aggregate over all files.
+    Zero-row files are absent from the result either way."""
+    names = [n for n, _f, _t in stat_fields]
     ft = footer_file_stats(
-        [os.path.join(table_path, p) for p in new_rel],
-        [key_col] if key_col is not None else [],
-        {key_col: kind_of_iceberg_type(ice_t)} if key_col is not None else {},
+        paths,
+        names,
+        {n: kind_of_iceberg_type(t) for n, _f, t in stat_fields},
         session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
     )
     if ft is not None:
         return {
-            name: {
+            bn: {
                 "rows": s["rows"],
-                "min_key": s["min"].get(key_col),
-                "max_key": s["max"].get(key_col),
-                "n_null": s["nulls"].get(key_col, 0),
+                "cols": {
+                    n: (s["min"].get(n), s["max"].get(n),
+                        s["nulls"].get(n, 0))
+                    for n in names
+                },
             }
-            for name, s in ft.items()
+            for bn, s in ft.items()
         }
-    reader = spark.read.parquet(
-        *[os.path.join(table_path, p) for p in new_rel]
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for n in names:
+        aggs += [
+            F.min(n).alias(f"__mn_{n}"),
+            F.max(n).alias(f"__mx_{n}"),
+            F.sum(F.col(n).isNull().cast("long")).alias(f"__nn_{n}"),
+        ]
+    rows = (
+        spark.read.parquet(*paths)
+        .select(*names, F.input_file_name().alias("__f"))
+        .groupBy("__f")
+        .agg(*aggs)
+        .collect()
     )
-    if key_col is not None:
-        rows = (
-            reader.select(key_col)
-            .withColumn("__f", F.input_file_name())
-            .groupBy("__f")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min(key_col).alias("min_key"),
-                F.max(key_col).alias("max_key"),
-                F.sum(F.col(key_col).isNull().cast("long")).alias("n_null"),
-            )
-            .collect()
-        )
-    else:
-        rows = (
-            reader.withColumn("__f", F.input_file_name())
-            .groupBy("__f")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
     return {
         r["__f"].rsplit("/", 1)[-1]: {
             "rows": int(r["rows"]),
-            "min_key": norm_float_zero(r["min_key"])
-            if key_col is not None
-            else None,
-            "max_key": norm_float_zero(r["max_key"])
-            if key_col is not None
-            else None,
-            "n_null": int(r["n_null"]) if key_col is not None else 0,
+            "cols": {
+                n: (
+                    norm_float_zero(r[f"__mn_{n}"]),
+                    norm_float_zero(r[f"__mx_{n}"]),
+                    int(r[f"__nn_{n}"]),
+                )
+                for n in names
+            },
         }
         for r in rows
     }
+
+
+def _file_entries(
+    spark: SparkSession,
+    table_path: str,
+    files: list[tuple[str, dict]],
+    snapshot_id: int,
+    stat_fields: list[tuple[str, int, str]] = (),
+    row_id: int | None = None,
+    **data_file,
+) -> tuple[list[dict], int | None]:
+    """The ADDED manifest entries of the published ``files`` ``[(rel,
+    partition record)]`` and the next free row id: record counts,
+    bounds and null counts for ``stat_fields`` from :func:`_file_stats`,
+    rowless parts deleted (a registered file outside the table, listed
+    by absolute path, is left alone), and — from ``row_id`` on — a
+    running ``first_row_id``. ``data_file`` adds fixed fields (a delete
+    file's ``content``/``equality_ids``, a sorted file's
+    ``sort_order_id``)."""
+    stats = _file_stats(
+        spark, [os.path.join(table_path, r) for r, _ in files], stat_fields
+    ) if files else {}
+    entries = []
+    for rel, part in files:
+        full = os.path.join(table_path, rel)
+        st = stats.get(os.path.basename(rel))
+        if st is None:  # a rowless part: not worth an entry
+            if not os.path.isabs(rel):
+                os.remove(full)
+            continue
+        dfe = {
+            "file_path": rel,
+            "file_format": "PARQUET",
+            "partition": part,
+            "record_count": int(st["rows"]),
+            "file_size_in_bytes": os.path.getsize(full),
+            **data_file,
+        }
+        if stat_fields:
+            nvc, lb, ub = [], [], []
+            for n, fid, ice_t in stat_fields:
+                mn, mx, nn = st["cols"][n]
+                nvc.append({"key": fid, "value": struct.pack("<q", int(nn))})
+                for out, v in ((lb, mn), (ub, mx)):
+                    b = encode_bound(ice_t, v)
+                    if b is not None:
+                        out.append({"key": fid, "value": b})
+            dfe["null_value_counts"] = nvc
+            dfe["lower_bounds"] = lb or None
+            dfe["upper_bounds"] = ub or None
+        if row_id is not None:
+            dfe["first_row_id"] = row_id
+            row_id += int(st["rows"])
+        entries.append(
+            {"status": _ST_ADDED, "snapshot_id": snapshot_id,
+             "data_file": dfe}
+        )
+    return entries, row_id
+
+
+def _write_delete_parquet(
+    table_path: str, frame: DataFrame, stem: str, tag: str,
+    snapshot_id: int, sort_cols: tuple = (), n_rows: int = 0,
+    **data_file,
+) -> list[dict]:
+    """Write ``frame`` as delete parquet through the tail; returns the
+    manifest entries. With ``sort_cols`` the rows are sorted within
+    each file (sortWithinPartitions, not a global orderBy feeding
+    coalesce, makes the per-file sort a guarantee), in one file — or,
+    past _MAX_DELETE_FILE_ROWS of its ``n_rows``, range-split into one
+    file per range, since a mass delete funnelled through one
+    coalesce(1) task would bottleneck and the spec allows many delete
+    files per commit. Without, ``frame`` is written as shaped."""
+    if sort_cols:
+        n_files = max(1, -(-n_rows // _MAX_DELETE_FILE_ROWS))
+        frame = (
+            frame.coalesce(1)
+            if n_files == 1
+            else frame.repartitionByRange(n_files, *sort_cols)
+        ).sortWithinPartitions(*sort_cols)
+    tmp = _staging(table_path, tag, stem)
+    frame.write.mode("overwrite").parquet(tmp)
+    files = _publish_parts(
+        table_path, tmp, local_parts(tmp, True), stem, tag
+    )
+    return _file_entries(
+        frame.sparkSession, table_path, files, snapshot_id, **data_file
+    )[0]
+
+
+def _write_dv_file(
+    table_path: str, stem: str, snapshot_id: int, seq: int,
+    blobs: list[tuple[str, bytes, int]],
+) -> list[dict]:
+    """One Puffin sidecar holding a deletion-vector-v1 blob per
+    ``(referenced data file, blob, cardinality)``, published through
+    the tail; returns one manifest entry per blob."""
+    from optimus_any2any_spark.formats.puffin import DV_V1, write_puffin
+
+    tmp = _staging(table_path, "delete-dv", stem)
+    os.makedirs(tmp)
+    staged = os.path.join(tmp, "dv.puffin")
+    blob_meta = write_puffin(
+        staged,
+        [
+            (
+                blob,
+                {
+                    "type": DV_V1,
+                    "fields": [],
+                    "snapshot-id": snapshot_id,
+                    "sequence-number": seq,
+                    "properties": {
+                        "referenced-data-file": ref,
+                        "cardinality": str(int(card)),
+                    },
+                },
+            )
+            for ref, blob, card in blobs
+        ],
+    )
+    fsize = os.path.getsize(staged)
+    [(rel, _part)] = _publish_parts(
+        table_path, tmp, [(staged, 0)], stem, "delete-dv"
+    )
+    return [
+        {
+            "status": _ST_ADDED,
+            "snapshot_id": snapshot_id,
+            "data_file": {
+                "content": 1,  # POSITION_DELETES (vector form)
+                "file_path": rel,
+                "file_format": "PUFFIN",
+                "partition": {},
+                "record_count": int(bm["properties"]["cardinality"]),
+                "file_size_in_bytes": fsize,
+                "equality_ids": None,
+                "referenced_data_file": bm["properties"][
+                    "referenced-data-file"
+                ],
+                "content_offset": bm["offset"],
+                "content_size_in_bytes": bm["length"],
+            },
+        }
+        for bm in blob_meta
+    ]
+
+
+def _write_manifest(
+    table_path: str,
+    rel: str,
+    schema: dict,
+    entries: list[dict],
+    spec_id: int,
+    content: int,
+    snapshot_id: int,
+    seq: int | None,
+    **row,
+) -> dict:
+    """Write ``entries`` as the manifest ``rel``; returns its
+    manifest-list row (``row`` adds fields such as the row-lineage
+    counts)."""
+    full = os.path.join(table_path, rel)
+    write_container(full, schema, entries)
+    return {
+        "manifest_path": rel,
+        "manifest_length": os.path.getsize(full),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "added_snapshot_id": snapshot_id,
+        # v2: the data-sequence number the manifest's entries inherit
+        "sequence_number": seq,
+        **row,
+    }
+
+
+def _delete_manifest(
+    table_path: str, meta: dict, version: int, stem: str,
+    entries: list[dict],
+) -> dict:
+    """The delete manifest of a commit's delete-file ``entries``, under
+    the table's global (unpartitioned) delete spec."""
+    return _write_manifest(
+        table_path, f"metadata/{stem}-m0.avro", DELETE_ENTRY_SCHEMA,
+        entries, _global_delete_spec_id(meta), 1, version,
+        _commit_seq(meta, version),
+    )
+
+
+def _summary(operation: str, app_id: str, batch_id: int | None,
+             **extra) -> dict:
+    """A snapshot summary; a ``batch_id`` records the writer's
+    idempotence pair."""
+    summary = {"operation": operation, **extra}
+    if batch_id is not None:
+        summary["optimus-app-id"] = app_id
+        summary["optimus-batch-id"] = str(batch_id)
+    return summary
+
+
+def _applied(meta: dict, app_id: str, batch_id: int | None) -> bool:
+    """Whether ``app_id`` already committed ``batch_id`` or a later
+    batch: the idempotence pair in the summary of the newest snapshot
+    it wrote."""
+    if batch_id is None:
+        return False
+    for s in reversed(meta.get("snapshots") or []):
+        summ = s.get("summary") or {}
+        if summ.get("optimus-app-id") == app_id:
+            last = summ.get("optimus-batch-id")
+            return last is not None and batch_id <= int(last)
+    return False
+
+
+def _commit_files(
+    table_path: str,
+    version: int,
+    meta: dict,
+    stem: str,
+    added: list[dict],
+    summary: dict,
+    carried: list[dict] | None = None,
+    fmt_floor: int = 1,
+    first_row_id: int | None = None,
+    next_row_id: int | None = None,
+    branch: str | None = None,
+) -> int:
+    """Commit snapshot ``version`` of ``meta``: a manifest list of the
+    ``carried`` manifest-list rows (default: every manifest of the base
+    snapshot — the branch head for a WAP ``branch`` write, else the
+    main head) followed by the ``added`` ones, then the snapshot with
+    its parent, sequence number and row-lineage ids, through
+    ``commit_iceberg_snapshot``.
+
+    The format version floors at ``fmt_floor`` (row-level deletes need
+    2, deletion vectors and row lineage 3) and is never lowered; the
+    snapshot stamps ``sequence-number`` exactly when it is >= 2. On a
+    row-lineage table the snapshot's ``first-row-id`` is
+    ``first_row_id`` (default: ``next-row-id``) and ``next_row_id``
+    becomes the table's."""
+    _refuse_unpublished_branches(meta, allow=branch)
+    base = meta.get("current-snapshot-id")
+    ref = (meta.get("refs") or {}).get(branch) if branch else None
+    if ref is not None:
+        if (ref.get("type") or "branch") != "branch":
+            raise ValueError(
+                f"iceberg append: ref {branch!r} is a tag, not a branch"
+            )
+        base = ref.get("snapshot-id")
+    if base == -1:
+        base = None
+    if carried is None:
+        carried = []
+        if base is not None:
+            snap = next(
+                s for s in meta["snapshots"] if s["snapshot-id"] == base
+            )
+            _, carried = read_container(
+                _localize(table_path, snap["manifest-list"])
+            )
+    for r in carried:
+        r.setdefault("sequence_number", None)
+    _preserve_manifest_lineage(table_path, meta, carried, base_sid=base)
+    ml_rel = f"metadata/snap-{version}-1-{stem}.avro"
+    write_container(
+        os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA,
+        list(carried) + list(added),
+    )
+    meta = dict(meta)
+    fmt = max(fmt_floor, int(meta.get("format-version", 1)))
+    meta["format-version"] = fmt
+    snap = {
+        "snapshot-id": version,
+        "timestamp-ms": snapshot_timestamp_ms(meta),
+        "manifest-list": ml_rel,
+        "summary": summary,
+    }
+    if base is not None:
+        snap["parent-snapshot-id"] = base
+    if fmt >= 2:
+        snap["sequence-number"] = _commit_seq(meta, version)
+        meta["last-sequence-number"] = snap["sequence-number"]
+    if first_row_id is None and meta.get("next-row-id") is not None:
+        first_row_id = int(meta["next-row-id"])
+    if first_row_id is not None:
+        snap["first-row-id"] = first_row_id
+    if next_row_id is not None:
+        meta["next-row-id"] = next_row_id
+    return commit_iceberg_snapshot(
+        table_path, version, meta, snap, branch=branch
+    )
+
+
+def _preserve_manifest_lineage(
+    table_path: str,
+    prev_meta: dict,
+    prior_manifests: list[dict],
+    base_sid: int | None = None,
+) -> None:
+    """Spec v3 preservation rule (Row Lineage): a manifest row
+    re-emitted into a NEW manifest list must carry its ASSIGNED
+    ``first_row_id`` explicitly — inheritance is only defined under
+    the snapshot that ADDED the manifest, so a null cannot survive
+    into a later list without shifting every derived row id. Resolves
+    in place (walking the base snapshot's inheritance exactly like
+    ``_snapshot_entries``); a no-op on non-lineage tables."""
+    if prev_meta.get("next-row-id") is None:
+        return
+    sid = (
+        base_sid if base_sid is not None
+        else prev_meta.get("current-snapshot-id")
+    )
+    snap = next(
+        (
+            s
+            for s in prev_meta.get("snapshots") or []
+            if s["snapshot-id"] == sid
+        ),
+        None,
+    )
+    first = snap.get("first-row-id") if snap else None
+    running = int(first) if first is not None else None
+    for m in prior_manifests:
+        if int(m.get("content") or 0) != 0:
+            continue
+        if m.get("first_row_id") is not None or running is None:
+            continue
+        m["first_row_id"] = running
+        a = m.get("added_rows_count")
+        x = m.get("existing_rows_count")
+        if a is not None and x is not None:
+            running += int(a) + int(x)
+        else:
+            _, entries = read_container(
+                _localize(table_path, m["manifest_path"])
+            )
+            running += sum(
+                int(e["data_file"].get("record_count") or 0)
+                for e in entries
+                if int(e.get("status") or 0) != _ST_DELETED
+                and int(e["data_file"].get("content") or 0) == 0
+            )
 
 
 def _kvmap(pairs) -> dict[int, bytes]:
@@ -421,9 +874,7 @@ def _parse_pspec(
                 "beyond this writer"
             )
         if tr == "identity":
-            if t not in _AVRO_PRIM and t not in (
-                "date", "timestamp", "timestamptz"
-            ):
+            if not _identity_type(t):
                 raise NotImplementedError(
                     f"iceberg {verb}: partition source type {t!r} "
                     "is beyond the identity writer"
@@ -455,6 +906,508 @@ def _current_schema_fields(meta: dict) -> dict[int, dict]:
     else:
         cur = meta["schema"]
     return {int(f["id"]): f for f in cur["fields"]}
+
+
+def _hive_partition_values(
+    path: str, part_fields: list[tuple[str, str, str]]
+) -> dict[str, object]:
+    """Identity partition values of one hive-layout file, derived from
+    its ``src=value`` directory segments (Spark's ``add_files``
+    procedure does the same walk). ``__HIVE_DEFAULT_PARTITION__`` is
+    hive's null marker; values are percent-decoded (hive escapes
+    ``/``, ``=`` etc. in partition values) and parsed to the source
+    column's Iceberg type — unparseable values refuse rather than
+    registering a tuple that disagrees with the path."""
+    from urllib.parse import unquote
+
+    segs: dict[str, str] = {}
+    for seg in os.path.dirname(os.path.abspath(path)).split(os.sep):
+        if "=" in seg:
+            k, _, v = seg.partition("=")
+            segs[k] = unquote(v)
+    out: dict[str, object] = {}
+    for pname, src, t in part_fields:
+        if src not in segs:
+            raise ValueError(
+                f"iceberg add_files: file {path!r} has no "
+                f"'{src}=...' path segment for the table's identity "
+                "partition field"
+            )
+        raw = segs[src]
+        if raw == "__HIVE_DEFAULT_PARTITION__":
+            out[pname] = None
+            continue
+        try:
+            if t in ("int", "long"):
+                out[pname] = int(raw)
+            elif t in ("float", "double"):
+                out[pname] = float(raw)
+            elif t == "boolean":
+                if raw.lower() not in ("true", "false"):
+                    raise ValueError(raw)
+                out[pname] = raw.lower() == "true"
+            elif t == "date":
+                import datetime as _dt
+
+                out[pname] = (
+                    _dt.date.fromisoformat(raw)
+                    - _dt.date(1970, 1, 1)
+                ).days  # Avro physical form: int days-from-epoch
+            elif t in ("timestamp", "timestamptz"):
+                import datetime as _dt
+
+                # Spark hive layouts render timestamps as
+                # 'yyyy-MM-dd HH:mm:ss[.ffffff]' (tz-free wall
+                # clock; the UTC-pinned session makes timestamptz
+                # values UTC instants). Physical form: long micros.
+                dt = _dt.datetime.fromisoformat(raw)
+                if dt.tzinfo is not None:
+                    dt = dt.astimezone(_dt.timezone.utc).replace(
+                        tzinfo=None
+                    )
+                d = dt - _dt.datetime(1970, 1, 1)
+                out[pname] = (
+                    d.days * 86_400_000_000
+                    + d.seconds * 1_000_000
+                    + d.microseconds
+                )  # exact integer micros, no float round-trip
+            else:
+                out[pname] = raw
+        except ValueError:
+            raise ValueError(
+                f"iceberg add_files: cannot parse path value "
+                f"{src}={raw!r} as iceberg {t}"
+            ) from None
+    return out
+
+
+def write_iceberg_commit(
+    df: DataFrame,
+    table_path: str,
+    partition_by: list[str] | None = None,
+    row_lineage: bool = False,
+    branch: str | None = None,
+    add_files: list[str] | None = None,
+    add_partition_schema: list[str] | None = None,
+) -> int:
+    """APPEND — the ICEBERG sink's default mode: one snapshot of added
+    files through the publish tail (writer-unique names, the data
+    store, footer record counts, the put-if-absent commit); returns the
+    new metadata version. A new table is created from ``df``'s schema
+    in the v1 HadoopCatalog layout; an existing table's metadata is
+    carried forward as it is (identity, location, evolved schemas and
+    specs, refs, properties and every other key), with ``df`` checked
+    against the current schema by name and type — appends do not
+    evolve schemas, merges do. Columns with a v3 ``write-default``
+    that ``df`` omits are materialized. ``partition_by`` (empty first
+    commit only) declares the partition spec in the new table's
+    metadata — the bootstrap for ``merge_iceberg_batch``'s partitioned
+    tables, which write the actual partition-grouped files and
+    manifest partition tuples.
+
+    ``row_lineage=True`` (or appending to a table that already
+    carries ``next-row-id``) maintains v3 ROW LINEAGE: every added
+    data entry gets an explicit ``first_row_id`` (this snapshot's
+    ``first-row-id`` plus the running record count of the files
+    before it), the metadata's ``next-row-id`` advances by the total
+    added records, and the format version floors at 3. Row-id
+    assignment is pure driver bookkeeping over the record counts the
+    commit already collects — zero extra jobs.
+
+    ``branch="name"`` is the WRITE half of WAP (write-audit-publish,
+    Iceberg's spark.wap.branch): the snapshot appends on top of the
+    BRANCH head (created from the main head on first use), the
+    ``refs`` map advances the branch, and ``current-snapshot-id`` /
+    ``refs.main`` stay put — main readers see nothing until
+    ``publish_iceberg_branch`` fast-forwards.
+
+    ``add_files`` is the METADATA-ONLY registration path (Spark's
+    add_files procedure, :func:`sources.iceberg.add_iceberg_files`):
+    existing parquet files enter the table as absolute-path entries
+    with footer-read record counts — zero data movement, zero Spark
+    jobs. On a table whose default spec is identity-partitioned, or a
+    new one declared with ``add_partition_schema`` (``"name type"``
+    items), the partition values come from the files' hive
+    ``src=value`` path segments."""
+    from optimus_any2any_spark.sources.iceberg_transforms import (
+        avro_type_of_result,
+        parse_spec_item,
+        partition_field_name,
+    )
+
+    parsed_spec: list[tuple[str, str]] = []
+    if add_partition_schema and add_files is None:
+        raise ValueError(
+            "iceberg commit: add_partition_schema only applies to "
+            "add_files registration"
+        )
+    if partition_by:
+        if add_files is not None:
+            raise NotImplementedError(
+                "iceberg add_files: partition_by is the empty-df "
+                "bootstrap — declare hive partition columns with "
+                "add_partition_schema instead"
+            )
+        if not df.isEmpty():
+            raise NotImplementedError(
+                "iceberg fixture writer: partition_by is the empty-"
+                "table bootstrap only; data commits into a partitioned "
+                "table go through merge_iceberg_batch"
+            )
+        # items are bare columns (identity) or the DDL transform
+        # forms: days(ts), hours(ts), bucket(16, k), truncate(3, v)
+        parsed_spec = [parse_spec_item(s) for s in partition_by]
+        missing = [
+            src for _, src in parsed_spec if src not in df.columns
+        ]
+        if missing:
+            raise ValueError(
+                f"iceberg fixture writer: partition columns {missing} "
+                "not in the schema"
+            )
+    os.makedirs(_meta_dir(table_path), exist_ok=True)
+    prev_version, prev = _ice.open_iceberg_table(table_path)
+    if prev is not None and parsed_spec:
+        raise ValueError(
+            "iceberg append: partition_by declares a NEW table's spec — "
+            "evolve an existing table with set_iceberg_partition_spec"
+        )
+    if prev is not None and add_files is None:
+        # v3 write-default: fill columns the df omits BEFORE the data
+        # write, so the new files physically carry the value
+        df = _apply_write_defaults(df, prev)
+    version = prev_version + 1
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
+
+    # identity partition fields of a hive-layout registration:
+    # (partition name, source column, iceberg type)
+    add_part_fields: list[tuple[str, str, str]] = []
+    if add_files is not None and prev is not None:
+        if add_partition_schema:
+            raise ValueError(
+                "iceberg add_files: add_partition_schema is the "
+                "fresh-table bootstrap only — an existing table "
+                "already declares its spec"
+            )
+        dspec = next(
+            (
+                s
+                for s in prev.get("partition-specs") or []
+                if s.get("spec-id") == int(prev.get("default-spec-id", 0))
+            ),
+            None,
+        )
+        # partitioned registration: values derive from the files' hive
+        # path segments, so only IDENTITY fields (whose value IS the
+        # path value) are derivable
+        by_fid = {int(f["id"]): f for f in _current_schema(prev)["fields"]}
+        for pf in (dspec or {}).get("fields") or []:
+            tr = str(pf.get("transform") or "")
+            if tr != "identity":
+                raise NotImplementedError(
+                    "iceberg add_files: partition transform "
+                    f"{tr!r} cannot be derived from a hive path — "
+                    "identity specs only"
+                )
+            src = by_fid.get(int(pf["source-id"]))
+            if src is None or not _identity_type(src["type"]):
+                raise NotImplementedError(
+                    "iceberg add_files: partition source type "
+                    f"{(src or {}).get('type')!r} is beyond the "
+                    "identity registration"
+                )
+            add_part_fields.append(
+                (pf.get("name") or src["name"], src["name"], src["type"])
+            )
+    elif add_files is not None:
+        # fresh-table bootstrap of an identity-partitioned table from a
+        # hive layout: '"col type"' items, like
+        # convert_parquet_to_delta's partition schema
+        for item in add_partition_schema or []:
+            toks = item.strip().split()
+            if len(toks) != 2:
+                raise ValueError(
+                    "iceberg add_files: add_partition_schema "
+                    f"item {item!r} is not 'name type'"
+                )
+            nm, t = toks
+            if not _identity_type(t):
+                raise NotImplementedError(
+                    "iceberg add_files: partition type "
+                    f"{t!r} is beyond the identity registration "
+                    f"({sorted(_AVRO_PRIM) + list(_IDENTITY_LOGICAL)})"
+                )
+            add_part_fields.append((nm, nm, t))
+
+    # the table metadata this commit starts from. An EXISTING table's
+    # is carried forward whole; a df that does not match its current
+    # schema refuses. A partitioned registration's files carry the
+    # table schema MINUS the identity partition columns (hive layout:
+    # the value lives in the directory name)
+    psrcs = {src for _pn, src, _t in add_part_fields}
+    if prev is not None:
+        prev_fields = [
+            f for f in _current_schema(prev)["fields"]
+            if f["name"] not in psrcs
+        ]
+        prev_names = [f["name"] for f in prev_fields]
+        if prev_names != df.columns:
+            raise ValueError(
+                f"iceberg append: df columns {df.columns} != table "
+                f"schema {prev_names} — appends do not evolve "
+                "schemas (merge with merge_schema=True does)"
+            )
+        # Names matching is not enough: a type-drifted df would write
+        # parquet files that silently disagree with the (preserved)
+        # field types the readers trust.
+        drift = []
+        for f, pf in zip(df.schema.fields, prev_fields):
+            try:
+                got = _spark_type_to_iceberg(f.dataType)
+            except NotImplementedError:
+                continue  # nested type: name match is the best check
+            if got != pf["type"]:
+                drift.append((f.name, got, pf["type"]))
+        if drift:
+            raise ValueError(
+                "iceberg append: df column types drifted from the "
+                "table schema — "
+                + ", ".join(
+                    f"{n}: df={got!r} != table={want!r}"
+                    for n, got, want in drift
+                )
+                + " (appends do not evolve schemas)"
+            )
+        meta = dict(prev)
+    else:
+        clash = sorted(psrcs & set(df.columns))
+        if clash:
+            raise ValueError(
+                f"iceberg add_files: partition columns {clash} are also "
+                "present in the data files — a hive layout keeps them "
+                "in the path only"
+            )
+        # hive-layout bootstrap: the declared partition columns join
+        # the table schema and become spec 0 (they are real columns —
+        # their values just live in the manifests, not the files)
+        fields = [
+            {"id": i + 1, "name": n, "required": False, "type": t}
+            for i, (n, t) in enumerate(
+                [(f.name, _spark_type_to_iceberg(f.dataType))
+                 for f in df.schema.fields]
+                + [(src, t) for _pn, src, t in add_part_fields]
+            )
+        ]
+        parsed_spec += [
+            ("identity", src) for _pn, src, _t in add_part_fields
+        ]
+        schema0 = {"type": "struct", "schema-id": 0, "fields": fields}
+        meta = {
+            "format-version": 1,
+            "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, table_path)),
+            "location": table_path,
+            "last-column-id": len(fields),
+            "schema": schema0,
+            "schemas": [schema0],
+            "current-schema-id": 0,
+            "partition-spec": [],
+            "partition-specs": [
+                {
+                    "spec-id": 0,
+                    "fields": [
+                        {
+                            "name": partition_field_name(tr, src),
+                            "transform": tr,
+                            "source-id": next(
+                                f["id"] for f in fields if f["name"] == src
+                            ),
+                            "field-id": 1000 + i,
+                        }
+                        for i, (tr, src) in enumerate(parsed_spec)
+                    ],
+                }
+            ],
+            "default-spec-id": 0,
+            # spec-required sort-order metadata: order 0 = unsorted; a
+            # compaction with key_col appends a real order
+            "sort-orders": [{"order-id": 0, "fields": []}],
+            "default-sort-order-id": 0,
+            # tables CREATED here are marked parent-stamped at birth:
+            # every later snapshot records its parent (or is a genuine
+            # genesis, e.g. the first main commit after a branch-first
+            # bootstrap), so ancestry — never list order — is history
+            # (sources.iceberg._chain_authoritative)
+            "properties": {"optimus.parent-stamped": "true"},
+            "current-snapshot-id": -1,
+            "snapshots": [],
+        }
+
+    if add_files is None:
+        tmp = _staging(table_path, "append", stem)
+        df.write.mode("overwrite").parquet(tmp)
+        files = _publish_parts(
+            table_path, tmp, local_parts(tmp, True), stem, "append"
+        )
+    else:
+        # the collision guard spans the files ALREADY in the table too:
+        # stats/delete joins key files by basename, so a second
+        # add_files call bringing a same-named file from another
+        # directory would cross-apply deletions
+        seen_bn: set[str] = set()
+        if prev is not None:
+            seen_bn.update(
+                d["orig"].rsplit("/", 1)[-1]
+                for d in _snapshot_entries(table_path, prev)[0]
+            )
+        files = []
+        for f in add_files:
+            ap = os.path.abspath(f)
+            bn = os.path.basename(ap)
+            if bn in seen_bn:
+                raise NotImplementedError(
+                    "iceberg add_files: the basename "
+                    f"{bn!r} is already registered (or repeated in "
+                    "this call) — stats/delete joins key by basename"
+                )
+            seen_bn.add(bn)
+            files.append((
+                ap,
+                _hive_partition_values(ap, add_part_fields)
+                if add_part_fields else {},
+            ))
+
+    lineage = row_lineage or meta.get("next-row-id") is not None
+    snap_first_row = first_row_base = None
+    if lineage and prev is not None and prev.get("next-row-id") is None:
+        # v3 UPGRADE of a table that already holds rows: this snapshot
+        # assigns ids to EVERY existing row via the spec's inheritance
+        # walk (the prior manifests, still null, consume 0..E-1 in
+        # manifest-list order under this snapshot's first-row-id = 0),
+        # so the NEW files' explicit ids must start at E — starting
+        # them at 0 would collide with the inherited ids.
+        snap_first_row = 0
+        first_row_base = sum(
+            int(d.get("record_count") or 0)
+            for d in _snapshot_entries(table_path, prev)[0]
+        )
+    elif lineage:
+        snap_first_row = first_row_base = int(meta.get("next-row-id", 0))
+    entries, next_row_id = _file_entries(
+        df.sparkSession, table_path, files, version, row_id=first_row_base
+    )
+    # the manifest-level assignment, written explicitly so later
+    # manifest lists can re-emit this row verbatim
+    lineage_row = dict(
+        first_row_id=first_row_base,
+        added_rows_count=next_row_id - first_row_base,
+        existing_rows_count=0,
+    ) if lineage else {}
+    manifest = _write_manifest(
+        table_path, f"metadata/{stem}-m0.avro",
+        # logical types ride as their Avro physical form (date → int
+        # days, timestamps → long micros), as in the transform writers
+        manifest_entry_schema(
+            [(pn, avro_type_of_result(t)) for pn, _s, t in add_part_fields]
+        ),
+        entries,
+        # a partitioned registration's entries live under the table's
+        # default spec (readers key the constants map off this id)
+        int(meta.get("default-spec-id", 0)) if add_part_fields else 0,
+        0, version,
+        # v2 sequence inheritance: a file appended AFTER a delete
+        # outranks it (a re-inserted row must stay alive)
+        _commit_seq(meta, version),
+        **lineage_row,
+    )
+    return _commit_files(
+        table_path, version, meta, stem, [manifest],
+        {"operation": "append"},
+        fmt_floor=3 if lineage else 1,  # row lineage is a v3 construct
+        first_row_id=snap_first_row, next_row_id=next_row_id,
+        branch=branch,
+    )
+
+
+def write_iceberg_delete_commit(
+    spark: SparkSession,
+    table_path: str,
+    pos_deletes: list[tuple[str, int]] | None = None,
+    eq_deletes: tuple[list[str], list[tuple]] | None = None,
+    dv_deletes: dict[str, list[int]] | None = None,
+) -> int:
+    """Append one ROW-LEVEL-DELETE snapshot (fixture surface):
+    positional deletes are ``(data-file path as listed in the
+    manifests, row position)`` rows in a delete parquet; equality
+    deletes are rows over the named columns with the spec's
+    ``equality_ids``. The delete manifest lands under the table's
+    global (unpartitioned) delete spec, its manifest-list row stamps
+    this commit's data-sequence number (v2 inheritance), and the table
+    metadata upgrades to format-version 2 — exercising
+    ``read_iceberg``'s merge-on-read path against real table bytes.
+
+    ``dv_deletes`` maps a data file's manifest-listed path to its
+    deleted row positions, written as format-v3 DELETION VECTORS: one
+    Puffin file carrying one ``deletion-vector-v1`` blob per
+    referenced file, manifest entries with ``referenced_data_file`` /
+    ``content_offset`` / ``content_size_in_bytes``, and the table
+    metadata tagged format-version 3 (VERDICT r8 item 9)."""
+    from optimus_any2any_spark.formats.puffin import dv_puffin_blob
+
+    prev_version, meta = _ice.open_iceberg_table(table_path)
+    version = prev_version + 1
+    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
+    entries = []
+    if pos_deletes:
+        entries += _write_delete_parquet(
+            table_path,
+            local_rows_df(
+                spark, list(pos_deletes), "file_path string, pos long"
+            ).orderBy("file_path", "pos").coalesce(1),
+            stem, "delete-pos", version, content=1, equality_ids=None,
+        )
+    if eq_deletes:
+        cols, rows = eq_deletes
+        id_of = {
+            f["name"]: int(f["id"]) for f in _current_schema(meta)["fields"]
+        }
+        missing = [c for c in cols if c not in id_of]
+        if missing:
+            raise ValueError(
+                f"iceberg delete fixture: columns {missing} not in "
+                "the schema"
+            )
+        spark_schema = iceberg_spark_schema(meta)
+        edf = local_rows_df(
+            spark,
+            list(rows),
+            T.StructType(
+                [
+                    T.StructField(c, spark_schema[c].dataType, True)
+                    for c in cols
+                ]
+            ),
+        )
+        entries += _write_delete_parquet(
+            table_path, edf.coalesce(1), stem, "delete-eq", version,
+            content=2, equality_ids=[id_of[c] for c in cols],
+        )
+    if dv_deletes:
+        entries += _write_dv_file(
+            table_path, stem, version, _commit_seq(meta, version),
+            [
+                (ref, dv_puffin_blob(positions), len(set(positions)))
+                for ref, positions in sorted(dv_deletes.items())
+            ],
+        )
+    if not entries:
+        return prev_version
+    return _commit_files(
+        table_path, version, meta, stem,
+        [_delete_manifest(table_path, meta, version, stem, entries)],
+        {"operation": "delete"},
+        # row-level deletes need v2; deletion vectors are a v3 construct
+        fmt_floor=3 if dv_deletes else 2,
+    )
 
 
 def merge_iceberg_batch(
@@ -514,14 +1467,14 @@ def merge_iceberg_batch(
     manifest partition tuples carry the TRANSFORMED values keyed by
     the spec's field names. Unknown transforms and non-primitive
     partition sources are rejected, not mis-read."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         # first commit: bootstrap an EMPTY table (with the identity
         # spec when partitioned) and merge into it
         write_iceberg_commit(
             batch.limit(0), table_path, partition_by=partition_by
         )
-        prev_version, meta = open_iceberg_table(table_path)
+        prev_version, meta = _ice.open_iceberg_table(table_path)
     # ROW LINEAGE composes with the CoW merge the same way it does
     # with compaction: affected files read WITH their lineage
     # (materialized-or-derived), carried rows MATERIALIZE id+sequence
@@ -606,16 +1559,9 @@ def merge_iceberg_batch(
             )
         return frame
 
-    # idempotence via the last snapshot's summary
+    if _applied(meta, app_id, batch_id):
+        return prev_version
     snaps = meta.get("snapshots") or []
-    if batch_id is not None:
-        for s in reversed(snaps):
-            summ = s.get("summary") or {}
-            if summ.get("optimus-app-id") == app_id:
-                last = summ.get("optimus-batch-id")
-                if last is not None and batch_id <= int(last):
-                    return prev_version
-                break
 
     evolved = False
     if set(schema.fieldNames()) != set(batch.columns):
@@ -875,10 +1821,7 @@ def merge_iceberg_batch(
     version = prev_version + 1
     snapshot_id = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    fmt = int(meta.get("format-version", 1))
-    seq = max(
-        int(meta.get("last-sequence-number", 0)), prev_version
-    ) + 1
+    seq = _commit_seq(meta, version)
 
     # retire delete manifests nothing can match anymore (equality
     # gates strictly-lower data sequences; positional lower-or-equal)
@@ -1014,67 +1957,19 @@ def merge_iceberg_batch(
         carry_cols=lineage_cols or None,
     )
 
-    tmp = os.path.join(table_path, f"_tmp-icemerge-{stem}")
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    new_rel: list[str] = []
-    pt_of_rel: dict[str, tuple] = {}
+    tmp = _staging(table_path, "merge", stem)
     write_merged(
         merged, key_col, n_total + hit_rows, target_rows_per_file, tmp,
         single,
     )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{stem}-{file_seq:04d}-merge.parquet"
-        os.replace(part, os.path.join(table_path, rel))
-        new_rel.append(rel)
-        pt_of_rel[rel] = ptuples[pid]
-    shutil.rmtree(tmp)
-
-    per_file = (
-        _per_file_key_stats(spark, table_path, new_rel, key_col, ice_t)
-        if new_rel
-        else {}
+    files = _publish_parts(
+        table_path, tmp, local_parts(tmp, single), stem, "merge",
+        part_names, ptuples,
     )
-
-    def _bounds_kv(val) -> list | None:
-        b = encode_bound(ice_t, val)
-        return [{"key": fid, "value": b}] if b is not None else None
-
-    new_entries = []
-    lin_next = int(meta["next-row-id"]) if lineage else None
-    lin_base = lin_next
-    for rel in new_rel:
-        r = per_file.get(rel.rsplit("/", 1)[-1])
-        if r is None:  # empty part
-            os.remove(os.path.join(table_path, rel))
-            continue
-        pt = pt_of_rel[rel]
-        dfe = {
-            "file_path": rel,
-            "file_format": "PARQUET",
-            "partition": {
-                n: v for n, v in zip(part_names, pt)
-            },
-            "record_count": int(r["rows"]),
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(table_path, rel)
-            ),
-            "null_value_counts": [
-                {"key": fid,
-                 "value": struct.pack("<q", int(r["n_null"]))}
-            ],
-            "lower_bounds": _bounds_kv(r["min_key"]),
-            "upper_bounds": _bounds_kv(r["max_key"]),
-        }
-        if lineage:
-            dfe["first_row_id"] = lin_next
-            lin_next += int(r["rows"])
-        new_entries.append(
-            {
-                "status": _ST_ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": dfe,
-            }
-        )
+    new_entries, lin_next = _file_entries(
+        spark, table_path, files, snapshot_id, [(key_col, fid, ice_t)],
+        row_id=int(meta["next-row-id"]) if lineage else None,
+    )
     # survivors keep their entries, re-marked EXISTING under this
     # commit: same-spec ones ride the new manifest; old-spec ones go
     # into ONE extra manifest per spec id, serialized under THAT
@@ -1088,84 +1983,36 @@ def merge_iceberg_batch(
             new_entries.append(e)
         else:
             foreign_by_sid.setdefault(sid, []).append(e)
-
-    manifest_rel = f"metadata/{stem}-m0.avro"
-    write_container(
-        os.path.join(table_path, manifest_rel),
-        manifest_entry_schema(part_fields),
-        new_entries,
-    )
-    foreign_ml_rows: list[dict] = []
+    added = []
     for sid in sorted(foreign_by_sid):
         old_pspec = _parse_pspec(specs_by_id[sid], by_id, "merge")
         old_fields = [
             (p["name"], avro_type_of_result(p["res_type"]))
             for p in old_pspec
         ]
-        f_rel = f"metadata/{stem}-m0-s{sid}.avro"
-        write_container(
-            os.path.join(table_path, f_rel),
-            manifest_entry_schema(old_fields),
-            foreign_by_sid[sid],
-        )
-        foreign_ml_rows.append(
-            {
-                "manifest_path": f_rel,
-                "manifest_length": os.path.getsize(
-                    os.path.join(table_path, f_rel)
-                ),
-                "partition_spec_id": sid,
-                "content": 0,
-                "added_snapshot_id": snapshot_id,
-                # entries carry their ORIGINAL sequence explicitly
-                "sequence_number": seq,
-            }
-        )
-    for r in carried:
-        r.setdefault("sequence_number", None)
-    _ice_preserve_manifest_lineage(table_path, meta, carried)
-    ml_rows = list(carried) + foreign_ml_rows + [
-        {
-            "manifest_path": manifest_rel,
-            "manifest_length": os.path.getsize(
-                os.path.join(table_path, manifest_rel)
-            ),
-            "partition_spec_id": int(meta.get("default-spec-id", 0)),
-            "content": 0,
-            "added_snapshot_id": snapshot_id,
-            # the new files inherit this: it outranks every existing
-            # delete file, so consumed deletes stop applying to them
-            "sequence_number": seq,
-        }
-    ]
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
-    write_container(
-        os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA, ml_rows
-    )
-
-    summary = {"operation": "overwrite", **clause_predicates([
+        # entries carry their ORIGINAL sequence explicitly
+        added.append(_write_manifest(
+            table_path, f"metadata/{stem}-m0-s{sid}.avro",
+            manifest_entry_schema(old_fields), foreign_by_sid[sid], sid,
+            0, snapshot_id, seq,
+        ))
+    # the new files inherit ``seq``: it outranks every existing delete
+    # file, so consumed deletes stop applying to them
+    added.append(_write_manifest(
+        table_path, f"metadata/{stem}-m0.avro",
+        manifest_entry_schema(part_fields), new_entries, default_sid, 0,
+        snapshot_id, seq,
+    ))
+    summary = _summary("overwrite", app_id, batch_id, **clause_predicates([
         ("matched-predicates", when_matched or None),
         ("not-matched-predicates", when_not_matched or None),
         ("not-matched-by-source-predicates",
          when_not_matched_by_source or None),
-    ])}
-    if batch_id is not None:
-        summary["optimus-app-id"] = app_id
-        summary["optimus-batch-id"] = str(batch_id)
-    meta = dict(meta)
-    new_snap = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": snapshot_timestamp_ms(meta),
-        "manifest-list": ml_rel,
-        "summary": summary,
-    }
-    if fmt >= 2:
-        new_snap["sequence-number"] = seq
-        meta["last-sequence-number"] = seq
-    if lineage:
-        new_snap["first-row-id"] = lin_base
-        meta["next-row-id"] = lin_next
-    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
+    ]))
+    return _commit_files(
+        table_path, version, meta, stem, added, summary, carried=carried,
+        next_row_id=lin_next,
+    )
 
 
 def delete_iceberg_keys(
@@ -1191,180 +2038,36 @@ def delete_iceberg_keys(
     merge reads its affected files with the deletes applied, stamps a
     higher data-sequence number on the rewrite, and carries the delete
     manifests forward for the files it did not touch."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
     _refuse_unpublished_branches(meta)
-    snaps = meta.get("snapshots") or []
-    if batch_id is not None:
-        for sn in reversed(snaps):
-            summ = sn.get("summary") or {}
-            if summ.get("optimus-app-id") == app_id:
-                last = summ.get("optimus-batch-id")
-                if last is not None and batch_id <= int(last):
-                    return prev_version
-                break
+    if _applied(meta, app_id, batch_id):
+        return prev_version
     fid, _ice_t = _key_field(meta, key_col)
     schema = iceberg_spark_schema(meta)
     kdf = keys.select(
         F.col(key_col).cast(schema[key_col].dataType).alias(key_col)
     ).distinct()
     version = prev_version + 1
-    snapshot_id = version
-    seq = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    tmp = os.path.join(table_path, f"_tmp-eqdel-{stem}")
-    # Write amplification is O(distinct keys), so one file is the
-    # normal erasure shape — but a mass key erasure funnelling every
-    # key through a single coalesce(1) task would bottleneck exactly
-    # like the positional writer used to (VERDICT r9 item 4). The spec
-    # allows many equality-delete files per commit: past
-    # _MAX_DELETE_FILE_ROWS the key set is range-partitioned and each
-    # range lands as its own content=2 entry; the anti-join reader
-    # consumes any number of them.
+    # Write amplification is O(distinct keys): one sorted file is the
+    # normal erasure shape, a mass key erasure range-splits (VERDICT r9
+    # item 4) and the anti-join reader consumes any number of
+    # content=2 entries.
     kdf = kdf.localCheckpoint(eager=False)
     n_keys = int(kdf.count())
     if n_keys == 0:
         return prev_version
-    n_files = max(1, -(-n_keys // _MAX_DELETE_FILE_ROWS))
-    out = (
-        kdf.coalesce(1)
-        if n_files == 1
-        else kdf.repartitionByRange(n_files, key_col)
-    ).sortWithinPartitions(key_col)
-    out.write.mode("overwrite").parquet(tmp)
-    parts = sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
-    eq_rels: list[str] = []
-    for i, part in enumerate(parts):
-        rel = (
-            f"data/{stem}-delete-eq.parquet"
-            if len(parts) == 1
-            else f"data/{stem}-delete-eq-{i:04d}.parquet"
-        )
-        os.replace(part, os.path.join(table_path, rel))
-        eq_rels.append(rel)
-    shutil.rmtree(tmp)
-
-    entry_schema = {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "status", "type": "int", "field-id": 0},
-            {"name": "snapshot_id", "type": ["null", "long"],
-             "default": None, "field-id": 1},
-            {
-                "name": "data_file",
-                "field-id": 2,
-                "type": {
-                    "type": "record",
-                    "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int",
-                         "field-id": 134},
-                        {"name": "file_path", "type": "string",
-                         "field-id": 100},
-                        {"name": "file_format", "type": "string",
-                         "field-id": 101},
-                        {"name": "partition",
-                         "type": {"type": "record", "name": "r102",
-                                  "fields": []},
-                         "field-id": 102},
-                        {"name": "record_count", "type": "long",
-                         "field-id": 103},
-                        {"name": "file_size_in_bytes", "type": "long",
-                         "field-id": 104},
-                        {"name": "equality_ids",
-                         "type": ["null",
-                                  {"type": "array", "items": "int"}],
-                         "default": None, "field-id": 135},
-                    ],
-                },
-            },
-        ],
-    }
-    manifest_rel = f"metadata/{stem}-m0.avro"
-    import pyarrow.parquet as _pq
-
-    eq_entries = []
-    for rel in eq_rels:
-        full = os.path.join(table_path, rel)
-        rc = int(_pq.read_metadata(full).num_rows)  # footer, no job
-        if rc == 0:  # an empty range split: not worth an entry
-            os.remove(full)
-            continue
-        eq_entries.append(
-            {
-                "status": _ST_ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,  # EQUALITY_DELETES
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": rc,
-                    "file_size_in_bytes": os.path.getsize(full),
-                    "equality_ids": [fid],
-                },
-            }
-        )
-    write_container(
-        os.path.join(table_path, manifest_rel),
-        entry_schema,
-        eq_entries,
+    entries = _write_delete_parquet(
+        table_path, kdf, stem, "delete-eq", version, (key_col,), n_keys,
+        content=2, equality_ids=[fid],  # EQUALITY_DELETES
     )
-    prior_manifests: list[dict] = []
-    cur_snap_id = meta.get("current-snapshot-id")
-    if cur_snap_id not in (None, -1) and snaps:
-        snap = next(
-            sn for sn in snaps if sn["snapshot-id"] == cur_snap_id
-        )
-        _, prior_manifests = read_container(
-            _localize(table_path, snap["manifest-list"])
-        )
-    for r in prior_manifests:
-        r.setdefault("sequence_number", None)
-    _ice_preserve_manifest_lineage(table_path, meta, prior_manifests)
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
-    write_container(
-        os.path.join(table_path, ml_rel),
-        MANIFEST_FILE_SCHEMA,
-        prior_manifests
-        + [
-            {
-                "manifest_path": manifest_rel,
-                "manifest_length": os.path.getsize(
-                    os.path.join(table_path, manifest_rel)
-                ),
-                "partition_spec_id": _global_delete_spec_id(meta),
-                "content": 1,  # DELETES
-                "added_snapshot_id": snapshot_id,
-                "sequence_number": seq,
-            }
-        ],
+    return _commit_files(
+        table_path, version, meta, stem,
+        [_delete_manifest(table_path, meta, version, stem, entries)],
+        _summary("delete", app_id, batch_id), fmt_floor=2,
     )
-    summary = {"operation": "delete"}
-    if batch_id is not None:
-        summary["optimus-app-id"] = app_id
-        summary["optimus-batch-id"] = str(batch_id)
-    meta = dict(meta)
-    # row-level deletes need format-v2 features, but a v3-tagged table
-    # (readable when it uses only v2 features) must NOT be silently
-    # downgraded by a DELETE (ADVICE r8)
-    meta["format-version"] = max(2, int(meta.get("format-version", 1)))
-    meta["last-sequence-number"] = seq
-    eq_snap = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": snapshot_timestamp_ms(meta),
-        "sequence-number": seq,
-        "manifest-list": ml_rel,
-        "summary": summary,
-    }
-    if meta.get("next-row-id") is not None:
-        # row-lineage tables: deletes assign no rows
-        eq_snap["first-row-id"] = int(meta["next-row-id"])
-    return commit_iceberg_snapshot(table_path, version, meta, eq_snap)
 
 
 def delete_iceberg_positions(
@@ -1400,26 +2103,16 @@ def delete_iceberg_positions(
     alive. Compaction (``compact_iceberg``) consumes and retires the
     file like any fixture-written positional delete."""
     from optimus_any2any_spark.sources.iceberg import (
-        _DELETE_ENTRY_SCHEMA,
-        _MANIFEST_FILE_SCHEMA,
         _prune_by_bounds,
-        _snapshot_entries,
         read_entries_with_deletes,
     )
 
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
     _refuse_unpublished_branches(meta)
-    snaps = meta.get("snapshots") or []
-    if batch_id is not None:
-        for sn in reversed(snaps):
-            summ = sn.get("summary") or {}
-            if summ.get("optimus-app-id") == app_id:
-                last = summ.get("optimus-batch-id")
-                if last is not None and batch_id <= int(last):
-                    return prev_version
-                break
+    if _applied(meta, app_id, batch_id):
+        return prev_version
     schema = iceberg_spark_schema(meta)
     kdf = (
         keys.select(
@@ -1470,106 +2163,51 @@ def delete_iceberg_positions(
     )
 
     version = prev_version + 1
-    snapshot_id = version
-    seq = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    # The spec requires delete rows sorted by (file_path, pos) WITHIN
-    # each delete file; one file per commit is the normal erasure
-    # shape, but a mass delete funnelling every position through the
-    # single coalesce(1) task would bottleneck at 100 TB. The spec
-    # allows many delete files per commit, so past
-    # _MAX_DELETE_FILE_ROWS the positions are range-partitioned by
-    # (file_path, pos) — each range lands as its own spec-sorted
-    # parquet; reader and compaction consume any number of content=1
-    # entries (VERDICT r8 item 7). sortWithinPartitions (not a global
-    # orderBy feeding coalesce) makes the per-file sort a guarantee
-    # rather than an artifact of coalesce's partition-order concat
-    # (ADVICE r8).
     matching = matching.localCheckpoint(eager=False)
     n_pos = matching.count()
     if n_pos == 0:  # no row matched: burn no version
         return prev_version
+    return _commit_position_deletes(
+        table_path, version, meta, stem, matching, n_pos,
+        use_deletion_vectors, _summary("delete", app_id, batch_id),
+    )
+
+
+def _commit_position_deletes(
+    table_path, version, meta, stem, matching, n_pos,
+    use_deletion_vectors, summary, added=(), next_row_id=None,
+):
+    """Commit the ``(file_path, pos)`` rows of ``matching`` as
+    positional-delete parquet or (``use_deletion_vectors``) a Puffin
+    deletion-vector file, after any ``added`` manifest-list rows (the
+    MoR UPDATE's new-data manifest, whose rows advance the table's
+    ``next-row-id`` to ``next_row_id``)."""
     if use_deletion_vectors:
-        # FORMAT-V3 DELETION VECTORS: one Roaring bitmap per
-        # referenced data file, framed as deletion-vector-v1 blobs in
-        # ONE Puffin sidecar (formats/puffin.py) — the true v3 twin
-        # of the Delta DV delete. The per-file encode runs on
-        # EXECUTORS (applyInPandas); only the compressed blobs (one
-        # row per DV'd FILE) cross to the driver for the sidecar
-        # write. Requires format-version 3 metadata — the reader side
-        # shipped first (_puffin_dv_ref), so self-written DVs
-        # round-trip through merge/compaction like fixture ones.
+        # FORMAT-V3 DELETION VECTORS: the true v3 twin of the Delta DV
+        # delete; the reader side shipped first (_puffin_dv_ref), so
+        # self-written DVs round-trip through merge/compaction like
+        # fixture ones
         entries = _write_dv_delete_files(
-            table_path, matching, stem, snapshot_id, seq
+            table_path, matching, stem, version, _commit_seq(meta, version)
         )
-        fmt_floor = 3
     else:
-        entries = _write_pos_delete_files(
-            table_path, matching, n_pos, stem, snapshot_id
+        # the spec requires delete rows sorted by (file_path, pos)
+        # WITHIN each delete file; a mass delete range-splits by
+        # (file_path, pos) and reader and compaction consume any
+        # number of content=1 entries (VERDICT r8 item 7)
+        entries = _write_delete_parquet(
+            table_path, matching, stem, "delete-pos", version,
+            ("file_path", "pos"), n_pos,
+            content=1, equality_ids=None,  # POSITION_DELETES
         )
-        fmt_floor = 2
-    manifest_rel = f"metadata/{stem}-m0.avro"
-    write_container(
-        os.path.join(table_path, manifest_rel),
-        _DELETE_ENTRY_SCHEMA,
-        entries,
+    return _commit_files(
+        table_path, version, meta, stem,
+        list(added)
+        + [_delete_manifest(table_path, meta, version, stem, entries)],
+        summary, fmt_floor=3 if use_deletion_vectors else 2,
+        next_row_id=next_row_id,
     )
-    return _commit_delete_manifest(
-        table_path, meta, manifest_rel, version, stem, snapshot_id,
-        seq, app_id, batch_id, fmt_floor,
-    )
-
-
-def _write_pos_delete_files(table_path, matching, n_pos, stem, snapshot_id):
-    """The delete-parquet form: spec-sorted (file_path, pos) rows,
-    range-split past _MAX_DELETE_FILE_ROWS, named from the commit's
-    writer-unique ``stem``. Returns the manifest entries."""
-    tmp = os.path.join(table_path, f"_tmp-posdel-{stem}")
-    n_files = max(1, -(-n_pos // _MAX_DELETE_FILE_ROWS))
-    out = (
-        matching.coalesce(1)
-        if n_files == 1
-        else matching.repartitionByRange(n_files, "file_path", "pos")
-    ).sortWithinPartitions("file_path", "pos")
-    out.write.mode("overwrite").parquet(tmp)
-    parts = sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
-    rels: list[str] = []
-    for i, part in enumerate(parts):
-        rel = (
-            f"data/{stem}-delete-pos.parquet"
-            if len(parts) == 1
-            else f"data/{stem}-delete-pos-{i:04d}.parquet"
-        )
-        os.replace(part, os.path.join(table_path, rel))
-        rels.append(rel)
-    shutil.rmtree(tmp)
-
-    import pyarrow.parquet as _pq
-
-    entries = []
-    for rel in rels:
-        full = os.path.join(table_path, rel)
-        rc = int(_pq.read_metadata(full).num_rows)
-        if rc == 0:  # an empty range split: not worth an entry
-            os.remove(full)
-            continue
-        entries.append(
-            {
-                "status": _ST_ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,  # POSITION_DELETES
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": rc,
-                    "file_size_in_bytes": os.path.getsize(full),
-                    "equality_ids": None,
-                },
-            }
-        )
-    return entries
 
 
 def _write_dv_delete_files(table_path, matching, stem, snapshot_id, seq):
@@ -1611,51 +2249,11 @@ def _write_dv_delete_files(table_path, matching, stem, snapshot_id, seq):
         .collect(),
         key=lambda r: r["file_path"],
     )
-    from optimus_any2any_spark.formats.puffin import DV_V1, write_puffin
-
-    rel = f"data/{stem}-delete-dv.puffin"
-    blob_meta = write_puffin(
-        os.path.join(table_path, rel),
-        [
-            (
-                bytes(r["blob"]),
-                {
-                    "type": DV_V1,
-                    "fields": [],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {
-                        "referenced-data-file": r["file_path"],
-                        "cardinality": str(int(r["cardinality"])),
-                    },
-                },
-            )
-            for r in enc_rows
-        ],
+    return _write_dv_file(
+        table_path, stem, snapshot_id, seq,
+        [(r["file_path"], bytes(r["blob"]), r["cardinality"])
+         for r in enc_rows],
     )
-    fsize = os.path.getsize(os.path.join(table_path, rel))
-    entries = [
-        {
-            "status": _ST_ADDED,
-            "snapshot_id": snapshot_id,
-            "data_file": {
-                "content": 1,  # POSITION_DELETES (vector form)
-                "file_path": rel,
-                "file_format": "PUFFIN",
-                "partition": {},
-                "record_count": int(bm["properties"]["cardinality"]),
-                "file_size_in_bytes": fsize,
-                "equality_ids": None,
-                "referenced_data_file": bm["properties"][
-                    "referenced-data-file"
-                ],
-                "content_offset": bm["offset"],
-                "content_size_in_bytes": bm["length"],
-            },
-        }
-        for bm in blob_meta
-    ]
-    return entries
 
 
 def _global_delete_spec_id(meta: dict) -> int:
@@ -1714,94 +2312,6 @@ def _resolve_entry_lineage(
             e["data_file"]["first_row_id"] = int(fri)
 
 
-def _commit_delete_manifest(
-    table_path, meta, manifest_rel, version, stem, snapshot_id,
-    seq, app_id, batch_id, fmt_floor,
-    extra_ml_rows: list | None = None,
-    extra_summary: dict | None = None,
-    operation: str = "delete",
-    first_row_id: int | None = None,
-    next_row_id: int | None = None,
-):
-    """Shared tail of the merge-on-read DELETE writers: the new
-    manifest-list row, the snapshot (real timestamp + snapshot-log +
-    main-ref advance), and the version/hint commit. ``extra_ml_rows``
-    lets a caller land ADDITIONAL manifests (the MoR UPDATE's new-data
-    manifest) in the same snapshot; ``extra_summary`` merges
-    caller keys (predicates) into the snapshot summary."""
-    from optimus_any2any_spark.sources.iceberg import (
-        _MANIFEST_FILE_SCHEMA,
-        _preserve_manifest_lineage,
-    )
-
-    _refuse_unpublished_branches(meta)
-    snaps = meta.get("snapshots") or []
-    prior_manifests: list[dict] = []
-    cur_snap_id = meta.get("current-snapshot-id")
-    if cur_snap_id not in (None, -1) and snaps:
-        snap = next(
-            sn for sn in snaps if sn["snapshot-id"] == cur_snap_id
-        )
-        _, prior_manifests = read_container(
-            _localize(table_path, snap["manifest-list"])
-        )
-    for r in prior_manifests:
-        r.setdefault("sequence_number", None)
-    _preserve_manifest_lineage(table_path, meta, prior_manifests)
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
-    write_container(
-        os.path.join(table_path, ml_rel),
-        _MANIFEST_FILE_SCHEMA,
-        prior_manifests
-        + list(extra_ml_rows or [])
-        + [
-            {
-                "manifest_path": manifest_rel,
-                "manifest_length": os.path.getsize(
-                    os.path.join(table_path, manifest_rel)
-                ),
-                "partition_spec_id": _global_delete_spec_id(meta),
-                "content": 1,  # DELETES
-                "added_snapshot_id": snapshot_id,
-                "sequence_number": seq,
-            }
-        ],
-    )
-    summary = {"operation": operation}
-    if extra_summary:
-        summary.update(extra_summary)
-    if batch_id is not None:
-        summary["optimus-app-id"] = app_id
-        summary["optimus-batch-id"] = str(batch_id)
-    meta = dict(meta)
-    # row-level deletes need format-v2 features (v3 for deletion
-    # vectors), but a higher-tagged table must NOT be silently
-    # downgraded by a DELETE (ADVICE r8)
-    meta["format-version"] = max(
-        fmt_floor, int(meta.get("format-version", 1))
-    )
-    meta["last-sequence-number"] = seq
-    new_snap = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": snapshot_timestamp_ms(meta),
-        "sequence-number": seq,
-        "manifest-list": ml_rel,
-        "summary": summary,
-    }
-    if meta.get("next-row-id") is not None:
-        # row-lineage tables: every snapshot stamps its first-row-id;
-        # pure deletes assign no rows (first = next, unchanged), the
-        # MoR UPDATE's insert half advances next-row-id
-        new_snap["first-row-id"] = (
-            int(first_row_id)
-            if first_row_id is not None
-            else int(meta["next-row-id"])
-        )
-        if next_row_id is not None:
-            meta["next-row-id"] = int(next_row_id)
-    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
-
-
 def delete_iceberg_where(
     spark: SparkSession,
     table_path: str,
@@ -1823,12 +2333,10 @@ def delete_iceberg_where(
     the committed metadata version, or None when nothing matched (no
     version burned). The snapshot summary records the predicate."""
     from optimus_any2any_spark.sources.iceberg import (
-        _DELETE_ENTRY_SCHEMA,
-        _snapshot_entries,
         read_entries_with_deletes,
     )
 
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg delete: no table at {table_path}")
     schema = iceberg_spark_schema(meta)
@@ -1852,30 +2360,10 @@ def delete_iceberg_where(
     if n_pos == 0:
         return None
     version = prev_version + 1
-    snapshot_id = version
-    seq = version
-    stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    if use_deletion_vectors:
-        entries = _write_dv_delete_files(
-            table_path, matching, stem, snapshot_id, seq
-        )
-        fmt_floor = 3
-    else:
-        entries = _write_pos_delete_files(
-            table_path, matching, n_pos, stem, snapshot_id
-        )
-        fmt_floor = 2
-    manifest_rel = f"metadata/{stem}-m0.avro"
-    write_container(
-        os.path.join(table_path, manifest_rel),
-        _DELETE_ENTRY_SCHEMA,
-        entries,
-    )
-    return _commit_delete_manifest(
-        table_path, meta, manifest_rel, version, stem, snapshot_id,
-        seq, DEFAULT_APP_ID, None, fmt_floor,
-        extra_summary={"predicate": where},
+    return _commit_position_deletes(
+        table_path, version, meta, f"{version:05d}-{uuid.uuid4().hex}",
+        matching, n_pos, use_deletion_vectors,
+        {"operation": "delete", "predicate": where},
     )
 
 
@@ -1907,19 +2395,16 @@ def update_iceberg_where(
     copy-on-write rewrite pins rows to their files' partitions).
     Returns the committed version, or None when nothing matched."""
     from optimus_any2any_spark.sources.iceberg import (
-        _DELETE_ENTRY_SCHEMA,
-        _snapshot_entries,
         read_entries_with_deletes,
     )
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        spark_type_of_result,
         transform_column,
     )
 
     if not set or not isinstance(set, dict):
         raise ValueError("iceberg update: SET needs {col: value_sql}")
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg update: no table at {table_path}")
     schema = iceberg_spark_schema(meta)
@@ -1957,32 +2442,7 @@ def update_iceberg_where(
         return None
 
     version = prev_version + 1
-    snapshot_id = version
-    seq = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-
-    # ---- delete half: the matched rows' current identities ----
-    positions = matched.select(
-        F.col("__del_fp").alias("file_path"),
-        F.col("__del_pos").alias("pos"),
-    )
-    if use_deletion_vectors:
-        del_entries = _write_dv_delete_files(
-            table_path, positions, stem, snapshot_id, seq
-        )
-        fmt_floor = 3
-    else:
-        del_entries = _write_pos_delete_files(
-            table_path, positions, n_upd, stem, snapshot_id
-        )
-        fmt_floor = 2
-    del_manifest_rel = f"metadata/{stem}-m0.avro"
-    write_container(
-        os.path.join(table_path, del_manifest_rel),
-        _DELETE_ENTRY_SCHEMA,
-        del_entries,
-    )
 
     # ---- append half: the updated rows, routed by their (possibly
     # new) partition tuple under the default spec ----
@@ -2014,182 +2474,53 @@ def update_iceberg_where(
     else:
         ptuples = [()]
     single = len(ptuples) == 1
-    first_col = schema.fieldNames()[0]
-    tmp = os.path.join(table_path, f"_tmp-updwhere-{stem}")
-    new_rel: list[str] = []
-    pt_of_rel: dict[str, tuple] = {}
-    if single:
-        routed = upd_pv.drop(*pv_cols)
-    else:
-        pid_of = {pt: i for i, pt in enumerate(ptuples)}
-        pid_ddl = ", ".join(
-            f"{pv_cols[i]} {spark_type_of_result(pspec[i]['res_type'])}"
-            for i in range(len(pspec))
-        )
-        pid_df = local_rows_df(spark, 
-            [pt + (pid_of[pt],) for pt in ptuples],
-            f"{pid_ddl}, __pid int",
-        )
-        pcond = None
-        for c in pv_cols:
-            e = F.col(f"b.{c}").eqNullSafe(F.col(f"pd.{c}"))
-            pcond = e if pcond is None else (pcond & e)
-        routed = (
-            upd_pv.alias("b")
-            .join(F.broadcast(pid_df.alias("pd")), pcond, "inner")
-            .select(
-                *[F.col(f"b.{c}") for c in schema.fieldNames()],
-                F.col("pd.__pid"),
-            )
-        )
-    write_merged(
-        routed, first_col, n_upd, target_rows_per_file, tmp, single
+    routed = with_pid(
+        upd_pv,
+        None if single else pid_table(spark, upd_pv, pv_cols, ptuples),
+        pv_cols, schema.fieldNames(),
     )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{stem}-{file_seq:04d}-update.parquet"
-        os.replace(part, os.path.join(table_path, rel))
-        new_rel.append(rel)
-        pt_of_rel[rel] = ptuples[pid]
-    shutil.rmtree(tmp)
-
-    per_file = (
-        _per_file_key_stats(spark, table_path, new_rel, None, None)
-        if new_rel
-        else {}
+    tmp = _staging(table_path, "update", stem)
+    write_merged(
+        routed, schema.fieldNames()[0], n_upd, target_rows_per_file, tmp,
+        single,
+    )
+    files = _publish_parts(
+        table_path, tmp, local_parts(tmp, single), stem, "update",
+        part_names, ptuples,
     )
     # v3 row lineage: delete+insert UPDATE legitimately mints fresh
     # row ids for the re-appended rows (the spec's lineage contract
     # for MoR updates); survivors' ids never move because their
     # files and positions are untouched
     lineage = meta.get("next-row-id") is not None
-    row_base = int(meta["next-row-id"]) if lineage else None
-    nxt_row = row_base
-    new_entries = []
-    for rel in new_rel:
-        r = per_file.get(rel.rsplit("/", 1)[-1])
-        if r is None:  # empty part
-            os.remove(os.path.join(table_path, rel))
-            continue
-        pt = pt_of_rel[rel]
-        dfe = {
-            "file_path": rel,
-            "file_format": "PARQUET",
-            "partition": {
-                n: v for n, v in zip(part_names, pt)
-            },
-            "record_count": int(r["rows"]),
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(table_path, rel)
-            ),
-            "null_value_counts": None,
-            "lower_bounds": None,
-            "upper_bounds": None,
-        }
-        if lineage:
-            dfe["first_row_id"] = nxt_row
-            nxt_row += int(r["rows"])
-        new_entries.append(
-            {
-                "status": _ST_ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": dfe,
-            }
-        )
-    data_manifest_rel = f"metadata/{stem}-m1.avro"
-    write_container(
-        os.path.join(table_path, data_manifest_rel),
-        manifest_entry_schema(part_fields),
-        new_entries,
+    new_entries, nxt_row = _file_entries(
+        spark, table_path, files, version,
+        row_id=int(meta["next-row-id"]) if lineage else None,
     )
-    data_ml_row = {
-        "manifest_path": data_manifest_rel,
-        "manifest_length": os.path.getsize(
-            os.path.join(table_path, data_manifest_rel)
-        ),
-        "partition_spec_id": default_sid,
-        "content": 0,
-        "added_snapshot_id": snapshot_id,
-        # new files inherit this commit's sequence: the delete half
-        # (same seq) never touches them because its rows reference
-        # only the OLD file paths
-        "sequence_number": seq,
-    }
-    return _commit_delete_manifest(
-        table_path, meta, del_manifest_rel, version, stem, snapshot_id,
-        seq, DEFAULT_APP_ID, None, fmt_floor,
-        extra_ml_rows=[data_ml_row],
-        extra_summary={
+    # new files inherit this commit's sequence: the delete half (same
+    # seq) never touches them because its rows reference only the OLD
+    # file paths
+    data_row = _write_manifest(
+        table_path, f"metadata/{stem}-m1.avro",
+        manifest_entry_schema(part_fields), new_entries, default_sid, 0,
+        version, _commit_seq(meta, version),
+    )
+
+    # ---- delete half: the matched rows' current identities ----
+    positions = matched.select(
+        F.col("__del_fp").alias("file_path"),
+        F.col("__del_pos").alias("pos"),
+    )
+    return _commit_position_deletes(
+        table_path, version, meta, stem, positions, n_upd,
+        use_deletion_vectors,
+        {
+            "operation": "overwrite",
             "predicate": where or "true",
             "updated-columns": json.dumps(sorted(set)),
         },
-        operation="overwrite",
-        first_row_id=row_base,
-        next_row_id=nxt_row,
+        added=[data_row], next_row_id=nxt_row,
     )
-
-
-def _per_file_multi_stats(
-    spark: SparkSession,
-    table_path: str,
-    new_rel: list[str],
-    cols: list[tuple[str, str]],  # (name, iceberg type)
-) -> dict[str, dict]:
-    """Per-basename ``{"rows", cols: {name: (min, max, nulls)}}`` over
-    just-written files for SEVERAL stat columns (the ZORDER set needs
-    bounds on every dimension or the clustering cannot prune). Footer
-    fast path, one grouped Spark aggregate as the fallback."""
-    ft = footer_file_stats(
-        [os.path.join(table_path, p) for p in new_rel],
-        [n for n, _ in cols],
-        {n: kind_of_iceberg_type(t) for n, t in cols},
-        session_tz=spark.conf.get("spark.sql.session.timeZone", "UTC"),
-    )
-    if ft is not None:
-        return {
-            name: {
-                "rows": s["rows"],
-                "cols": {
-                    n: (
-                        s["min"].get(n),
-                        s["max"].get(n),
-                        s["nulls"].get(n, 0),
-                    )
-                    for n, _ in cols
-                },
-            }
-            for name, s in ft.items()
-        }
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    for n, _ in cols:
-        aggs += [
-            F.min(n).alias(f"__mn_{n}"),
-            F.max(n).alias(f"__mx_{n}"),
-            F.sum(F.col(n).isNull().cast("long")).alias(f"__nn_{n}"),
-        ]
-    rows = (
-        spark.read.parquet(
-            *[os.path.join(table_path, p) for p in new_rel]
-        )
-        .select(*[n for n, _ in cols])
-        .withColumn("__f", F.input_file_name())
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
-    return {
-        r["__f"].rsplit("/", 1)[-1]: {
-            "rows": int(r["rows"]),
-            "cols": {
-                n: (
-                    norm_float_zero(r[f"__mn_{n}"]),
-                    norm_float_zero(r[f"__mx_{n}"]),
-                    int(r[f"__nn_{n}"]),
-                )
-                for n, _ in cols
-            },
-        }
-        for r in rows
-    }
 
 
 def compact_iceberg(
@@ -2234,7 +2565,7 @@ def compact_iceberg(
         avro_type_of_result,
     )
 
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg optimize: no table at {table_path}")
     # row-lineage tables compact WITH lineage preservation: carried
@@ -2257,10 +2588,10 @@ def compact_iceberg(
     part_fields = [
         (p["name"], avro_type_of_result(p["res_type"])) for p in pspec
     ]
-    fid = ice_t = None
+    stat_fields: list[tuple[str, int, str]] = []
     if key_col is not None:
         fid, ice_t = _key_field(meta, key_col)
-    stat_fields: list[tuple[str, int, str]] = []
+        stat_fields.append((key_col, fid, ice_t))
     if zorder_by:
         names = set(schema.fieldNames())
         for c in zorder_by:
@@ -2275,13 +2606,11 @@ def compact_iceberg(
                         f"partition source {c!r} is meaningless — "
                         "files never span identity partitions"
                     )
-        seen: set[str] = set()
-        for c in ([key_col] if key_col else []) + list(zorder_by):
-            if c in seen:
-                continue
-            seen.add(c)
-            c_fid, c_it = _key_field(meta, c)
-            stat_fields.append((c, c_fid, c_it))
+        # bounds for EVERY z-ordered column — without them the curve
+        # cannot prune anything
+        for c in zorder_by:
+            if c not in [n for n, _f, _t in stat_fields]:
+                stat_fields.append((c, *_key_field(meta, c)))
 
     snaps = meta.get("snapshots") or []
     cur_snap_id = meta.get("current-snapshot-id")
@@ -2435,10 +2764,7 @@ def compact_iceberg(
     version = prev_version + 1
     snapshot_id = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    fmt = int(meta.get("format-version", 1))
-    seq = max(
-        int(meta.get("last-sequence-number", 0)), prev_version
-    ) + 1
+    seq = _commit_seq(meta, version)
 
     # a delete file gates data files with a LOWER sequence (equality:
     # strictly lower; positional: lower-or-equal). After this commit
@@ -2537,10 +2863,7 @@ def compact_iceberg(
             "iceberg optimize: compacted files share a basename"
         )
     n_files = max(1, -(-max(total_rows, 1) // target_rows_per_file))
-    tmp = os.path.join(table_path, f"_tmp-icecompact-{stem}")
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    new_rel: list[str] = []
-    pt_of_rel: dict[str, tuple] = {}
+    tmp = _staging(table_path, "compact", stem)
     if zorder_by:
         from optimus_any2any_spark.streaming.delta_table import (
             _with_zorder_value,
@@ -2585,27 +2908,10 @@ def compact_iceberg(
             .mode("overwrite")
             .parquet(tmp)
         )
-    for file_seq, (part, pid) in enumerate(local_parts(tmp, single)):
-        rel = f"data/{stem}-{file_seq:04d}-compact.parquet"
-        os.replace(part, os.path.join(table_path, rel))
-        new_rel.append(rel)
-        pt_of_rel[rel] = ptuples[pid]
-    shutil.rmtree(tmp)
-
-    if not new_rel:
-        per_file = {}
-    elif zorder_by:
-        # bounds for EVERY z-ordered column — without them the curve
-        # cannot prune anything
-        per_file = _per_file_multi_stats(
-            spark, table_path, new_rel,
-            [(n, it_) for n, _f, it_ in stat_fields],
-        )
-    else:
-        per_file = _per_file_key_stats(
-            spark, table_path, new_rel, key_col,
-            ice_t if key_col is not None else None,
-        )
+    files = _publish_parts(
+        table_path, tmp, local_parts(tmp, single), stem, "compact",
+        part_names, ptuples,
+    )
 
     # declared SORT ORDER (spec §Sort Orders): a key_col compaction
     # writes files truly sorted by the key, so the table declares
@@ -2637,117 +2943,31 @@ def compact_iceberg(
         meta["sort-orders"] = orders
         meta["default-sort-order-id"] = sort_oid
 
-    new_entries = []
-    lin_next = int(meta["next-row-id"]) if lineage else None
-    lin_base = lin_next
-    for rel in new_rel:
-        r = per_file.get(rel.rsplit("/", 1)[-1])
-        if r is None or int(r["rows"]) == 0:
-            os.remove(os.path.join(table_path, rel))
-            continue
-        df_entry = {
-            "file_path": rel,
-            "file_format": "PARQUET",
-            "partition": {
-                n: v for n, v in zip(part_names, pt_of_rel[rel])
-            },
-            "record_count": int(r["rows"]),
-            "file_size_in_bytes": os.path.getsize(
-                os.path.join(table_path, rel)
-            ),
-        }
-        if lineage:
-            # spec formality: every row of a rewritten file carries a
-            # materialized _row_id, so these fresh ids go unused —
-            # but entries must still be assigned (and the lineage
-            # reader requires explicit values)
-            df_entry["first_row_id"] = lin_next
-            lin_next += int(r["rows"])
-        if zorder_by:
-            nvc, lb, ub = [], [], []
-            for n, c_fid, c_it in stat_fields:
-                mn, mx, nn = r["cols"][n]
-                nvc.append(
-                    {"key": c_fid, "value": struct.pack("<q", int(nn))}
-                )
-                b_lo = encode_bound(c_it, mn)
-                b_hi = encode_bound(c_it, mx)
-                if b_lo is not None:
-                    lb.append({"key": c_fid, "value": b_lo})
-                if b_hi is not None:
-                    ub.append({"key": c_fid, "value": b_hi})
-            df_entry["null_value_counts"] = nvc
-            df_entry["lower_bounds"] = lb or None
-            df_entry["upper_bounds"] = ub or None
-        elif key_col is not None:
-            b_lo = encode_bound(ice_t, r["min_key"])
-            b_hi = encode_bound(ice_t, r["max_key"])
-            df_entry["null_value_counts"] = [
-                {"key": fid, "value": struct.pack("<q", int(r["n_null"]))}
-            ]
-            df_entry["lower_bounds"] = (
-                [{"key": fid, "value": b_lo}] if b_lo is not None else None
-            )
-            df_entry["upper_bounds"] = (
-                [{"key": fid, "value": b_hi}] if b_hi is not None else None
-            )
-            df_entry["sort_order_id"] = sort_oid
-        new_entries.append(
-            {
-                "status": _ST_ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": df_entry,
-            }
-        )
+    new_entries, lin_next = _file_entries(
+        spark, table_path, files, snapshot_id, stat_fields,
+        # spec formality: every row of a rewritten file carries a
+        # materialized _row_id, so these fresh ids go unused — but
+        # entries must still be assigned (and the lineage reader
+        # requires explicit values)
+        row_id=int(meta["next-row-id"]) if lineage else None,
+        sort_order_id=sort_oid,
+    )
     for e in survivors:
         e = dict(e)
         e["status"] = _ST_EXISTING
         new_entries.append(e)
-
-    manifest_rel = f"metadata/{stem}-m0.avro"
-    write_container(
-        os.path.join(table_path, manifest_rel),
-        manifest_entry_schema(part_fields),
-        new_entries,
+    added = [_write_manifest(
+        table_path, f"metadata/{stem}-m0.avro",
+        manifest_entry_schema(part_fields), new_entries,
+        int(meta.get("default-spec-id", 0)), 0, snapshot_id, seq,
+    )]
+    summary = {"operation": "replace"}
+    if zorder_by:
+        summary["zorder-by"] = json.dumps(list(zorder_by))
+    return _commit_files(
+        table_path, version, meta, stem, added, summary, carried=carried,
+        next_row_id=lin_next,
     )
-    for r in carried:
-        r.setdefault("sequence_number", None)
-    _ice_preserve_manifest_lineage(table_path, meta, carried)
-    ml_rows = list(carried) + [
-        {
-            "manifest_path": manifest_rel,
-            "manifest_length": os.path.getsize(
-                os.path.join(table_path, manifest_rel)
-            ),
-            "partition_spec_id": int(meta.get("default-spec-id", 0)),
-            "content": 0,
-            "added_snapshot_id": snapshot_id,
-            "sequence_number": seq,
-        }
-    ]
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
-    write_container(
-        os.path.join(table_path, ml_rel), MANIFEST_FILE_SCHEMA, ml_rows
-    )
-    meta = dict(meta)
-    new_snap = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": snapshot_timestamp_ms(meta),
-        "manifest-list": ml_rel,
-        "summary": (
-            {"operation": "replace",
-             "zorder-by": json.dumps(list(zorder_by))}
-            if zorder_by
-            else {"operation": "replace"}
-        ),
-    }
-    if fmt >= 2:
-        new_snap["sequence-number"] = seq
-        meta["last-sequence-number"] = seq
-    if lineage:
-        new_snap["first-row-id"] = lin_base
-        meta["next-row-id"] = lin_next
-    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
 
 
 def rewrite_iceberg_manifests(
@@ -2769,7 +2989,7 @@ def rewrite_iceberg_manifests(
     changelog and the streams emit NOTHING for it. Returns the new
     metadata version, or None when fewer than ``min_manifests`` data
     manifests exist (nothing to gain ⇒ no version burn)."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(
             f"iceberg rewrite_manifests: no table at {table_path}"
@@ -2792,12 +3012,7 @@ def rewrite_iceberg_manifests(
         m for m in manifests if int(m.get("content") or 0) != 0
     ]
     version = prev_version + 1
-    snapshot_id = version
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
-    fmt = int(meta.get("format-version", 1))
-    seq = max(
-        int(meta.get("last-sequence-number", 0)), prev_version
-    ) + 1
     lineage = meta.get("next-row-id") is not None
 
     # group by spec id: a manifest serializes ONE partition spec
@@ -2844,54 +3059,26 @@ def rewrite_iceberg_manifests(
                      "type": ["null", "long"],
                      "default": None, "field-id": 142}
                 )
-        rel = f"metadata/{stem}-m0-s{sid}.avro"
-        write_container(os.path.join(table_path, rel), esch, merged)
-        new_rows.append(
-            {
-                "manifest_path": rel,
-                "manifest_length": os.path.getsize(
-                    os.path.join(table_path, rel)
-                ),
-                "partition_spec_id": sid,
-                "content": 0,
-                "added_snapshot_id": snapshot_id,
-                # entries carry their seqs explicitly; nothing inherits
-                "sequence_number": None,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    int(e["data_file"].get("record_count") or 0)
-                    for e in merged
-                ),
-                "first_row_id": None,
-            }
-        )
-    for r in other_rows:
-        r.setdefault("sequence_number", None)
-    ml_rel = f"metadata/snap-{snapshot_id}-1-{stem}.avro"
-    write_container(
-        os.path.join(table_path, ml_rel),
-        MANIFEST_FILE_SCHEMA,
-        new_rows + other_rows,
-    )
-    meta = dict(meta)
-    new_snap = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": snapshot_timestamp_ms(meta),
-        "manifest-list": ml_rel,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        new_rows.append(_write_manifest(
+            table_path, f"metadata/{stem}-m0-s{sid}.avro", esch, merged,
+            sid, 0, version,
+            None,  # entries carry their seqs explicitly; none inherit
+            added_rows_count=0,
+            existing_rows_count=sum(
+                int(e["data_file"].get("record_count") or 0)
+                for e in merged
+            ),
+            first_row_id=None,
+        ))
+    return _commit_files(
+        table_path, version, meta, stem, new_rows,
+        {
             "operation": "replace",
             "rewritten-manifests": str(len(data_rows)),
             "added-manifests": str(len(new_rows)),
         },
-    }
-    if fmt >= 2:
-        new_snap["sequence-number"] = seq
-        meta["last-sequence-number"] = seq
-    if lineage:
-        # no rows added: the id space does not move
-        new_snap["first-row-id"] = int(meta["next-row-id"])
-    return commit_iceberg_snapshot(table_path, version, meta, new_snap)
+        carried=other_rows,
+    )
 
 
 def expire_iceberg_snapshots(
@@ -2926,7 +3113,7 @@ def expire_iceberg_snapshots(
     ordinary retention rules — Iceberg's bounded-life tags."""
     if keep_last < 1:
         raise ValueError("iceberg expire: keep_last must be >= 1")
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg expire: no table at {table_path}")
     snaps = meta.get("snapshots") or []
@@ -3224,7 +3411,7 @@ def set_iceberg_partition_spec(
         partition_field_name,
     )
 
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(
             f"iceberg partition spec: no table at {table_path}"
@@ -3304,7 +3491,7 @@ def set_iceberg_ref(
         raise ValueError(
             f"iceberg ref: type must be tag or branch, not {ref_type!r}"
         )
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg ref: no table at {table_path}")
     snaps = {s["snapshot-id"] for s in meta.get("snapshots") or []}
@@ -3347,7 +3534,7 @@ def publish_iceberg_branch(
     also removes the branch ref (the classic wap-branch cleanup).
     Publishing a branch already at main is a no-op (no version
     burn)."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg publish: no table at {table_path}")
     refs = dict(meta.get("refs") or {})
@@ -3406,7 +3593,7 @@ def drop_iceberg_ref(
 ) -> int:
     """DROP TAG / DROP BRANCH: remove ``refs[name]``; the snapshot it
     protected becomes expirable again. Raises on an unknown ref."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg ref: no table at {table_path}")
     refs = dict(meta.get("refs") or {})
@@ -3438,7 +3625,7 @@ def rollback_iceberg(
     its manifest list was deleted (``expire_iceberg_snapshots`` ran) —
     the twin of ``restore_delta``'s vacuumed-file refusal: rolling
     back to silently-missing data would corrupt the table."""
-    prev_version, meta = open_iceberg_table(table_path)
+    prev_version, meta = _ice.open_iceberg_table(table_path)
     if meta is None:
         raise ValueError(f"iceberg rollback: no table at {table_path}")
     snaps = meta.get("snapshots") or []

@@ -25,10 +25,11 @@ format:
 
 Each format keeps its own log or metadata replay, idempotence check,
 schema evolution, live-file listing and partition pruning, hit-file
-read, change rows and new-file stats. Both commit through the one
-put-if-absent primitive here (:func:`set_log_store`): a Delta log entry
-and an Iceberg ``v<N>.metadata.json`` land only if no other writer
-took that version first.
+read, change rows and new-file stats. Both publish their data files
+through the one data store here (:func:`set_data_store`) and commit
+through the one put-if-absent primitive (:func:`set_log_store`): a
+Delta log entry and an Iceberg ``v<N>.metadata.json`` land only if no
+other writer took that version first.
 
 Keys order the way Spark orders them: NaN above every other float. A
 file whose max-key stat is NaN therefore still covers every finite key
@@ -741,3 +742,27 @@ def set_log_store(put_if_absent) -> None:
     test double). Pass ``None`` to restore the POSIX default."""
     global _put_if_absent
     _put_if_absent = put_if_absent or _posix_put_if_absent
+
+
+# The data-store seam, shared by both formats: every DATA byte a writer
+# publishes under a table root (Delta data, cdc and deletion-vector
+# files; Iceberg data, delete and Puffin files) goes through ONE
+# injectable primitive, "upload local ``src`` to ``dst``". Data names
+# and their staging dirs carry a random per-commit token, so they are
+# writer-unique and no conditional PUT is needed: a file only becomes
+# live when the commit referencing it wins, which is the log store's
+# job. Callers read ``merge_core._put_data`` at call time.
+def _posix_put_data(src: str, dst: str) -> None:
+    os.replace(src, dst)
+
+
+_put_data = _posix_put_data
+
+
+def set_data_store(put_data) -> None:
+    """Inject the data-file publisher (object-store upload or a test
+    double); ``put_data(src_local_path, dst_path)`` must make ``dst``
+    readable with ``src``'s bytes (and may remove ``src``). Pass
+    ``None`` to restore the POSIX rename."""
+    global _put_data
+    _put_data = put_data or _posix_put_data

@@ -17,10 +17,8 @@ import threading
 import pytest
 
 from optimus_any2any_spark.sources import iceberg as ice
-from optimus_any2any_spark.sources.iceberg import (
-    read_iceberg,
-    write_iceberg_commit,
-)
+from optimus_any2any_spark.sources.iceberg import read_iceberg
+from optimus_any2any_spark.streaming.iceberg_table import write_iceberg_commit
 from optimus_any2any_spark.streaming import delta_table, merge_core
 from optimus_any2any_spark.streaming.delta_table import (
     merge_delta_batch,
@@ -107,6 +105,59 @@ class TestIcebergSecondWriter:
             assert f.read() == "1"
         assert [n for n in os.listdir(md) if n.endswith(".tmp")] == []
         assert _snap(read_iceberg(spark, t)) == [(1, "a")]
+
+
+class TestIcebergDataSeam:
+    def test_every_file_goes_through_the_data_store(self, spark, tmp_path):
+        # one set_data_store governs both formats: every data, delete
+        # and Puffin file an Iceberg writer adds is published through it
+        from optimus_any2any_spark.streaming.iceberg_table import (
+            compact_iceberg,
+            delete_iceberg_keys,
+            delete_iceberg_positions,
+            merge_iceberg_batch,
+            update_iceberg_where,
+        )
+
+        t = str(tmp_path / "tbl")
+        puts = []
+
+        def put_data(src, dst):
+            puts.append(os.path.normpath(dst))
+            os.replace(src, dst)
+
+        def kv(vals):
+            return spark.createDataFrame(vals, "k long, v string, ts long")
+
+        def keys(*ks):
+            return spark.createDataFrame([(k,) for k in ks], "k long")
+
+        set_data_store(put_data)
+        try:
+            write_iceberg_commit(
+                kv([(1, "a", 0), (2, "a", 0)]).coalesce(1), t
+            )
+            merge_iceberg_batch(
+                spark, kv([(2, "m", 1), (3, "m", 1), (4, "m", 1)]), t,
+                "k", "ts",
+            )
+            update_iceberg_where(spark, t, {"v": "'u'"}, "k = 3")
+            assert compact_iceberg(spark, t) is not None
+            delete_iceberg_keys(spark, t, "k", keys(1))
+            delete_iceberg_positions(
+                spark, t, "k", keys(4), use_deletion_vectors=True
+            )
+        finally:
+            set_data_store(None)
+        data = os.path.join(t, "data")
+        assert sorted(puts) == sorted(
+            os.path.join(data, n) for n in os.listdir(data)
+        )
+        assert {os.path.splitext(p)[1] for p in puts} == {
+            ".parquet", ".puffin"
+        }
+        assert _snap(read_iceberg(spark, t)) == [(2, "m"), (3, "u")]
+        assert merge_core._put_data is merge_core._posix_put_data
 
 
 class TestDeltaSecondWriter:

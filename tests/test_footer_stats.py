@@ -27,7 +27,7 @@ from optimus_any2any_spark.formats.footer_stats import (
     kind_of_spark_type,
 )
 from optimus_any2any_spark.streaming.delta_table import _collect_file_stats
-from optimus_any2any_spark.streaming.iceberg_table import _per_file_key_stats
+from optimus_any2any_spark.streaming.iceberg_table import _file_stats
 
 
 MIXED_SCHEMA = T.StructType(
@@ -295,6 +295,10 @@ class TestDeltaFooterStats:
         assert st["maxValues"]["s"] == "v99999"
 
 
+def _paths(table, rels):
+    return [os.path.join(table, r) for r in rels]
+
+
 class TestIcebergFooterStats:
     def test_key_stats_match_aggregate(self, spark, tmp_path):
         table = str(tmp_path / "ice")
@@ -315,9 +319,9 @@ class TestIcebergFooterStats:
             f"data/{os.path.basename(p)}"
             for p in glob.glob(f"{table}/data/part-*.parquet")
         ]
-        got = _per_file_key_stats(spark, table, rels, "k", "long")
+        got = _file_stats(spark, _paths(table, rels), [("k", 1, "long")])
         (st,) = got.values()
-        assert st == {"rows": 3, "min_key": 2, "max_key": 5, "n_null": 1}
+        assert st == {"rows": 3, "cols": {"k": (2, 5, 1)}}
 
     def test_string_key_and_no_key(self, spark, tmp_path):
         table = str(tmp_path / "ice2")
@@ -338,10 +342,12 @@ class TestIcebergFooterStats:
             f"data/{os.path.basename(p)}"
             for p in glob.glob(f"{table}/data/part-*.parquet")
         ]
-        (st,) = _per_file_key_stats(spark, table, rels, "k", "string").values()
-        assert st == {"rows": 2, "min_key": "a", "max_key": "b", "n_null": 0}
-        (st,) = _per_file_key_stats(spark, table, rels, None, None).values()
-        assert st["rows"] == 2 and st["min_key"] is None
+        (st,) = _file_stats(
+            spark, _paths(table, rels), [("k", 1, "string")]
+        ).values()
+        assert st == {"rows": 2, "cols": {"k": ("a", "b", 0)}}
+        (st,) = _file_stats(spark, _paths(table, rels), []).values()
+        assert st == {"rows": 2, "cols": {}}
 
     def test_unbounded_type_nulls_only(self, spark, tmp_path):
         """Types encode_bound can't serialize still get exact rows and
@@ -362,11 +368,12 @@ class TestIcebergFooterStats:
         assert kind_of_iceberg_type("date") == "nulls_only"
         sc = spark.sparkContext
         sc.setJobGroup("ice-footer-probe", "probe", False)
-        (st,) = _per_file_key_stats(spark, table, rels, "k", "date").values()
+        (st,) = _file_stats(
+            spark, _paths(table, rels), [("k", 1, "date")]
+        ).values()
         n_jobs = len(
             sc.statusTracker().getJobIdsForGroup("ice-footer-probe")
         )
         sc.setJobGroup("", "", False)
-        assert st == {"rows": 2, "min_key": None, "max_key": None,
-                      "n_null": 1}
+        assert st == {"rows": 2, "cols": {"k": (None, None, 1)}}
         assert n_jobs == 0

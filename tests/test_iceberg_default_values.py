@@ -20,11 +20,11 @@ from optimus_any2any_spark.sources.iceberg import (
     add_iceberg_column_with_default,
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     delete_iceberg_where,
     merge_iceberg_batch,
+    write_iceberg_commit,
 )
 
 

@@ -15,6 +15,8 @@ from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
     read_iceberg_appends,
+)
+from optimus_any2any_spark.streaming.iceberg_table import (
     write_iceberg_commit,
     write_iceberg_delete_commit,
 )

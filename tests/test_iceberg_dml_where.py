@@ -18,13 +18,13 @@ from optimus_any2any_spark.sources.iceberg import (
     _snapshot_entries,
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     delete_iceberg_keys,
     delete_iceberg_where,
     merge_iceberg_batch,
     update_iceberg_where,
+    write_iceberg_commit,
 )
 
 

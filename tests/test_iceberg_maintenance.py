@@ -13,13 +13,13 @@ import pytest
 from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     compact_iceberg,
     delete_iceberg_keys,
     expire_iceberg_snapshots,
     merge_iceberg_batch,
+    write_iceberg_commit,
 )
 
 
@@ -844,13 +844,11 @@ class TestPartitionsMetadataTable:
     def test_partitions_counts_and_deletes(self, spark, tmp_path):
         """`partitions` metadata table: per-tuple data record/file
         totals; delete files count against their gating partition."""
-        from optimus_any2any_spark.sources.iceberg import (
-            read_iceberg_metadata,
-            write_iceberg_commit,
-        )
+        from optimus_any2any_spark.sources.iceberg import read_iceberg_metadata
         from optimus_any2any_spark.streaming.iceberg_table import (
             delete_iceberg_keys,
             merge_iceberg_batch,
+            write_iceberg_commit,
         )
 
         t = str(tmp_path / "tbl")
@@ -897,8 +895,8 @@ class TestPartitionsMetadataTable:
         ) >= 1
 
     def test_unpartitioned_single_row(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.iceberg import (
-            read_iceberg_metadata,
+        from optimus_any2any_spark.sources.iceberg import read_iceberg_metadata
+        from optimus_any2any_spark.streaming.iceberg_table import (
             write_iceberg_commit,
         )
 
@@ -1017,13 +1015,11 @@ class TestEntriesMetadataTable:
         """`entries`: live manifest entries with effective sequence
         numbers — a MoR delete's entry outranks the data files it
         gates (seq inheritance), partition tuples render decoded."""
-        from optimus_any2any_spark.sources.iceberg import (
-            read_iceberg_metadata,
-            write_iceberg_commit,
-        )
+        from optimus_any2any_spark.sources.iceberg import read_iceberg_metadata
         from optimus_any2any_spark.streaming.iceberg_table import (
             delete_iceberg_keys,
             merge_iceberg_batch,
+            write_iceberg_commit,
         )
 
         t = str(tmp_path / "tbl")
@@ -1060,8 +1056,8 @@ class TestEntriesMetadataTable:
         )
 
     def test_entries_empty_table(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.iceberg import (
-            read_iceberg_metadata,
+        from optimus_any2any_spark.sources.iceberg import read_iceberg_metadata
+        from optimus_any2any_spark.streaming.iceberg_table import (
             write_iceberg_commit,
         )
 

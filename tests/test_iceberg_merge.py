@@ -4,6 +4,7 @@ idempotence, snapshot time travel through merges."""
 
 from __future__ import annotations
 
+import json
 import os
 import struct
 
@@ -679,8 +680,8 @@ class TestPartitionEvolution:
         mergeSchema twin): new columns append with fresh field ids
         under a new schema-id; pre-evolution files read them null;
         a narrower later batch null-fills."""
-        from optimus_any2any_spark.sources.iceberg import (
-            load_table_metadata,
+        from optimus_any2any_spark.sources.iceberg import load_table_metadata
+        from optimus_any2any_spark.streaming.iceberg_table import (
             write_iceberg_commit,
         )
 
@@ -717,6 +718,31 @@ class TestPartitionEvolution:
         merge_iceberg_batch(
             spark, narrow, t, "k", "ts", batch_id=2, merge_schema=True
         )
+        # an append carries the table's metadata forward whole: a
+        # foreign table-uuid, the partition-id counter, the metadata
+        # log and statistics survive, and so does the location when
+        # the path is spelled with a trailing slash
+        md = os.path.join(t, "metadata")
+        with open(os.path.join(md, "version-hint.text")) as f:
+            cur = os.path.join(md, f"v{int(f.read())}.metadata.json")
+        with open(cur) as f:
+            meta = json.load(f)
+        kept = {
+            "table-uuid": "5a0c6b4e-1d2f-4c3b-9a8e-7f6d5c4b3a21",
+            "last-partition-id": 1000,
+            "metadata-log": [
+                {"timestamp-ms": 1, "metadata-file": "metadata/v0.json"}
+            ],
+            "statistics": [
+                {"snapshot-id": 1, "statistics-path": "metadata/s.puffin",
+                 "file-size-in-bytes": 1, "file-footer-size-in-bytes": 1,
+                 "blob-metadata": []}
+            ],
+            "location": meta["location"],
+        }
+        meta.update(kept)
+        with open(cur, "w") as f:
+            json.dump(meta, f)
         app = spark.createDataFrame(
             [(50, 5.0, 3, "app")],
             "k long, price double, ts long, tag string",
@@ -725,6 +751,12 @@ class TestPartitionEvolution:
         meta = load_table_metadata(t)
         assert meta["current-schema-id"] == 1
         assert read_iceberg(spark, t).count() == 4
+        write_iceberg_commit(
+            app.withColumn("k", app.k + 1), t + "/"
+        )
+        meta = load_table_metadata(t)
+        assert {k: meta.get(k) for k in kept} == kept
+        assert read_iceberg(spark, t).count() == 5
         with pytest.raises(ValueError, match="do not evolve"):
             write_iceberg_commit(narrow, t)
         # same NAMES but drifted TYPES must refuse too — else the

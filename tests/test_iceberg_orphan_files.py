@@ -16,12 +16,12 @@ import pytest
 from optimus_any2any_spark.sources.iceberg import (
     add_iceberg_files,
     read_iceberg,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     delete_iceberg_keys,
     merge_iceberg_batch,
     remove_iceberg_orphan_files,
+    write_iceberg_commit,
 )
 
 

@@ -16,8 +16,8 @@ from optimus_any2any_spark.formats.avrobin import (
 from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
+from optimus_any2any_spark.streaming.iceberg_table import write_iceberg_commit
 
 
 def _rows(spark, vals):
@@ -301,8 +301,8 @@ class TestIcebergSnapshots:
             read_iceberg(spark, t)
 
     def test_v3_puffin_dv_refused_by_name(self, spark, tmp_path):
-        from optimus_any2any_spark.sources.iceberg import (
-            _snapshot_entries,
+        from optimus_any2any_spark.sources.iceberg import _snapshot_entries
+        from optimus_any2any_spark.streaming.iceberg_table import (
             write_iceberg_delete_commit,
         )
 

@@ -14,12 +14,12 @@ from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
     read_iceberg_changes,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     delete_iceberg_keys,
     merge_iceberg_batch,
     rewrite_iceberg_manifests,
+    write_iceberg_commit,
 )
 
 

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     compact_iceberg,
@@ -23,6 +22,7 @@ from optimus_any2any_spark.streaming.iceberg_table import (
     delete_iceberg_where,
     merge_iceberg_batch,
     update_iceberg_where,
+    write_iceberg_commit,
 )
 
 

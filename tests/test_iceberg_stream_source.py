@@ -7,7 +7,7 @@ import time
 
 import pytest
 
-from optimus_any2any_spark.sources.iceberg import write_iceberg_commit
+from optimus_any2any_spark.streaming.iceberg_table import write_iceberg_commit
 from optimus_any2any_spark.sources.iceberg_stream import (
     IcebergTailDataSource,
 )
@@ -406,3 +406,29 @@ def test_encrypted_table_refused_by_name(spark, tmp_path):
         rdr.start_sid = None
         with pytest.raises(NotImplementedError, match="encryption"):
             rdr.partitions({"sid": None}, {"sid": 1})
+
+
+def test_source_unpickles_without_the_package(tmp_path):
+    """The data-source runner has no package on its path: the pickled
+    source must carry every package module it reaches by value. Loads
+    it in a fresh interpreter outside the checkout, no PYTHONPATH."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "source.pkl"
+    blob.write_bytes(cloudpickle.dumps(IcebergTailDataSource))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import pickle, sys; "
+            "pickle.loads(open(sys.argv[1], 'rb').read())",
+            str(blob),
+        ],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]

@@ -19,7 +19,6 @@ from optimus_any2any_spark.sources.iceberg import (
     read_iceberg,
     resolve_iceberg_timestamp,
     set_clock,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     compact_iceberg,
@@ -27,6 +26,7 @@ from optimus_any2any_spark.streaming.iceberg_table import (
     expire_iceberg_snapshots,
     merge_iceberg_batch,
     rollback_iceberg,
+    write_iceberg_commit,
 )
 
 

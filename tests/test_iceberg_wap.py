@@ -15,7 +15,6 @@ from optimus_any2any_spark.sources.iceberg import (
     load_table_metadata,
     read_iceberg,
     read_iceberg_changes,
-    write_iceberg_commit,
 )
 from optimus_any2any_spark.streaming.iceberg_table import (
     compact_iceberg,
@@ -23,6 +22,7 @@ from optimus_any2any_spark.streaming.iceberg_table import (
     drop_iceberg_ref,
     merge_iceberg_batch,
     publish_iceberg_branch,
+    write_iceberg_commit,
 )
 
 

@@ -16,8 +16,8 @@ from optimus_any2any_spark.sources.iceberg import (
     add_iceberg_files,
     load_table_metadata,
     read_iceberg,
-    write_iceberg_commit,
 )
+from optimus_any2any_spark.streaming.iceberg_table import write_iceberg_commit
 from optimus_any2any_spark.streaming.delta_table import (
     convert_parquet_to_delta,
     delete_delta_where,
