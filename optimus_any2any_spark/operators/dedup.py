@@ -28,7 +28,9 @@ import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from optimus_any2any_spark.localrel import local_rows_df
 from optimus_any2any_spark.operators.text import tokens
 from optimus_any2any_spark.operators.util import ensure_parallelism
 
@@ -373,36 +375,103 @@ def minhash_dedup_pairs(
     )
 
 
+#: Pair graphs with at most this many edges are labelled on the driver:
+#: one bounded collect, then union-find. Larger ones run distributed
+#: min-label propagation. The same exact-when-small rule as
+#: ``merge_core._MAX_DRIVER_KEYS``.
+_MAX_DRIVER_EDGES = 100_000
+
+
 def connected_components(
     pairs: DataFrame, max_iterations: int = 20
 ) -> DataFrame:
-    """Label-propagation connected components over a dup-pair graph:
-    (doc_id, component_id) where component_id = min doc id reachable.
+    """Connected components of a dup-pair graph: (doc_id,
+    component_id) where component_id = min doc id reachable.
 
-    Iterative small-label propagation, fully distributed: each round
-    every node adopts the minimum label in its neighborhood; converges
-    in O(component diameter) rounds (near-dup clusters are tiny — pairs,
-    triples — so a handful of rounds suffices even at corpus scale).
-    The per-round work is one join + one aggregate on the (small,
-    post-LSH) pair set, never on the corpus.
+    Near-dup pair graphs are small after LSH and verification, so the
+    method follows the graph's size:
 
-    Each round materializes through ``localCheckpoint``: lineage (and
-    plan size) stays constant across iterations, and the convergence
-    check reads the materialized round — one job per round total,
-    instead of re-deriving an ever-growing plan for both the check and
-    the next round. (At cluster scale prefer a reliable checkpoint dir
-    if executor loss is a concern; the shape is identical.)
+    - At most ``_MAX_DRIVER_EDGES`` pairs: ``doc_a``/``doc_b`` are
+      collected (a bounded take) and labelled by union-find on the
+      driver, exactly, whatever the components' diameter;
+      ``max_iterations`` does not apply. The labels come back through
+      ``local_rows_df``: a local relation that reads without a job for
+      the common id types, up to its 20,000-row limit; a graph with
+      more nodes comes back as an RDD-backed frame.
+    - Above it: min-label propagation, fully distributed. Each round
+      every node adopts the minimum label of its neighbourhood (one
+      join and one aggregate on the pair set), so a component settles
+      in its diameter plus one confirming round. Each round is lazily
+      ``localCheckpoint``-ed, so the plan stays the same size however
+      many rounds run, and ends in one convergence job. If labels are
+      still changing after ``max_iterations`` rounds, ``RuntimeError``
+      is raised: partial labels are never returned.
+
+    The id columns keep their Spark type (``doc_a`` and ``doc_b``
+    widened to one type, as a union does). A self-pair is a node of
+    its own; a null id joins nothing and is labelled null.
     """
-    # edges feed every propagation round (twice per round with the
-    # label join); persist once or each round re-derives the ENTIRE
-    # upstream candidate-pair pipeline (shingle explode, posting
-    # lists, verification) as lineage — measured 6.8s -> ~2s on the
-    # cluster-stats composite at sf0.1
+    id_type = (
+        pairs.select("doc_a").union(pairs.select("doc_b")).schema[0].dataType
+    )
+    ends = pairs.select(
+        F.col("doc_a").cast(id_type).alias("a"),
+        F.col("doc_b").cast(id_type).alias("b"),
+    )
+    rows = ends.limit(_MAX_DRIVER_EDGES + 1).collect()
+    if len(rows) <= _MAX_DRIVER_EDGES:
+        schema = T.StructType([
+            T.StructField("doc_id", id_type),
+            T.StructField("component_id", id_type),
+        ])
+        return local_rows_df(pairs.sparkSession, _union_find(rows), schema)
+    # the pair pipeline upstream (shingles, LSH, verification) runs
+    # once more here. Pinning ``ends`` before the take would cost every
+    # small graph a cache build: on the dedup_corpus pairs a persist
+    # doubled the call's time, a lazy localCheckpoint added five jobs.
+    return _propagate(ends, max_iterations)
+
+
+def _union_find(rows: list) -> list[tuple]:
+    """(id, component minimum) for every id of the (a, b) ``rows``."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for a, b in rows:
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    find(x)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root stays the root, so every root is the
+            # minimum of its component
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return [(x, find(x)) for x in parent] + (
+        [(None, None)] if has_null else []
+    )
+
+
+def _propagate(ends: DataFrame, max_iterations: int) -> DataFrame:
+    """Min-label propagation over the (a, b) ``ends``."""
+    # edges feed every round's join: pinned once, or each round
+    # re-derives them and the whole pair pipeline above; unlike a
+    # persist, the ContextCleaner frees the checkpoint with the result
     edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .union(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+        ends.union(ends.select("b", "a"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     labels = (
         edges.select(F.col("a").alias("id"))
@@ -433,9 +502,14 @@ def connected_components(
         changed = updated.filter(F.col("_changed")).limit(1).count()
         labels = updated.drop("_changed")
         if changed == 0:
-            break
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("component_id")
+            return labels.select(
+                F.col("id").alias("doc_id"),
+                F.col("label").alias("component_id"),
+            )
+    raise RuntimeError(
+        f"connected_components: labels still changing after "
+        f"max_iterations={max_iterations} propagation rounds; raise "
+        f"the budget"
     )
 
 

@@ -1,11 +1,12 @@
 """Iterative graph algorithms as bounded driver-side loops of joins.
 
 Spark has no native iteration operator; the idiomatic shape for
-fixed-point algorithms (PageRank, label propagation) is a driver loop
-where each round is one join+aggregate — the loop count is tiny
-(O(diameter) or a fixed iteration budget) while each round is fully
-distributed. ``connected_components`` (operators/dedup.py) uses the
-same shape; this module adds weighted PageRank.
+fixed-point algorithms is a driver loop where each round is one
+join+aggregate — the loop count is tiny (a fixed iteration budget)
+while each round is fully distributed. This module holds weighted
+PageRank. ``connected_components`` (operators/dedup.py) labels small
+pair graphs on the driver and runs label propagation, this same
+shape, only above its driver cap.
 
 Determinism: rank contributions are summed through DECIMAL(28,12) so
 every round's ranks are identical on any partitioning — which is what
@@ -39,10 +40,11 @@ def pagerank(
     the edge list + one decimal-exact aggregate; the loop runs on the
     driver but every round's work is distributed.
 
-    Every ``checkpoint_interval`` rounds the rank frame materializes
-    through ``localCheckpoint``, so lineage/plan size stays bounded for
-    large iteration budgets instead of nesting one join+aggregate per
-    round into a single ever-deeper plan.
+    Every ``checkpoint_interval`` rounds the rank frame goes through a
+    lazy ``localCheckpoint`` (it materializes with the first action
+    that reads it), so lineage/plan size stays bounded for large
+    iteration budgets instead of nesting one join+aggregate per round
+    into a single ever-deeper plan.
 
     Returns (node, rank) after ``iterations`` rounds.
     """
@@ -90,5 +92,5 @@ def pagerank(
             )
         )
         if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            pr = pr.localCheckpoint(eager=True)
+            pr = pr.localCheckpoint(eager=False)
     return pr

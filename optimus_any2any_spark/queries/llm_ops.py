@@ -379,9 +379,11 @@ def dedup_simhash_hamming60(spark, sf_dir):
     FROM reach GROUP BY a
     ORDER BY doc_id
     """,
-    doc="Connected components over the near-dup pair graph: iterative "
-    "label propagation in Spark (O(diameter) rounds of join+min on the "
-    "post-LSH pair set), recursive-CTE transitive closure as oracle.",
+    doc="Connected components over the near-dup pair graph: union-find "
+    "on the driver for post-LSH pair sets up to 100k pairs, label "
+    "propagation in Spark above that (O(diameter) rounds, raising when "
+    "the round budget runs out); recursive-CTE transitive closure as "
+    "oracle.",
 )
 def dedup_components(spark, sf_dir):
     d = load(spark, sf_dir, "documents")

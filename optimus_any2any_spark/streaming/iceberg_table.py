@@ -896,6 +896,50 @@ def _parse_pspec(
     return pspec
 
 
+def _with_pvs(frame: DataFrame, pspec: list[dict]) -> DataFrame:
+    """``frame`` plus ``__pv{i}``: each row's value under the i-th field
+    of ``pspec`` (a :func:`_parse_pspec` result)."""
+    from optimus_any2any_spark.sources.iceberg_transforms import (
+        transform_column,
+    )
+
+    return frame.select("*", *[
+        transform_column(
+            p["transform"], F.col(p["src"]), p["src_type"]
+        ).alias(f"__pv{i}")
+        for i, p in enumerate(pspec)
+    ])
+
+
+def _route(
+    frame: DataFrame, pspec: list[dict], cols: list[str]
+) -> tuple[DataFrame, list, bool]:
+    """``(routed, ptuples, single)`` for writing ``frame`` under the
+    partitioned spec ``pspec``: ``routed`` is ``frame``'s ``cols`` plus
+    ``__pid``, the position of the row's partition tuple in
+    ``ptuples``; ``single`` when there is one tuple (a constant pid,
+    no routing join).
+
+    ``frame`` is pinned first (a lazy ``localCheckpoint``), so the
+    distinct job that collects the tuples and the write that routes
+    by them read the same rows, and the upstream runs once: a
+    partition value that differs between runs (a nondeterministic
+    source, ``current_timestamp()`` across a day boundary) can neither
+    drop a row nor file it under a wrong tuple."""
+    pv_cols = [f"__pv{i}" for i in range(len(pspec))]
+    pinned = _with_pvs(frame, pspec).localCheckpoint(eager=False)
+    ptuples, _ = pid_space({
+        tuple(r): None
+        for r in pinned.select(*pv_cols).distinct().collect()
+    })
+    single = len(ptuples) == 1
+    pid_df = (
+        None if single
+        else pid_table(frame.sparkSession, pinned, pv_cols, ptuples)
+    )
+    return with_pid(pinned, pid_df, pv_cols, cols), ptuples, single
+
+
 def _current_schema_fields(meta: dict) -> dict[int, dict]:
     if "schemas" in meta:
         sid = meta.get("current-schema-id", 0)
@@ -1003,7 +1047,9 @@ def write_iceberg_commit(
     commit only) declares the partition spec in the new table's
     metadata — the bootstrap for ``merge_iceberg_batch``'s partitioned
     tables, which write the actual partition-grouped files and
-    manifest partition tuples.
+    manifest partition tuples. Appending to a table whose default
+    spec is partitioned routes the rows to their partition tuples the
+    same way (the frame is pinned; one extra distinct job).
 
     ``row_lineage=True`` (or appending to a table that already
     carries ``next-row-id``) maintains v3 ROW LINEAGE: every added
@@ -1072,10 +1118,22 @@ def write_iceberg_commit(
             "iceberg append: partition_by declares a NEW table's spec — "
             "evolve an existing table with set_iceberg_partition_spec"
         )
+    pspec: list[dict] = []  # the default spec an APPEND routes rows by
+    if prev is not None:
+        dspec = next(
+            (
+                s
+                for s in prev.get("partition-specs") or []
+                if s.get("spec-id") == int(prev.get("default-spec-id", 0))
+            ),
+            None,
+        )
+        by_fid = {int(f["id"]): f for f in _current_schema(prev)["fields"]}
     if prev is not None and add_files is None:
         # v3 write-default: fill columns the df omits BEFORE the data
         # write, so the new files physically carry the value
         df = _apply_write_defaults(df, prev)
+        pspec = _parse_pspec(dspec, by_fid, "append")
     version = prev_version + 1
     stem = f"{version:05d}-{uuid.uuid4().hex}"  # writer-unique names
 
@@ -1089,18 +1147,9 @@ def write_iceberg_commit(
                 "fresh-table bootstrap only — an existing table "
                 "already declares its spec"
             )
-        dspec = next(
-            (
-                s
-                for s in prev.get("partition-specs") or []
-                if s.get("spec-id") == int(prev.get("default-spec-id", 0))
-            ),
-            None,
-        )
         # partitioned registration: values derive from the files' hive
         # path segments, so only IDENTITY fields (whose value IS the
         # path value) are derivable
-        by_fid = {int(f["id"]): f for f in _current_schema(prev)["fields"]}
         for pf in (dspec or {}).get("fields") or []:
             tr = str(pf.get("transform") or "")
             if tr != "identity":
@@ -1244,9 +1293,20 @@ def write_iceberg_commit(
 
     if add_files is None:
         tmp = _staging(table_path, "append", stem)
-        df.write.mode("overwrite").parquet(tmp)
+        if pspec:
+            # rows go to their partition tuples under the default spec,
+            # as a merge routes them
+            routed, ptuples, single = _route(df, pspec, df.columns)
+            (
+                routed.drop("__pid").write if single
+                else routed.write.partitionBy("__pid")
+            ).mode("overwrite").parquet(tmp)
+        else:
+            ptuples, single = [()], True
+            df.write.mode("overwrite").parquet(tmp)
         files = _publish_parts(
-            table_path, tmp, local_parts(tmp, True), stem, "append"
+            table_path, tmp, local_parts(tmp, single), stem, "append",
+            [p["name"] for p in pspec], ptuples,
         )
     else:
         # the collision guard spans the files ALREADY in the table too:
@@ -1308,11 +1368,13 @@ def write_iceberg_commit(
         # days, timestamps → long micros), as in the transform writers
         manifest_entry_schema(
             [(pn, avro_type_of_result(t)) for pn, _s, t in add_part_fields]
+            + [(p["name"], avro_type_of_result(p["res_type"]))
+               for p in pspec]
         ),
         entries,
-        # a partitioned registration's entries live under the table's
-        # default spec (readers key the constants map off this id)
-        int(meta.get("default-spec-id", 0)) if add_part_fields else 0,
+        # the entries live under the table's default spec (readers key
+        # the constants map off this id)
+        int(meta.get("default-spec-id", 0)),
         0, version,
         # v2 sequence inheritance: a file appended AFTER a delete
         # outranks it (a re-inserted row must stay alive)
@@ -1506,7 +1568,6 @@ def merge_iceberg_batch(
 
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        transform_column,
     )
 
     # partition spec → one computed partition-VALUE column per field.
@@ -1548,17 +1609,6 @@ def merge_iceberg_batch(
             "partition column"
         )
     pv_cols = [f"__pv{i}" for i in range(len(pspec))]
-
-    def _with_pvs(frame):
-        for i, p in enumerate(pspec):
-            frame = frame.withColumn(
-                pv_cols[i],
-                transform_column(
-                    p["transform"], F.col(p["src"]), p["src_type"]
-                ),
-            )
-        return frame
-
     if _applied(meta, app_id, batch_id):
         return prev_version
     snaps = meta.get("snapshots") or []
@@ -1647,7 +1697,9 @@ def merge_iceberg_batch(
     # the dedupe window and every partition-scoped step below key on
     # the TRANSFORMED partition values (__pv*), computed once here and
     # pinned by the checkpoint — identity specs make them plain copies
-    latest, gstats = reduce_batch(_with_pvs(batch), key_col, ts_col, pv_cols)
+    latest, gstats = reduce_batch(
+        _with_pvs(batch, pspec), key_col, ts_col, pv_cols
+    )
     n_total = sum(int(r["n"]) for r in gstats)
     if n_total == 0 and not when_not_matched_by_source:
         # (an EMPTY source with when_not_matched_by_source is still a
@@ -1917,7 +1969,8 @@ def merge_iceberg_batch(
         # touch — the same pid-space extension partition evolution
         # needs (one distinct aggregate over the affected rows)
         cur0 = _read_hit_files()
-        for r in _with_pvs(cur0).select(*pv_cols).distinct().collect():
+        pvs = _with_pvs(cur0, pspec).select(*pv_cols)
+        for r in pvs.distinct().collect():
             pt = tuple(r[c] for c in pv_cols)
             if pt not in pid_of:
                 pstats[pt] = empty_key_stats()
@@ -1944,8 +1997,8 @@ def merge_iceberg_batch(
         # pid extension above)
         cur = cur0 if cur0 is not None else _read_hit_files()
         cur_p = with_pid(
-            _with_pvs(cur) if pid_df is not None else cur, pid_df, pv_cols,
-            [*data_cols, *lineage_cols],
+            _with_pvs(cur, pspec) if pid_df is not None else cur,
+            pid_df, pv_cols, [*data_cols, *lineage_cols],
         )
         hit_rows = sum(
             int(e["data_file"]["record_count"]) for e in hit_entries
@@ -2399,7 +2452,6 @@ def update_iceberg_where(
     )
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
-        transform_column,
     )
 
     if not set or not isinstance(set, dict):
@@ -2455,30 +2507,13 @@ def update_iceberg_where(
             for c in schema.fieldNames()
         ]
     )
-    pv_cols = [f"__pv{i}" for i in range(len(pspec))]
-    upd_pv = updated
-    for i, p in enumerate(pspec):
-        upd_pv = upd_pv.withColumn(
-            pv_cols[i],
-            transform_column(p["transform"], F.col(p["src"]),
-                             p["src_type"]),
-        )
     if pspec:
-        ptuples = sorted(
-            (
-                tuple(r[c] for c in pv_cols)
-                for r in upd_pv.select(*pv_cols).distinct().collect()
-            ),
-            key=str,
+        routed, ptuples, single = _route(
+            updated, pspec, schema.fieldNames()
         )
     else:
-        ptuples = [()]
-    single = len(ptuples) == 1
-    routed = with_pid(
-        upd_pv,
-        None if single else pid_table(spark, upd_pv, pv_cols, ptuples),
-        pv_cols, schema.fieldNames(),
-    )
+        ptuples, single = [()], True
+        routed = with_pid(updated, None, [], schema.fieldNames())
     tmp = _staging(table_path, "update", stem)
     write_merged(
         routed, schema.fieldNames()[0], n_upd, target_rows_per_file, tmp,

@@ -296,6 +296,75 @@ class TestPartitionedMerge:
         assert files_before == files_after  # d2's data untouched
         assert _psnap(spark, t) == [(1, "A", "d1"), (2, "b", "d2")]
 
+    def test_append_routes_rows_to_partition_tuples(self, spark, tmp_path):
+        from optimus_any2any_spark.streaming.iceberg_table import (
+            write_iceberg_commit,
+        )
+
+        # an APPEND that listed its files without partition values let
+        # the next merge prune them and keep key 1 twice
+        t = str(tmp_path / "tbl")
+        write_iceberg_commit(_pkv(spark, []), t, partition_by=["d"])
+        write_iceberg_commit(
+            _pkv(spark, [(1, "a", 0, "x"), (2, "b", 0, "y")]), t
+        )
+        _meta, manifests = _current_manifests(spark, t)
+        pts = []
+        for m in manifests:
+            _, entries = read_container(_localize(t, m["manifest_path"]))
+            pts += [e["data_file"]["partition"]["d"] for e in entries]
+        assert sorted(pts) == ["x", "y"]
+        merge_iceberg_batch(
+            spark, _pkv(spark, [(1, "new", 1, "x")]), t, "k", "ts"
+        )
+        assert _psnap(spark, t) == [(1, "new", "x"), (2, "b", "y")]
+        # a transform spec routes by the transformed value
+        t2 = str(tmp_path / "days")
+        write_iceberg_commit(_tkv(spark, []), t2, partition_by=["days(t)"])
+        write_iceberg_commit(
+            _tkv(spark, [(1, "a", 0, "2024-03-01T10:00:00"),
+                         (1, "b", 0, "2024-03-02T10:00:00")]),
+            t2,
+        )
+        merge_iceberg_batch(
+            spark, _tkv(spark, [(1, "A", 1, "2024-03-01T04:00:00")]),
+            t2, "k", "ts",
+        )
+        assert sorted(
+            (r.k, r.v, str(r.t.date()))
+            for r in read_iceberg(spark, t2).collect()
+        ) == [(1, "A", "2024-03-01"), (1, "b", "2024-03-02")]
+
+    def test_append_pins_nondeterministic_partition_values(
+        self, spark, tmp_path
+    ):
+        import uuid
+
+        from pyspark.sql import functions as F
+
+        from optimus_any2any_spark.streaming.iceberg_table import (
+            write_iceberg_commit,
+        )
+
+        # a partition value that changes every time the frame runs: the
+        # tuples collected and the rows written must come from one run
+        fresh = F.udf(lambda: uuid.uuid4().hex).asNondeterministic()
+        t = str(tmp_path / "tbl")
+        write_iceberg_commit(_pkv(spark, []), t, partition_by=["d"])
+        write_iceberg_commit(
+            _pkv(spark, [(k, "v", 0, "") for k in range(6)])
+            .withColumn("d", fresh()),
+            t,
+        )
+        rows = read_iceberg(spark, t).collect()
+        assert sorted(r.k for r in rows) == list(range(6))
+        _meta, manifests = _current_manifests(spark, t)
+        pts = []
+        for m in manifests:
+            _, entries = read_container(_localize(t, m["manifest_path"]))
+            pts += [e["data_file"]["partition"]["d"] for e in entries]
+        assert sorted(pts) == sorted(r.d for r in rows)
+
     def test_key_as_partition_column_rejected(self, spark, tmp_path):
         t = str(tmp_path / "tbl")
         with pytest.raises(ValueError, match="partition column"):

@@ -776,10 +776,7 @@ class TestReviewR13Pins:
         assert got == {1: "a", 2: "B", 3: "c"}
         parts = {}
         for r in read_iceberg_metadata(spark, t, "partitions").collect():
-            # rows without a dt tuple: the global delete spec AND the
-            # plain-append branch write (write_iceberg_commit does not
-            # partition-route; its files carry the column physically —
-            # known interop wart, tracked for the next round)
+            # rows without a dt tuple: the global delete spec
             key = r.partition.get("dt", "<untupled>")
             parts[key] = parts.get(key, 0) + r.record_count
         assert parts["2026-01-01"] == 1

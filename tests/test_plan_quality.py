@@ -241,19 +241,30 @@ class TestSecondSuitePlans:
 
 
 class TestIterativeLoopLineage:
-    def test_connected_components_plan_constant_across_iterations(self, spark):
-        """localCheckpoint per round: the returned plan must not grow
-        with the iteration budget (unbounded lineage = driver OOM and
-        re-executed convergence checks at scale)."""
-        from optimus_any2any_spark.operators.dedup import connected_components
+    def test_connected_components_plan_constant_across_iterations(
+        self, spark, monkeypatch
+    ):
+        """localCheckpoint per propagation round: the returned plan must
+        not grow with the rounds run (unbounded lineage = driver OOM and
+        re-executed convergence checks at scale), and an exhausted
+        budget raises instead of returning partial labels."""
+        from optimus_any2any_spark.operators import dedup as D
 
-        # a chain graph needs several propagation rounds
+        # the large-graph path: no pair graph fits the driver
+        monkeypatch.setattr(D, "_MAX_DRIVER_EDGES", 0)
+        # a chain graph needs thirteen propagation rounds, a single
+        # pair two
         pairs = spark.createDataFrame(
             [(i, i + 1, 1.0) for i in range(12)],
             "doc_a long, doc_b long, jaccard double",
         )
-        short = connected_components(pairs, max_iterations=2)
-        long = connected_components(pairs, max_iterations=12)
+        one = spark.createDataFrame(
+            [(0, 1, 1.0)], "doc_a long, doc_b long, jaccard double"
+        )
+        with pytest.raises(RuntimeError, match="max_iterations=2"):
+            D.connected_components(pairs, max_iterations=2)
+        short = D.connected_components(one, max_iterations=13)
+        long = D.connected_components(pairs, max_iterations=13)
         plan_short = short._jdf.queryExecution().optimizedPlan().toString()
         plan_long = long._jdf.queryExecution().optimizedPlan().toString()
         assert len(plan_long.splitlines()) == len(plan_short.splitlines())
