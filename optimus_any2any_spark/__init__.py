@@ -24,3 +24,18 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+
+def ship_by_value(*modules) -> None:
+    """Pickle the package's stdlib-only codec modules — and ``modules``
+    — BY VALUE. Python workers of a session started outside the
+    checkout cannot import this package, so every package function a
+    UDF, a data source or a worker closure calls must travel inside
+    its pickle instead of as an import-by-name. Registration is
+    idempotent; call it before the first pickle is made."""
+    from pyspark import cloudpickle
+
+    from optimus_any2any_spark.formats import avrobin, puffin, roaring
+
+    for m in (avrobin, roaring, puffin, *modules):
+        cloudpickle.register_pickle_by_value(m)

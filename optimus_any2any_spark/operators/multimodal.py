@@ -39,11 +39,11 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from optimus_any2any_spark import ship_by_value
 from optimus_any2any_spark.formats import jpeg as _jpeg
 from optimus_any2any_spark.formats import mp3 as _mp3
 from optimus_any2any_spark.formats import mp4 as _mp4
@@ -54,10 +54,7 @@ from optimus_any2any_spark.formats import png as _png
 # recipe's gotchas). Registering the codec modules for BY-VALUE pickling
 # lets mapInPandas closures call formats.png/jpeg directly — cloudpickle
 # ships the module's code with the task instead of an import-by-name.
-cloudpickle.register_pickle_by_value(_png)
-cloudpickle.register_pickle_by_value(_jpeg)
-cloudpickle.register_pickle_by_value(_mp4)
-cloudpickle.register_pickle_by_value(_mp3)
+ship_by_value(_png, _jpeg, _mp4, _mp3)
 
 PAYLOAD_SCHEMA = T.StructType(
     [

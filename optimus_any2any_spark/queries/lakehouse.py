@@ -1196,7 +1196,7 @@ def iceberg_changelog_read(spark, sf_dir):
     "record counts the commit already collects — zero extra jobs); "
     "the lineage read derives _row_id = first_row_id + parquet "
     "position and _last_updated_sequence_number from the file's data "
-    "sequence via the SAME basename broadcast the position read "
+    "sequence via the SAME full-path lookup the position read "
     "pays. Merge-on-read DELETE never moves ids (positions are "
     "stable — pinned in tests/test_iceberg_row_lineage.py); "
     "copy-on-write rewrites refuse by name. Two ordered single-file "

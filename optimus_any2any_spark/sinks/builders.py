@@ -791,9 +791,9 @@ def http_sink(df: DataFrame, cfg: Config):
     # template module by value so workers don't need the package on their
     # PYTHONPATH (same pattern as sources/paged_api.py:118-128).
     import optimus_any2any_spark.compiler.template as _template_mod
-    from pyspark import cloudpickle
+    from optimus_any2any_spark import ship_by_value
 
-    cloudpickle.register_pickle_by_value(_template_mod)
+    ship_by_value(_template_mod)
     body_t = compile_template(body_src) if body_src else None
 
     def parse_headers(rendered: str) -> dict[str, list[str]]:

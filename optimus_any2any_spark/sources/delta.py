@@ -15,13 +15,13 @@ Scope (protocol-honest): ``minReaderVersion`` 1 tables — no deletion
 vectors, no column mapping; a higher reader version raises
 ``NotImplementedError`` rather than returning silently wrong rows.
 Partition values come from the log's ``partitionValues`` (never from
-path layout, which Delta does not guarantee) and are attached as
-typed literal columns per partition group.
+path layout, which Delta does not guarantee) and are attached, typed,
+through a broadcast lookup keyed by each file's full scan path.
 
 Scale shape: the log replay is driver-side over the log's JSON tail
 (checkpoints bound it — that is exactly why the protocol has them);
-data reading is one ``spark.read.parquet`` per distinct partition
-tuple (grouped, not per-file) unioned by name. The reference has no
+data reading is ONE ``spark.read.parquet`` over every live file,
+whatever the number of partition values (:func:`_read_files_dv_aware`). The reference has no
 lakehouse source; this extends §2.1 the same way the manifest MERGE
 (streaming/manifest_table.py) extends §2.2, and the two formats share
 the copy-on-write shape.
@@ -768,139 +768,210 @@ def _stats_exclude(add: dict, col: str, lo, hi) -> bool:
         return False
 
 
-def _dv_descriptor_rows(
-    table_path: str, live: dict[str, dict]
-) -> list[tuple]:
-    """(file basename, storageType, inline text, resolved path, offset,
-    size) per live add carrying a deletion vector. Resolution follows
-    the protocol: ``i`` = z85 blob inline; ``p`` = absolute path;
-    ``u`` = <random prefix><z85 uuid> -> <prefix>/deletion_vector_
-    <uuid>.bin under the table root."""
+def dv_descriptor(table_path: str, add: dict) -> tuple | None:
+    """``(kind, inline text, blob path, offset, size)`` of a live add's
+    deletion vector for :func:`merge_core.deleted_positions_df`, or
+    None for a DV-less add. Resolution follows the protocol: ``i`` =
+    z85 blob inline; ``p`` = absolute path; ``u`` = <random prefix><z85
+    uuid> -> <prefix>/deletion_vector_<uuid>.bin under the table
+    root."""
     import uuid as _uuid
 
     from optimus_any2any_spark.formats.roaring import z85_decode
 
-    # the position anti-join keys files by BASENAME (what
-    # _metadata.file_path yields after the split) — two live files
-    # with the same basename in different partition subdirectories
-    # would cross-apply each other's deletions, so refuse outright
-    # rather than mis-read (uuid part names make collisions all but
-    # impossible for tables this engine wrote, but external tables
-    # carry no such guarantee)
-    seen_bn: dict[str, str] = {}
-    for p in live:
-        bn_ = p.rsplit("/", 1)[-1]
-        if bn_ in seen_bn and seen_bn[bn_] != p:
-            raise NotImplementedError(
-                "delta: live files share the basename "
-                f"{bn_!r} ({seen_bn[bn_]!r} vs {p!r}) — the deletion-"
-                "vector row-index join would cross-apply deletions"
-            )
-        seen_bn[bn_] = p
-
-    rows: list[tuple] = []
-    for add in live.values():
-        dv = add.get("deletionVector")
-        if not dv:
-            continue
-        st_ = dv["storageType"]
-        bn = add["path"].rsplit("/", 1)[-1]
-        inline = ""
-        fpath = ""
-        if st_ == "i":
-            inline = dv["pathOrInlineDv"]
-        elif st_ == "p":
-            fpath = _localize_delta(table_path, dv["pathOrInlineDv"])
-        elif st_ == "u":
-            enc = dv["pathOrInlineDv"]
-            prefix, uid_txt = enc[:-20], enc[-20:]
-            uid = _uuid.UUID(bytes=z85_decode(uid_txt))
-            rel = f"deletion_vector_{uid}.bin"
-            fpath = os.path.join(
-                table_path, prefix, rel
-            ) if prefix else os.path.join(table_path, rel)
-        else:
-            raise NotImplementedError(
-                f"delta: deletion vector storageType {st_!r}"
-            )
-        rows.append(
-            (
-                bn,
-                st_,
-                inline,
-                fpath,
-                int(dv.get("offset") or 0),
-                int(dv["sizeInBytes"]),
-            )
+    dv = add.get("deletionVector")
+    if not dv:
+        return None
+    st_ = dv["storageType"]
+    size = int(dv["sizeInBytes"])
+    if st_ == "i":
+        return ("inline", dv["pathOrInlineDv"], "", 0, size)
+    if st_ == "p":
+        fpath = _localize_delta(table_path, dv["pathOrInlineDv"])
+    elif st_ == "u":
+        enc = dv["pathOrInlineDv"]
+        prefix, uid_txt = enc[:-20], enc[-20:]
+        uid = _uuid.UUID(bytes=z85_decode(uid_txt))
+        fpath = os.path.join(
+            table_path, prefix, f"deletion_vector_{uid}.bin"
         )
-    return rows
+    else:
+        raise NotImplementedError(
+            f"delta: deletion vector storageType {st_!r}"
+        )
+    return ("bin", "", fpath, int(dv.get("offset") or 0), size)
 
 
-def dv_positions_df(spark: SparkSession, dv_rows: list[tuple]):
-    """Deleted ``(__dv_bn, __dv_pos)`` rows from DV descriptor tuples
-    (see :func:`_dv_descriptor_rows`). The vectors decode on EXECUTORS
-    through an Arrow-batched pandas UDF — the descriptor frame is tiny,
-    the exploded positions are the only data moved."""
-    import pandas  # noqa: F401  (annotation resolution)
-    from pyspark.sql.functions import pandas_udf
+def _read_files_dv_aware(
+    spark: SparkSession,
+    table_path: str,
+    data_schema: T.StructType,
+    paths: list[str],
+    live: dict[str, dict],
+    pfields=None,
+    row_tracking: tuple | None = None,
+    part_fields: list[T.StructField] = (),
+    file_cols: tuple[str, dict[str, tuple]] | None = None,
+    positions: bool = False,
+) -> DataFrame:
+    """The one Delta scan: the given live files (``live`` maps each
+    log path to its add action) as ONE ``spark.read.parquet``, with
+    each file's deletion-vector rows DROPPED. Every reader and the
+    read half of every copy-on-write writer (merge, DML, delete,
+    OPTIMIZE, DV purge) goes through it — a rewrite from raw parquet
+    would resurrect deleted rows.
 
-    # get_type_hints resolves annotations from MODULE globals (the
-    # `from __future__ import annotations` stringification), so pandas
-    # must be visible there
-    globals().setdefault("pandas", pandas)
+    Each row's ``(_metadata.file_path, _metadata.row_index)`` is
+    captured once, straight off the scan (metadata columns are
+    unreliable once rows cross an exchange). Per-file values ride ONE
+    broadcast lookup keyed by the file's FULL scan path
+    (:func:`merge_core.scan_path_key`), so live files that share a
+    basename never mix:
 
-    dv_df = local_rows_df(spark,
-        dv_rows,
-        "__dv_bn string, __st string, __inline string, "
-        "__fpath string, __off long, __size long",
+    - ``part_fields``: the logical partition fields, re-attached
+      typed from each add's ``partitionValues`` (strings keyed by
+      physical names on mapped tables);
+    - ``row_tracking=(rid_phys, rcv_phys)`` (the table's materialized
+      column names) appends ``__rt_id`` / ``__rt_cv``:
+      ``coalesce(materialized column, add.baseRowId + position)`` /
+      ``coalesce(..., add.defaultRowCommitVersion)`` per PROTOCOL.md
+      Row Tracking;
+    - ``file_cols=(ddl, {path: values})``: caller constants per file
+      (a routing ``__pid``, a file id).
+
+    Deleted positions decode on executors
+    (:func:`merge_core.deleted_positions_df`) and leave in one
+    anti-join. ``positions=True`` keeps ``__fp`` / ``__pos`` (scan
+    key and row index) for writers that address rows by position.
+    ``pfields`` (mapped tables) reads physical names and casts back to
+    the logical ``data_schema``. A plain read with nothing to attach is
+    the bare schema'd scan."""
+    from optimus_any2any_spark.streaming.merge_core import (
+        deleted_positions_df,
+        scan_path_key,
     )
-    # one decode task PER DESCRIPTOR ROW spins one Python worker per
-    # vector (~30-50 ms each for a few-KB blob — measured 1.5 s of a
-    # 29-file delete commit). Slice by compressed-vector bytes instead:
-    # ~1 MB of Roaring per task keeps executor-side parallelism for
-    # big vector sets while a metadata-scale set decodes in one task.
-    total_sz = sum(int(r[5]) for r in dv_rows)
-    n_slices = max(1, min(len(dv_rows), total_sz // (1 << 20) + 1))
-    dv_df = dv_df.coalesce(n_slices)
 
-    # ship the codec module BY VALUE: python workers do not have the
-    # repo on PYTHONPATH (the same gotcha as the streaming sources)
-    from pyspark import cloudpickle as _cp
+    def phys(c: str) -> str:
+        return pfields[c].name if pfields is not None else c
 
-    from optimus_any2any_spark.formats import roaring as _roaring
-
-    _cp.register_pickle_by_value(_roaring)
-    dv_blob_decode = _roaring.dv_blob_decode
-    dv_file_read = _roaring.dv_file_read
-    z85_decode = _roaring.z85_decode
-
-    @pandas_udf("array<long>")
-    def _decode(
-        st_: pandas.Series, inline: pandas.Series,
-        fpath: pandas.Series, off: pandas.Series,
-        size: pandas.Series,
-    ) -> pandas.Series:
-        import pandas as _pd
-
-        out_vals = []
-        for i in range(len(st_)):
-            if st_.iloc[i] == "i":
-                # inline blobs are zero-padded to the z85 4-byte
-                # block; sizeInBytes carries the true length
-                blob = z85_decode(inline.iloc[i])[: int(size.iloc[i])]
-            else:
-                blob = dv_file_read(
-                    fpath.iloc[i], int(off.iloc[i]), int(size.iloc[i])
+    read_schema = T.StructType(
+        [pfields[f.name] if pfields is not None else f
+         for f in data_schema.fields]
+    )
+    if row_tracking is not None:
+        # files REWRITTEN under row tracking carry the materialized
+        # columns; fresh appends do not and read them as null (Spark
+        # null-fills requested columns absent from a parquet file)
+        read_schema = T.StructType(
+            list(read_schema.fields)
+            + [T.StructField(c, T.LongType(), True) for c in row_tracking]
+        )
+    # absolute paths: the scan and the lookup key resolve them alike
+    full = {p: os.path.abspath(os.path.join(table_path, p)) for p in paths}
+    df = spark.read.schema(read_schema).parquet(*full.values())
+    dv_rows = [
+        (scan_path_key(full[p]), *d, None)
+        for p in paths
+        if (d := dv_descriptor(table_path, live[p])) is not None
+    ]
+    pvs = {
+        p: tuple(
+            (live[p].get("partitionValues") or {}).get(phys(f.name))
+            for f in part_fields
+        )
+        for p in paths
+    }
+    # partition values every file shares (one partition, or none)
+    # attach as typed literals: no lookup join and no broadcast job
+    shared_pv = len(set(pvs.values())) == 1
+    lookup = (
+        not shared_pv or row_tracking is not None or bool(file_cols)
+    )
+    # column mapping: parquet carries physical names at every nesting
+    # level — one positional struct cast per column renames them all.
+    # Row-tracking materialized columns are outside the logical schema
+    # and keep their configured names.
+    cols = [
+        F.col("`" + phys(f.name) + "`").cast(f.dataType).alias(f.name)
+        for f in data_schema.fields
+    ] + [F.col("`" + c + "`") for c in row_tracking or ()]
+    if shared_pv:
+        cols += [
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for f, v in zip(part_fields, pvs[paths[0]])
+        ]
+    if not (lookup or dv_rows or positions):
+        return df.select(*cols) if pfields is not None or part_fields else df
+    df = df.select(
+        *cols,
+        F.col("_metadata.file_path").alias("__fp"),
+        F.col("_metadata.row_index").alias("__pos"),
+    )
+    if lookup:
+        fields = [T.StructField("__fp", T.StringType(), False)]
+        if not shared_pv:
+            fields += [
+                T.StructField(f.name, T.StringType(), True)
+                for f in part_fields
+            ]
+        if row_tracking is not None:
+            fields += [
+                T.StructField("__rt_base", T.LongType(), False),
+                T.StructField("__rt_dcv", T.LongType(), False),
+            ]
+        if file_cols:
+            fields += T._parse_datatype_string(file_cols[0]).fields
+        rows = []
+        for p in paths:
+            a = live[p]
+            row = [scan_path_key(full[p])]
+            if not shared_pv:
+                row += pvs[p]
+            if row_tracking is not None:
+                if (
+                    a.get("baseRowId") is None
+                    or a.get("defaultRowCommitVersion") is None
+                ):
+                    raise NotImplementedError(
+                        "delta row tracking: live file "
+                        f"{p!r} carries no baseRowId — backfill of "
+                        "pre-enablement files is beyond this writer"
+                    )
+                row += [
+                    int(a["baseRowId"]), int(a["defaultRowCommitVersion"])
+                ]
+            if file_cols:
+                row += file_cols[1][p]
+            rows.append(tuple(row))
+        lk = local_rows_df(spark, rows, T.StructType(fields))
+        df = df.join(F.broadcast(lk), "__fp")
+        if not shared_pv:
+            for f in part_fields:
+                df = df.withColumn(
+                    f.name, F.col("`" + f.name + "`").cast(f.dataType)
                 )
-            out_vals.append(dv_blob_decode(blob))
-        return _pd.Series(out_vals)
-
-    return dv_df.select(
-        "__dv_bn",
-        F.explode(
-            _decode("__st", "__inline", "__fpath", "__off", "__size")
-        ).alias("__dv_pos"),
-    )
+    if dv_rows:
+        deleted = deleted_positions_df(spark, dv_rows).select(
+            F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
+        )
+        df = df.join(deleted, ["__fp", "__pos"], "left_anti")
+    if row_tracking is not None:
+        rid, rcv = row_tracking
+        df = (
+            df.withColumn(
+                "__rt_id",
+                F.coalesce(
+                    F.col("`" + rid + "`"),
+                    F.col("__rt_base") + F.col("__pos"),
+                ),
+            )
+            .withColumn(
+                "__rt_cv",
+                F.coalesce(F.col("`" + rcv + "`"), F.col("__rt_dcv")),
+            )
+            .drop(rid, rcv, "__rt_base", "__rt_dcv")
+        )
+    return df if positions else df.drop("__fp", "__pos")
 
 
 def _localize_delta(table_path: str, uri: str) -> str:
@@ -996,11 +1067,10 @@ def read_delta_row_tracking(
     stable id is ``coalesce(materialized column, add.baseRowId +
     position)`` and its commit version ``coalesce(materialized,
     add.defaultRowCommitVersion)`` — fresh files derive, rewritten
-    files carry their rows' history in the materialized columns. One
-    broadcast (basename → baseRowId/defaultRowCommitVersion) over the
-    ordinary DV-aware read; zero extra jobs."""
+    files carry their rows' history in the materialized columns. The
+    file lookup of the one DV-aware scan carries each file's
+    baseRowId/defaultRowCommitVersion; zero extra jobs."""
     from optimus_any2any_spark.streaming.delta_table import (
-        _read_files_dv_aware,
         _row_tracking_of,
     )
 
@@ -1011,59 +1081,30 @@ def read_delta_row_tracking(
         raise ValueError(
             "delta read: row tracking is not enabled on this table"
         )
-    cmap = column_mapping(meta)
-    phys = (lambda c: cmap.get(c, c)) if cmap else (lambda c: c)
-    pfields = physical_fields(meta) if cmap else None
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = meta.get("partitionColumns") or []
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name not in part_cols]
-    )
     live = state["live"]
-    out_schema = T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("_row_id", T.LongType(), True),
-            T.StructField("_row_commit_version", T.LongType(), True),
-        ]
-    )
     if not live:
-        return spark.createDataFrame([], out_schema)
-    paths = sorted(live)
-    cur = _read_files_dv_aware(
-        spark, table_path, data_schema, paths, live,
-        basename_col="__bn" if part_cols else None,
-        pfields=pfields,
-        row_tracking=rt,
-    )
-    if part_cols:
-        # partitionValues are keyed by PHYSICAL names on mapped tables
-        pv_of = {
-            p.rsplit("/", 1)[-1]: tuple(
-                (a.get("partitionValues") or {}).get(phys(c))
-                for c in part_cols
-            )
-            for p, a in live.items()
-        }
-        if len(pv_of) != len(live):
-            raise NotImplementedError(
-                "delta row tracking: live files share a basename — "
-                "the partition re-attach join would misattribute rows"
-            )
-        type_of = {f.name: f.dataType for f in schema.fields}
-        lk = local_rows_df(spark, 
-            [(bn,) + pv_of[bn] for bn in sorted(pv_of)],
+        return spark.createDataFrame(
+            [],
             T.StructType(
-                [T.StructField("__bn", T.StringType(), False)]
+                list(schema.fields)
                 + [
-                    T.StructField(c, T.StringType(), True)
-                    for c in part_cols
+                    T.StructField("_row_id", T.LongType(), True),
+                    T.StructField(
+                        "_row_commit_version", T.LongType(), True
+                    ),
                 ]
             ),
         )
-        for c in part_cols:
-            lk = lk.withColumn(c, F.col(c).cast(type_of[c]))
-        cur = cur.join(F.broadcast(lk), "__bn")
+    cur = _read_files_dv_aware(
+        spark, table_path,
+        T.StructType([f for f in schema.fields if f.name not in part_cols]),
+        sorted(live), live,
+        pfields=physical_fields(meta),
+        row_tracking=rt,
+        part_fields=[schema[c] for c in part_cols],
+    )
     return cur.select(
         *schema.fieldNames(),
         F.col("__rt_id").alias("_row_id"),
@@ -1123,89 +1164,33 @@ def read_delta(
             if not _stats_exclude(a, phys(col), lo, hi)
         }
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = meta.get("partitionColumns") or []
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    # parquet files are written with physical column names AT EVERY
-    # nesting level; read them that way and cast back to the logical
-    # schema below (struct casts are positional — one cast renames
-    # all levels)
-    pfields = physical_fields(meta)
-    data_schema = T.StructType(
-        [
-            pfields[f.name] if pfields else f
-            for f in data_fields
-        ]
-    )
     if not live:
         return spark.createDataFrame([], schema)
-    # group files by partition tuple; read each group once with typed
-    # literal partition columns (Delta's partitionValues are strings,
-    # keyed by physical names on mapped tables)
-    groups: dict[tuple, list[str]] = {}
-    for add in live.values():
-        pv = add.get("partitionValues") or {}
-        key = tuple(pv.get(phys(c)) for c in part_cols)
-        groups.setdefault(key, []).append(
-            os.path.join(table_path, add["path"])
-        )
-    type_of = {f.name: f.dataType for f in schema.fields}
-    # the descriptor helper's basename-collision guard exists for the
-    # DV row-index join; a DV-less table with colliding basenames is
-    # perfectly readable and must not trip it
-    dv_rows = (
-        _dv_descriptor_rows(table_path, live)
-        if any(a.get("deletionVector") for a in live.values())
-        else []
-    )
-    meta_cols = (
-        [
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__dv_bn"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        ]
-        if dv_rows
-        else []
-    )
-    out = None
-    # key=str: partition tuples may hold None (hive default
-    # partition) alongside strings, which plain tuple sort rejects
-    for key, paths in sorted(groups.items(), key=lambda kv: str(kv)):
-        df = spark.read.schema(data_schema).parquet(*paths)
-        df = df.select(
-            *[
-                F.col("`" + phys(f.name) + "`")
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in data_fields
-            ],
-            *meta_cols,
-        )
-        for c, v in zip(part_cols, key):
-            col = (
-                F.lit(None).cast(type_of[c])
-                if v is None
-                else F.lit(v).cast(type_of[c])
-            )
-            df = df.withColumn(c, col)
-        df = df.select(
-            *[f.name for f in schema.fields],
-            *(["__dv_bn", "__dv_pos"] if dv_rows else []),
-        )
-        out = df if out is None else out.unionByName(df)
-    if dv_rows:
-        # MERGE-ON-READ: each live add's deletion vector marks deleted
-        # ROW INDEXES of its file; decode on executors (Arrow batch,
-        # stdlib Roaring codec) and anti-join on (file basename,
-        # _metadata.row_index). One anti-join total — no per-file jobs.
-        deleted = dv_positions_df(spark, dv_rows)
-        out = out.join(deleted, ["__dv_bn", "__dv_pos"], "left_anti")
-    if dv_rows:
-        out = out.drop("__dv_bn", "__dv_pos")
+    out = _read_delta_files(spark, table_path, meta, schema, live)
     if key_range is not None:
         col, lo, hi = key_range
         out = out.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
     return out
+
+
+def _read_delta_files(
+    spark: SparkSession,
+    table_path: str,
+    meta: dict,
+    schema: T.StructType,
+    adds: dict[str, dict],
+) -> DataFrame:
+    """The given add actions' rows in the table's logical column order:
+    one scan, partition values re-attached and deletion vectors
+    applied through the file lookup (:func:`_read_files_dv_aware`)."""
+    part_cols = meta.get("partitionColumns") or []
+    return _read_files_dv_aware(
+        spark, table_path,
+        T.StructType([f for f in schema.fields if f.name not in part_cols]),
+        sorted(adds), adds,
+        pfields=physical_fields(meta),
+        part_fields=[schema[c] for c in part_cols],
+    ).select(*[F.col("`" + c + "`") for c in schema.fieldNames()])
 
 
 # ---------------------------------------------------------------------------
@@ -1251,19 +1236,7 @@ def read_delta_appends(
     readers must."""
     meta, _ = _snapshot_actions(spark, table_path)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = meta.get("partitionColumns") or []
-    # mapped tables: the parquet carries PHYSICAL names at every
-    # nesting level — a logical-schema'd read would silently return
-    # null columns; read physical and cast back like read_delta
-    cmap = column_mapping(meta)
-    phys = (lambda c: cmap.get(c, c)) if cmap else (lambda c: c)
-    pfields = physical_fields(meta)
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(
-        [pfields[f.name] if pfields else f for f in data_fields]
-    )
-    type_of = {f.name: f.dataType for f in schema.fields}
-    groups: dict[tuple, list[str]] = {}
+    adds: dict[str, dict] = {}
     for v, actions in _commit_actions(
         table_path, from_version, to_version
     ):
@@ -1285,35 +1258,12 @@ def read_delta_appends(
                         f"delta: commit {v} carries a deletion vector "
                         "— not an append stream; use read_delta_cdf"
                     )
-                pv = add.get("partitionValues") or {}
-                key = tuple(pv.get(phys(c)) for c in part_cols)
-                groups.setdefault(key, []).append(
-                    os.path.join(table_path, add["path"])
-                )
-    if not groups:
+                adds[add["path"]] = add
+    if not adds:
         return spark.createDataFrame([], schema)
-    out = None
-    for key, paths in sorted(groups.items(), key=str):
-        df = spark.read.schema(data_schema).parquet(*paths)
-        if cmap:
-            df = df.select(
-                *[
-                    F.col("`" + phys(f.name) + "`")
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    for f in data_fields
-                ]
-            )
-        for c, val in zip(part_cols, key):
-            col = (
-                F.lit(None).cast(type_of[c])
-                if val is None
-                else F.lit(val).cast(type_of[c])
-            )
-            df = df.withColumn(c, col)
-        df = df.select(*[f.name for f in schema.fields])
-        out = df if out is None else out.unionByName(df)
-    return out
+    # mapped tables: the parquet carries PHYSICAL names at every
+    # nesting level — the scan reads physical and casts back
+    return _read_delta_files(spark, table_path, meta, schema, adds)
 
 
 def read_delta_cdf(

@@ -46,9 +46,9 @@ from pyspark.sql import types as T
 # pickle instead of an import-by-name.
 import sys as _sys
 
-from pyspark import cloudpickle as _cloudpickle
+from optimus_any2any_spark import ship_by_value
 
-_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+ship_by_value(_sys.modules[__name__])
 
 
 def _log_json_actions(table_path: str) -> dict[int, list[dict]]:

@@ -597,7 +597,6 @@ def _snapshot_entries(
     _sfri = snap.get("first-row-id")
     rl_running = int(_sfri) if _sfri is not None else None
     for m in manifests:
-        m_seq = m.get("sequence_number")
         is_data_manifest = int(m.get("content") or 0) == 0
         m_first = m.get("first_row_id")
         if (
@@ -614,63 +613,17 @@ def _snapshot_entries(
         for e in entries:
             if int(e.get("status") or 0) == _STATUS_DELETED:
                 continue
-            df_ = e["data_file"]
-            if is_data_manifest and int(df_.get("content") or 0) == 0:
-                rl_live_rows += int(df_.get("record_count") or 0)
-            seq = e.get("sequence_number")
-            if seq is None:
-                seq = m_seq if m_seq is not None else 0
-            ent = {
-                "path": _localize(table_path, df_["file_path"]),
-                "orig": df_["file_path"],
-                "seq": int(seq),
-                "equality_ids": list(df_.get("equality_ids") or []),
-                # Appendix-D bounds + null counts, kept for the
-                # key_range data-skipping read (field-id keyed)
-                "lower_bounds": df_.get("lower_bounds"),
-                "upper_bounds": df_.get("upper_bounds"),
-                "null_value_counts": df_.get("null_value_counts"),
-                "record_count": df_.get("record_count"),
-                # v3 row lineage: _row_id = first_row_id + position
-                "first_row_id": df_.get("first_row_id"),
-                # identity-constant projection + partition pruning:
-                # the manifest partition tuple, keyed by partition
-                # field name, under the manifest's spec
-                "partition": dict(df_.get("partition") or {}),
-                "spec_id": m.get("partition_spec_id"),
-            }
-            content = int(df_.get("content") or 0)
-            if (
-                ent["first_row_id"] is None
-                and content == 0
-                and is_data_manifest
-                and m_first is not None
-            ):
-                ent["first_row_id"] = m_first + rl_ent_acc
-                rl_ent_acc += int(df_.get("record_count") or 0)
-            if int(m.get("content") or 0) == 1 or content in (1, 2):
-                # delete manifest / delete data file
-                if (
-                    df_.get("referenced_data_file") is not None
-                    or df_.get("content_offset") is not None
-                    or df_.get("content_size_in_bytes") is not None
-                ):
-                    # v3 deletion vector: positions live in a Puffin
-                    # blob slice, not delete-parquet rows — reading
-                    # the entry as a (file_path, pos) parquet would
-                    # silently delete nothing. Known deletion-vector
-                    # blobs decode through the merge-on-read path;
-                    # anything else refuses by name.
-                    ent["dv"] = _puffin_dv_ref(
-                        table_path, df_, _puffin_footers
-                    )
-                    pos_del.append(ent)
-                elif content == 2 or ent["equality_ids"]:
-                    eq_del.append(ent)
-                else:
-                    pos_del.append(ent)
-            else:
-                data.append(ent)
+            kind, ent = _classify_entry(table_path, m, e, _puffin_footers)
+            if kind != "data":
+                (pos_del if kind == "pos" else eq_del).append(ent)
+                continue
+            n = int(e["data_file"].get("record_count") or 0)
+            if is_data_manifest:
+                rl_live_rows += n
+                if ent["first_row_id"] is None and m_first is not None:
+                    ent["first_row_id"] = m_first + rl_ent_acc
+                    rl_ent_acc += n
+            data.append(ent)
         if (
             is_data_manifest
             and m.get("first_row_id") is None
@@ -684,6 +637,62 @@ def _snapshot_entries(
                 else rl_live_rows
             )
     return data, pos_del, eq_del
+
+
+def _classify_entry(
+    table_path: str, m: dict, e: dict, footers: dict
+) -> tuple[str, dict]:
+    """``(kind, entry)`` for one live manifest entry ``e`` of
+    manifest-list row ``m`` — the one classifier under the reader's
+    snapshot walk and the merge and compaction walks. ``kind`` is
+    ``data``, ``pos`` (positional delete files, and v3 deletion
+    vectors with their validated Puffin slice under ``dv``) or ``eq``
+    (equality deletes). The entry carries the localized ``path``, the
+    manifest's ``orig`` path, the data sequence ``seq`` (v2
+    inheritance: the entry's own number, else ``m``'s, else 0 — v1
+    tables carry none, and v1 has no row-level deletes), and what
+    pruning, identity constants and lineage read."""
+    df_ = e["data_file"]
+    seq = e.get("sequence_number")
+    if seq is None:
+        seq = m.get("sequence_number")
+    ent = {
+        "path": _localize(table_path, df_["file_path"]),
+        "orig": df_["file_path"],
+        "seq": int(seq or 0),
+        "equality_ids": list(df_.get("equality_ids") or []),
+        # Appendix-D bounds + null counts, kept for the key_range
+        # data-skipping read (field-id keyed)
+        "lower_bounds": df_.get("lower_bounds"),
+        "upper_bounds": df_.get("upper_bounds"),
+        "null_value_counts": df_.get("null_value_counts"),
+        "record_count": df_.get("record_count"),
+        # v3 row lineage: _row_id = first_row_id + position
+        "first_row_id": df_.get("first_row_id"),
+        # identity-constant projection + partition pruning: the
+        # manifest partition tuple, keyed by partition field name,
+        # under the manifest's spec
+        "partition": dict(df_.get("partition") or {}),
+        "spec_id": m.get("partition_spec_id"),
+    }
+    content = int(df_.get("content") or 0)
+    if int(m.get("content") or 0) != 1 and content not in (1, 2):
+        return "data", ent
+    if (
+        df_.get("referenced_data_file") is not None
+        or df_.get("content_offset") is not None
+        or df_.get("content_size_in_bytes") is not None
+    ):
+        # v3 deletion vector: positions live in a Puffin blob slice,
+        # not delete-parquet rows — reading the entry as a (file_path,
+        # pos) parquet would silently delete nothing. Known
+        # deletion-vector blobs decode through the merge-on-read path;
+        # anything else refuses by name.
+        ent["dv"] = _puffin_dv_ref(table_path, df_, footers)
+        return "pos", ent
+    if content == 2 or ent["equality_ids"]:
+        return "eq", ent
+    return "pos", ent
 
 
 def _puffin_dv_ref(
@@ -738,88 +747,6 @@ def _puffin_dv_ref(
     }
 
 
-def _basename(p: str) -> str:
-    return p.rsplit("/", 1)[-1]
-
-
-def _puffin_dv_positions_df(spark: SparkSession, dv_del: list[dict]):
-    """Deleted ``(file_path, pos, __pseq)`` rows from v3
-    deletion-vector entries: each referenced data file's Puffin blob
-    slice decodes on EXECUTORS through an Arrow-batched pandas UDF
-    (the Delta DV pattern, sources/delta.py ``dv_positions_df``)."""
-    import pandas  # noqa: F401  (annotation resolution)
-    from pyspark.sql.functions import pandas_udf
-
-    # get_type_hints resolves annotations from MODULE globals (the
-    # `from __future__ import annotations` stringification), so pandas
-    # must be visible there
-    globals().setdefault("pandas", pandas)
-
-    rows = [
-        (
-            d["dv"]["referenced"],
-            d["path"],
-            d["dv"]["offset"],
-            d["dv"]["size"],
-            d["seq"],
-        )
-        for d in dv_del
-    ]
-    ddf = local_rows_df(spark,
-        rows,
-        "file_path string, __ppath string, __off long, __size long, "
-        "__pseq long",
-    )
-    # one decode task per descriptor row spins one Python worker per
-    # vector; slice by compressed-blob bytes (~1 MB per task) instead,
-    # keeping executor parallelism for big vector sets while a
-    # metadata-scale set decodes in one task (Delta twin in
-    # sources/delta.py dv_positions_df).
-    total_sz = sum(int(r[3]) for r in rows)
-    ddf = ddf.coalesce(
-        max(1, min(len(rows), total_sz // (1 << 20) + 1))
-    )
-
-    # ship the codec modules BY VALUE: python workers do not have the
-    # repo on PYTHONPATH (the same gotcha as the streaming sources)
-    from pyspark import cloudpickle as _cp
-
-    from optimus_any2any_spark.formats import puffin as _puffin
-    from optimus_any2any_spark.formats import roaring as _roaring
-
-    _cp.register_pickle_by_value(_roaring)
-    _cp.register_pickle_by_value(_puffin)
-    read_puffin_blob = _puffin.read_puffin_blob
-    dv_puffin_blob_decode = _puffin.dv_puffin_blob_decode
-
-    @pandas_udf("array<long>")
-    def _decode(
-        ppath: pandas.Series, off: pandas.Series, size: pandas.Series
-    ) -> pandas.Series:
-        import pandas as _pd
-
-        return _pd.Series(
-            [
-                dv_puffin_blob_decode(
-                    read_puffin_blob(
-                        ppath.iloc[i],
-                        int(off.iloc[i]),
-                        int(size.iloc[i]),
-                    )
-                )
-                for i in range(len(ppath))
-            ]
-        )
-
-    from pyspark.sql import functions as F
-
-    return ddf.select(
-        "file_path",
-        F.explode(_decode("__ppath", "__off", "__size")).alias("pos"),
-        "__pseq",
-    )
-
-
 def read_iceberg(
     spark: SparkSession,
     table_path: str,
@@ -854,8 +781,7 @@ def read_iceberg(
     equality deletes null-safe-match their equality columns (apply
     when seq > the data file's). The sequence comparison is what keeps
     a row RE-INSERTED after a delete alive — ignoring it would
-    over-delete. File identity joins on basenames (unique per table
-    in both this writer's and real writers' uuid naming).
+    over-delete. Per-file values join on each file's full scan path.
 
     ``row_lineage=True`` (v3 ROW LINEAGE) appends ``_row_id`` and
     ``_last_updated_sequence_number``: each data file's manifest
@@ -893,95 +819,29 @@ def read_iceberg(
     if row_lineage:
         # v3 ROW LINEAGE: _row_id = the file's first_row_id + the
         # row's raw parquet position; _last_updated_sequence_number =
-        # the file's data sequence. Both derive from the SAME
-        # (basename → lineage) broadcast the position read already
-        # pays — zero extra jobs.
+        # the file's data sequence. Both derive from the file lookup
+        # the scan already joins — zero extra jobs.
         if meta.get("next-row-id") is None:
             raise ValueError(
                 "iceberg read: row_lineage=True on a table without "
                 "next-row-id — not a row-lineage table"
             )
-        if any(
-            f.name in ("_row_id", "_last_updated_sequence_number")
-            for f in schema.fields
-        ):
+        if any(f.name in _LINEAGE_COLS for f in schema.fields):
             raise NotImplementedError(
                 "iceberg v3: table schema shadows the reserved "
                 "lineage column names — beyond this reader"
             )
-        missing = [
-            d["orig"] for d in data if d.get("first_row_id") is None
-        ]
-        if missing:
-            # inheritance (_snapshot_entries) already resolved every
-            # null it could — a residue means the snapshot itself
-            # lacks first-row-id, so ids are unassignable
-            raise NotImplementedError(
-                "iceberg v3: data files without first_row_id under a "
-                "snapshot that declares no first-row-id — row ids "
-                f"are unassignable for {missing[:3]}"
-            )
-        # files REWRITTEN by maintenance carry MATERIALIZED lineage
-        # columns (the spec's preservation mechanism); files that
-        # never were read them as null through the extended schema
-        # (Spark null-fills requested columns absent from a parquet
-        # file) and fall back to first_row_id + position
-        from pyspark.sql import types as T
-
-        ext_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_row_id", T.LongType(), True),
-                T.StructField(
-                    "_last_updated_sequence_number", T.LongType(), True
-                ),
-            ]
-        )
-        out = read_entries_with_deletes(
-            spark, meta, ext_schema, data, pos_del, eq_del,
-            position_cols=("__rl_fp", "__rl_pos"),
-        )
-        if data:
-            lk = local_rows_df(spark, 
-                [
-                    (d["orig"], int(d["first_row_id"]), int(d["seq"]))
-                    for d in data
-                ],
-                "__rl_fp string, __rl_first long, __rl_seq long",
-            )
-            out = out.join(F.broadcast(lk), "__rl_fp", "inner")
-        else:
-            out = out.withColumn(
-                "__rl_first", F.lit(None).cast("long")
-            ).withColumn("__rl_seq", F.lit(None).cast("long"))
-        out = out.select(
-            *schema.fieldNames(),
-            F.coalesce(
-                F.col("_row_id"),
-                F.col("__rl_first") + F.col("__rl_pos"),
-            ).alias("_row_id"),
-            F.coalesce(
-                F.col("_last_updated_sequence_number"),
-                F.col("__rl_seq"),
-            ).alias("_last_updated_sequence_number"),
-        )
-        if key_range is not None:
-            col, lo, hi = key_range
-            out = out.filter(
-                (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-            )
-        return out
+    # files REWRITTEN by maintenance carry MATERIALIZED lineage
+    # columns (the spec's preservation mechanism) and keep them
+    out = read_entries_with_deletes(
+        spark, meta, schema, data, pos_del, eq_del, lineage=row_lineage
+    )
     if key_range is not None:
         col, lo, hi = key_range
-        out = read_entries_with_deletes(
-            spark, meta, schema, data, pos_del, eq_del
-        )
-        return out.filter(
+        out = out.filter(
             (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
-    return read_entries_with_deletes(
-        spark, meta, schema, data, pos_del, eq_del
-    )
+    return out
 
 
 def read_iceberg_metadata(
@@ -1426,23 +1286,6 @@ def _entry_identity_consts(
     }
 
 
-def _identity_consts_by_basename(
-    meta: dict, data: list[dict]
-) -> dict[str, dict[str, object]]:
-    """Basename-keyed identity constants over a data entry set; empty
-    when no entry carries identity partition values (the common
-    unpartitioned case — zero plan impact there)."""
-    id_specs = _identity_spec_fields(meta)
-    if not any(id_specs.values()):
-        return {}
-    out: dict[str, dict[str, object]] = {}
-    for d in data:
-        m = _entry_identity_consts(meta, id_specs, d)
-        if m:
-            out[_basename(d["orig"])] = m
-    return out
-
-
 def _reader_default_fills(meta: dict) -> dict[str, object]:
     """Current-schema top-level ``initial-default`` values, parsed —
     the fill the spec mandates for rows in files written BEFORE the
@@ -1507,14 +1350,21 @@ def _footer_column_names(path: str) -> frozenset | None:
 def _projection_consts(
     meta: dict, data: list[dict]
 ) -> dict[str, dict[str, object]]:
-    """Per-basename constants the read must project over the raw
-    parquet columns: identity partition values (always authoritative)
-    plus ``initial-default`` fills for files whose FOOTER schema lacks
-    a defaulted column. The footer check is a metadata-only read and
+    """Per-file (manifest path) constants the read must project over
+    the raw parquet columns: identity partition values (always
+    authoritative; none on the common unpartitioned table) plus
+    ``initial-default`` fills for files whose FOOTER schema lacks a
+    defaulted column. The footer check is a metadata-only read and
     runs only on default-carrying (v3) tables — a file that contains
-    the column keeps its stored values, nulls included (the spec
-    fills ONLY missing columns)."""
-    consts = _identity_consts_by_basename(meta, data)
+    the column keeps its stored values, nulls included (the spec fills
+    ONLY missing columns)."""
+    consts: dict[str, dict[str, object]] = {}
+    id_specs = _identity_spec_fields(meta)
+    if any(id_specs.values()):
+        for d in data:
+            m = _entry_identity_consts(meta, id_specs, d)
+            if m:
+                consts[d["orig"]] = m
     fills = _reader_default_fills(meta)
     if fills:
         for d in data:
@@ -1525,73 +1375,12 @@ def _projection_consts(
                 c: v for c, v in fills.items() if c not in names
             }
             if missing:
-                m = consts.setdefault(_basename(d["orig"]), {})
+                m = consts.setdefault(d["orig"], {})
                 for c, v in missing.items():
                     # identity constants outrank defaults (a
                     # partition value IS the column value)
                     m.setdefault(c, v)
     return consts
-
-
-def _substitute_identity_consts(
-    spark: SparkSession,
-    df: DataFrame,
-    consts: dict[str, dict[str, object]],
-    data: list[dict],
-    schema,
-    bn_col: str,
-) -> DataFrame:
-    """Apply the identity-constant projection: replace each identity
-    partition source column with the row's file-level partition value
-    through ONE broadcast join keyed on ``bn_col`` (the lookup is
-    O(files) — a few MB even at 100 TB file counts). Files without a
-    constant for a column (older unpartitioned spec) keep their file
-    values via a per-column presence flag, so a null partition value
-    substitutes as a real null rather than falling through."""
-    from pyspark.sql import functions as F
-
-    cols = sorted(
-        {
-            c
-            for m in consts.values()
-            for c in m
-            if c in schema.fieldNames()
-        }
-    )
-    if not cols:
-        return df
-    ftypes = {f.name: f.dataType for f in schema.fields}
-    lk_fields = [T.StructField(bn_col, T.StringType(), False)]
-    for c in cols:
-        lk_fields.append(T.StructField(f"__pc_{c}", ftypes[c], True))
-        lk_fields.append(
-            T.StructField(f"__pcs_{c}", T.BooleanType(), False)
-        )
-    rows = []
-    seen: set[str] = set()
-    for d in data:
-        bn = _basename(d["orig"])
-        if bn in seen:
-            continue
-        seen.add(bn)
-        m = consts.get(bn, {})
-        row: list[object] = [bn]
-        for c in cols:
-            row.append(m.get(c))
-            row.append(c in m)
-        rows.append(tuple(row))
-    lk = local_rows_df(spark, rows, T.StructType(lk_fields))
-    out = df.join(F.broadcast(lk), bn_col, "left")
-    for c in cols:
-        out = out.withColumn(
-            c,
-            F.when(
-                F.col(f"__pcs_{c}"), F.col(f"__pc_{c}")
-            ).otherwise(F.col(c)),
-        )
-    return out.drop(
-        *[f"__pc_{c}" for c in cols], *[f"__pcs_{c}" for c in cols]
-    )
 
 
 def _prune_by_bounds(
@@ -1668,17 +1457,39 @@ def _prune_by_bounds(
     return kept
 
 
+def _seq_keyed_scan(
+    spark: SparkSession, schema, entries: list[dict], seq_col: str
+) -> DataFrame:
+    """One scan over delete files with each row's delete-file sequence
+    ``seq_col`` attached through a broadcast lookup keyed by the
+    file's full scan path."""
+    from pyspark.sql import functions as F
+
+    paths = [os.path.abspath(d["path"]) for d in entries]
+    lk = local_rows_df(
+        spark,
+        [
+            (merge_core.scan_path_key(p), d["seq"])
+            for p, d in zip(paths, entries)
+        ],
+        f"__fp string, {seq_col} long",
+    )
+    return (
+        spark.read.schema(schema)
+        .parquet(*paths)
+        .select("*", F.col("_metadata.file_path").alias("__fp"))
+        .join(F.broadcast(lk), "__fp")
+        .drop("__fp")
+    )
+
+
 def _pos_delete_rows_df(spark: SparkSession, pos_del: list[dict]):
     """Every ``(file_path, pos, __pseq)`` row the given positional-
     delete entries assert — parquet pos-delete files (spec field ids
-    2147483546/2147483545, delete-file sequence attached via a
-    broadcast basename lookup) unioned with v3 deletion vectors (the
-    Puffin blob slices decode on EXECUTORS via an Arrow-batched pandas
-    UDF — the descriptor frame is O(DV'd files), the exploded
-    positions are the only data moved). Returns None when there are
-    no positional deletes."""
-    from pyspark.sql import functions as F
-
+    2147483546/2147483545) unioned with v3 deletion vectors, whose
+    Puffin blob slices decode on EXECUTORS
+    (:func:`merge_core.deleted_positions_df`, the Delta DV decoder).
+    Returns None when there are no positional deletes."""
     dv_del = [d for d in pos_del if d.get("dv")]
     pq_del = [d for d in pos_del if not d.get("dv")]
     pdel = None
@@ -1689,25 +1500,60 @@ def _pos_delete_rows_df(spark: SparkSession, pos_del: list[dict]):
                 T.StructField("pos", T.LongType(), True),
             ]
         )
-        pdel = (
-            spark.read.schema(pd_schema)
-            .parquet(*[d["path"] for d in pq_del])
-            .select(
-                "*",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__dbn"),
-            )
-        )
-        plk = local_rows_df(spark, 
-            [(_basename(d["orig"]), d["seq"]) for d in pq_del],
-            "__dbn string, __pseq long",
-        )
-        pdel = pdel.join(F.broadcast(plk), "__dbn", "inner").drop("__dbn")
+        pdel = _seq_keyed_scan(spark, pd_schema, pq_del, "__pseq")
     if dv_del:
-        dvdf = _puffin_dv_positions_df(spark, dv_del)
+        dvdf = merge_core.deleted_positions_df(
+            spark,
+            [
+                (
+                    d["dv"]["referenced"], "puffin", "", d["path"],
+                    d["dv"]["offset"], d["dv"]["size"], d["seq"],
+                )
+                for d in dv_del
+            ],
+        )
         pdel = dvdf if pdel is None else pdel.unionByName(dvdf)
     return pdel
+
+
+def _eq_delete_sets(
+    spark: SparkSession, meta: dict, schema, eq_del: list[dict]
+) -> list[tuple[list[str], DataFrame]]:
+    """Equality-delete files grouped by their equality column set:
+    per set, the column names and ONE scan of the set's files giving
+    ``__eq_<col>`` values and the delete sequence ``__eseq``."""
+    from pyspark.sql import functions as F
+
+    by_id = {
+        int(f["id"]): f["name"] for f in _current_schema(meta)["fields"]
+    }
+    sets: dict[tuple, list[dict]] = {}
+    for d in eq_del:
+        ids = tuple(sorted(d["equality_ids"]))
+        if not ids:
+            raise NotImplementedError(
+                "iceberg: equality delete file without equality_ids"
+            )
+        sets.setdefault(ids, []).append(d)
+    out = []
+    for ids, dels in sorted(sets.items()):
+        try:
+            cols = [by_id[i] for i in ids]
+        except KeyError as e:
+            raise NotImplementedError(
+                f"iceberg: equality delete on unknown field id {e}"
+            ) from None
+        eq_schema = T.StructType(
+            [T.StructField(c, schema[c].dataType, True) for c in cols]
+        )
+        edel = _seq_keyed_scan(spark, eq_schema, dels, "__eseq").select(
+            *[F.col(c).alias(f"__eq_{c}") for c in cols], "__eseq"
+        )
+        out.append((cols, edel))
+    return out
+
+
+_LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
 
 
 def read_entries_with_deletes(
@@ -1717,77 +1563,125 @@ def read_entries_with_deletes(
     data: list[dict],
     pos_del: list[dict],
     eq_del: list[dict],
-    basename_col: str | None = None,
+    file_cols: tuple[str, dict[str, tuple]] | None = None,
     position_cols: tuple[str, str] | None = None,
+    lineage: bool = False,
 ) -> DataFrame:
-    """The merge-on-read core of :func:`read_iceberg`, reusable over a
-    SUBSET of a snapshot's data entries: read the given data files and
-    anti-join away the rows the given positional/equality delete files
-    erase, sequence-gated per the spec. The copy-on-write merge reads
-    its affected files through this so a rewrite never resurrects
-    rows a delete had already removed. ``basename_col`` names an extra
-    output column carrying each row's source-file basename (captured
-    BEFORE any join — metadata columns are unreliable once rows cross
-    an exchange), for callers routing rows back to per-file
-    partitions (compaction). ``position_cols=(path_col, pos_col)``
-    appends each surviving row's manifest-listed data-file path and
-    raw parquet row position — the identity a positional-delete
-    WRITER needs (``delete_iceberg_positions``)."""
+    """The one Iceberg scan under :func:`read_iceberg`, reusable over a
+    SUBSET of a snapshot's data entries: read the given data files as
+    ONE parquet scan and anti-join away the rows the given
+    positional/equality delete files erase, sequence-gated per the
+    spec. The copy-on-write writers read their affected files through
+    this so a rewrite never resurrects rows a delete had already
+    removed.
+
+    Each row's ``(_metadata.file_path, _metadata.row_index)`` is
+    captured once, straight off the scan (metadata columns are
+    unreliable once rows cross an exchange), and joins ONE broadcast
+    per-file lookup keyed by the file's FULL scan path
+    (:func:`merge_core.scan_path_key`) — files that share a basename in
+    different directories never mix. The lookup carries the manifest
+    path, the data sequence, identity-partition and default-value
+    constants, ``first_row_id`` and caller constants:
+
+    - ``file_cols=(ddl, {manifest path: values})``: caller constants
+      per data file (a routing ``__pid``, a sequence);
+    - ``position_cols=(path_col, pos_col)`` appends each surviving
+      row's manifest-listed data-file path and raw parquet row
+      position — the identity a positional-delete WRITER needs
+      (``delete_iceberg_positions``);
+    - ``lineage=True`` (v3 ROW LINEAGE) appends ``_row_id`` and
+      ``_last_updated_sequence_number``: the materialized columns of
+      files rewritten by maintenance, else ``first_row_id + position``
+      and the file's data sequence (Spark null-fills requested
+      columns absent from a parquet file).
+
+    A plain read with nothing to attach is the bare schema'd scan."""
     from pyspark.sql import functions as F
 
+    extra = (
+        list(T._parse_datatype_string(file_cols[0]).fields)
+        if file_cols else []
+    )
+    read_schema = T.StructType(
+        list(schema.fields)
+        + [T.StructField(c, T.LongType(), True)
+           for c in (_LINEAGE_COLS if lineage else ())]
+    )
+    out_cols = (
+        list(read_schema.fieldNames())
+        + [f.name for f in extra]
+        + list(position_cols or ())
+    )
+    missing = [
+        d["orig"] for d in data if d.get("first_row_id") is None
+    ] if lineage else []
+    if missing:
+        # inheritance (_snapshot_entries) already resolved every null
+        # it could — a residue means the snapshot itself lacks
+        # first-row-id
+        raise NotImplementedError(
+            "iceberg v3: data files under a snapshot without "
+            "first-row-id — their first_row_id is unassignable even by "
+            f"inheritance: {missing[:3]}"
+        )
     if not data:
-        out = spark.createDataFrame([], schema)
-        if basename_col:
-            out = out.withColumn(basename_col, F.lit(None).cast("string"))
+        out = spark.createDataFrame([], read_schema)
+        for f in extra:
+            out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
         if position_cols:
             out = out.withColumn(
                 position_cols[0], F.lit(None).cast("string")
             ).withColumn(position_cols[1], F.lit(None).cast("long"))
         return out
+    # absolute paths: the scan and the lookup key resolve them alike
+    paths = [os.path.abspath(d["path"]) for d in data]
+    df = spark.read.schema(read_schema).parquet(*paths)
     consts = _projection_consts(meta, data)
-    if not pos_del and not eq_del and not position_cols:
-        out = spark.read.schema(schema).parquet(
-            *[d["path"] for d in data]
-        )
-        if basename_col or consts:
-            bn = basename_col or "__bn"
-            out = out.select(
-                "*",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias(bn),
-            )
-            if consts:
-                out = _substitute_identity_consts(
-                    spark, out, consts, data, schema, bn
-                )
-            if not basename_col:
-                out = out.drop(bn)
-        return out
-    df = (
-        spark.read.schema(schema)
-        .parquet(*[d["path"] for d in data])
-        .select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        .withColumn(
-            "__bn", F.element_at(F.split(F.col("__fp"), "/"), -1)
-        )
-        .drop("__fp")
+    ccols = sorted(
+        {c for m in consts.values() for c in m if c in schema.fieldNames()}
     )
-    if consts:
-        df = _substitute_identity_consts(
-            spark, df, consts, data, schema, "__bn"
+    if not (
+        ccols or pos_del or eq_del or file_cols or position_cols or lineage
+    ):
+        return df
+    ftypes = {f.name: f.dataType for f in schema.fields}
+    lk_fields = [
+        T.StructField("__fp", T.StringType(), False),
+        T.StructField("__orig", T.StringType(), False),
+        T.StructField("__dseq", T.LongType(), True),
+        T.StructField("__rl_first", T.LongType(), True),
+    ]
+    for c in ccols:
+        # a per-column presence flag: a file without a constant for
+        # the column (an older unpartitioned spec) keeps its own
+        # values, while a null partition value substitutes as null
+        lk_fields.append(T.StructField(f"__pc_{c}", ftypes[c], True))
+        lk_fields.append(T.StructField(f"__pcs_{c}", T.BooleanType(), False))
+    lk_fields += extra
+    rows: dict[str, tuple] = {}
+    for d, path in zip(data, paths):
+        fp = merge_core.scan_path_key(path)
+        m = consts.get(d["orig"], {})
+        row = [fp, d["orig"], d.get("seq"), d.get("first_row_id")]
+        for c in ccols:
+            row += [m.get(c), c in m]
+        if file_cols:
+            row += list(file_cols[1][d["orig"]])
+        rows.setdefault(fp, tuple(row))
+    lk = local_rows_df(spark, list(rows.values()), T.StructType(lk_fields))
+    df = df.select(
+        "*",
+        F.col("_metadata.file_path").alias("__fp"),
+        F.col("_metadata.row_index").alias("__pos"),
+    ).join(F.broadcast(lk), "__fp")
+    for c in ccols:
+        df = df.withColumn(
+            c,
+            F.when(F.col(f"__pcs_{c}"), F.col(f"__pc_{c}")).otherwise(
+                F.col(c)
+            ),
         )
-    lk = local_rows_df(spark, 
-        [(_basename(d["orig"]), d["orig"], d["seq"]) for d in data],
-        "__bn string, __orig string, __dseq long",
-    )
-    df = df.join(F.broadcast(lk), "__bn", "inner")
-    if not basename_col:
-        df = df.drop("__bn")
 
     pdel = _pos_delete_rows_df(spark, pos_del)
     if pdel is not None:
@@ -1798,75 +1692,29 @@ def read_entries_with_deletes(
             & (F.col("x.__pseq") >= F.col("d.__dseq")),
             "left_anti",
         )
+    for cols, edel in _eq_delete_sets(spark, meta, schema, eq_del):
+        cond = F.col("__eseq") > F.col("d.__dseq")
+        for c in cols:
+            cond = cond & F.col(f"d.{c}").eqNullSafe(F.col(f"__eq_{c}"))
+        df = df.alias("d").join(edel, cond, "left_anti")
 
-    if eq_del:
-        by_id = {
-            int(f["id"]): f["name"]
-            for f in _current_schema(meta)["fields"]
-        }
-        # group equality-delete files by their equality column set —
-        # each set is one anti-join
-        sets: dict[tuple, list[dict]] = {}
-        for d in eq_del:
-            ids = tuple(sorted(d["equality_ids"]))
-            if not ids:
-                raise NotImplementedError(
-                    "iceberg: equality delete file without "
-                    "equality_ids"
-                )
-            sets.setdefault(ids, []).append(d)
-        for ids, dels in sorted(sets.items()):
-            try:
-                cols = [by_id[i] for i in ids]
-            except KeyError as e:
-                raise NotImplementedError(
-                    f"iceberg: equality delete on unknown field id {e}"
-                ) from None
-            eq_schema = T.StructType(
-                [
-                    T.StructField(
-                        c, schema[c].dataType, True
-                    )
-                    for c in cols
-                ]
-            )
-            edel = (
-                spark.read.schema(eq_schema)
-                .parquet(*[d["path"] for d in dels])
-                .select(
-                    *[F.col(c).alias(f"__eq_{c}") for c in cols],
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__ebn"),
-                )
-            )
-            elk = local_rows_df(spark, 
-                [(_basename(d["orig"]), d["seq"]) for d in dels],
-                "__ebn string, __eseq long",
-            )
-            edel = edel.join(
-                F.broadcast(elk), "__ebn", "inner"
-            ).drop("__ebn")
-            cond = F.col("__eseq") > F.col("d.__dseq")
-            for c in cols:
-                cond = cond & F.col(f"d.{c}").eqNullSafe(
-                    F.col(f"__eq_{c}")
-                )
-            df = df.alias("d").join(edel, cond, "left_anti")
-
-    out_cols = list(schema.fieldNames())
-    if basename_col:
-        # __bn was captured straight off the scan, before any join
-        df = df.withColumn(basename_col, F.col("__bn"))
-        out_cols.append(basename_col)
+    if lineage:
+        df = df.withColumn(
+            "_row_id",
+            F.coalesce(
+                F.col("_row_id"), F.col("__rl_first") + F.col("__pos")
+            ),
+        ).withColumn(
+            "_last_updated_sequence_number",
+            F.coalesce(
+                F.col("_last_updated_sequence_number"), F.col("__dseq")
+            ),
+        )
     if position_cols:
         df = df.withColumn(
             position_cols[0], F.col("__orig")
         ).withColumn(position_cols[1], F.col("__pos"))
-        out_cols.extend(position_cols)
-    return df.drop("__pos", "__orig", "__dseq", "__bn").select(
-        *out_cols
-    )
+    return df.select(*out_cols)
 
 
 def read_iceberg_appends(
@@ -1947,21 +1795,7 @@ def read_iceberg_appends(
                     )
     if not files:
         return spark.createDataFrame([], schema)
-    out = spark.read.schema(schema).parquet(
-        *[d["path"] for d in files]
-    )
-    consts = _projection_consts(meta, files)
-    if consts:
-        out = out.select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__bn"),
-        )
-        out = _substitute_identity_consts(
-            spark, out, consts, files, schema, "__bn"
-        ).drop("__bn")
-    return out
+    return read_entries_with_deletes(spark, meta, schema, files, [], [])
 
 
 def _delete_entry_key(ent: dict) -> tuple:
@@ -2134,6 +1968,12 @@ def _prune_eq_candidates(
     return kept
 
 
+def _dseq_cols(entries: list[dict]) -> tuple:
+    """``file_cols`` giving each row its data file's sequence
+    ``__cl_dseq`` — the gate a changelog's new deletes compare with."""
+    return "__cl_dseq long", {d["orig"]: (d["seq"],) for d in entries}
+
+
 def _eq_deleted_rows(
     spark: SparkSession,
     meta: dict,
@@ -2156,20 +1996,8 @@ def _eq_deleted_rows(
     if not candidates or not new_eq:
         return None
     before = read_entries_with_deletes(
-        spark,
-        meta,
-        schema,
-        candidates,
-        prev_pos,
-        prev_eq,
-        position_cols=("__cl_path", "__cl_pos"),
-    ).drop("__cl_pos")
-    slk = local_rows_df(spark, 
-        [(d["orig"], d["seq"]) for d in candidates],
-        "__cl_path string, __cl_dseq long",
-    )
-    before = before.join(F.broadcast(slk), "__cl_path", "inner").drop(
-        "__cl_path"
+        spark, meta, schema, candidates, prev_pos, prev_eq,
+        file_cols=_dseq_cols(candidates),
     )
     return _eq_deleted_from_before(spark, meta, schema, before, new_eq)
 
@@ -2187,50 +2015,10 @@ def _eq_deleted_from_before(
     the positional branch already read."""
     from pyspark.sql import functions as F
 
-    by_id = {
-        int(f["id"]): f["name"] for f in _current_schema(meta)["fields"]
-    }
-    sets: dict[tuple, list[dict]] = {}
-    for d in new_eq:
-        ids = tuple(sorted(d["equality_ids"]))
-        if not ids:
-            raise NotImplementedError(
-                "iceberg changelog: equality delete file without "
-                "equality_ids"
-            )
-        sets.setdefault(ids, []).append(d)
-
     pieces: list[DataFrame] = []
     remaining = before
-    items = sorted(sets.items())
-    for si, (ids, dels) in enumerate(items):
-        try:
-            cols = [by_id[i] for i in ids]
-        except KeyError as e:
-            raise NotImplementedError(
-                f"iceberg changelog: equality delete on unknown "
-                f"field id {e}"
-            ) from None
-        eq_schema = T.StructType(
-            [T.StructField(c, schema[c].dataType, True) for c in cols]
-        )
-        edel = (
-            spark.read.schema(eq_schema)
-            .parquet(*[d["path"] for d in dels])
-            .select(
-                *[F.col(c).alias(f"__eq_{c}") for c in cols],
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__ebn"),
-            )
-        )
-        elk = local_rows_df(spark, 
-            [(_basename(d["orig"]), d["seq"]) for d in dels],
-            "__ebn string, __eseq long",
-        )
-        edel = edel.join(F.broadcast(elk), "__ebn", "inner").drop(
-            "__ebn"
-        )
+    items = _eq_delete_sets(spark, meta, schema, new_eq)
+    for si, (cols, edel) in enumerate(items):
         cond = F.col("__eseq") > F.col("d.__cl_dseq")
         for c in cols:
             cond = cond & F.col(f"d.{c}").eqNullSafe(
@@ -2403,20 +2191,9 @@ def read_iceberg_changes(
         rem_before = None  # pos-hit rows that survived the new deletes
         if pos_hit:
             before = read_entries_with_deletes(
-                spark,
-                meta,
-                schema,
-                pos_hit,
-                prev_p,
-                prev_e,
+                spark, meta, schema, pos_hit, prev_p, prev_e,
+                file_cols=_dseq_cols(pos_hit),
                 position_cols=("__cl_path", "__cl_pos"),
-            )
-            slk = local_rows_df(spark, 
-                [(d["orig"], d["seq"]) for d in pos_hit],
-                "__cl_path string, __cl_dseq long",
-            )
-            before = before.join(
-                F.broadcast(slk), "__cl_path", "inner"
             )
             pos_rows = _pos_delete_rows_df(spark, new_pos)
             cond = (
@@ -2880,7 +2657,7 @@ def add_iceberg_files(
 
     Spark's partitioned writes reuse one task's file name across
     partition directories, so hive layouts routinely repeat
-    basenames — and this engine's stats/delete joins key files by
+    basenames — and this engine's per-file write stats key files by
     basename. Same-call collisions de-collide IN PLACE exactly like
     ``convert_parquet_to_delta``: an ``os.rename`` inside the same
     directory is metadata-only (still zero data copy), prefixing a

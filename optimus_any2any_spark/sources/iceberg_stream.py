@@ -40,18 +40,14 @@ from pyspark.sql import types as T
 # imports at module level (``merge_core``, ``localrel``).
 import sys as _sys
 
-from pyspark import cloudpickle as _cloudpickle
-
 from optimus_any2any_spark import localrel as _localrel
+from optimus_any2any_spark import ship_by_value
 from optimus_any2any_spark.formats import avrobin as _avro
 from optimus_any2any_spark.formats import puffin as _puffin
-from optimus_any2any_spark.formats import roaring as _roaring
 from optimus_any2any_spark.sources import iceberg as _ice
 from optimus_any2any_spark.streaming import merge_core as _merge_core
 
-for _m in (_avro, _roaring, _puffin, _localrel, _merge_core, _ice):
-    _cloudpickle.register_pickle_by_value(_m)
-_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+ship_by_value(_localrel, _merge_core, _ice, _sys.modules[__name__])
 
 
 def _file_consts(

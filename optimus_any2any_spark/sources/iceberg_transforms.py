@@ -272,13 +272,14 @@ def transform_column(
 
 def _bucket_column(col: Column, src_ice_type: str, n: int) -> Column:
     import pandas  # noqa: F401  (pandas_udf annotation resolution)
-    from pyspark import cloudpickle as _cp
     from pyspark.sql.functions import pandas_udf
+
+    from optimus_any2any_spark import ship_by_value
 
     globals().setdefault("pandas", pandas)
     import optimus_any2any_spark.sources.iceberg_transforms as _self
 
-    _cp.register_pickle_by_value(_self)
+    ship_by_value(_self)
     _bucket_of = bucket_of
 
     # timestamps reduce to epoch micros JVM-side so the UDF sees plain

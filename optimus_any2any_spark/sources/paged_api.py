@@ -230,8 +230,8 @@ def register(spark) -> None:
     """
     import sys
 
-    from pyspark import cloudpickle
+    from optimus_any2any_spark import ship_by_value
 
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    ship_by_value(sys.modules[__name__])
     spark.dataSource.register(PagedApiDataSource)
     spark.dataSource.register(SalesforceChainDataSource)

@@ -86,7 +86,12 @@ from optimus_any2any_spark.formats.footer_stats import (
     norm_float_zero,
     kind_of_spark_type,
 )
-from optimus_any2any_spark.sources.delta import _log_dir, replay_log
+from optimus_any2any_spark.sources.delta import (
+    _log_dir,
+    _read_files_dv_aware,
+    dv_descriptor,
+    replay_log,
+)
 from optimus_any2any_spark.streaming import merge_core
 from optimus_any2any_spark.streaming.merge_core import (
     _MAX_DRIVER_KEYS,
@@ -245,176 +250,14 @@ def _to_phys(
     )
 
 
-def _read_files_dv_aware(
-    spark: SparkSession,
-    table_path: str,
-    data_schema: T.StructType,
-    paths: list[str],
-    live: dict[str, dict],
-    basename_col: str | None = None,
-    pfields=None,
-    row_tracking: tuple | None = None,
-) -> DataFrame:
-    """Read the given live files with each file's deletion-vector rows
-    DROPPED — the read half of copy-on-write over a merge-on-read
-    table. A live add carrying a DV means the raw parquet rows are not
-    all live; rewriting from raw parquet would resurrect the deleted
-    rows, so every CoW writer (merge / delete / optimize) reads
-    through this. The vectors decode on executors (one Arrow-batched
-    anti-join total, the same plan as ``read_delta``); plain tables
-    take the schema'd parquet scan untouched. ``basename_col`` names
-    an extra column carrying each row's source-file basename (for the
-    callers' pid routing joins).
-
-    ``row_tracking=(rid_phys, rcv_phys)`` (the table's materialized
-    column names) appends ``__rt_id`` / ``__rt_cv``: each row's stable
-    row id and commit version, ``coalesce(materialized column,
-    add.baseRowId + position)`` / ``coalesce(..., add.
-    defaultRowCommitVersion)`` per PROTOCOL.md Row Tracking — one
-    broadcast over the file lookup, zero extra jobs."""
-    from optimus_any2any_spark.sources.delta import (
-        _dv_descriptor_rows,
-        dv_positions_df,
-    )
-
-    read_schema = (
-        _phys_schema(data_schema, pfields) if pfields is not None
-        else data_schema
-    )
-    if row_tracking is not None:
-        rid, rcv = row_tracking
-        # files REWRITTEN under row tracking carry the materialized
-        # columns; fresh appends do not and read them as null (Spark
-        # null-fills requested columns absent from a parquet file)
-        read_schema = T.StructType(
-            list(read_schema.fields)
-            + [
-                T.StructField(rid, T.LongType(), True),
-                T.StructField(rcv, T.LongType(), True),
-            ]
-        )
-    df = spark.read.schema(read_schema).parquet(
-        *[os.path.join(table_path, p) for p in paths]
-    )
-    if pfields is not None:
-        # mapped tables: parquet carries physical names (all nesting
-        # levels) — cast back to the logical schema the caller's
-        # algebra runs on. Row-tracking materialized columns are NOT
-        # part of the logical schema, so column mapping never applies
-        # to them: their configured names ARE the parquet names, and
-        # they pass through the logical re-select verbatim.
-        df = df.select(
-            *[
-                F.col("`" + pfields[f.name].name + "`")
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in data_schema.fields
-            ],
-            *(
-                [
-                    F.col("`" + row_tracking[0] + "`"),
-                    F.col("`" + row_tracking[1] + "`"),
-                ]
-                if row_tracking is not None
-                else []
-            ),
-            F.col("_metadata").alias("_metadata"),
-        )
-    bn = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    dv_sub = {p: live[p] for p in paths if live[p].get("deletionVector")}
-    if row_tracking is not None:
-        rid, rcv = row_tracking
-        # basename + position captured ONCE, before any join
-        df = df.select(
-            "*",
-            bn.alias("__dv_bn"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        if pfields is not None:
-            # the mapped re-select materialized _metadata as a plain
-            # struct column — drop it now that bn/pos are captured
-            df = df.drop("_metadata")
-        rt_rows = []
-        for p in paths:
-            a = live[p]
-            if (
-                a.get("baseRowId") is None
-                or a.get("defaultRowCommitVersion") is None
-            ):
-                raise NotImplementedError(
-                    "delta row tracking: live file "
-                    f"{p!r} carries no baseRowId — backfill of "
-                    "pre-enablement files is beyond this writer"
-                )
-            rt_rows.append(
-                (
-                    p.rsplit("/", 1)[-1],
-                    int(a["baseRowId"]),
-                    int(a["defaultRowCommitVersion"]),
-                )
-            )
-        lk = local_rows_df(spark, 
-            rt_rows, "__dv_bn string, __rt_base long, __rt_dcv long"
-        )
-        df = (
-            df.join(F.broadcast(lk), "__dv_bn", "inner")
-            .withColumn(
-                "__rt_id",
-                F.coalesce(
-                    F.col("`" + rid + "`"),
-                    F.col("__rt_base") + F.col("__dv_pos"),
-                ),
-            )
-            .withColumn(
-                "__rt_cv",
-                F.coalesce(
-                    F.col("`" + rcv + "`"), F.col("__rt_dcv")
-                ),
-            )
-            .drop(rid, rcv, "__rt_base", "__rt_dcv")
-        )
-        if dv_sub:
-            deleted = dv_positions_df(
-                spark,
-                _dv_descriptor_rows(
-                    table_path, {p: live[p] for p in paths}
-                ),
-            )
-            df = df.join(
-                deleted, ["__dv_bn", "__dv_pos"], "left_anti"
-            )
-        df = df.drop("__dv_pos")
-        if basename_col:
-            return df.withColumnRenamed("__dv_bn", basename_col)
-        return df.drop("__dv_bn")
-    if not dv_sub:
-        if basename_col:
-            df = df.select("*", bn.alias(basename_col))
-        return df.drop("_metadata") if pfields is not None else df
-    # the basename must be captured BEFORE the anti-join —
-    # input_file_name()/metadata columns are unreliable once the rows
-    # have crossed an exchange
-    df = df.select(
-        "*",
-        bn.alias("__dv_bn"),
-        F.col("_metadata.row_index").alias("__dv_pos"),
-    )
-    if pfields is not None:
-        df = df.drop("_metadata")
-    # guard over the FULL read set (not just the DV'd subset): the
-    # helper only emits rows for DV-carrying adds, but its basename-
-    # collision check must span every file in this read — a DV'd file
-    # and a plain file sharing a basename would cross-apply deletions
-    deleted = dv_positions_df(
-        spark,
-        _dv_descriptor_rows(table_path, {p: live[p] for p in paths}),
-    )
-    df = df.join(deleted, ["__dv_bn", "__dv_pos"], "left_anti").drop(
-        "__dv_pos"
-    )
-    if basename_col:
-        return df.withColumnRenamed("__dv_bn", basename_col)
-    return df.drop("__dv_bn")
+def _pid_cols(single: bool, path_pids) -> tuple | None:
+    """The ``file_cols`` of :func:`_read_files_dv_aware` that route
+    each file's rows to its output partition: ``__pid`` per log path
+    from ``(path, pid)`` pairs, or None when one partition is
+    touched (the caller adds a constant)."""
+    if single:
+        return None
+    return "__pid int", {p: (pid,) for p, pid in path_pids}
 
 
 def _row_tracking_of(meta: dict | None) -> tuple[str, str] | None:
@@ -1297,12 +1140,7 @@ def restore_delta(
         dv = a.get("deletionVector") or {}
         if dv.get("storageType") == "u":
             # the re-added file's vector blob must still exist too
-            from optimus_any2any_spark.sources.delta import (
-                _dv_descriptor_rows,
-            )
-
-            rows = _dv_descriptor_rows(table_path, {p: a})
-            if rows and rows[0][3] and not os.path.exists(rows[0][3]):
+            if not os.path.exists(dv_descriptor(table_path, a)[2]):
                 missing.append(f"{p} (deletion vector)")
                 continue
         add = dict(a)
@@ -1410,23 +1248,16 @@ def vacuum_delta(spark: SparkSession, table_path: str) -> list[str]:
     Real Delta gates this on a tombstone-age retention window to
     protect concurrent readers; under the single-writer-single-reader
     session model here the live set is the whole truth."""
-    from optimus_any2any_spark.sources.delta import _dv_descriptor_rows
-
     state = replay_log(spark, table_path)
     live = set(state["live"])
     # DV .bin files still referenced by a live add's descriptor stay;
     # vectors consumed by a later merge/delete/purge are garbage like
     # the parquet files they annotated
-    # only consult the descriptor helper when some live add actually
-    # carries a vector: its basename-collision guard exists for the
-    # row-index JOIN, and vacuum of a DV-less table must not trip it
-    ref_bins: set[str] = set()
-    if any(a.get("deletionVector") for a in state["live"].values()):
-        ref_bins = {
-            os.path.abspath(r[3])
-            for r in _dv_descriptor_rows(table_path, state["live"])
-            if r[3]
-        }
+    ref_bins = {
+        os.path.abspath(d[2])
+        for a in state["live"].values()
+        if (d := dv_descriptor(table_path, a)) is not None and d[2]
+    }
     gone = []
     for name in sorted(os.listdir(table_path)):
         full = os.path.join(table_path, name)
@@ -1621,9 +1452,8 @@ def compact_delta(
     single = len(ptuples) == 1
     cur = _read_files_dv_aware(
         spark, table_path, data_schema, [p for p, _ in src],
-        state["live"], basename_col=None if single else "__rel",
-        pfields=pfields,
-        row_tracking=rt,
+        state["live"], pfields=pfields, row_tracking=rt,
+        file_cols=_pid_cols(single, src),
     )
     if rt is not None:
         # OPTIMIZE preserves lineage: the rewritten files carry every
@@ -1634,25 +1464,6 @@ def compact_delta(
         ).withColumnRenamed("__rt_cv", rt[1])
     if single:
         cur = cur.withColumn("__pid", F.lit(0).cast("int"))
-    else:
-        bn_src = [(p.rsplit("/", 1)[-1], pid) for p, pid in src]
-        if len({b for b, _ in bn_src}) != len(bn_src):
-            raise NotImplementedError(
-                "delta optimize: compacted files share a basename — "
-                "the pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_src,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        cur = cur.join(F.broadcast(rel_pid), "__rel", "inner").drop(
-            "__rel"
-        )
     if zorder_by:
         cur = _with_zorder_value(cur, zorder_by, data_schema)
     total = cur.count()
@@ -2209,23 +2020,6 @@ def merge_delta_batch(
             for pid, hits in sorted(hit_by_pid.items())
             for e in hits
         ]
-        bn_pid_rows = [
-            (p.rsplit("/", 1)[-1], pid) for p, pid in rel_pid_rows
-        ]
-        if len({b for b, _ in bn_pid_rows}) != len(bn_pid_rows):
-            raise NotImplementedError(
-                "delta merge: affected files share a basename — the "
-                "pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_pid_rows,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
         # explicit schema: pre-evolution files read new columns
         # as null (Delta mergeSchema read semantics); files carrying
         # deletion vectors read through the DV anti-join so the merge
@@ -2233,16 +2027,11 @@ def merge_delta_batch(
         cur = _read_files_dv_aware(
             spark, table_path, data_schema,
             [r for r, _ in rel_pid_rows], state["live"],
-            basename_col=None if single else "__rel",
-            pfields=pfields,
-            row_tracking=rt,
+            pfields=pfields, row_tracking=rt,
+            file_cols=_pid_cols(single, rel_pid_rows),
         )
         if single:
             cur = cur.withColumn("__pid", F.lit(0).cast("int"))
-        else:
-            cur = cur.join(
-                F.broadcast(rel_pid), "__rel", "inner"
-            ).drop("__rel")
         total_hit_rows = sum(
             max(e["rows"], 0)
             for hits in hit_by_pid.values()
@@ -2507,72 +2296,49 @@ def _dml_where(
     pred = F.expr(where) if where else F.lit(True)
     hit = F.coalesce(pred, F.lit(False))  # null predicate: row keeps
 
-    # typed partition values + routing pid per file basename (Delta
-    # partitionValues are strings keyed by physical names)
+    # partition tuple per file (Delta partitionValues are strings
+    # keyed by physical names)
     type_of = {f.name: f.dataType for f in schema.fields}
     pv_of = {
-        p.rsplit("/", 1)[-1]: tuple(
+        p: tuple(
             (a.get("partitionValues") or {}).get(phys(c))
             for c in part_cols
         )
         for p, a in live.items()
     }
-    if len(pv_of) != len(live):
-        raise NotImplementedError(
-            "delta dml: live files share a basename — the routing "
-            "join would misattribute rows"
-        )
 
-    def _read(paths: list[str]):
-        cur = _read_files_dv_aware(
+    def _read(paths: list[str], file_cols):
+        return _read_files_dv_aware(
             spark, table_path, data_schema, paths, live,
-            basename_col="__bn", pfields=pfields,
-            row_tracking=rt,
+            pfields=pfields, row_tracking=rt,
+            part_fields=[schema[c] for c in part_cols],
+            file_cols=file_cols,
         )
-        if part_cols:
-            lk = local_rows_df(spark, 
-                [
-                    (bn,) + pv_of[bn]
-                    for bn in sorted(
-                        p.rsplit("/", 1)[-1] for p in paths
-                    )
-                ],
-                T.StructType(
-                    [T.StructField("__bn", T.StringType(), False)]
-                    + [
-                        T.StructField(c, T.StringType(), True)
-                        for c in part_cols
-                    ]
-                ),
-            )
-            for c in part_cols:
-                lk = lk.withColumn(c, F.col(c).cast(type_of[c]))
-            cur = cur.join(F.broadcast(lk), "__bn")
-        return cur
 
     # ---- phase 1: which files contain matching rows? (one scan) ----
-    all_paths = sorted(live)
     per_file = (
-        _read(all_paths)
-        .groupBy("__bn")
+        _read(sorted(live), ("__rel string", {p: (p,) for p in live}))
+        .groupBy("__rel")
         .agg(F.sum(hit.cast("long")).alias("__hits"))
         .collect()
     )
-    touched_bn = sorted(
-        r["__bn"] for r in per_file if int(r["__hits"] or 0) > 0
+    touched = sorted(
+        r["__rel"] for r in per_file if int(r["__hits"] or 0) > 0
     )
-    if not touched_bn:
+    if not touched:
         return None  # nothing matched: no version burned
-    bn_to_path = {p.rsplit("/", 1)[-1]: p for p in live}
-    touched = [bn_to_path[bn] for bn in touched_bn]
 
     version = state["version"] + 1
-    ptuples = sorted({pv_of[bn] for bn in touched_bn}, key=str)
+    ptuples = sorted({pv_of[p] for p in touched}, key=str)
     pid_of = {pt: i for i, pt in enumerate(ptuples)}
     single = len(ptuples) == 1
 
     # ---- phase 2: rewrite ONLY the touched files ----
-    cur = _read(touched)
+    cur = _read(
+        touched,
+        _pid_cols(single, [(p, pid_of[pv_of[p]]) for p in touched]),
+    )
+    route = [] if single else ["__pid"]
     if set_exprs is None:
         out = cur.filter(~hit)
     else:
@@ -2585,7 +2351,7 @@ def _dml_where(
                 else F.col(c)
                 for c in data_cols
             ],
-            *[F.col(c) for c in ["__bn"] + part_cols],
+            *[F.col(c) for c in route + part_cols],
             *(
                 [
                     # row tracking's UPDATE contract: the row KEEPS
@@ -2606,15 +2372,15 @@ def _dml_where(
             )
 
             check_delta_constraints(
-                state["meta"], out.drop("__bn"), "update"
+                state["meta"], out.drop(*route), "update"
             )
 
     pre = None
     if change_data:
-        pre_src = cur
-        if rt is not None:  # CDF rows are logical — no lineage cols
-            pre_src = cur.drop("__rt_id", "__rt_cv")
-        pre = pre_src.filter(hit).localCheckpoint(eager=False)
+        # CDF rows are logical — no routing or lineage columns
+        pre = cur.drop(*route, "__rt_id", "__rt_cv").filter(
+            hit
+        ).localCheckpoint(eager=False)
 
     if rt is not None:
         out = out.withColumnRenamed(
@@ -2623,48 +2389,18 @@ def _dml_where(
 
     # route rows back to their files' partitions and write
     total_rows = sum(
-        max(
-            _entry_from_add(
-                bn_to_path[bn], live[bn_to_path[bn]],
-                phys(data_cols[0]),
-            )["rows"],
-            0,
-        )
-        for bn in touched_bn
+        max(_entry_from_add(p, live[p], phys(data_cols[0]))["rows"], 0)
+        for p in touched
     )
     n_files = max(1, -(-total_rows // target_rows_per_file))
-    if single:
-        body = out.drop("__bn", *part_cols).repartitionByRange(
-            n_files, F.col(data_cols[0])
+    body = out.drop(*part_cols).repartitionByRange(
+        n_files, *[F.col(c) for c in route], F.col(data_cols[0])
+    )
+    if mapped:
+        body = _to_phys(
+            body, data_cols, pfields,
+            keep=(*route, *(rt if rt is not None else ())),
         )
-        if mapped:
-            body = _to_phys(
-                body, data_cols, pfields,
-                keep=rt if rt is not None else (),
-            )
-    else:
-        pid_lk = local_rows_df(spark, 
-            [(bn, pid_of[pv_of[bn]]) for bn in touched_bn],
-            T.StructType(
-                [
-                    T.StructField("__bn", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        body = (
-            out.drop(*part_cols)
-            .join(F.broadcast(pid_lk), "__bn")
-            .drop("__bn")
-            .repartitionByRange(
-                n_files, F.col("__pid"), F.col(data_cols[0])
-            )
-        )
-        if mapped:
-            body = _to_phys(
-                body, data_cols, pfields,
-                keep=("__pid", *rt) if rt is not None else ("__pid",),
-            )
 
     tok = uuid.uuid4().hex  # writer-unique staged and published names
     tmp = os.path.join(table_path, f"_tmp-dml-v{version}-{tok}")
@@ -2688,11 +2424,11 @@ def _dml_where(
         )
     if change_data and pre is not None:
         if set_exprs is None:
-            changes = pre.drop("__bn").withColumn(
+            changes = pre.withColumn(
                 "_change_type", F.lit("delete")
             )
         else:
-            pre_rows = pre.drop("__bn").withColumn(
+            pre_rows = pre.withColumn(
                 "_change_type", F.lit("update_preimage")
             )
             post_rows = pre.select(
@@ -2884,8 +2620,8 @@ def convert_parquet_to_delta(
             files.append((rel, pv))
     # Spark's partitioned writes reuse one task's file name across
     # partition directories, so hive layouts routinely repeat
-    # basenames — and this engine's DV/pid joins key files by
-    # basename. De-collide IN PLACE: an os.rename inside the same
+    # basenames; keep every converted file's basename table-unique.
+    # De-collide IN PLACE: an os.rename inside the same
     # directory is metadata-only (still zero data copy), prefixing a
     # short hash of the partition path.
     seen: dict[str, int] = {}
@@ -3102,11 +2838,6 @@ def purge_deletion_vectors(
     One read of the DV'd files (+ the executor-side vector decode),
     one anti-join, one write split per partition tuple, one grouped
     stats pass — constant jobs in files and partitions."""
-    from optimus_any2any_spark.sources.delta import (
-        _dv_descriptor_rows,
-        dv_positions_df,
-    )
-
     state = replay_log(spark, table_path)
     if state["meta"] is None:
         return None
@@ -3130,128 +2861,29 @@ def purge_deletion_vectors(
         data_schema.fields[0].name if data_schema.fields else None
     )
 
-    ptuples = sorted(
-        {
-            tuple(
-                (a.get("partitionValues") or {}).get(phys(c))
-                for c in part_cols
-            )
-            for a in dv_adds.values()
-        },
-        key=str,
-    )
+    pt_of = {
+        p: tuple(
+            (a.get("partitionValues") or {}).get(phys(c)) for c in part_cols
+        )
+        for p, a in dv_adds.items()
+    }
+    ptuples = sorted(set(pt_of.values()), key=str)
     pid_of = {pt: i for i, pt in enumerate(ptuples)}
     single = len(ptuples) == 1
-    bn_pid = [
-        (
-            p.rsplit("/", 1)[-1],
-            pid_of[
-                tuple(
-                    (a.get("partitionValues") or {}).get(phys(c))
-                    for c in part_cols
-                )
-            ],
-        )
-        for p, a in sorted(dv_adds.items())
-    ]
-
     rt = _row_tracking_of(state["meta"])
-    read_schema = (
-        _phys_schema(data_schema, pfields) if mapped else data_schema
+    kept = _read_files_dv_aware(
+        spark, table_path, data_schema, sorted(dv_adds), dv_adds,
+        pfields=pfields, row_tracking=rt,
+        file_cols=_pid_cols(
+            single, [(p, pid_of[pt]) for p, pt in pt_of.items()]
+        ),
     )
-    if rt is not None:
-        read_schema = T.StructType(
-            list(read_schema.fields)
-            + [
-                T.StructField(rt[0], T.LongType(), True),
-                T.StructField(rt[1], T.LongType(), True),
-            ]
-        )
-    cur = (
-        spark.read.schema(read_schema)
-        .parquet(*[os.path.join(table_path, p) for p in dv_adds])
-        .select(
-            *[
-                F.col(
-                    "`"
-                    + (pfields[f.name].name if mapped else f.name)
-                    + "`"
-                ).cast(f.dataType).alias(f.name)
-                for f in data_schema.fields
-            ],
-            *(
-                [F.col("`" + rt[0] + "`"), F.col("`" + rt[1] + "`")]
-                if rt is not None
-                else []
-            ),
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__dv_bn"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-    )
-    deleted = dv_positions_df(
-        spark, _dv_descriptor_rows(table_path, dv_adds)
-    )
-    kept = cur.join(deleted, ["__dv_bn", "__dv_pos"], "left_anti")
     if rt is not None:
         # the purge rewrite must not re-mint ids: every surviving row
         # materializes its id and commit version
-        rt_rows = []
-        for p, a in sorted(dv_adds.items()):
-            if (
-                a.get("baseRowId") is None
-                or a.get("defaultRowCommitVersion") is None
-            ):
-                raise NotImplementedError(
-                    "delta row tracking: live file "
-                    f"{p!r} carries no baseRowId — backfill of "
-                    "pre-enablement files is beyond this writer"
-                )
-            rt_rows.append(
-                (
-                    p.rsplit("/", 1)[-1],
-                    int(a["baseRowId"]),
-                    int(a["defaultRowCommitVersion"]),
-                )
-            )
-        rlk = local_rows_df(spark, 
-            rt_rows, "__dv_bn string, __rt_base long, __rt_dcv long"
-        )
-        kept = (
-            kept.join(F.broadcast(rlk), "__dv_bn")
-            .withColumn(
-                rt[0],
-                F.coalesce(
-                    F.col("`" + rt[0] + "`"),
-                    F.col("__rt_base") + F.col("__dv_pos"),
-                ),
-            )
-            .withColumn(
-                rt[1],
-                F.coalesce(
-                    F.col("`" + rt[1] + "`"), F.col("__rt_dcv")
-                ),
-            )
-            .drop("__rt_base", "__rt_dcv")
-        )
-    if single:
-        kept = kept.drop("__dv_pos", "__dv_bn")
-    else:
-        pid_lk = local_rows_df(spark, 
-            bn_pid,
-            T.StructType(
-                [
-                    T.StructField("__dv_bn", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        kept = (
-            kept.drop("__dv_pos")
-            .join(F.broadcast(pid_lk), "__dv_bn", "inner")
-            .drop("__dv_bn")
-        )
+        kept = kept.withColumnRenamed(
+            "__rt_id", rt[0]
+        ).withColumnRenamed("__rt_cv", rt[1])
 
     total_rows = sum(
         max(_entry_from_add(p, a, phys(stat_col) if stat_col else "")
@@ -3311,8 +2943,8 @@ def purge_deletion_vectors(
 
 def _delete_via_dv(
     spark, table_path, key_col, kdf, state, hits, version,
-    app_id, batch_id, change_data, part_cols, data_schema, type_of,
-    schema, phys=None, mapped=False, pfields=None, n_keys=None,
+    app_id, batch_id, change_data, part_cols, data_schema, schema,
+    pfields=None, n_keys=None,
 ):
     """Merge-on-read DELETE: matching row positions per affected file
     become deletion vectors; files are RE-ADDED with DV descriptors,
@@ -3328,75 +2960,48 @@ def _delete_via_dv(
     keep both versions live."""
     import uuid as _uuid
 
-    import pandas  # noqa: F401  (pandas_udf annotation resolution)
-    from pyspark import cloudpickle as _cp
-
+    from optimus_any2any_spark import ship_by_value
     from optimus_any2any_spark.formats import roaring as _roaring
     from optimus_any2any_spark.formats.roaring import (
         dv_file_write,
         z85_encode,
     )
-    from optimus_any2any_spark.sources.delta import (
-        _dv_descriptor_rows,
-        dv_positions_df,
-    )
 
+    live = state["live"]
     hit_paths = [p for p, _ in hits]
-    # everything downstream keys by file BASENAME (what
-    # _metadata.file_path yields); map back to the log's path strings,
-    # which may carry subdirectories on external tables — and refuse a
-    # basename collision rather than cross-apply deletions
-    path_of = {p.rsplit("/", 1)[-1]: p for p in hit_paths}
-    if len(path_of) != len(hit_paths):
-        raise NotImplementedError(
-            "delta delete: affected files share a basename — the "
-            "deletion-vector row-index join would cross-apply deletions"
-        )
-    pv_of = {
-        bn: (state["live"][p].get("partitionValues") or {})
-        for bn, p in path_of.items()
+    # everything downstream keys rows by their file's full scan path
+    # (what _metadata.file_path yields); map back to the log's paths
+    path_of = {
+        merge_core.scan_path_key(
+            os.path.abspath(os.path.join(table_path, p))
+        ): p
+        for p in hit_paths
     }
 
     # existing vectors on the affected files decode on EXECUTORS (the
     # same Arrow path the reader uses) — never as driver position lists
-    prior_rows = _dv_descriptor_rows(
-        table_path,
-        {
-            p: state["live"][p]
-            for p in hit_paths
-            if state["live"][p].get("deletionVector")
-        },
-    )
+    prior_rows = [
+        (fp, *d, None)
+        for fp, p in path_of.items()
+        if (d := dv_descriptor(table_path, live[p])) is not None
+    ]
     prior_df = (
-        dv_positions_df(spark, prior_rows)
-        .withColumnRenamed("__dv_bn", "__bn")
-        .withColumnRenamed("__dv_pos", "__pos")
+        merge_core.deleted_positions_df(spark, prior_rows).select(
+            F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
+        )
         if prior_rows
         else None
     )
 
-    if phys is None:
-        phys = lambda c: c  # noqa: E731
-    read_schema = (
-        _phys_schema(data_schema, pfields) if mapped else data_schema
-    )
-    cur = (
-        spark.read.schema(read_schema)
-        .parquet(*[os.path.join(table_path, p) for p in hit_paths])
-        .select(
-            *[
-                F.col(
-                    "`"
-                    + (pfields[f.name].name if mapped else f.name)
-                    + "`"
-                ).cast(f.dataType).alias(f.name)
-                for f in data_schema.fields
-            ],
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__bn"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
+    # the affected files' rows that no EXISTING vector already deleted
+    # (re-deleting them would double-report in the CDF and inflate
+    # cardinality), each with its scan path and row position; the CDF
+    # rows carry the partition values
+    cur = _read_files_dv_aware(
+        spark, table_path, data_schema, hit_paths, live,
+        pfields=pfields,
+        part_fields=[schema[c] for c in part_cols] if change_data else (),
+        positions=True,
     )
     nk = kdf.select(F.col(key_col).alias("__nk"))
     # the caller already knows the distinct key count — re-counting
@@ -3408,25 +3013,21 @@ def _delete_via_dv(
         F.col(key_col).eqNullSafe(F.col("__nk")),
         "inner",
     ).drop("__nk")
-    # drop rows an EXISTING vector already deleted (re-deleting them
-    # would double-report in the CDF and inflate cardinality)
-    if prior_df is not None:
-        matched = matched.join(prior_df, ["__bn", "__pos"], "left_anti")
     matched = matched.persist()
     try:
         # merged position set per touched file = new matches ∪ the
         # file's prior vector (files with a vector but NO new match
         # keep their old DV untouched — semi-join restricts the union)
-        positions = matched.select("__bn", "__pos")
+        positions = matched.select("__fp", "__pos")
         if prior_df is not None:
-            touched_bns = matched.select("__bn").distinct()
+            touched_fps = matched.select("__fp").distinct()
             positions = positions.unionByName(
                 prior_df.join(
-                    F.broadcast(touched_bns), "__bn", "left_semi"
+                    F.broadcast(touched_fps), "__fp", "left_semi"
                 )
             )
 
-        _cp.register_pickle_by_value(_roaring)
+        ship_by_value()
         dv_blob = _roaring.dv_blob
 
         # encode placement is a latency/scale trade with the SAME
@@ -3446,11 +3047,11 @@ def _delete_via_dv(
         pos_pdf = positions.limit(_MAX_DRIVER_KEYS + 1).toPandas()
         if len(pos_pdf) <= _MAX_DRIVER_KEYS:
             per_file = []
-            for bn, grp in pos_pdf.groupby("__bn", sort=False):
+            for fp, grp in pos_pdf.groupby("__fp", sort=False):
                 ps = sorted(set(int(p) for p in grp["__pos"]))
                 per_file.append(
                     {
-                        "__bn": bn,
+                        "__fp": fp,
                         "__blob": dv_blob(ps),
                         "__card": len(ps),
                     }
@@ -3463,28 +3064,28 @@ def _delete_via_dv(
                 poss = sorted(set(int(x) for x in pdf["__pos"]))
                 return _pd.DataFrame(
                     {
-                        "__bn": [pdf["__bn"].iloc[0]],
+                        "__fp": [pdf["__fp"].iloc[0]],
                         "__blob": [dv_blob(poss)],
                         "__card": [len(poss)],
                     }
                 )
 
             per_file = (
-                positions.groupBy("__bn")
+                positions.groupBy("__fp")
                 .applyInPandas(
                     _encode_file_dv,
-                    "__bn string, __blob binary, __card long",
+                    "__fp string, __blob binary, __card long",
                 )
                 .collect()
             )
         if not per_file:
             return state["version"]  # stats false-positive: no-op
-        per_file.sort(key=lambda r: r["__bn"])
+        per_file.sort(key=lambda r: path_of[r["__fp"]])
 
         uid = _uuid.uuid4()
         bin_rel = f"deletion_vector_{uid}.bin"
         blobs = [bytes(r["__blob"]) for r in per_file]
-        order = [(r["__bn"], int(r["__card"])) for r in per_file]
+        order = [(path_of[r["__fp"]], int(r["__card"])) for r in per_file]
         # write the blob file locally, then publish through the
         # data-store seam (object-store parity with the parquet puts)
         bin_tmp = os.path.join(
@@ -3507,8 +3108,8 @@ def _delete_via_dv(
             actions.append(
                 {"txn": {"appId": app_id, "version": batch_id}}
             )
-        for (bn, card), blob, off in zip(order, blobs, offsets):
-            old = state["live"][path_of[bn]]
+        for (p, card), blob, off in zip(order, blobs, offsets):
+            old = live[p]
             actions.append(
                 {
                     "remove": _remove_action(
@@ -3528,31 +3129,7 @@ def _delete_via_dv(
             actions.append({"add": add})
 
         if change_data:
-            deleted = matched.drop("__pos")
-            if part_cols:
-                pv_rows = [
-                    (bn,) + tuple(
-                        pv_of[bn].get(phys(c)) for c in part_cols
-                    )
-                    for bn in pv_of
-                ]
-                pvdf = local_rows_df(spark, 
-                    pv_rows,
-                    T.StructType(
-                        [T.StructField("__bn", T.StringType(), False)]
-                        + [
-                            T.StructField(c, T.StringType(), True)
-                            for c in part_cols
-                        ]
-                    ),
-                ).select(
-                    "__bn",
-                    *[
-                        F.col(c).cast(type_of[c]).alias(c)
-                        for c in part_cols
-                    ],
-                )
-                deleted = deleted.join(F.broadcast(pvdf), "__bn")
+            deleted = matched.drop("__fp", "__pos")
             actions += _cdc_actions(
                 table_path, state, version, uid.hex,
                 deleted.withColumn("_change_type", F.lit("delete")),
@@ -3672,7 +3249,7 @@ def delete_delta_keys(
         return _delete_via_dv(
             spark, table_path, key_col, kdf, state, hits, version,
             app_id, batch_id, change_data, part_cols, data_schema,
-            type_of, schema, phys, mapped, pfields, n_keys=n_keys,
+            schema, pfields, n_keys=n_keys,
         )
 
     ptuples = sorted({pt for _, pt in hits}, key=str)
@@ -3682,35 +3259,12 @@ def delete_delta_keys(
     rt = _row_tracking_of(state["meta"])
     cur = _read_files_dv_aware(
         spark, table_path, data_schema, hit_paths, state["live"],
-        basename_col=None if single else "__rel",
-        pfields=pfields,
-        row_tracking=rt,
+        pfields=pfields, row_tracking=rt,
+        file_cols=_pid_cols(single, [(p, pid_of[pt]) for p, pt in hits]),
     )
     if single:
-        cur = cur.withColumn("__pid", F.lit(0).cast("int")).alias("cur")
-    else:
-        bn_pid_rows = [
-            (p.rsplit("/", 1)[-1], pid_of[pt]) for p, pt in hits
-        ]
-        if len({b for b, _ in bn_pid_rows}) != len(bn_pid_rows):
-            raise NotImplementedError(
-                "delta delete: affected files share a basename — the "
-                "pid routing join would misattribute rows"
-            )
-        rel_pid = local_rows_df(spark, 
-            bn_pid_rows,
-            T.StructType(
-                [
-                    T.StructField("__rel", T.StringType(), False),
-                    T.StructField("__pid", T.IntegerType(), False),
-                ]
-            ),
-        )
-        cur = (
-            cur.join(F.broadcast(rel_pid), "__rel", "inner")
-            .drop("__rel")
-            .alias("cur")
-        )
+        cur = cur.withColumn("__pid", F.lit(0).cast("int"))
+    cur = cur.alias("cur")
     nk = kdf.alias("nk")
     match = F.col(f"cur.{key_col}").eqNullSafe(F.col(f"nk.{key_col}"))
     keep = cur.join(nk, match, "left_anti")

@@ -85,11 +85,11 @@ from optimus_any2any_spark.formats.footer_stats import (
 from optimus_any2any_spark.sources import iceberg as _ice
 from optimus_any2any_spark.sources.iceberg import (
     _apply_write_defaults,
+    _classify_entry,
     _current_schema,
     _localize,
     _meta_dir,
     _refuse_unpublished_branches,
-    _puffin_dv_ref,
     _snapshot_entries,
     _spark_type_to_iceberg,
     advance_main_ref,
@@ -1310,9 +1310,9 @@ def write_iceberg_commit(
         )
     else:
         # the collision guard spans the files ALREADY in the table too:
-        # stats/delete joins key files by basename, so a second
+        # per-file write stats key files by basename, so a second
         # add_files call bringing a same-named file from another
-        # directory would cross-apply deletions
+        # directory would mix their stats
         seen_bn: set[str] = set()
         if prev is not None:
             seen_bn.update(
@@ -1327,7 +1327,7 @@ def write_iceberg_commit(
                 raise NotImplementedError(
                     "iceberg add_files: the basename "
                     f"{bn!r} is already registered (or repeated in "
-                    "this call) — stats/delete joins key by basename"
+                    "this call) — per-file stats key by basename"
                 )
             seen_bn.add(bn)
             files.append((
@@ -1470,6 +1470,27 @@ def write_iceberg_delete_commit(
         # row-level deletes need v2; deletion vectors are a v3 construct
         fmt_floor=3 if dv_deletes else 2,
     )
+
+
+def _hit_files(
+    table_path: str, entries: list[dict], seqs: list[int], sids: list[int]
+) -> list[dict]:
+    """Raw manifest entries of the files a rewrite reads, shaped for
+    ``read_entries_with_deletes``: localized path, manifest path,
+    effective data sequence, manifest spec id (the identity-constant
+    projection keys off it — migrated hive files carry their partition
+    column only in the manifest tuple) and ``first_row_id``."""
+    return [
+        {
+            "path": _localize(table_path, e["data_file"]["file_path"]),
+            "orig": e["data_file"]["file_path"],
+            "seq": s,
+            "partition": dict(e["data_file"].get("partition") or {}),
+            "spec_id": sid,
+            "first_row_id": e["data_file"].get("first_row_id"),
+        }
+        for e, s, sid in zip(entries, seqs, sids)
+    ]
 
 
 def merge_iceberg_batch(
@@ -1768,33 +1789,11 @@ def merge_iceberg_batch(
             for e in dentries:
                 if int(e.get("status") or 0) == _ST_DELETED:
                     continue
-                df_ = e["data_file"]
-                ent = {
-                    "path": _localize(table_path, df_["file_path"]),
-                    "orig": df_["file_path"],
-                    "seq": _eff_seq(e, m),
-                    "equality_ids": list(df_.get("equality_ids") or []),
-                }
+                # a v3 deletion vector applies like positional rows
+                kind, ent = _classify_entry(table_path, m, e, _pf_cache)
                 dmax = max(dmax, ent["seq"])
-                if (
-                    df_.get("referenced_data_file") is not None
-                    or df_.get("content_offset") is not None
-                    or df_.get("content_size_in_bytes") is not None
-                ):
-                    # v3 deletion vector: the affected-file read
-                    # applies it like positional delete rows
-                    ent["dv"] = _puffin_dv_ref(
-                        table_path, df_, _pf_cache
-                    )
-                    has_pos = True
-                    pos_del.append(ent)
-                elif int(df_.get("content") or 0) == 2 or ent[
-                    "equality_ids"
-                ]:
-                    eq_del.append(ent)
-                else:
-                    has_pos = True
-                    pos_del.append(ent)
+                has_pos = has_pos or kind == "pos"
+                (pos_del if kind == "pos" else eq_del).append(ent)
             del_manifests.append((m, dmax, has_pos))
             continue
         mpath = _localize(table_path, m["manifest_path"])
@@ -1889,75 +1888,12 @@ def merge_iceberg_batch(
     # aggregate over the affected rows, run ONLY when a non-default
     # spec was actually hit (zero extra jobs on non-evolved tables).
     def _read_hit_files():
-        from optimus_any2any_spark.sources.iceberg import (
-            read_entries_with_deletes as _rewd,
-        )
-
-        files = [
-            {
-                "path": _localize(
-                    table_path, e["data_file"]["file_path"]
-                ),
-                "orig": e["data_file"]["file_path"],
-                "seq": s,
-                "equality_ids": [],
-                "partition": dict(
-                    e["data_file"].get("partition") or {}
-                ),
-                "spec_id": sid,
-            }
-            for e, s, sid in zip(hit_entries, hit_seqs, hit_sids)
-        ]
-        if not lineage:
-            return _rewd(
-                spark, meta, schema, files, pos_del, eq_del
-            )
         # row lineage: affected rows read WITH their id + sequence
         # (materialized-or-derived, same coalesce as the lineage read)
-        for e in hit_entries:
-            if e["data_file"].get("first_row_id") is None:
-                raise NotImplementedError(
-                    "iceberg merge: row-lineage rewrite over a data "
-                    "file whose first_row_id is unassignable even by "
-                    "inheritance — "
-                    f"{e['data_file']['file_path']!r}"
-                )
-        ext = T.StructType(
-            list(schema.fields)
-            + [T.StructField(c, T.LongType(), True) for c in lineage_cols]
-        )
-        out = _rewd(
-            spark, meta, ext, files, pos_del, eq_del,
-            position_cols=("__rl_fp", "__rl_pos"),
-        )
-        rl = local_rows_df(spark, 
-            [
-                (
-                    e["data_file"]["file_path"],
-                    int(e["data_file"]["first_row_id"]),
-                    int(s),
-                )
-                for e, s in zip(hit_entries, hit_seqs)
-            ],
-            "__rl_fp string, __rl_first long, __rl_seq long",
-        )
-        return (
-            out.join(F.broadcast(rl), "__rl_fp")
-            .withColumn(
-                "_row_id",
-                F.coalesce(
-                    F.col("_row_id"),
-                    F.col("__rl_first") + F.col("__rl_pos"),
-                ),
-            )
-            .withColumn(
-                "_last_updated_sequence_number",
-                F.coalesce(
-                    F.col("_last_updated_sequence_number"),
-                    F.col("__rl_seq"),
-                ),
-            )
-            .drop("__rl_fp", "__rl_pos", "__rl_first", "__rl_seq")
+        return _ice.read_entries_with_deletes(
+            spark, meta, schema,
+            _hit_files(table_path, hit_entries, hit_seqs, hit_sids),
+            pos_del, eq_del, lineage=lineage,
         )
 
     cur0 = None
@@ -2273,13 +2209,10 @@ def _write_dv_delete_files(table_path, matching, stem, snapshot_id, seq):
     import pandas  # noqa: F401  (annotation resolution)
 
     globals().setdefault("pandas", pandas)
-    from pyspark import cloudpickle as _cp
-
+    from optimus_any2any_spark import ship_by_value
     from optimus_any2any_spark.formats import puffin as _puffin
-    from optimus_any2any_spark.formats import roaring as _roaring
 
-    _cp.register_pickle_by_value(_roaring)
-    _cp.register_pickle_by_value(_puffin)
+    ship_by_value()
     dv_puffin_blob = _puffin.dv_puffin_blob
 
     def _encode(pdf: pandas.DataFrame) -> pandas.DataFrame:
@@ -2593,9 +2526,6 @@ def compact_iceberg(
     transform sources (days/bucket/truncate) z-order fine — the
     within-partition residual is exactly what the curve tightens.
     The snapshot summary records ``zorder-by``."""
-    from optimus_any2any_spark.sources.iceberg import (
-        read_entries_with_deletes,
-    )
     from optimus_any2any_spark.sources.iceberg_transforms import (
         avro_type_of_result,
     )
@@ -2659,7 +2589,8 @@ def compact_iceberg(
     # first pass: which (partition tuple) groups have >=2 undersized
     # live data files
     sizes: dict[tuple, int] = {}
-    walked: list[tuple[dict, list[dict]]] = []  # (ml row, entries)
+    # (ml row, entries, max delete seq, any positional delete)
+    walked: list[tuple[dict, list[dict], int, bool]] = []
     pos_del: list[dict] = []
     eq_del: list[dict] = []
     _pf_cache: dict = {}  # one Puffin footer parse per DV file
@@ -2667,36 +2598,17 @@ def compact_iceberg(
         _, entries = read_container(
             _localize(table_path, m["manifest_path"])
         )
-        walked.append((m, entries))
+        dmax, has_pos = 0, False
         for e in entries:
             if int(e.get("status") or 0) == _ST_DELETED:
                 continue
-            df_ = e["data_file"]
-            if int(m.get("content") or 0) == 1 or int(
-                df_.get("content") or 0
-            ) in (1, 2):
-                ent = {
-                    "path": _localize(table_path, df_["file_path"]),
-                    "orig": df_["file_path"],
-                    "seq": _eff_seq(e, m),
-                    "equality_ids": list(df_.get("equality_ids") or []),
-                }
-                if (
-                    df_.get("referenced_data_file") is not None
-                    or df_.get("content_offset") is not None
-                    or df_.get("content_size_in_bytes") is not None
-                ):
-                    ent["dv"] = _puffin_dv_ref(
-                        table_path, df_, _pf_cache
-                    )
-                    pos_del.append(ent)
-                elif int(df_.get("content") or 0) == 2 or ent[
-                    "equality_ids"
-                ]:
-                    eq_del.append(ent)
-                else:
-                    pos_del.append(ent)
+            kind, ent = _classify_entry(table_path, m, e, _pf_cache)
+            if kind != "data":
+                (pos_del if kind == "pos" else eq_del).append(ent)
+                dmax = max(dmax, ent["seq"])
+                has_pos = has_pos or kind == "pos"
                 continue
+            df_ = e["data_file"]
             # ZORDER rewrites every live default-spec file —
             # re-clustering is the point (rewrite_data_files zorder)
             if zorder_by or (
@@ -2705,6 +2617,7 @@ def compact_iceberg(
                 pdict = df_.get("partition") or {}
                 pt = tuple(pdict.get(n) for n in part_names)
                 sizes[pt] = sizes.get(pt, 0) + 1
+        walked.append((m, entries, dmax, has_pos))
     todo = {
         pt
         for pt, n in sizes.items()
@@ -2730,20 +2643,8 @@ def compact_iceberg(
     survivors: list[dict] = []
     untouched_seqs: list[int] = []  # live data entries NOT rewritten
     total_rows = 0
-    for m, entries in walked:
+    for m, entries, dmax, has_pos in walked:
         if int(m.get("content") or 0) == 1:
-            dmax = 0
-            has_pos = False
-            for e in entries:
-                if int(e.get("status") or 0) == _ST_DELETED:
-                    continue
-                dmax = max(dmax, _eff_seq(e, m))
-                df_ = e["data_file"]
-                if not (
-                    int(df_.get("content") or 0) == 2
-                    or df_.get("equality_ids")
-                ):
-                    has_pos = True
             del_manifests.append((m, dmax, has_pos))
             continue
         if int(m.get("partition_spec_id") or 0) != int(
@@ -2817,86 +2718,19 @@ def compact_iceberg(
     # read the compacted files (deletes applied) and route rows back
     # to their partition by source FILE — no transform recompute
     # needed, a file belongs to exactly one partition tuple
-    read_schema = schema
-    if lineage:
-        for e in hit_entries:
-            if e["data_file"].get("first_row_id") is None:
-                raise NotImplementedError(
-                    "iceberg optimize: row-lineage compaction over a "
-                    "data file whose first_row_id is unassignable "
-                    "even by inheritance — "
-                    f"{e['data_file']['file_path']!r}"
-                )
-        read_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_row_id", T.LongType(), True),
-                T.StructField(
-                    "_last_updated_sequence_number", T.LongType(),
-                    True,
-                ),
-            ]
-        )
-    cur = read_entries_with_deletes(
-        spark,
-        meta,
-        read_schema,
-        [
+    cur = _ice.read_entries_with_deletes(
+        spark, meta, schema,
+        _hit_files(table_path, hit_entries, hit_seqs, hit_sids),
+        pos_del, eq_del,
+        file_cols=None if single else (
+            "__pid int",
             {
-                "path": _localize(table_path, e["data_file"]["file_path"]),
-                "orig": e["data_file"]["file_path"],
-                "seq": s,
-                "equality_ids": [],
-                "partition": dict(
-                    e["data_file"].get("partition") or {}
-                ),
-                "spec_id": sid,
-            }
-            for e, s, sid in zip(hit_entries, hit_seqs, hit_sids)
-        ],
-        pos_del,
-        eq_del,
-        basename_col=None if single else "__bn",
-        position_cols=("__rl_fp", "__rl_pos") if lineage else None,
+                e["data_file"]["file_path"]: (pid,)
+                for e, pid in zip(hit_entries, hit_pids)
+            },
+        ),
+        lineage=lineage,
     )
-    if lineage:
-        rl_lk = local_rows_df(spark, 
-            [
-                (
-                    e["data_file"]["file_path"],
-                    int(e["data_file"]["first_row_id"]),
-                    int(s),
-                )
-                for e, s in zip(hit_entries, hit_seqs)
-            ],
-            "__rl_fp string, __rl_first long, __rl_seq long",
-        )
-        cur = (
-            cur.join(F.broadcast(rl_lk), "__rl_fp", "inner")
-            .withColumn(
-                "_row_id",
-                F.coalesce(
-                    F.col("_row_id"),
-                    F.col("__rl_first") + F.col("__rl_pos"),
-                ),
-            )
-            .withColumn(
-                "_last_updated_sequence_number",
-                F.coalesce(
-                    F.col("_last_updated_sequence_number"),
-                    F.col("__rl_seq"),
-                ),
-            )
-            .drop("__rl_fp", "__rl_pos", "__rl_first", "__rl_seq")
-        )
-    bn_pid = [
-        (e["data_file"]["file_path"].rsplit("/", 1)[-1], pid)
-        for e, pid in zip(hit_entries, hit_pids)
-    ]
-    if len({b for b, _ in bn_pid}) != len(bn_pid):
-        raise NotImplementedError(
-            "iceberg optimize: compacted files share a basename"
-        )
     n_files = max(1, -(-max(total_rows, 1) // target_rows_per_file))
     tmp = _staging(table_path, "compact", stem)
     if zorder_by:
@@ -2922,12 +2756,6 @@ def compact_iceberg(
             out_df = out_df.sortWithinPartitions(key_col)
         out_df.write.mode("overwrite").parquet(tmp)
     else:
-        pid_lk = local_rows_df(spark, 
-            bn_pid, "__bn string, __pid int"
-        )
-        cur = cur.join(F.broadcast(pid_lk), "__bn", "inner").drop(
-            "__bn"
-        )
         out_df = cur.repartitionByRange(
             n_files, F.col("__pid"), *sort_cols
         )

@@ -776,9 +776,9 @@ class TestPurge:
 
 
 class TestAdviceR6Regressions:
-    """Round-6 ADVICE items: uniqueId offset parity, collision guard
-    coverage on mixed DV'd/plain read sets, vacuum over DV-less tables
-    with colliding basenames."""
+    """Round-6 ADVICE items: uniqueId offset parity, per-file deletion
+    on mixed DV'd/plain read sets that share a basename, vacuum over
+    DV-less tables with colliding basenames."""
 
     def test_unique_id_keeps_explicit_zero_offset(self):
         from optimus_any2any_spark.sources.delta import dv_unique_id
@@ -798,7 +798,7 @@ class TestAdviceR6Regressions:
         assert zero == "uX@0"
         assert five == "uX@5"
 
-    def test_mixed_dv_plain_basename_collision_refused(
+    def test_mixed_dv_plain_shared_basename_reads_per_file(
         self, spark, tmp_path
     ):
         from pyspark.sql import types as T
@@ -810,13 +810,14 @@ class TestAdviceR6Regressions:
         t = str(tmp_path / "tbl")
         os.makedirs(os.path.join(t, "a"))
         os.makedirs(os.path.join(t, "b"))
-        _write_file(spark, t, "a/part-0.parquet", [(1, "x")])
-        _write_file(spark, t, "b/part-0.parquet", [(2, "y")])
+        _write_file(spark, t, "a/part-0.parquet", [(1, "x"), (2, "x2")])
+        _write_file(spark, t, "b/part-0.parquet", [(3, "y"), (4, "y2")])
+        blob = dv_blob([0])
         dv = {
             "storageType": "i",
-            "pathOrInlineDv": _z85_padded(b"\x01\x00\x00\x00"),
-            "sizeInBytes": 4,
-            "cardinality": 0,
+            "pathOrInlineDv": _z85_padded(blob),
+            "sizeInBytes": len(blob),
+            "cardinality": 1,
         }
         live = {
             "a/part-0.parquet": _add("a/part-0.parquet", t, dv=dv),
@@ -826,13 +827,23 @@ class TestAdviceR6Regressions:
             [T.StructField("k", T.LongType()),
              T.StructField("v", T.StringType())]
         )
-        # only ONE file carries a DV, but the plain file shares its
-        # basename — the row-index anti-join would cross-apply the
-        # vector, so the guard must span the WHOLE read set
-        with pytest.raises(NotImplementedError, match="basename"):
-            _read_files_dv_aware(
+        # only ONE file carries a DV and the plain file shares its
+        # basename: the vector must delete position 0 of a/part-0
+        # alone — keyed by basename it would also delete (3, "y")
+        got = sorted(
+            tuple(r)
+            for r in _read_files_dv_aware(
                 spark, t, schema, sorted(live), live
-            )
+            ).collect()
+        )
+        assert got == [(2, "x2"), (3, "y"), (4, "y2")]
+        _commit(
+            os.path.join(t, "_delta_log"), 0,
+            _base_actions() + [{"add": a} for a in live.values()],
+        )
+        assert sorted(
+            (r.k, r.v) for r in read_delta(spark, t).collect()
+        ) == got
 
     def test_vacuum_dvless_table_with_colliding_basenames(
         self, spark, tmp_path
@@ -852,8 +863,8 @@ class TestAdviceR6Regressions:
             + [{"add": _add("a/part-0.parquet", t)},
                {"add": _add("b/part-0.parquet", t)}],
         )
-        # zero deletion vectors anywhere: the DV collision guard must
-        # not fire — this table is perfectly vacuumable
+        # zero deletion vectors anywhere and colliding basenames:
+        # this table is perfectly vacuumable
         gone = vacuum_delta(spark, t)
         assert gone == []
         got = sorted(
