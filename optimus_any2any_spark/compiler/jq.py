@@ -77,6 +77,14 @@ def _record_columns(df: DataFrame) -> list[str]:
     return [c for c in df.columns if not c.startswith(_VAR_PREFIX)]
 
 
+def _let(value: Column, fn) -> Column:
+    """``fn(v)`` with ``value`` evaluated once per row. SQL lambdas have
+    no let: an array a lambda indexes or scans must be a lambda variable
+    or an attribute, or Spark re-evaluates it per element. A
+    one-element ``transform`` binds ``v`` to ``value`` once."""
+    return F.get(F.transform(F.array(value), fn), 0)
+
+
 def _dynamic_obj_index(get_field, fields, key_col):
     """Dynamic object indexing over a STATIC field set: a CASE chain
     keyed on the field names. All fields must share one Spark type —
@@ -527,10 +535,13 @@ class _ExprParser:
                 l_arr, r_arr = left, right
                 left = F.when(
                     l_arr.isNotNull() & r_arr.isNotNull(),
-                    F.filter(
-                        l_arr,
-                        lambda x: ~F.exists(
-                            r_arr, lambda y: x.eqNullSafe(y)
+                    _let(
+                        F.struct(l_arr.alias("l"), r_arr.alias("r")),
+                        lambda p: F.filter(
+                            p["l"],
+                            lambda x: ~F.exists(
+                                p["r"], lambda y: x.eqNullSafe(y)
+                            ),
                         ),
                     ),
                 )
@@ -936,9 +947,12 @@ class _ExprParser:
                 if vk not in (elem_t, "null"):
                     # jq: type-mismatched needle matches nothing
                     return none_on_null(empty), "complex_num"
-                pos = F.filter(
-                    F.sequence(F.lit(0), F.size(subject) - 1),
-                    lambda i: F.get(subject, i).eqNullSafe(F.lit(v)),
+                pos = _let(
+                    subject,
+                    lambda s: F.filter(
+                        F.sequence(F.lit(0), F.size(s) - 1),
+                        lambda i: F.get(s, i).eqNullSafe(F.lit(v)),
+                    ),
                 )
                 return (
                     none_on_null(
@@ -959,9 +973,12 @@ class _ExprParser:
                     raise JQUnsupported("jq: indices([]) — binary path")
                 m = len(vals)
                 needle = F.array(*[F.lit(v) for v in vals])
-                pos = F.filter(
-                    F.sequence(F.lit(0), F.size(subject) - m),
-                    lambda i: F.slice(subject, i + 1, m) == needle,
+                pos = _let(
+                    subject,
+                    lambda s: F.filter(
+                        F.sequence(F.lit(0), F.size(s) - m),
+                        lambda i: F.slice(s, i + 1, m) == needle,
+                    ),
                 )
                 return (
                     none_on_null(
@@ -1096,15 +1113,19 @@ class _ExprParser:
             # element order.
             from pyspark.sql import types as T
 
-            keys_all = F.transform(subject, lambda x: key_of(x)[0])
-            uniq = F.sort_array(F.array_distinct(keys_all))
-            groups = F.transform(
-                uniq,
-                lambda k: F.filter(
-                    subject, lambda x: key_of(x)[0].eqNullSafe(k)
-                ),
+            def groups(s: Column) -> Column:
+                keys_all = F.transform(s, lambda x: key_of(x)[0])
+                return F.transform(
+                    F.sort_array(F.array_distinct(keys_all)),
+                    lambda k: F.filter(
+                        s, lambda x: key_of(x)[0].eqNullSafe(k)
+                    ),
+                )
+
+            return (
+                _let(subject, groups),
+                ("complex_obj_arr", T.ArrayType(kind[1])),
             )
-            return groups, ("complex_obj_arr", T.ArrayType(kind[1]))
 
         sorted_col = F.array_sort(subject, cmp)
         if name == "sort_by":
@@ -1115,11 +1136,14 @@ class _ExprParser:
         if name == "max_by":
             return F.get(sorted_col, F.size(sorted_col) - 1), elem_kind
         # unique_by: first element of each key group in sorted order
-        def keep(x: Column, i: Column) -> Column:
-            prev = F.get(sorted_col, i - 1)
-            return (i == 0) | ~key_of(x)[0].eqNullSafe(key_of(prev)[0])
+        def firsts(s: Column) -> Column:
+            def keep(x: Column, i: Column) -> Column:
+                prev = F.get(s, i - 1)
+                return (i == 0) | ~key_of(x)[0].eqNullSafe(key_of(prev)[0])
 
-        return F.filter(sorted_col, keep), kind
+            return F.filter(s, keep)
+
+        return _let(sorted_col, firsts), kind
 
     @staticmethod
     def _safe_regex(pat: str | None, forbid_empty_match: bool = False) -> str:

@@ -13,6 +13,16 @@ Scale design (the point of each algorithm at 100 TB):
   candidates. This is the scale path for corpus-level near-dedup.
 - **SimHash**: per-doc 32-bit signature via bit-vote aggregation;
   near-dup lookup becomes a cheap equality/Hamming bucket join.
+- **Lambda rule** (every operator package-wide): the lambda of a
+  higher-order function (``transform``, ``aggregate``, ``filter``,
+  ``exists``, ``forall``, ``zip_with``) reads only its own variables,
+  literals, attributes and O(1) scalar arithmetic over them. An array
+  or string it indexes, slices or reduces is bound to a column by an
+  earlier select, or passed in as a higher-order-function argument:
+  Spark re-evaluates an expression inside a lambda once per ELEMENT,
+  so a ``split`` there made shingling O(tokens²) per document.
+  ``tests/test_lambda_rule.py`` checks it on optimized plans, where
+  ``CollapseProject`` may have inlined a binding back.
 
 Hashing discipline: all hashes derive from md5 hex strings (portable —
 identical in Spark, DuckDB, Python), not engine-specific hash().
@@ -31,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from optimus_any2any_spark.localrel import local_rows_df
-from optimus_any2any_spark.operators.text import tokens
+from optimus_any2any_spark.operators.text import tokens, word_ngrams
 from optimus_any2any_spark.operators.util import ensure_parallelism
 
 DEFAULT_NUM_HASHES = 16
@@ -55,22 +65,21 @@ def exact_dedup_groups(
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
+    """Distinct word n-gram shingles per document: (id, shingle).
+
+    Linear in the document's tokens: the text is split once per row
+    into a bound token column, and each shingle slices that array."""
     df = ensure_parallelism(df, F.col(id_col))
-    toks = tokens(F.col(text_col))
-    # guard: sequence(1, 0) would DESCEND in Spark, so short docs get an
-    # explicitly empty shingle set
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))
+    toks = df.select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
     )
     # array_distinct already dedups within the doc, so no extra
     # distinct() shuffle is needed — (id, shingle) rows are unique.
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(grams)).alias("shingle"),
+    return toks.select(
+        "id",
+        F.explode(F.array_distinct(word_ngrams(F.col("toks"), n))).alias(
+            "shingle"
+        ),
     )
 
 
@@ -608,16 +617,7 @@ def passage_dedup(
     Within-document repeats of a passage are deduplicated by the same
     aggregate (occurrence 2+ drops regardless of which doc holds it).
     """
-    cw = chunk_words
-    toks = tokens(F.col(text_col))
-    n_chunks = F.ceil(F.size(toks) / F.lit(cw)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * cw + 1, cw)),
-    )
-    exploded = df.select(
-        F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk")
-    )
+    exploded = passage_chunks(df, text_col, id_col, chunk_words)
     kept = (
         exploded.groupBy("chunk")
         .agg(
@@ -644,6 +644,25 @@ def passage_dedup(
             F.count(F.lit(1)).alias("n_chunks_kept"),
         )
         .select(id_col, "clean_text", "n_chunks_kept")
+    )
+
+
+def passage_chunks(
+    df: DataFrame, text_col: str, id_col: str, chunk_words: int
+) -> DataFrame:
+    """(id_col, chunk_idx, chunk): each document cut into consecutive
+    ``chunk_words``-word passages. The text is split once per row into
+    a bound token column that every passage slices."""
+    cw = chunk_words
+    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+    t = F.col("__toks")
+    n_chunks = F.ceil(F.size(t) / F.lit(cw)).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.concat_ws(" ", F.slice(t, i * cw + 1, cw)),
+    )
+    return toks.select(
+        F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk")
     )
 
 

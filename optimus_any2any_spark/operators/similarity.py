@@ -477,12 +477,21 @@ def quantize_int8(
     engines then compute the identical IEEE expression and round
     half-away-from-zero, so the integer codes match bit-for-bit; the
     mean absolute error rounds per element at 9 and accumulates in
-    DECIMAL so it is order-independent. Map-only — zero shuffle.
+    DECIMAL so it is order-independent. Map-only — zero shuffle, and
+    O(d) per vector: the double array, its min/max and the codes are
+    each bound to a column once, and the error pass walks the vector
+    and its codes side by side (``zip_with``).
     """
-    arr = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    mn = F.array_min(arr)
-    mx = F.array_max(arr)
-    rng = mx - mn
+    v = df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("arr"),
+    ).select(
+        id_col,
+        "arr",
+        F.array_min("arr").alias("qmin"),
+        F.array_max("arr").alias("qmax"),
+    )
+    mn, rng = F.col("qmin"), F.col("qmax") - F.col("qmin")
 
     def code(x):
         return (
@@ -490,14 +499,15 @@ def quantize_int8(
             .otherwise(F.round((x - mn) * 255.0 / rng).cast("int"))
         )
 
-    codes = F.transform(arr, code)
+    coded = v.select(
+        id_col, "arr", "qmin", "qmax", F.transform("arr", code).alias("codes")
+    )
 
     def deq(c):
         return mn + c.cast("double") * rng / 255.0
 
-    errs = F.transform(
-        arr,
-        lambda x, i: F.round(F.abs(x - deq(F.get(codes, i))), 9),
+    errs = F.zip_with(
+        "arr", "codes", lambda x, c: F.round(F.abs(x - deq(c)), 9)
     )
     # the accumulator type must be invariant across fold steps
     # (decimal '+' widens precision by one), so every step casts back
@@ -508,16 +518,16 @@ def quantize_int8(
             F.lit(0).cast("decimal(28,9)"),
             lambda a, x: (a + x.cast("decimal(28,9)")).cast("decimal(28,9)"),
         ).cast("double")
-        / F.size(arr),
+        / F.size("arr"),
         6,
     )
-    return df.select(
+    return coded.select(
         F.col(id_col),
-        mn.alias("qmin"),
-        mx.alias("qmax"),
+        "qmin",
+        "qmax",
         F.md5(
             F.array_join(
-                F.transform(codes, lambda c: c.cast("string")), ","
+                F.transform("codes", lambda c: c.cast("string")), ","
             ).cast("binary")
         ).alias("codes_fp"),
         mae.alias("mae"),

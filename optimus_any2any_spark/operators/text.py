@@ -147,6 +147,20 @@ def prefix_fingerprint(col: Column, n: int = 80) -> Column:
     return F.md5(F.substring(col, 1, n).cast("binary"))
 
 
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Every word ``n``-gram of the token array ``toks``, in order
+    (empty when there are fewer than ``n`` tokens). ``toks`` must be a
+    column bound in an earlier select, not an expression: the lambda
+    reads it once per gram, so an expression there would be evaluated
+    once per gram (the lambda rule in ``operators/dedup.py``)."""
+    # guard: sequence(1, 0) would DESCEND in Spark, so short docs get an
+    # explicitly empty gram array
+    idx = F.when(
+        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+
+
 def ngram_rows(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
 ) -> DataFrame:
@@ -159,13 +173,11 @@ def ngram_rows(
     from optimus_any2any_spark.operators.util import ensure_parallelism
 
     df = ensure_parallelism(df, F.col(id_col))
-    toks = tokens(F.col(text_col))
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return df.select(
-        F.col(id_col).alias("id"), F.explode(grams).alias("gram")
+    toks = df.select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+    )
+    return toks.select(
+        "id", F.explode(word_ngrams(F.col("toks"), n)).alias("gram")
     )
 
 

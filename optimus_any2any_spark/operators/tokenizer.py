@@ -54,19 +54,25 @@ def bpe_word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _pair_counts(cur: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts over the wrapped sequences,
-    weighted by word frequency. One shuffle, map-side combined."""
-    symbols = F.split(
-        F.substring(F.col("seq"), 2, F.length("seq") - 2), "><"
+    weighted by word frequency. One shuffle, map-side combined. The
+    symbol array is bound once per word, so each pair indexes it
+    instead of re-splitting the sequence."""
+    syms = cur.select(
+        "cnt",
+        F.split(
+            F.substring(F.col("seq"), 2, F.length("seq") - 2), "><"
+        ).alias("syms"),
     )
+    s = F.col("syms")
     pairs = F.transform(
-        F.sequence(F.lit(1), F.size(symbols) - 1),
+        F.sequence(F.lit(1), F.size(s) - 1),
         lambda i: F.struct(
-            F.element_at(symbols, i).alias("l"),
-            F.element_at(symbols, i + 1).alias("r"),
+            F.element_at(s, i).alias("l"),
+            F.element_at(s, i + 1).alias("r"),
         ),
     )
     return (
-        cur.filter(F.size(symbols) >= 2)
+        syms.filter(F.size(s) >= 2)
         .select("cnt", F.explode(pairs).alias("p"))
         .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
         .agg(F.sum("cnt").alias("total"))

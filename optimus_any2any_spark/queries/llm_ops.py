@@ -976,7 +976,8 @@ def text_bigram_logprob(spark, sf_dir):
     # tokenize+explode is CPU-bound per row; a one-file table must not
     # single-thread it (no-op at real scale — partition-count check)
     d = ensure_parallelism(load(spark, sf_dir, "documents"), "doc_id")
-    t = TX.tokens(F.lower(F.col("text")))
+    d = d.select("doc_id", TX.tokens(F.lower(F.col("text"))).alias("t"))
+    t = F.col("t")
     grams = F.transform(
         F.sequence(F.lit(1), F.size(t)),
         lambda i: F.struct(
@@ -4104,18 +4105,14 @@ def mix_dsir_importance(spark, sf_dir):
 
     # per-gram md5 hashing is CPU-bound; parallelize a one-file input
     d = ensure_parallelism(load(spark, sf_dir, "documents"), "doc_id")
-    t = TX.tokens(F.col("text"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 2)),
-    )
+    d = d.select("doc_id", "lang", TX.tokens(F.col("text")).alias("t"))
+    grams = TX.word_ngrams(F.col("t"), 2)
     # the hashed-feature stream feeds FOUR consumers (raw/target
     # distributions, totals, and the final scoring join) — persist it
     # or Catalyst re-runs the tokenize+explode lineage per consumer
     # (this + input parallelization: 5.2s -> 1.2s at sf0.1)
     hb = (
-        d.filter(F.size(t) >= 2)
-        .select("doc_id", "lang", F.explode(grams).alias("gram"))
+        d.select("doc_id", "lang", F.explode(grams).alias("gram"))
         .select(
             "doc_id",
             "lang",

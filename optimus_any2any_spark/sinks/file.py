@@ -26,7 +26,7 @@ import tempfile
 import urllib.parse
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from optimus_any2any_spark import metadata as M
@@ -38,6 +38,14 @@ DEST_COL = "__destination__"
 
 def _strip_scheme(uri: str) -> str:
     return uri[len("file://"):] if uri.startswith("file://") else uri
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count observation: read ``obs.get["n"]`` after
+    the write that runs it succeeds — the count rides that job (the
+    ``policy.ActionMetrics`` path), so no separate count job runs."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 @dataclass
@@ -330,10 +338,9 @@ class FileSink:
             writer_opts["maxRecordsPerFile"] = str(self.max_records_per_file)
         if self.template.is_static and not self.batch_size:
             dest = self.template.render({})
-            df = typed.drop(DEST_COL)
-            n = df.count()
+            df, obs = _observed(typed.drop(DEST_COL))
             df.write.mode("overwrite").options(**writer_opts).parquet(dest)
-            return WriteResult(files={dest: n})
+            return WriteResult(files={dest: obs.get["n"]})
         tmpdir = tempfile.mkdtemp(prefix="any2any_sink_")
         staging = os.path.join(tmpdir, "staged")
         typed = typed.persist()
@@ -371,12 +378,15 @@ class FileSink:
             dest += ".gz"
         tmpdir = tempfile.mkdtemp(prefix="any2any_sink_")
         staging = os.path.join(tmpdir, "staged")
-        writer = lines.select("value").write.mode("overwrite")
+        lines = lines.select("value")
+        writer_opts = {}
         if self.compression == "gzip":
-            writer = writer.option("compression", "gzip")
+            # gzip parts cannot be line-counted without decompressing
+            lines, obs = _observed(lines)
+            writer_opts["compression"] = "gzip"
         if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
-        writer.text(staging)
+            writer_opts["maxRecordsPerFile"] = str(self.max_records_per_file)
+        lines.write.mode("overwrite").options(**writer_opts).text(staging)
         parts = sorted(
             os.path.join(staging, p)
             for p in os.listdir(staging)
@@ -388,7 +398,7 @@ class FileSink:
         if self.compression == "gzip":
             # Parts are executor-compressed; concatenated gzip members form
             # a valid stream, so only compressed bytes move through here.
-            n = lines.count()
+            n = obs.get["n"]
             mode = "ab" if self.append and os.path.exists(dest) else "wb"
             with open(dest, mode) as out:
                 if header_bytes is not None:

@@ -30,6 +30,7 @@ the copy-on-write shape.
 from __future__ import annotations
 
 from optimus_any2any_spark.localrel import local_rows_df
+from optimus_any2any_spark.streaming.merge_core import glob_escape
 
 import json
 import os
@@ -514,14 +515,14 @@ def replay_log(
                 cands = sorted(
                     _cp_glob.glob(
                         os.path.join(
-                            log,
+                            _cp_glob.escape(log),
                             "%020d.checkpoint.*.parquet"
                             % checkpoint_version,
                         )
                     )
                     + _cp_glob.glob(
                         os.path.join(
-                            log,
+                            _cp_glob.escape(log),
                             "%020d.checkpoint.*.json"
                             % checkpoint_version,
                         )
@@ -627,7 +628,7 @@ def replay_log(
                         for k, v in r.asDict(recursive=True).items()
                         if v is not None
                     }
-                    for r in spark.read.parquet(cf).collect()
+                    for r in spark.read.parquet(glob_escape(cf)).collect()
                 )
         sidecars: list[str] = []
         for d in rows_:
@@ -653,7 +654,7 @@ def replay_log(
                 if sp.startswith("/")
                 else os.path.join(log, "_sidecars", sp)
             )
-            for r in spark.read.parquet(full).collect():
+            for r in spark.read.parquet(glob_escape(full)).collect():
                 d = {
                     k: v
                     for k, v in r.asDict(recursive=True).items()
@@ -868,7 +869,9 @@ def _read_files_dv_aware(
         )
     # absolute paths: the scan and the lookup key resolve them alike
     full = {p: os.path.abspath(os.path.join(table_path, p)) for p in paths}
-    df = spark.read.schema(read_schema).parquet(*full.values())
+    df = spark.read.schema(read_schema).parquet(
+        *map(glob_escape, full.values())
+    )
     dv_rows = [
         (scan_path_key(full[p]), *d, None)
         for p in paths
@@ -1336,7 +1339,9 @@ def read_delta_cdf(
             if a.get("cdc")
         ]
         if cdc_files:
-            part = spark.read.schema(read_schema).parquet(*cdc_files)
+            part = spark.read.schema(read_schema).parquet(
+                *map(glob_escape, cdc_files)
+            )
             if cmap:  # physical parquet names → logical schema
                 part = part.select(
                     *[

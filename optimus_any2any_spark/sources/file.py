@@ -102,24 +102,60 @@ class FileSource:
         return df
 
     def _first_record_key_order(self) -> list[str]:
+        """Keys of the first record, in order: the first non-blank line
+        of the first file in walk order, read through the Hadoop
+        FileSystem (and the file's compression codec, if any) — no
+        Spark job."""
         import json as _json
 
-        first = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .text(self.path)
-            .limit(1)
-            .collect()
-        )
-        if not first or not first[0]["value"].strip():
+        line = self._first_line()
+        if line is None:
             return []
         try:
             rec = _json.loads(
-                first[0]["value"],
-                object_pairs_hook=lambda pairs: [k for k, _ in pairs],
+                line, object_pairs_hook=lambda pairs: [k for k, _ in pairs]
             )
         except ValueError:
             return []
         return rec if isinstance(rec, list) else []
+
+    def _first_line(self) -> str | None:
+        """First non-blank line under ``self.path``. Files are visited
+        in the reference's walk order (ext/file/source.go:116-137:
+        each directory's entries by name, depth first), skipping the
+        ``_``/``.`` names Spark's file listing hides."""
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = root.getFileSystem(conf)
+        codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+
+        def walk(statuses, listed: bool):
+            # full-path order is name order within one directory, and
+            # orders a glob's matches across directories
+            for st in sorted(statuses, key=lambda st: st.getPath().toString()):
+                if listed and st.getPath().getName().startswith((".", "_")):
+                    continue
+                if st.isDirectory():
+                    yield from walk(fs.listStatus(st.getPath()), True)
+                else:
+                    yield st.getPath()
+
+        for path in walk(fs.globStatus(root) or [], False):
+            stream = fs.open(path)
+            try:
+                codec = codecs.getCodec(path)
+                if codec is not None:
+                    stream = codec.createInputStream(stream)
+                reader = jvm.java.io.BufferedReader(
+                    jvm.java.io.InputStreamReader(stream, "UTF-8")
+                )
+                while (line := reader.readLine()) is not None:
+                    if line.strip():
+                        return line
+            finally:
+                stream.close()
+        return None
 
     def _read_csv(self) -> DataFrame:
         if self.skip_rows > 0:

@@ -216,7 +216,9 @@ def _newest_version(md: str) -> int:
         version = max(
             (
                 int(os.path.basename(f)[1:-len(".metadata.json")])
-                for f in _glob.glob(os.path.join(md, "v*.metadata.json"))
+                for f in _glob.glob(
+                    os.path.join(_glob.escape(md), "v*.metadata.json")
+                )
             ),
             default=0,
         )
@@ -1476,7 +1478,7 @@ def _seq_keyed_scan(
     )
     return (
         spark.read.schema(schema)
-        .parquet(*paths)
+        .parquet(*map(merge_core.glob_escape, paths))
         .select("*", F.col("_metadata.file_path").alias("__fp"))
         .join(F.broadcast(lk), "__fp")
         .drop("__fp")
@@ -1636,7 +1638,9 @@ def read_entries_with_deletes(
         return out
     # absolute paths: the scan and the lookup key resolve them alike
     paths = [os.path.abspath(d["path"]) for d in data]
-    df = spark.read.schema(read_schema).parquet(*paths)
+    df = spark.read.schema(read_schema).parquet(
+        *map(merge_core.glob_escape, paths)
+    )
     consts = _projection_consts(meta, data)
     ccols = sorted(
         {c for m in consts.values() for c in m if c in schema.fieldNames()}
@@ -2698,7 +2702,7 @@ def add_iceberg_files(
             write_iceberg_commit,
         )
 
-        df = spark.read.parquet(*paths)
+        df = spark.read.parquet(*map(merge_core.glob_escape, paths))
         return write_iceberg_commit(
             df,
             table_path,

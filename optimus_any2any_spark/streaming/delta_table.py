@@ -508,7 +508,12 @@ def _collect_file_stats(
         # commit — inferring it back costs one extra footer-reading job
         # per fallback trigger
         spark.read.schema(data_schema)
-        .parquet(*[os.path.join(table_path, r) for r in new_rel])
+        .parquet(
+            *[
+                merge_core.glob_escape(os.path.join(table_path, r))
+                for r in new_rel
+            ]
+        )
         .select(*stat_cols)
         .withColumn("__f", F.input_file_name())
         .groupBy("__f")
@@ -793,7 +798,7 @@ def _rows_to_parquet(
     tmp = f"{dest}.{uuid.uuid4().hex}.d"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     merge_core._put_data(
-        _glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest
+        _glob.glob(os.path.join(_glob.escape(tmp), "part-*.parquet"))[0], dest
     )
     shutil.rmtree(tmp)
 

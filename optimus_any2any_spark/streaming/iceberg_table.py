@@ -418,7 +418,7 @@ def _file_stats(
             F.sum(F.col(n).isNull().cast("long")).alias(f"__nn_{n}"),
         ]
     rows = (
-        spark.read.parquet(*paths)
+        spark.read.parquet(*map(merge_core.glob_escape, paths))
         .select(*names, F.input_file_name().alias("__f"))
         .groupBy("__f")
         .agg(*aggs)
@@ -3173,7 +3173,9 @@ def remove_iceberg_orphan_files(
         return os.path.realpath(_localize_path(table_path, ref))
 
     referenced: set[str] = set()
-    for mpath in sorted(_glob.glob(os.path.join(md, "v*.metadata.json"))):
+    for mpath in sorted(
+        _glob.glob(os.path.join(_glob.escape(md), "v*.metadata.json"))
+    ):
         referenced.add(os.path.realpath(mpath))
         try:
             meta = json.loads(open(mpath).read())

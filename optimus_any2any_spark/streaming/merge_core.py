@@ -390,12 +390,16 @@ def local_parts(tmp: str, single: bool) -> list[tuple[str, int]]:
     else:
         pdirs = [
             (d, int(os.path.basename(d).split("=", 1)[1]))
-            for d in sorted(_glob.glob(os.path.join(tmp, "__pid=*")))
+            for d in sorted(
+                _glob.glob(os.path.join(_glob.escape(tmp), "__pid=*"))
+            )
         ]
     return [
         (part, pid)
         for d, pid in pdirs
-        for part in sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
+        for part in sorted(
+            _glob.glob(os.path.join(_glob.escape(d), "part-*.parquet"))
+        )
     ]
 
 
@@ -828,6 +832,18 @@ def scan_path_key(path: str) -> str:
     if authority:
         return f"{scheme}://{authority}{quoted}"
     return f"{scheme}:{quoted}"
+
+
+_GLOB_CHARS = re.compile(r"([\\{}\[\]*?])")
+
+
+def glob_escape(path: str) -> str:
+    """``path`` with Hadoop's glob metacharacters (``\\ { } [ ] * ?``)
+    backslash-escaped, for ``spark.read``: it glob-expands every path it
+    is given, so a file under a directory named ``brace{1}`` is
+    otherwise not found. :func:`scan_path_key` takes the unescaped
+    path."""
+    return _GLOB_CHARS.sub(r"\\\1", path)
 
 
 def deleted_positions_df(spark: SparkSession, rows: list[tuple]):

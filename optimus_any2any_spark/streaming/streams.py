@@ -702,22 +702,14 @@ def streaming_passage_dedup(
     the operational win over batch passage dedup: a passage seen in
     any earlier batch is boilerplate for every later one.
     """
+    from optimus_any2any_spark.operators.dedup import passage_chunks
 
     def per_batch(batch: DataFrame, batch_id: int):
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        cw = chunk_words
-        toks = F.split(F.trim(F.col(text_col)), r"\s+")
-        n_chunks = F.ceil(F.size(toks) / F.lit(cw)).cast("int")
-        chunks = F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * cw + 1, cw)),
-        )
         exploded = (
-            batch.select(
-                F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk")
-            )
+            passage_chunks(batch, text_col, id_col, chunk_words)
             .withColumn("h", F.md5(F.col("chunk").cast("binary")))
             .localCheckpoint(eager=False)  # feeds first-occ, flags, store
         )

@@ -6,6 +6,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -145,6 +146,30 @@ class TestFileSource:
         df = FileSource(spark, str(p), add_filename=False, add_record_index=False).read()
         assert df.columns == ["zeta", "alpha", "mid"]
 
+    def test_json_key_order_from_first_file_in_walk_order(
+        self, spark, tmpdata
+    ):
+        # the first record is the first non-blank line of the first file
+        # by name (the reference's directory walk), not of the largest
+        # file Spark schedules first; gzip files are read through their
+        # codec, and no Spark job runs for it
+        d = tmpdata / "parts"
+        (d / "a").mkdir(parents=True)
+        (d / "a" / "1.json.gz").write_bytes(
+            gzip.compress(b'\n{"mid": 1, "zeta": 2, "alpha": 3}\n')
+        )
+        (d / "b.json").write_text('{"alpha": 1, "zeta": 2, "mid": 3}\n' * 50)
+        (d / "_hidden.json").write_text('{"zeta": 0, "alpha": 0, "mid": 0}\n')
+        src = FileSource(
+            spark, str(d), add_filename=False, add_record_index=False
+        )
+        order, jobs = _jobs(spark, src._first_record_key_order)
+        assert (order, jobs) == (["mid", "zeta", "alpha"], 0)
+        assert src.read().columns == ["mid", "zeta", "alpha"]
+        assert FileSource(spark, str(d / "b.json")).read().columns[:3] == [
+            "alpha", "zeta", "mid",
+        ]
+
     def test_empty_source_file(self, spark, tmpdata):
         p = tmpdata / "empty.json"
         p.write_text("")
@@ -237,6 +262,44 @@ class TestCsvSink:
         FileSink(str(out)).write(df)
         line = open(out).read().splitlines()[0]
         assert line == '{"id":1,"note":null}'  # ordered map + kept null
+
+
+def _jobs(spark, fn):
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestStaticSinkCounts:
+    """A static gzip or parquet destination takes its row count from an
+    Observation on the write job, not from a count job of its own."""
+
+    @pytest.mark.parametrize("name", ["out.json.gz", "out.parquet"])
+    def test_count_rides_the_write(self, spark, tmpdata, name):
+        df = spark.createDataFrame(
+            [(i, f"r{i}") for i in range(5)], "id long, v string"
+        )
+        out = str(tmpdata / name)
+        res, jobs = _jobs(spark, lambda: FileSink(out).write(df))
+        assert res.files == {out: 5}
+        assert jobs == 1
+        empty = str(tmpdata / f"empty-{name}")
+        assert FileSink(empty).write(df.limit(0)).files == {empty: 0}
+
+    @pytest.mark.parametrize("name", ["bad.json.gz", "bad.parquet"])
+    def test_failed_write_raises(self, spark, tmpdata, name):
+        df = spark.range(4).select(
+            F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+        with pytest.raises(Exception, match="boom"):
+            FileSink(str(tmpdata / name)).write(df)
 
 
 class TestBatchSplit:

@@ -206,3 +206,34 @@ def test_iceberg_shared_basename_reads_per_file(spark, tmp_path):
         ).collect()
     ]
     assert sorted(per_file) == got
+
+
+def test_tables_under_glob_characters_read_back(spark, tmp_path):
+    """A table under a directory named ``brace{1}``: ``spark.read``
+    glob-expands its paths, so every scan escapes them
+    (``merge_core.glob_escape``) and keys its lookups on the unescaped
+    path; the writers' Python globs over staged parts escape the
+    directory. Before, the reads failed with ``PATH_NOT_FOUND`` and a
+    write under ``sq[2]`` published no file."""
+    from optimus_any2any_spark.sources import iceberg as srcice
+    from optimus_any2any_spark.streaming.delta_table import write_delta_commit
+    from optimus_any2any_spark.streaming.iceberg_table import (
+        delete_iceberg_positions,
+        write_iceberg_commit,
+    )
+
+    base = tmp_path / "brace{1}" / "sq[2]"
+    rows = [(1, "a"), (2, "a"), (3, "b")]
+    df = spark.createDataFrame(rows, "k long, d string").coalesce(1)
+    t = str(base / "delta")
+    write_delta_commit(df, t, partition_by=["d"])
+    got = sorted(tuple(r) for r in read_delta(spark, t).collect())
+    assert got == rows
+
+    t = str(base / "ice")
+    write_iceberg_commit(df, t)
+    delete_iceberg_positions(
+        spark, t, "k", spark.createDataFrame([(2,)], "k long")
+    )
+    got = sorted(tuple(r) for r in srcice.read_iceberg(spark, t).collect())
+    assert got == [(1, "a"), (3, "b")]
